@@ -69,6 +69,8 @@ OK = 0
 ERR_EMPTY = 1
 ERR_MAGIC = 2
 ERR_TRUNCATED = 3
+# the payload decoded but the pipeline raised on it (engine kernel)
+ERR_KERNEL = 4
 
 _CHAR_FIELDS_V1 = 9
 _CHAR_FIELDS = 10

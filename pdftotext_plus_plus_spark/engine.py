@@ -5,9 +5,10 @@ Spark lifecycle (SURVEY.md §3.4):
     read pages table (url, warc_ts, html, text, lang)
       -> salted repartition by byte-size bucket of `html`   (skew defusal)
       -> mapInArrow kernel per record batch                 (stages 2-13)
-      -> output DataFrame (extracted_text, span structs, failure codes,
-         per-task lineage columns)
-      -> parquet/Iceberg snapshot + lineage rows; exact resume by anti-join
+      -> output DataFrame (extracted_text, span structs, failure codes;
+         each task's lineage totals ride on its last row)
+      -> parquet/Iceberg snapshot; exact resume by anti-join
+      -> lineage rows for this run_id, observed on the snapshot write
 
 Design notes for 100 TB scale:
 * Only ``url`` and ``html`` are read by the kernel — column pruning reaches
@@ -17,20 +18,32 @@ Design notes for 100 TB scale:
   of jumbo documents cannot serialize into one straggler task.
 * The kernel is embarrassingly parallel per document — no shuffle after the
   single repartition exchange; output writes stream per task.
-* Failures never abort a partition: corrupt payloads yield a row with
-  ``parse_failure_code`` != 0 (cf. the reference's isOk() check,
-  /root/reference/src/PdfToTextPlusPlus.cpp:88-90).
+* Failures never abort a partition: corrupt payloads, and payloads the
+  pipeline raises on, yield a row with ``parse_failure_code`` != 0 (cf. the
+  reference's isOk() check, PdfToTextPlusPlus.cpp:88-90).
+* Lineage costs no extra job: each run appends one row per task, stamped
+  with its ``run_id``, from totals the kernel keeps while it extracts.
 """
 
 from __future__ import annotations
 
+import gc
+import logging
 import time
 from typing import Iterator, Optional
 
 import pyarrow as pa
 
+from . import codec
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .pipeline import extract
+from .kernel import STAGE_NAMES
+from .pipeline import STAGE_DECODE, STAGE_SERIALIZE, ExtractionResult, extract
+
+# stages with a summed ``ms_<stage>`` lineage column, in the reference's
+# --print-running-times order
+LINEAGE_STAGES = (STAGE_DECODE,) + STAGE_NAMES + (STAGE_SERIALIZE,)
+
+_log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # output schemas
@@ -50,9 +63,35 @@ BLOCK_SPAN_TYPE = pa.struct([
 ])
 
 
+def _stage_slug(name: str) -> str:
+    return "ms_" + "".join(
+        c if c.isalnum() else "_" for c in name.lower()).strip("_")
+
+
+def _lineage_type(with_timings: bool) -> pa.DataType:
+    """One task's lineage row: the totals :func:`lineage_frame` aggregates
+    per ``part_id``, plus one ``ms_<stage>`` sum per stage with timings."""
+    fields = [
+        ("part_id", pa.int32()),
+        ("n_docs", pa.int64()),
+        ("n_failures", pa.int64()),
+        ("bytes_in", pa.int64()),
+        ("extract_ms_total", pa.float64()),
+        ("max_doc_ms", pa.float64()),  # straggler signal
+        ("min_url", pa.string()),
+        ("max_url", pa.string()),
+    ]
+    if with_timings:
+        fields += [(_stage_slug(name), pa.float64())
+                   for name in LINEAGE_STAGES]
+    return pa.struct(fields)
+
+
 def _arrow_schema(with_spans: bool, with_jsonl: bool = False,
                   with_svg: bool = False, with_pdf: bool = False,
-                  with_timings: bool = False) -> pa.Schema:
+                  with_timings: bool = False,
+                  with_lineage: bool = False) -> pa.Schema:
+    """The kernel's output schema; the Spark schema is derived from it."""
     fields = [
         ("url", pa.string()),
         ("extracted_text", pa.string()),
@@ -77,40 +116,22 @@ def _arrow_schema(with_spans: bool, with_jsonl: bool = False,
         fields.append(("pdf", pa.string()))
     if with_timings:
         fields.append(("stage_ms", pa.map_(pa.string(), pa.float64())))
+    if with_lineage:
+        # set on the task's last row only; NULL elsewhere
+        fields.append(("_lineage", _lineage_type(with_timings)))
     return pa.schema(fields)
-
-
-def _spark_schema_ddl(with_spans: bool, with_jsonl: bool = False,
-                      with_svg: bool = False, with_pdf: bool = False,
-                      with_timings: bool = False) -> str:
-    ddl = ("url string, extracted_text string, extracted_text_extended string, "
-           "parse_failure_code int, n_pages int, n_chars int, n_words int, "
-           "n_lines int, n_blocks int, payload_bytes bigint, part_id int, "
-           "extract_ms double")
-    if with_spans:
-        ddl += (", blocks array<struct<page: int, rank: int, min_x: double, "
-                "min_y: double, max_x: double, max_y: double, font: string, "
-                "font_size: double, text: string, role: string>>")
-    if with_jsonl:
-        ddl += ", jsonl string"
-    if with_svg:
-        ddl += ", svg string"
-    if with_pdf:
-        ddl += ", pdf string"
-    if with_timings:
-        ddl += ", stage_ms map<string,double>"
-    return ddl
 
 
 # ---------------------------------------------------------------------------
 # kernel
 # ---------------------------------------------------------------------------
 
-def _make_kernel(config: PipelineConfig, with_spans: bool,
-                 roles=None, jsonl_units=None, svg_units=None,
-                 pdf_units=None, with_timings: bool = False):
-    schema = _arrow_schema(with_spans, bool(jsonl_units), bool(svg_units),
-                           bool(pdf_units), with_timings)
+def _make_kernel(schema: pa.Schema, config: PipelineConfig, roles=None,
+                 jsonl_units=None, svg_units=None, pdf_units=None):
+    """The mapInArrow function emitting ``schema`` (see _arrow_schema)."""
+    with_spans = "blocks" in schema.names
+    with_timings = "stage_ms" in schema.names
+    with_lineage = "_lineage" in schema.names
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         try:
@@ -119,77 +140,91 @@ def _make_kernel(config: PipelineConfig, with_spans: bool,
             part_id = ctx.partitionId() if ctx is not None else -1
         except Exception:
             part_id = -1
+        task = {"part_id": part_id, "n_docs": 0, "n_failures": 0,
+                "bytes_in": 0, "extract_ms_total": 0.0, "max_doc_ms": 0.0,
+                "min_url": None, "max_url": None}
+        stage_ms = dict.fromkeys(LINEAGE_STAGES, 0.0)
 
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            n = len(urls)
-            texts, texts_ext = [], []
-            codes, pages, chars, words, lines, blocks_n = [], [], [], [], [], []
-            sizes, times = [], []
-            spans = [] if with_spans else None
-            jsonls = [] if jsonl_units else None
-            svgs = [] if svg_units else None
-            pdfs = [] if pdf_units else None
-            stage_maps = [] if with_timings else None
-            for i in range(n):
-                t0 = time.perf_counter()
-                res = extract(htmls[i], config, with_spans=with_spans,
-                              with_timings=with_timings,
-                              roles=roles, jsonl_units=jsonl_units,
-                              svg_units=svg_units, pdf_units=pdf_units)
-                dt = (time.perf_counter() - t0) * 1000.0
-                texts.append(res.extracted_text)
-                texts_ext.append(res.extracted_text_extended)
-                codes.append(res.parse_failure_code)
-                pages.append(res.n_pages)
-                chars.append(res.n_chars)
-                words.append(res.n_words)
-                lines.append(res.n_lines)
-                blocks_n.append(res.n_blocks)
-                sizes.append(len(htmls[i]) if htmls[i] is not None else 0)
-                times.append(dt)
-                if with_spans:
-                    spans.append([{
-                        "page": b.page, "rank": b.rank, "min_x": b.min_x,
-                        "min_y": b.min_y, "max_x": b.max_x, "max_y": b.max_y,
-                        "font": b.font, "font_size": b.font_size,
-                        "text": b.text, "role": b.role} for b in res.blocks])
-                if jsonl_units:
-                    jsonls.append(res.jsonl)
-                if svg_units:
-                    svgs.append(res.svg)
-                if pdf_units:
-                    pdfs.append(res.pdf)
-                if with_timings:
-                    stage_maps.append(list(res.timings_ms.items()))
+        def row(url, html) -> list:
+            t0 = time.perf_counter()
+            try:
+                res = extract(html, config, with_spans=with_spans,
+                              with_timings=with_timings, roles=roles,
+                              jsonl_units=jsonl_units, svg_units=svg_units,
+                              pdf_units=pdf_units)
+            except Exception:
+                # whatever the pipeline raises on one document becomes
+                # that document's failure row, never a failed task
+                _log.warning("extraction raised on %s", url, exc_info=True)
+                res = ExtractionResult(extracted_text="\n",
+                                       extracted_text_extended="\n",
+                                       parse_failure_code=codec.ERR_KERNEL)
+            ms = (time.perf_counter() - t0) * 1000.0
+            size = len(html) if html is not None else 0
 
-            arrays = [
-                pa.array(urls, pa.string()),
-                pa.array(texts, pa.string()),
-                pa.array(texts_ext, pa.string()),
-                pa.array(codes, pa.int32()),
-                pa.array(pages, pa.int32()),
-                pa.array(chars, pa.int32()),
-                pa.array(words, pa.int32()),
-                pa.array(lines, pa.int32()),
-                pa.array(blocks_n, pa.int32()),
-                pa.array(sizes, pa.int64()),
-                pa.array([part_id] * n, pa.int32()),
-                pa.array(times, pa.float64()),
-            ]
+            task["n_docs"] += 1
+            task["n_failures"] += res.parse_failure_code != codec.OK
+            task["bytes_in"] += size
+            task["extract_ms_total"] += ms
+            task["max_doc_ms"] = max(task["max_doc_ms"], ms)
+            if url is not None:
+                if task["min_url"] is None or url < task["min_url"]:
+                    task["min_url"] = url
+                if task["max_url"] is None or url > task["max_url"]:
+                    task["max_url"] = url
+            for name, v in res.timings_ms.items():
+                stage_ms[name] += v
+
+            out = [url, res.extracted_text, res.extracted_text_extended,
+                   res.parse_failure_code, res.n_pages, res.n_chars,
+                   res.n_words, res.n_lines, res.n_blocks, size, part_id, ms]
             if with_spans:
-                arrays.append(pa.array(spans, pa.list_(BLOCK_SPAN_TYPE)))
+                out.append([vars(b) for b in res.blocks])
             if jsonl_units:
-                arrays.append(pa.array(jsonls, pa.string()))
+                out.append(res.jsonl)
             if svg_units:
-                arrays.append(pa.array(svgs, pa.string()))
+                out.append(res.svg)
             if pdf_units:
-                arrays.append(pa.array(pdfs, pa.string()))
+                out.append(res.pdf)
             if with_timings:
-                arrays.append(pa.array(
-                    stage_maps, pa.map_(pa.string(), pa.float64())))
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+                out.append(list(res.timings_ms.items()))
+            if with_lineage:
+                out.append(None)
+            return out
+
+        def to_batch(rows: list) -> pa.RecordBatch:
+            return pa.RecordBatch.from_arrays(
+                [pa.array(col, f.type) for col, f in zip(zip(*rows), schema)],
+                schema=schema)
+
+        # extract() releases every document, so the task makes no cyclic
+        # garbage and the collector's passes over the documents in flight
+        # are pure cost; whatever cycles other code makes are collected
+        # when the task ends
+        gc_was_enabled = gc.isenabled()
+        gc.disable()
+        try:
+            # one batch is held back so the task's lineage totals can ride
+            # on its last row
+            held = None
+            for batch in batches:
+                rows = [row(u, h) for u, h in zip(
+                    batch.column("url").to_pylist(),
+                    batch.column("html").to_pylist())]
+                if rows:
+                    if held:
+                        yield to_batch(held)
+                    held = rows
+            if held:
+                if with_lineage:
+                    if with_timings:
+                        task.update((_stage_slug(name), v)
+                                    for name, v in stage_ms.items())
+                    held[-1][-1] = task
+                yield to_batch(held)
+        finally:
+            if gc_was_enabled:
+                gc.enable()
 
     return kernel
 
@@ -234,7 +269,8 @@ def extract_pages(df, config: PipelineConfig = DEFAULT_CONFIG,
                   jsonl_units=None,
                   svg_units=None,
                   pdf_units=None,
-                  with_timings: bool = False):
+                  with_timings: bool = False,
+                  with_lineage: bool = False):
     """pages DataFrame -> extraction DataFrame (one row per url).
 
     ``roles`` / ``jsonl_units`` / ``svg_units`` / ``pdf_units`` mirror the
@@ -243,7 +279,12 @@ def extract_pages(df, config: PipelineConfig = DEFAULT_CONFIG,
     sink in its SVG and annotated-PDF forms).  ``with_timings`` adds a
     per-row ``stage_ms`` map mirroring the reference's
     --print-running-times stage report (pdftotext++.cpp:765-784), which
-    :func:`lineage_frame` rolls up into per-stage columns."""
+    :func:`lineage_frame` rolls up into per-stage columns.
+    ``with_lineage`` adds a ``_lineage`` struct column holding each task's
+    lineage row (the :func:`lineage_frame` row of its ``part_id``) on the
+    task's last row and NULL on all others."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     projected = df.select("url", "html")  # column pruning reaches the scan
     if salted:
         projected = salted_repartition(projected, num_partitions)
@@ -253,21 +294,19 @@ def extract_pages(df, config: PipelineConfig = DEFAULT_CONFIG,
     jsonl_units = tuple(jsonl_units) if jsonl_units else None
     svg_units = tuple(svg_units) if svg_units else None
     pdf_units = tuple(pdf_units) if pdf_units else None
+    schema = _arrow_schema(with_spans, bool(jsonl_units), bool(svg_units),
+                           bool(pdf_units), with_timings, with_lineage)
     return projected.mapInArrow(
-        _make_kernel(config, with_spans, roles, jsonl_units, svg_units,
-                     pdf_units, with_timings),
-        _spark_schema_ddl(with_spans, bool(jsonl_units), bool(svg_units),
-                          bool(pdf_units), with_timings))
-
-
-def _stage_slug(name: str) -> str:
-    return "ms_" + "".join(
-        c if c.isalnum() else "_" for c in name.lower()).strip("_")
+        _make_kernel(schema, config, roles, jsonl_units, svg_units,
+                     pdf_units),
+        from_arrow_schema(schema))
 
 
 def lineage_frame(result_df):
     """Per-task lineage/metrics rows (north rule): partition id, row counts,
-    failure counts, byte and time totals — written beside each snapshot.
+    failure counts, byte and time totals, computed from an extraction
+    result or a committed snapshot.  :func:`run_job` writes the same rows
+    without this aggregate: its kernel tasks total them as they go.
 
     When the result carries ``stage_ms`` (extract_pages
     ``with_timings=True``), per-stage total columns are added — the
@@ -277,9 +316,6 @@ def lineage_frame(result_df):
     projection of map lookups inside the SAME single hash aggregate —
     no extra shuffle, no explode."""
     from pyspark.sql import functions as F
-
-    from .kernel import STAGE_NAMES
-    from .pipeline import STAGE_DECODE, STAGE_SERIALIZE
 
     aggs = [F.count("*").alias("n_docs"),
             F.sum((F.col("parse_failure_code") != 0).cast("int"))
@@ -293,7 +329,7 @@ def lineage_frame(result_df):
         # try_element_at, NOT element_at: under ANSI mode element_at
         # throws on a missing map key, and failure rows record only the
         # decode stage
-        for name in (STAGE_DECODE,) + STAGE_NAMES + (STAGE_SERIALIZE,):
+        for name in LINEAGE_STAGES:
             aggs.append(
                 F.sum(F.coalesce(F.try_element_at("stage_ms", F.lit(name)),
                                  F.lit(0.0))).alias(_stage_slug(name)))
@@ -319,8 +355,19 @@ def run_job(spark, input_path: str, output_path: str,
     output are skipped (anti-join), so a re-run after a mid-job failure
     processes only the remainder — the parquet/Iceberg commit is the
     checkpoint boundary.
+
+    Lineage: each invocation appends one row per kernel task under
+    ``lineage/``, stamped with the run's ``run_id`` like the input
+    manifest.  The tasks total their rows as they extract them, and
+    ``DataFrame.observe`` returns the totals with the snapshot write, so
+    no job reads the snapshot after the write.
+    ``n_docs`` / ``n_failures`` count the whole committed snapshot: the
+    rows committed before this run (one column-pruned aggregate, run
+    before the write) plus this run's lineage totals.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.utils import AnalysisException
 
     pages = spark.read.parquet(input_path)
@@ -364,34 +411,45 @@ def run_job(spark, input_path: str, output_path: str,
                 .withColumn("run_id", F.lit(run_id)))
     manifest.write.mode("append").parquet(files_path)
 
-    if resume:
-        try:
-            done = spark.read.parquet(data_path).select("url")
-            pages = pages.join(done, "url", "left_anti")
-        except AnalysisException:
-            pass  # first run: no committed snapshot yet
+    prior_docs = prior_failures = 0
+    try:
+        done = spark.read.parquet(data_path)
+    except AnalysisException:
+        done = None  # first run: no committed snapshot yet
+    if done is not None:
+        prior_docs, prior_failures = done.agg(
+            F.count("*"),
+            F.coalesce(F.sum((F.col("parse_failure_code") != 0)
+                             .cast("int")), F.lit(0))).first()
+        if resume:
+            pages = pages.join(done.select("url"), "url", "left_anti")
 
     result = extract_pages(pages, config, with_spans, num_partitions,
                            roles=roles, jsonl_units=jsonl_units,
-                           with_timings=with_timings)
+                           with_timings=with_timings, with_lineage=True)
+    observation = Observation("lineage")
+    result = result.observe(observation,
+                            F.collect_list("_lineage").alias("tasks"))
     # partitioned snapshot: stable hash bucket of url -> downstream jobs
     # prune by bucket (the parquet stand-in for an Iceberg partition spec)
-    result = result.withColumn(
-        "out_bucket", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
-    result.write.mode("append").partitionBy("out_bucket").parquet(data_path)
+    (result.drop("_lineage")
+     .withColumn("out_bucket",
+                 F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
+     .write.mode("append").partitionBy("out_bucket").parquet(data_path))
 
-    # mergeSchema: a resumed job over a pre-stage_ms snapshot reads a
-    # mixed directory; old rows surface a NULL map (element_at -> NULL ->
-    # coalesce 0.0 in the stage rollup) instead of hiding the column
-    committed = spark.read.option("mergeSchema", "true").parquet(data_path)
-    lineage = lineage_frame(committed)
-    lineage.write.mode("overwrite").parquet(lineage_path)
+    tasks = observation.get["tasks"]
+    lineage_schema = from_arrow_schema(
+        pa.schema(list(_lineage_type(with_timings))))
+    (spark.createDataFrame(tasks, lineage_schema)
+     .withColumn("run_id", F.lit(run_id))
+     .coalesce(1)  # one file per run
+     .write.mode("append").parquet(lineage_path))
 
-    n_done = committed.count()
-    n_failed = committed.filter("parse_failure_code != 0").count()
     return {"output": data_path, "lineage": lineage_path,
-            "input_manifest": files_path,
-            "n_docs": n_done, "n_failures": n_failed}
+            "input_manifest": files_path, "run_id": run_id,
+            "n_docs": prior_docs + sum(t["n_docs"] for t in tasks),
+            "n_failures": prior_failures + sum(t["n_failures"]
+                                               for t in tasks)}
 
 
 def build_session(app_name: str = "pdftotext_plus_plus_spark",

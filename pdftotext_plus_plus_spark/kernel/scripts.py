@@ -47,7 +47,7 @@ def detect_sub_super_scripts(doc: Doc, config: PipelineConfig) -> None:
                         continue
                     sup = sub = None
                     for k, row in enumerate(word.char_rows):
-                        # row = [l, u, r, low, rot, wmode, fs, base]
+                        # row = (l, u, r, low, rot, wmode, fs, base)
                         # inlined tolerance comparators (MathUtils.cpp:25-32)
                         if row[6] < fs_cutoff:
                             b = row[7]

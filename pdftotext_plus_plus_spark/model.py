@@ -132,8 +132,8 @@ class CharCols:
     The decode fast path fills these columns instead of one ``Char`` object
     per character; the word detector, statistics, sub/superscript and block
     label stages read the columns directly.  ``rows`` holds one
-    ``[left_x, upper_y, right_x, lower_y, rotation, w_mode, font_size,
-    base]`` list per kept char (post whitespace suppression / figure
+    ``(left_x, upper_y, right_x, lower_y, rotation, w_mode, font_size,
+    base)`` tuple per kept char (post whitespace suppression / figure
     diversion, in decode order — so the list index IS the char rank).
     ``Char`` objects are materialized lazily (``Page.characters`` /
     ``Word.characters``) only for the rare consumers that need them
@@ -451,3 +451,34 @@ class Doc:
         self.most_freq_line_distance = 0.0
         self.most_freq_line_distance_per_font_size: Dict[float, float] = {}
         self.most_freq_word_height = 0.0
+
+    def release(self) -> None:
+        """Clear every back and side pointer of the element graph.
+
+        The graph is held together by reference cycles (word <-> line,
+        line <-> block / segment, the prev/next, parent and sibling chains,
+        the lazy ``__dict__`` link annotations on chars and words), so
+        without this only the cyclic GC could free a document.  Afterwards
+        reference counting frees it as soon as its last outside reference
+        goes.  The document is unusable once released."""
+        for page in self.pages:
+            for char in page._characters or ():
+                links = char.__dict__
+                if links:
+                    links.clear()
+            for word in page.words:
+                word.line = None
+                links = word.__dict__
+                if links:
+                    links.clear()
+            # a segment's blocks are the preliminary ones; page.blocks holds
+            # the final blocks
+            for segment in page.segments:
+                for line in segment.lines:
+                    line.segment = line.block = None
+                    line.prev_line = line.next_line = line.parent_line = None
+                    line.prev_sibling_line = line.next_sibling_line = None
+                for block in segment.blocks:
+                    block.segment = block.prev_block = block.next_block = None
+            for block in page.blocks:
+                block.segment = block.prev_block = block.next_block = None

@@ -86,37 +86,45 @@ def extract(payload: Optional[bytes],
         result.extracted_text_extended = "\n"
         return result
 
-    process_document(doc, config,
-                     timings_ms=result.timings_ms if with_timings else None)
+    try:
+        process_document(
+            doc, config, timings_ms=result.timings_ms if with_timings else None)
 
-    t2 = time.perf_counter() if with_timings else 0.0
-    result.extracted_text = serializers.serialize_txt(doc, roles)
-    result.extracted_text_extended = serializers.serialize_txt_extended(doc, roles)
-    if jsonl_units:
-        result.jsonl = serializers.serialize_jsonl(doc, jsonl_units, roles)
-    if svg_units:
-        from . import visualization
-        result.svg = visualization.serialize_svg(doc, svg_units)
-    if pdf_units:
-        from . import pdfviz
-        result.pdf = pdfviz.serialize_pdf(doc, pdf_units)
-    if with_timings:
-        result.timings_ms[STAGE_SERIALIZE] = (time.perf_counter() - t2) * 1000.0
+        t2 = time.perf_counter() if with_timings else 0.0
+        result.extracted_text = serializers.serialize_txt(doc, roles)
+        result.extracted_text_extended = serializers.serialize_txt_extended(
+            doc, roles)
+        if jsonl_units:
+            result.jsonl = serializers.serialize_jsonl(doc, jsonl_units, roles)
+        if svg_units:
+            from . import visualization
+            result.svg = visualization.serialize_svg(doc, svg_units)
+        if pdf_units:
+            from . import pdfviz
+            result.pdf = pdfviz.serialize_pdf(doc, pdf_units)
+        if with_timings:
+            result.timings_ms[STAGE_SERIALIZE] = (
+                (time.perf_counter() - t2) * 1000.0)
 
-    result.n_pages = len(doc.pages)
-    for page in doc.pages:
-        result.n_chars += page.n_chars
-        result.n_words += len(page.words)
-        result.n_blocks += len(page.blocks)
-        for block in page.blocks:
-            result.n_lines += len(block.lines)
-            if with_spans:
-                result.blocks.append(BlockSpan(
-                    page=block.page_num, rank=block.rank,
-                    min_x=block.left_x, min_y=block.upper_y,
-                    max_x=block.right_x, max_y=block.lower_y,
-                    font=block.font_name, font_size=block.font_size,
-                    text=block.text, role=block.role))
+        result.n_pages = len(doc.pages)
+        for page in doc.pages:
+            result.n_chars += page.n_chars
+            result.n_words += len(page.words)
+            result.n_blocks += len(page.blocks)
+            for block in page.blocks:
+                result.n_lines += len(block.lines)
+                if with_spans:
+                    result.blocks.append(BlockSpan(
+                        page=block.page_num, rank=block.rank,
+                        min_x=block.left_x, min_y=block.upper_y,
+                        max_x=block.right_x, max_y=block.lower_y,
+                        font=block.font_name, font_size=block.font_size,
+                        text=block.text, role=block.role))
+    finally:
+        if not keep_doc:
+            # reference counting frees the document now, even when a stage
+            # raised, instead of leaving it to the cyclic GC
+            doc.release()
     if keep_doc:
         result.doc = doc
     return result

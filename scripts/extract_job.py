@@ -13,8 +13,10 @@ Local smoke:
 
     python3 scripts/extract_job.py --demo
 
-The job writes a data snapshot plus per-partition lineage rows and resumes
-exactly from the committed snapshot on re-run (anti-join on url).
+The job appends to a data snapshot and resumes exactly from it on re-run
+(anti-join on url).  Each run also appends one lineage row per task under
+``lineage/`` and its input-file manifest under ``lineage_files/``, both
+stamped with the run's ``run_id``.
 """
 
 from __future__ import annotations

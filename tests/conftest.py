@@ -17,6 +17,19 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def nan_payload():
+    """A payload that decodes cleanly but carries a NaN coordinate, on
+    which a kernel stage raises."""
+    from pdftotext_plus_plus_spark import codec, fixtures
+
+    page = fixtures._PageBuilder(1)
+    fixtures.place_line(page, ["one", "two"], 50.0, 100.0)
+    hostile = page.to_dict()
+    hostile["chars"][0]["left_x"] = float("nan")
+    return codec.encode_payload(fixtures.FONTS, [hostile])
+
+
+@pytest.fixture(scope="session")
 def pages_df(spark):
     """Small fixture corpus as a Spark DataFrame with golden columns."""
     from pyspark.sql import types as T

@@ -112,3 +112,47 @@ def test_paper_page_composite(seed):
     row = {"golden_intent": intent, "n_pages": 2, "family": "paper-page"}
     assert res.extracted_text_extended == fixtures.golden_extended_for_row(row)
     assert res.n_pages == 2
+
+
+def test_extract_leaves_no_cyclic_garbage(nan_payload):
+    """With keep_doc=False, extract releases each document's element graph,
+    also when a stage raises, so reference counting frees every fixture
+    family without the cyclic GC; with keep_doc=True the returned document
+    stays fully linked."""
+    import gc
+    from dataclasses import replace
+
+    from pdftotext_plus_plus_spark.config import DEFAULT_CONFIG
+    from pdftotext_plus_plus_spark.visualization import ALL_UNITS
+
+    n = len(FAMILIES) + 1  # every family once, then one jumbo document
+    rows = fixtures.build_corpus(n, jumbo_every=n)
+    config = replace(DEFAULT_CONFIG, skip_semantic_roles=False)
+    gc.collect()
+    was_enabled = gc.isenabled()
+    gc.disable()
+    gc.set_debug(gc.DEBUG_SAVEALL)
+    try:
+        for row in rows:
+            pipeline.extract(row["html"], config, with_timings=True,
+                             jsonl_units=("pages", "blocks", "words",
+                                          "characters", "figures", "shapes"),
+                             svg_units=ALL_UNITS, pdf_units=ALL_UNITS)
+        try:
+            pipeline.extract(nan_payload)
+        except Exception:
+            pass
+        assert gc.collect() == 0
+    finally:
+        gc.set_debug(0)
+        gc.garbage.clear()
+        if was_enabled:
+            gc.enable()
+
+    doc = pipeline.extract(rows[0]["html"], keep_doc=True).doc
+    lines = [(b, line) for p in doc.pages for b in p.blocks for line in b.lines]
+    assert lines
+    assert all(line.block is b and b.segment is not None
+               and line.segment is not None for b, line in lines)
+    assert all(w.line is line for _, line in lines for w in line.words)
+    assert any(line.next_line is not None for _, line in lines)

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from pdftotext_plus_plus_spark import engine
+from pdftotext_plus_plus_spark import codec, engine, fixtures
 
 
 def test_extract_matches_goldens(spark, pages_df):
@@ -34,6 +34,25 @@ def test_corrupt_payload_yields_failure_row(spark, pages_df):
     assert rows["bad://1"]["parse_failure_code"] != 0
     assert rows["bad://2"]["parse_failure_code"] != 0
     assert rows["bad://1"]["extracted_text"] == "\n"
+
+
+def test_kernel_exception_yields_failure_row(spark, nan_payload):
+    """A payload that decodes cleanly but makes the pipeline raise (a NaN
+    coordinate) becomes a failure row; the four good documents sharing
+    its task still extract, and the task's lineage counts the failure."""
+    good = fixtures.build_corpus(4)
+    rows = [("nan://1", bytearray(nan_payload))]
+    rows += [(r["url"], bytearray(r["html"])) for r in good]
+    df = spark.createDataFrame(rows, "url string, html binary").coalesce(1)
+    out = engine.extract_pages(df, salted=False, with_lineage=True).collect()
+    by_url = {r["url"]: r for r in out}
+    assert by_url["nan://1"]["parse_failure_code"] == codec.ERR_KERNEL
+    assert by_url["nan://1"]["extracted_text"] == "\n"
+    for r in good:
+        assert by_url[r["url"]]["parse_failure_code"] == 0
+        assert by_url[r["url"]]["extracted_text"] == r["golden_text"]
+    [task] = [r["_lineage"] for r in out if r["_lineage"] is not None]
+    assert (task["n_docs"], task["n_failures"]) == (5, 1)
 
 
 def test_salted_repartition_spreads_jumbos(spark, pages_df):
@@ -77,6 +96,67 @@ def test_run_job_resume(spark, pages_df, tmp_path):
         F.input_file_name()).distinct().count()
     assert latest.count() == n_input_files
     assert latest.agg(F.sum("n_rows")).first()[0] == 36
+
+
+def _lineage_by_part(rows):
+    return {r["part_id"]: r.asDict() for r in rows}
+
+
+def test_run_job_lineage_rides_on_the_write(spark, pages_df, tmp_path):
+    """A fresh run's lineage rows are totalled by the kernel tasks and
+    observed on the snapshot write: they equal lineage_frame over the
+    committed snapshot, and the run needs at most 6 Spark jobs (12 when
+    lineage and counts re-read the snapshot after the write)."""
+    input_path = str(tmp_path / "pages")
+    output_path = str(tmp_path / "out")
+    pages_df.write.parquet(input_path)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("fresh-run-job", "fresh run_job")
+    try:
+        result = engine.run_job(spark, input_path, output_path,
+                                num_partitions=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("fresh-run-job")) <= 6
+
+    written = _lineage_by_part(spark.read.parquet(result["lineage"]).collect())
+    expected = _lineage_by_part(engine.lineage_frame(
+        spark.read.parquet(result["output"])).collect())
+    assert sorted(written) == sorted(expected)
+    for part, row in expected.items():
+        got = written[part]
+        assert got.pop("run_id") == result["run_id"] == 0
+        assert list(got) == list(row)
+        for col, value in row.items():
+            if isinstance(value, float):
+                assert got[col] == pytest.approx(value, rel=1e-9), col
+            else:
+                assert got[col] == value, col
+    assert result["n_docs"] == sum(r["n_docs"] for r in expected.values())
+    assert result["n_failures"] == 0
+
+
+def test_run_job_resume_appends_own_lineage(spark, pages_df, tmp_path):
+    """A resumed run appends lineage rows for its own run_id only, covering
+    just the documents it extracted; earlier runs' rows stay as written."""
+    first_path = str(tmp_path / "first")
+    all_path = str(tmp_path / "all")
+    output_path = str(tmp_path / "out")
+    pages_df.orderBy("url").limit(20).write.parquet(first_path)
+    pages_df.write.parquet(all_path)
+
+    engine.run_job(spark, first_path, output_path, num_partitions=2)
+    lineage_path = output_path + "/lineage"
+    before = spark.read.parquet(lineage_path).collect()
+    result = engine.run_job(spark, all_path, output_path, num_partitions=2)
+    assert (result["run_id"], result["n_docs"]) == (1, 36)
+
+    lineage = spark.read.parquet(lineage_path)
+    assert sorted(lineage.filter("run_id = 0").collect()) == sorted(before)
+    resumed = lineage.filter("run_id = 1")
+    assert resumed.agg(F.sum("n_docs")).first()[0] == 16
+    assert lineage.filter("run_id NOT IN (0, 1)").count() == 0
 
 
 def test_lineage_per_stage_timings(spark, pages_df):
