@@ -17,6 +17,10 @@ functions, so value-hash comparisons are exact.
 from __future__ import annotations
 
 
+def _documents(spark, sf_dir: str):
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
 def spread(df):
     """Conditional round-robin repartition of a SMALL scan to the
     session's default parallelism (optimization guide §2.5, "input
@@ -31,8 +35,7 @@ def spread(df):
     an 11 s single-core bigram explode drops to sub-second with the
     scan spread to 32 partitions.  At production scale the scan already
     has more splits than cores and this returns the input unchanged, so
-    the exchange only exists in exactly the regime where it pays
-    (the reasoning of multimodal._spread, shared by the text ops)."""
+    the exchange only exists in exactly the regime where it pays."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import _documents, spread
 from .dedup import (MINHASH_LSH_PAIRS_SQL, MINHASH_SIG_CTES,
                     minhash_signatures)
 
@@ -29,8 +30,7 @@ PROP_ROUNDS = 3
 
 
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import spread
-    docs = spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = spread(_documents(spark, sf_dir))
     toks = F.split(F.trim("text"), r"\s+")
     return (docs
             .select("doc_id", toks.alias("toks"))
@@ -161,7 +161,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reach of PROP_ROUNDS rounds over the all-pairs graph (measured at
     sf0.01: strictly closer to the fixpoint labels than the pair-graph
     variant ever was), at O(M) instead of O(M^2) edges per bucket."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = _documents(spark, sf_dir).select("doc_id")
     edges = _star_edges(docs, minhash_signatures(spark, sf_dir))
     labels = docs.select(F.col("doc_id"), F.col("doc_id").alias("label"))
     for _ in range(2 * PROP_ROUNDS):
@@ -175,7 +175,7 @@ def dedup_clusters_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round checkpointing.  The oracle deliberately stays the all-pairs
     brute-force graph: star edges produce identical components, and the
     independent construction is what PROVES it."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = _documents(spark, sf_dir).select("doc_id")
     edges = _star_edges(docs, minhash_signatures(spark, sf_dir)).persist()
     labels = docs.select(F.col("doc_id"), F.col("doc_id").alias("label"))
     out = propagate_to_fixpoint(edges, labels)

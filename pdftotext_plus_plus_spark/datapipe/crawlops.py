@@ -27,12 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pdftotext_plus_plus_spark.datapipe import _documents
 from pdftotext_plus_plus_spark.datapipe.webtext import (
     CANON_URLS_SQL,
     EDGES_SQL,
     _RAW_URL_SPARK,
     _canon_col,
-    _documents,
     _edges,
     rank_iter_sql,
     rank_iterations,

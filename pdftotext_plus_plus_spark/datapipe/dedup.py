@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import _documents, spread
+
 N_BANDS = 8
 SHINGLE = 3
 JACCARD_THRESHOLD = 0.8
@@ -29,13 +31,8 @@ SIMHASH_BITS = 64
 COSINE_DUP_THRESHOLD = 0.38
 
 
-def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def _shingles(docs: DataFrame) -> DataFrame:
     """Distinct character 3-gram shingles per doc (JVM-side, no UDF)."""
-    from . import spread
     docs = spread(docs)   # heavy explode map side: parallelize the scan
     return (docs
             .select("doc_id",
@@ -49,7 +46,6 @@ def _token_shingles(docs: DataFrame) -> DataFrame:
     """Distinct 3-token shingles per doc (the MinHash unit — token shingles
     are far more discriminative than char n-grams and much cheaper: the
     explode factor is n_tokens, not n_chars)."""
-    from . import spread
     docs = spread(docs)   # heavy explode map side: parallelize the scan
     return (docs
             .select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
@@ -197,7 +193,6 @@ def _word_grams(docs: DataFrame) -> DataFrame:
     already use — INCLUDING their short-document rule: a document under
     5 tokens has NO 5-gram signal and emits no grams (it cannot pair),
     rather than pairing on a sub-unit fragment."""
-    from . import spread
     docs = spread(docs)   # heavy explode map side: parallelize the scan
     ts = F.split(F.trim(F.col("text")), r"\s+")
     grams = F.expr(
@@ -558,7 +553,6 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     B = EMB_TILES
     threshold = COSINE_DUP_THRESHOLD
-    from . import spread
     emb = (spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
            .select("vec_id", "embedding")
            .withColumn("blk", (F.col("vec_id") % B).cast("int")))
@@ -647,7 +641,6 @@ def benchmark_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct'd); dedup happens AFTER the broadcast filter via a two-phase
     countDistinct over the few surviving rows.  No quadratic stage, no
     full-corpus-wide shuffle beyond the per-doc partial agg."""
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     raw = (docs
            .select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
@@ -721,7 +714,6 @@ def duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frequency table to gf > 1 and left-join — the tail never shuffles
     twice).  No windows, no self-join, nothing quadratic.
     """
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     toked = docs.select(
         "doc_id",

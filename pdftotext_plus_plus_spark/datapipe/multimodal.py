@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import pixels
+from . import _documents, pixels, spread
 
 PNG_SIG = pixels.PNG_SIG
 
@@ -51,19 +51,6 @@ PNG_SIG = pixels.PNG_SIG
 # the oracle-checked corpus); larger images use the vectorizable
 # None/Sub/Up rotation — see pixels.png_encode.
 PNG_ALL_FILTERS_MAX_PX = 32768
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a SMALL scan to the session's core count before a
-    CPU-heavy Arrow kernel.  A few thousand documents read as one parquet
-    split (maxPartitionBytes sizes splits by BYTES), which would serialize
-    the codec work onto one core; at real scale the scan already has
-    more splits than cores and this exchange is a no-op cost-wise, same
-    reasoning as the engine's size-bucket repartition (engine.py)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def image_dims(doc_id: int) -> Tuple[int, int]:
@@ -84,8 +71,7 @@ def synthesize_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself the write half of the real scale path."""
     from . import jpeg
 
-    docs = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet")
-                   .select("doc_id"))
+    docs = spread(_documents(spark, sf_dir).select("doc_id"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -416,8 +402,7 @@ def synthesize_video_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, blob): complete demuxable MP4s (mvhd +
     sample tables + formula frame payloads in mdat), built in an
     Arrow-batched kernel."""
-    docs = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet")
-                   .select("doc_id"))
+    docs = spread(_documents(spark, sf_dir).select("doc_id"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -596,8 +581,7 @@ def synthesize_audio_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic formula (``pixels.synth_samples``), so the decode
     side can compute genuine waveform statistics the SQL oracle
     reproduces in closed form."""
-    docs = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet")
-                   .select("doc_id"))
+    docs = spread(_documents(spark, sf_dir).select("doc_id"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

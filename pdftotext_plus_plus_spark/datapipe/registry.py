@@ -1,4 +1,4 @@
-"""Central registry: query name -> (spark callable, DuckDB oracle SQL).
+"""Central registry: query name -> (spark callable, DuckDB oracle).
 
 This feeds the driver contract in ``__spark_entry__.py``.  The extraction
 queries run the full engine over the deterministic fixture corpus and are
@@ -9,22 +9,41 @@ not just relational ops.
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Optional, Tuple
+import functools
+import hashlib
+import random
+import shutil
+import tempfile
+from collections import defaultdict
+from dataclasses import replace
+from typing import Callable, Dict, Tuple, Union
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from . import (chunking, crawlops, dedup, events, htmlstrip, multimodal,
-               relational, sampling, similarity, textstats, webtext)
+from .. import engine, fixtures, streaming
+from .. import warc as warcmod
+from ..config import DEFAULT_CONFIG
+from . import (_documents, chunking, crawlops, dedup, events, htmlstrip,
+               multimodal, relational, sampling, similarity, textstats,
+               webtext)
 
 N_EXTRACT_DOCS = 48
 
+# the ONE WARC fixture shard count shared by every WARC-sourced query AND
+# its oracle — change it here and nowhere else, or the 'checked against the
+# SAME golden' claims drift
+WARC_FIXTURE_N_FILES = 4
 
-def _fixture_pages_df(spark: SparkSession):
-    from pyspark.sql import types as T
 
-    from .. import fixtures
+def _fixture_rows():
+    """The fixture corpus behind the extraction and WARC queries and their
+    golden oracles: 48 documents, a jumbo one every 16th."""
+    return fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16)
 
-    rows = fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16)
+
+def _make_pages_df(spark: SparkSession, rows):
     schema = T.StructType([
         T.StructField("url", T.StringType()),
         T.StructField("warc_ts", T.TimestampType()),
@@ -37,24 +56,38 @@ def _fixture_pages_df(spark: SparkSession):
     return spark.createDataFrame(rows, schema)
 
 
+def _extract(spark: SparkSession, rows, **options) -> DataFrame:
+    """The engine over fixture rows, at the registry's 8 partitions."""
+    return engine.extract_pages(_make_pages_df(spark, rows),
+                                num_partitions=8, **options)
+
+
+def _block_rows(out: DataFrame) -> DataFrame:
+    """Block spans in reading order: (url, pos, block_text, role)."""
+    return (out.select("url", F.posexplode("blocks").alias("pos", "block"))
+            .select("url", "pos",
+                    F.col("block.text").alias("block_text"),
+                    F.col("block.role").alias("role")))
+
+
+def _jsonl_lines(out: DataFrame) -> DataFrame:
+    """The JSONL sink's records, one per row: (url, pos, line)."""
+    return (out.select(
+        "url", F.posexplode(F.split(F.col("jsonl"), "\n")).alias("pos", "line"))
+        .filter(F.col("line") != ""))  # the sink's trailing newline
+
+
 def extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: full 13-stage extraction over the fixture corpus."""
-    from .. import engine
-
-    pages = _fixture_pages_df(spark)
-    out = engine.extract_pages(pages, num_partitions=8)
-    return out.select("url", "extracted_text")
+    return _extract(spark, _fixture_rows()).select("url", "extracted_text")
 
 
 def extract_text_oracle_sql() -> str:
     """VALUES-table oracle: the intent-level goldens, computed without
     running the pipeline (fixtures.golden_from_blocks)."""
-    from .. import fixtures
-
-    rows = fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16)
     values = ",\n".join(
         "('%s', '%s')" % (r["url"], r["golden_text"].replace("'", "''"))
-        for r in rows)
+        for r in _fixture_rows())
     return ("SELECT * FROM (VALUES\n%s\n) AS t(url, extracted_text)" % values)
 
 
@@ -66,23 +99,16 @@ def stream_extract_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     is compared against the SAME intent-level golden oracle as the batch
     path (ref: the one 13-stage pipeline, PdfToTextPlusPlus.cpp:72-267 —
     streaming is an ingestion mode, not a different engine)."""
-    import shutil
-    import tempfile
-
-    from .. import streaming
-
     root = tempfile.mkdtemp(prefix="stream_equiv_")
     inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
     try:
         # write the corpus as FOUR files so availableNow + maxFilesPerTrigger
         # yields several micro-batches (the equivalence must hold across batch
         # boundaries, not just for a single batch)
-        pages = _fixture_pages_df(spark)
+        pages = _make_pages_df(spark, _fixture_rows())
         pages.repartition(4).write.parquet(inp)
         stream = (spark.readStream
-                  .schema("url string, warc_ts timestamp, html binary, "
-                          "text string, lang string, golden_text string, "
-                          "family string")
+                  .schema(pages.schema)
                   .option("maxFilesPerTrigger", 1)
                   .format("parquet")
                   .load(inp))
@@ -96,32 +122,14 @@ def stream_extract_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-# the ONE WARC fixture shape (corpus size / jumbo cadence / shard count)
-# shared by every WARC-sourced query AND the CDX oracle — change it here
-# and nowhere else, or the 'checked against the SAME golden' claims drift
-WARC_FIXTURE_N_FILES = 4
-
-
-def _warc_fixture_rows():
-    from .. import fixtures
-
-    return fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16)
-
-
 def _warc_extracted_pages(spark: SparkSession) -> DataFrame:
     """The fixture corpus round-tripped WARC-shards -> binaryFile +
     tolerant splitter -> the SAME 13-stage engine: (url, extracted_text),
     eagerly checkpointed so it outlives the temp shard dir.  Shared by
     warc_extract_equivalence and warc_wet_records."""
-    import shutil
-    import tempfile
-
-    from .. import engine
-    from .. import warc as warcmod
-
     root = tempfile.mkdtemp(prefix="warc_equiv_")
     try:
-        warcmod.write_warc_dir(_warc_fixture_rows(), root,
+        warcmod.write_warc_dir(_fixture_rows(), root,
                                n_files=WARC_FIXTURE_N_FILES)
         pages = warcmod.read_warc(spark, root)
         out = engine.extract_pages(pages, num_partitions=8)
@@ -150,14 +158,9 @@ def warc_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract is pytest-verified by fetching and byte-comparing payloads;
     here the index itself is oracled against the deterministic
     construction)."""
-    import shutil
-    import tempfile
-
-    from .. import warc as warcmod
-
     root = tempfile.mkdtemp(prefix="warc_cdx_")
     try:
-        warcmod.write_warc_dir(_warc_fixture_rows(), root,
+        warcmod.write_warc_dir(_fixture_rows(), root,
                                n_files=WARC_FIXTURE_N_FILES)
         return warcmod.cdx_index(spark, root).localCheckpoint(eager=True)
     finally:
@@ -181,8 +184,6 @@ def warc_wet_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-extraction product, ~10x under the WARC input); parse-back is
     the same one-task-per-shard scan as read_warc.
     """
-    from .. import warc as warcmod
-
     wet = warcmod.wet_convert(_warc_extracted_pages(spark))
     return warcmod.read_wet_blobs(wet).localCheckpoint(eager=True)
 
@@ -196,14 +197,9 @@ def warc_wat_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     INDEPENDENT construction: index_warc + read_record + hashlib over
     the same shard layout, never touching the WAT writer/parser pair —
     so a JSON field drift or a digest bug fails the hash."""
-    import shutil
-    import tempfile
-
-    from .. import warc as warcmod
-
     root = tempfile.mkdtemp(prefix="warc_wat_")
     try:
-        warcmod.write_warc_dir(_warc_fixture_rows(), root,
+        warcmod.write_warc_dir(_fixture_rows(), root,
                                n_files=WARC_FIXTURE_N_FILES)
         return warcmod.wat_index(spark, root).localCheckpoint(eager=True)
     finally:
@@ -230,11 +226,7 @@ def warc_revisit_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard bytes, the wet_convert shape) -> one-task-per-shard streaming
     parse-back with the splitter's bounded flush discipline.
     """
-    from pyspark.sql import functions as F
-
-    from .. import warc as warcmod
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _documents(spark, sf_dir)
     url = F.concat(F.lit("https://snap.test/"),
                    F.col("doc_id").cast("string"))
     payload_b = F.when(F.col("doc_id") % 5 == 0,
@@ -272,24 +264,31 @@ FROM b LEFT JOIN a ON a.url = b.url
 """
 
 
+def _warc_fixture_index():
+    """(filename, blob, url, warc_date, offset, length) per response
+    record of the fixture shards, computed over warc.shard_files — the
+    same shard layout the queries write — without Spark."""
+    for name, blob in warcmod.shard_files(_fixture_rows(),
+                                          n_files=WARC_FIXTURE_N_FILES):
+        for url, date, off, ln in warcmod.index_warc(blob):
+            yield name, blob, url, date, off, ln
+
+
+def _sql_str(s: str) -> str:
+    return s.replace("'", "''")
+
+
 def warc_wat_records_oracle_sql() -> str:
     """VALUES oracle built WITHOUT the WAT writer/parser: CDX-walk each
     shard (index_warc), fetch each record slice (read_record), hash the
     payload directly."""
-    import hashlib
-
-    from .. import warc as warcmod
-
-    esc = lambda s: s.replace("'", "''")  # noqa: E731
     values = []
-    for name, blob in warcmod.shard_files(_warc_fixture_rows(),
-                                          n_files=WARC_FIXTURE_N_FILES):
-        for url, date, off, ln in warcmod.index_warc(blob):
-            _, payload = warcmod.read_record(blob[off:off + ln])
-            values.append(
-                "('%s', '%s', '%s', %d, %d, 'md5:%s', %d)"
-                % (esc(url), esc(date), esc(name), off, ln,
-                   hashlib.md5(payload).hexdigest(), len(payload)))
+    for name, blob, url, date, off, ln in _warc_fixture_index():
+        _, payload = warcmod.read_record(blob[off:off + ln])
+        values.append(
+            "('%s', '%s', '%s', %d, %d, 'md5:%s', %d)"
+            % (_sql_str(url), _sql_str(date), _sql_str(name), off, ln,
+               hashlib.md5(payload).hexdigest(), len(payload)))
     return ("SELECT * FROM (VALUES\n%s\n) AS t(url, warc_date, filename,"
             " \"offset\", length, payload_digest, payload_len)"
             % ",\n".join(values))
@@ -298,15 +297,9 @@ def warc_wat_records_oracle_sql() -> str:
 def warc_cdx_index_oracle_sql() -> str:
     """VALUES oracle: the index computed over warc.shard_files — the
     same shard layout the query writes — without Spark."""
-    from .. import warc as warcmod
-
-    esc = lambda s: s.replace("'", "''")  # noqa: E731
-    values = []
-    for name, blob in warcmod.shard_files(_warc_fixture_rows(),
-                                          n_files=WARC_FIXTURE_N_FILES):
-        for url, date, off, ln in warcmod.index_warc(blob):
-            values.append("('%s', '%s', '%s', %d, %d)"
-                          % (esc(url), esc(date), esc(name), off, ln))
+    values = ["('%s', '%s', '%s', %d, %d)"
+              % (_sql_str(url), _sql_str(date), _sql_str(name), off, ln)
+              for name, _, url, date, off, ln in _warc_fixture_index()]
     return ("SELECT * FROM (VALUES\n%s\n) AS t(url, warc_date, filename,"
             " \"offset\", length)" % ",\n".join(values))
 
@@ -319,19 +312,11 @@ def streaming_url_dedup_equivalence(spark: SparkSession,
     emit-on-improvement suppression) in several micro-batches; min() over
     the sink per URL must equal the batch keep set, which is what the
     DuckDB oracle computes directly."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from .. import streaming
-    from . import webtext as webtextmod
-
     root = tempfile.mkdtemp(prefix="stream_urldedup_")
     inp, outp, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
     try:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        urls = webtextmod._canon_urls(docs).select("doc_id", "canon_url")
+        docs = _documents(spark, sf_dir)
+        urls = webtext._canon_urls(docs).select("doc_id", "canon_url")
         urls.repartition(4).write.parquet(inp)
         streaming.streaming_url_dedup(spark, inp, outp, ckpt)
         out = (spark.read.parquet(outp)
@@ -355,24 +340,12 @@ def extract_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver: positions are the final reading order, text is the block text
     (no dehyphenation substitution — that is a serializer-level rewrite).
     """
-    from pyspark.sql import functions as F
-
-    from .. import engine
-
-    pages = _fixture_pages_df(spark)
-    out = engine.extract_pages(pages, with_spans=True, num_partitions=8)
-    return (out.select("url", F.posexplode("blocks").alias("pos", "block"))
-            .select("url", "pos",
-                    F.col("block.text").alias("block_text"),
-                    F.col("block.role").alias("role")))
+    return _block_rows(_extract(spark, _fixture_rows(), with_spans=True))
 
 
 def extract_blocks_oracle_sql() -> str:
-    from .. import fixtures
-
-    rows = fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16)
     values = []
-    for r in rows:
+    for r in _fixture_rows():
         for pos, text in enumerate(r["golden_blocks"]):
             values.append("('%s', %d, '%s', 'paragraph')"
                           % (r["url"], pos, text.replace("'", "''")))
@@ -384,21 +357,15 @@ def extract_text_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 — TXT-EXTENDED sink over the full fixture corpus: '[ROLE] '
     prefixes, \\x01 emphasis marks, \\n\\x0c page breaks
     (PlainTextExtendedSerializer.cpp:44-110)."""
-    from .. import engine
-
-    pages = _fixture_pages_df(spark)
-    out = engine.extract_pages(pages, num_partitions=8)
-    return out.select("url", "extracted_text_extended")
+    return (_extract(spark, _fixture_rows())
+            .select("url", "extracted_text_extended"))
 
 
 def extract_text_extended_oracle_sql() -> str:
-    from .. import fixtures
-
-    rows = fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16)
     values = ",\n".join(
         "('%s', '%s')" % (r["url"],
                           fixtures.golden_extended_for_row(r).replace("'", "''"))
-        for r in rows)
+        for r in _fixture_rows())
     return ("SELECT * FROM (VALUES\n%s\n) AS t(url, extracted_text_extended)"
             % values)
 
@@ -416,27 +383,25 @@ JSONL_FAMILIES = [
 N_JSONL_DOCS = 40
 
 
-def _jsonl_golden_rows():
-    from .. import fixtures
+def _blocks_per_page(r):
+    """Output blocks per page of a fixture doc: its family's layout rule,
+    else an even split."""
+    n_pages = r["n_pages"]
+    nb = len(fixtures.golden_dehyphenated_blocks(r["golden_intent"]))
+    bpp_fn, _ = fixtures.FAMILY_EXT_META.get(r["family"], (None, None))
+    return bpp_fn(nb, n_pages) if bpp_fn else [nb // n_pages] * n_pages
 
-    rows = fixtures.build_corpus(N_JSONL_DOCS, families=JSONL_FAMILIES)
+
+def _jsonl_golden_rows():
     out = []
-    for r in rows:
-        out_blocks = fixtures.golden_dehyphenated_blocks(r["golden_intent"])
+    for r in fixtures.build_corpus(N_JSONL_DOCS, families=JSONL_FAMILIES):
         texts = fixtures.golden_block_texts(r["golden_intent"])
-        n_pages = r["n_pages"]
-        bpp_fn, _ = fixtures.FAMILY_EXT_META.get(r["family"], (None, None))
-        nb = len(out_blocks)
-        bpp = (bpp_fn(nb, n_pages) if bpp_fn
-               else [nb // n_pages] * n_pages)
         pos = 0
-        idx = 0
-        for page_num, n in enumerate(bpp, start=1):
+        for page_num, n in enumerate(_blocks_per_page(r), start=1):
             for rank in range(n):
                 out.append((r["url"], pos, "block-%d-%d" % (page_num, rank),
-                            page_num, texts[idx], "paragraph"))
+                            page_num, texts[pos], "paragraph"))
                 pos += 1
-                idx += 1
     return out
 
 
@@ -444,20 +409,9 @@ def extract_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 — the JSONL string sink itself: one JSON line per block
     (JsonlSerializer.cpp:53-270), parsed back into fields so the driver
     checks ids, linkage, escaping, and text through the string surface."""
-    from pyspark.sql import functions as F
-
-    from .. import fixtures
-    from .. import engine
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_JSONL_DOCS, families=JSONL_FAMILIES))
-    out = engine.extract_pages(pages, num_partitions=8,
-                               jsonl_units=("blocks",))
-    lines = (out.select(
-        "url",
-        F.posexplode(F.split(F.col("jsonl"), "\n")).alias("pos", "line"))
-        .filter(F.col("line") != ""))  # the sink's trailing newline
-    return lines.select(
+    out = _extract(spark, fixtures.build_corpus(
+        N_JSONL_DOCS, families=JSONL_FAMILIES), jsonl_units=("blocks",))
+    return _jsonl_lines(out).select(
         "url", "pos",
         F.get_json_object("line", "$.id").alias("block_id"),
         F.get_json_object("line", "$.page").cast("int").alias("page"),
@@ -487,18 +441,10 @@ N_JSONL_WORD_DOCS = 18
 def extract_jsonl_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 words unit — the JSONL word stream (raw words, hyphen halves
     separate) parsed back: ids, page, text, block linkage."""
-    from pyspark.sql import functions as F
-
-    from .. import engine, fixtures
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_JSONL_WORD_DOCS, families=JSONL_WORD_FAMILIES))
-    out = engine.extract_pages(pages, num_partitions=8,
-                               jsonl_units=("words",))
-    lines = (out.select(
-        "url", F.posexplode(F.split(F.col("jsonl"), "\n")).alias("pos", "line"))
-        .filter(F.col("line") != ""))
-    return lines.select(
+    out = _extract(spark, fixtures.build_corpus(
+        N_JSONL_WORD_DOCS, families=JSONL_WORD_FAMILIES),
+        jsonl_units=("words",))
+    return _jsonl_lines(out).select(
         "url", "pos",
         F.get_json_object("line", "$.id").alias("word_id"),
         F.get_json_object("line", "$.page").cast("int").alias("page"),
@@ -507,25 +453,16 @@ def extract_jsonl_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extract_jsonl_words_oracle_sql() -> str:
-    from .. import fixtures
-
     rows = fixtures.build_corpus(N_JSONL_WORD_DOCS,
                                  families=JSONL_WORD_FAMILIES)
     values = []
     for r in rows:
-        intent = r["golden_intent"]
-        n_pages = r["n_pages"]
-        out_blocks = fixtures.golden_dehyphenated_blocks(intent)
-        nb = len(out_blocks)
-        bpp_fn, _ = fixtures.FAMILY_EXT_META.get(r["family"], (None, None))
-        bpp = (bpp_fn(nb, n_pages) if bpp_fn
-               else [nb // n_pages] * n_pages)
         pos = 0
         block_idx = 0
         # intent blocks with at least one nonempty line, in order (the same
         # filter golden_block_texts applies)
-        blocks = [b for b in intent if any(line for line in b)]
-        for page_num, n in enumerate(bpp, start=1):
+        blocks = [b for b in r["golden_intent"] if any(line for line in b)]
+        for page_num, n in enumerate(_blocks_per_page(r), start=1):
             word_rank = 0
             for block_rank in range(n):
                 for line in blocks[block_idx]:
@@ -550,18 +487,10 @@ def extract_jsonl_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     (JsonlSerializer.cpp:101-156), parsed back from the string surface.
     plain-1col only: every char is intent-derivable (one char per letter,
     decode order = reading order, no diacritic rewrites)."""
-    from pyspark.sql import functions as F
-
-    from .. import engine, fixtures
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_JSONL_CHAR_DOCS, families=["plain-1col"]))
-    out = engine.extract_pages(pages, num_partitions=8,
-                               jsonl_units=("characters",))
-    lines = (out.select(
-        "url", F.posexplode(F.split(F.col("jsonl"), "\n")).alias("pos", "line"))
-        .filter(F.col("line") != ""))
-    return lines.select(
+    out = _extract(spark, fixtures.build_corpus(
+        N_JSONL_CHAR_DOCS, families=["plain-1col"]),
+        jsonl_units=("characters",))
+    return _jsonl_lines(out).select(
         "url", "pos",
         F.get_json_object("line", "$.id").alias("char_id"),
         F.get_json_object("line", "$.text").alias("char_text"),
@@ -570,8 +499,6 @@ def extract_jsonl_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extract_jsonl_chars_oracle_sql() -> str:
-    from .. import fixtures
-
     rows = fixtures.build_corpus(N_JSONL_CHAR_DOCS, families=["plain-1col"])
     values = []
     for r in rows:
@@ -597,18 +524,9 @@ def extract_jsonl_chars_oracle_sql() -> str:
 def extract_jsonl_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 pages unit — page records with dimensions
     (JsonlSerializer.cpp:84-97)."""
-    from pyspark.sql import functions as F
-
-    from .. import engine, fixtures
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_JSONL_DOCS, families=JSONL_FAMILIES))
-    out = engine.extract_pages(pages, num_partitions=8,
-                               jsonl_units=("pages",))
-    lines = (out.select(
-        "url", F.posexplode(F.split(F.col("jsonl"), "\n")).alias("pos", "line"))
-        .filter(F.col("line") != ""))
-    return lines.select(
+    out = _extract(spark, fixtures.build_corpus(
+        N_JSONL_DOCS, families=JSONL_FAMILIES), jsonl_units=("pages",))
+    return _jsonl_lines(out).select(
         "url",
         F.get_json_object("line", "$.num").cast("int").alias("num"),
         F.get_json_object("line", "$.width").cast("double").alias("width"),
@@ -616,8 +534,6 @@ def extract_jsonl_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extract_jsonl_pages_oracle_sql() -> str:
-    from .. import fixtures
-
     rows = fixtures.build_corpus(N_JSONL_DOCS, families=JSONL_FAMILIES)
     values = []
     for r in rows:
@@ -636,6 +552,23 @@ JSONL_FIG_FAMILIES = ["figures", "clipped-figure"]
 N_JSONL_FIG_DOCS = 12
 
 
+def _fig_fixture_pages():
+    """(url, pages) per figures/shapes fixture doc, the pages being the
+    CONSTRUCTION-TIME page dicts captured before encoding
+    (fixtures.build_family_pages), never read back from the decoder or
+    serializer."""
+    for i in range(N_JSONL_FIG_DOCS):
+        family = JSONL_FIG_FAMILIES[i % len(JSONL_FIG_FAMILIES)]
+        rng = random.Random(42 * 1000003 + i)  # build_corpus's per-doc rng
+        _, _, pages = fixtures.build_family_pages(family, rng)
+        yield "https://fixture.test/%s/doc-%05d" % (family, i), pages
+
+
+def _extract_fig_docs(spark: SparkSession, **options) -> DataFrame:
+    return _extract(spark, fixtures.build_corpus(
+        N_JSONL_FIG_DOCS, families=JSONL_FIG_FAMILIES), **options)
+
+
 def extract_jsonl_figures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 figures/shapes units — non-text element records with ids, page
     linkage and bboxes (JsonlSerializer.cpp:159-202), parsed back from the
@@ -643,18 +576,8 @@ def extract_jsonl_figures(spark: SparkSession, sf_dir: str) -> DataFrame:
     clip-diverted char path feeding the figure bbox (PdfParsing.cpp:513-591
     — here the diverted chars lie inside the box, so the emitted bbox must
     equal the construction-time one exactly)."""
-    from pyspark.sql import functions as F
-
-    from .. import engine, fixtures
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_JSONL_FIG_DOCS, families=JSONL_FIG_FAMILIES))
-    out = engine.extract_pages(pages, num_partitions=8,
-                               jsonl_units=("figures", "shapes"))
-    lines = (out.select(
-        "url", F.posexplode(F.split(F.col("jsonl"), "\n")).alias("pos", "line"))
-        .filter(F.col("line") != ""))
-    return lines.select(
+    out = _extract_fig_docs(spark, jsonl_units=("figures", "shapes"))
+    return _jsonl_lines(out).select(
         "url", "pos",
         F.get_json_object("line", "$.type").alias("elem_type"),
         F.get_json_object("line", "$.id").alias("elem_id"),
@@ -667,19 +590,9 @@ def extract_jsonl_figures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extract_jsonl_figures_oracle_sql() -> str:
-    """VALUES oracle from the CONSTRUCTION-TIME page geometry (the raw
-    page dicts captured before encoding — fixtures.build_family_pages),
-    never from the decoder or serializer."""
-    import random
-
-    from .. import fixtures
-
+    """VALUES oracle from the construction-time page geometry."""
     values = []
-    for i in range(N_JSONL_FIG_DOCS):
-        family = JSONL_FIG_FAMILIES[i % len(JSONL_FIG_FAMILIES)]
-        rng = random.Random(42 * 1000003 + i)  # build_corpus's per-doc rng
-        _, _, pages = fixtures.build_family_pages(family, rng)
-        url = "https://fixture.test/%s/doc-%05d" % (family, i)
+    for url, pages in _fig_fixture_pages():
         pos = 0
         for kind_key, kind in (("figures", "figure"), ("shapes", "shape")):
             for page in pages:
@@ -703,18 +616,8 @@ def extract_jsonl_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed back from the string surface.  Mirrors extract_jsonl_figures but
     requests ONLY the shapes unit, pinning that the serializer's unit
     selection emits shape records independently of figures."""
-    from pyspark.sql import functions as F
-
-    from .. import engine, fixtures
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_JSONL_FIG_DOCS, families=JSONL_FIG_FAMILIES))
-    out = engine.extract_pages(pages, num_partitions=8,
-                               jsonl_units=("shapes",))
-    lines = (out.select(
-        "url", F.posexplode(F.split(F.col("jsonl"), "\n")).alias("pos", "line"))
-        .filter(F.col("line") != ""))
-    return lines.select(
+    out = _extract_fig_docs(spark, jsonl_units=("shapes",))
+    return _jsonl_lines(out).select(
         "url", "pos",
         F.get_json_object("line", "$.id").alias("shape_id"),
         F.get_json_object("line", "$.page").cast("int").alias("page"),
@@ -728,16 +631,8 @@ def extract_jsonl_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def extract_jsonl_shapes_oracle_sql() -> str:
     """VALUES oracle from the construction-time page geometry (same source
     as the figures oracle, restricted to the shapes lists)."""
-    import random
-
-    from .. import fixtures
-
     values = []
-    for i in range(N_JSONL_FIG_DOCS):
-        family = JSONL_FIG_FAMILIES[i % len(JSONL_FIG_FAMILIES)]
-        rng = random.Random(42 * 1000003 + i)  # build_corpus's per-doc rng
-        _, _, pages = fixtures.build_family_pages(family, rng)
-        url = "https://fixture.test/%s/doc-%05d" % (family, i)
+    for url, pages in _fig_fixture_pages():
         pos = 0
         for page in pages:
             for j, (lx, uy, rx, ly) in enumerate(page.get("shapes", [])):
@@ -753,26 +648,12 @@ def extract_jsonl_shapes_oracle_sql() -> str:
             " page, rank, min_x, min_y, max_x, max_y)" % ",\n".join(values))
 
 
-def extract_visualization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 — the visualization sink through the driver: the figures/shapes
-    layers of the per-document SVG (visualization.serialize_svg, ref
-    PdfDocumentVisualization.cpp:268-288) parsed back from the string
-    surface — ids and box geometry against construction-time page
-    geometry."""
-    from pyspark.sql import functions as F
-
-    from .. import engine, fixtures
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_JSONL_FIG_DOCS, families=JSONL_FIG_FAMILIES))
-    out = engine.extract_pages(pages, num_partitions=8,
-                               svg_units=("figures", "shapes"))
-    rect_rx = (r'<rect class="(?:figures|shapes)" id="([a-z]+-\d+-\d+)"'
-               r' x="([-\d.]+)" y="([-\d.]+)"'
-               r' width="([-\d.]+)" height="([-\d.]+)"')
+def _rect_rows(out: DataFrame, col: str, rect_rx: str) -> DataFrame:
+    """Every ``rect_rx`` match in ``col``, numbered per url and parsed into
+    (url, pos, elem_id, x, y, w, h)."""
     rects = (out.select(
         "url",
-        F.posexplode(F.regexp_extract_all("svg", F.lit(rect_rx), F.lit(0)))
+        F.posexplode(F.regexp_extract_all(col, F.lit(rect_rx), F.lit(0)))
         .alias("pos", "rect")))
     return rects.select(
         "url", "pos",
@@ -783,20 +664,13 @@ def extract_visualization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_extract("rect", rect_rx, 5).cast("double").alias("h"))
 
 
-def extract_visualization_oracle_sql() -> str:
-    """VALUES oracle from the construction-time page geometry, in the
-    SVG's emit order (pages outer, figures-then-shapes inner) with the
-    serializer's %.1f number formatting reproduced exactly."""
-    import random
-
-    from .. import fixtures
-
+def _rect_oracle_sql(rect_y) -> str:
+    """VALUES oracle for :func:`_rect_rows` from the construction-time page
+    geometry, in the writers' emit order (pages outer, figures-then-shapes
+    inner) with their %.1f number formatting reproduced exactly;
+    ``rect_y(page, upper_y, lower_y)`` is the writer's y coordinate."""
     values = []
-    for i in range(N_JSONL_FIG_DOCS):
-        family = JSONL_FIG_FAMILIES[i % len(JSONL_FIG_FAMILIES)]
-        rng = random.Random(42 * 1000003 + i)  # build_corpus's per-doc rng
-        _, _, pages = fixtures.build_family_pages(family, rng)
-        url = "https://fixture.test/%s/doc-%05d" % (family, i)
+    for url, pages in _fig_fixture_pages():
         pos = 0
         for page in pages:
             for kind_key, kind in (("figures", "figure"), ("shapes", "shape")):
@@ -804,7 +678,8 @@ def extract_visualization_oracle_sql() -> str:
                     values.append(
                         "('%s', %d, '%s-%d-%d', %r, %r, %r, %r)"
                         % (url, pos, kind, page["page_num"], j,
-                           float("%.1f" % lx), float("%.1f" % uy),
+                           float("%.1f" % lx),
+                           float("%.1f" % rect_y(page, uy, ly)),
                            float("%.1f" % (rx - lx)),
                            float("%.1f" % (ly - uy))))
                     pos += 1
@@ -813,6 +688,24 @@ def extract_visualization_oracle_sql() -> str:
             " CAST(h AS DOUBLE) AS h"
             " FROM (VALUES\n%s\n) AS t(url, pos, elem_id, x, y, w, h)"
             % ",\n".join(values))
+
+
+def extract_visualization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S8 — the visualization sink through the driver: the figures/shapes
+    layers of the per-document SVG (visualization.serialize_svg, ref
+    PdfDocumentVisualization.cpp:268-288) parsed back from the string
+    surface — ids and box geometry against construction-time page
+    geometry."""
+    out = _extract_fig_docs(spark, svg_units=("figures", "shapes"))
+    return _rect_rows(out, "svg",
+                      r'<rect class="(?:figures|shapes)" id="([a-z]+-\d+-\d+)"'
+                      r' x="([-\d.]+)" y="([-\d.]+)"'
+                      r' width="([-\d.]+)" height="([-\d.]+)"')
+
+
+def extract_visualization_oracle_sql() -> str:
+    """The SVG's y is the element's upper y."""
+    return _rect_oracle_sql(lambda page, uy, ly: uy)
 
 
 def extract_visualization_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -822,113 +715,39 @@ def extract_visualization_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/Elem marked-content ids + `re` operators), geometry in PDF
     bottom-left coordinates — the oracle applies the same
     pageHeight-minus-y flip the reference applies per annotation."""
-    from pyspark.sql import functions as F
-
-    from .. import engine, fixtures
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_JSONL_FIG_DOCS, families=JSONL_FIG_FAMILIES))
-    out = engine.extract_pages(pages, num_partitions=8,
-                               pdf_units=("figures", "shapes"))
-    rect_rx = (r'/Elem <</Id \(([a-z]+-\d+-\d+)\)>> BDC\n'
-               r'([-\d.]+) ([-\d.]+) ([-\d.]+) ([-\d.]+) re S')
-    rects = (out.select(
-        "url",
-        F.posexplode(F.regexp_extract_all("pdf", F.lit(rect_rx), F.lit(0)))
-        .alias("pos", "rect")))
-    return rects.select(
-        "url", "pos",
-        F.regexp_extract("rect", rect_rx, 1).alias("elem_id"),
-        F.regexp_extract("rect", rect_rx, 2).cast("double").alias("x"),
-        F.regexp_extract("rect", rect_rx, 3).cast("double").alias("y"),
-        F.regexp_extract("rect", rect_rx, 4).cast("double").alias("w"),
-        F.regexp_extract("rect", rect_rx, 5).cast("double").alias("h"))
+    out = _extract_fig_docs(spark, pdf_units=("figures", "shapes"))
+    return _rect_rows(out, "pdf",
+                      r'/Elem <</Id \(([a-z]+-\d+-\d+)\)>> BDC\n'
+                      r'([-\d.]+) ([-\d.]+) ([-\d.]+) ([-\d.]+) re S')
 
 
 def extract_visualization_pdf_oracle_sql() -> str:
-    """VALUES oracle from construction-time page geometry with the PDF
-    writer's y flip (y_pdf = clip_lower_y - lower_y) and %.1f number
-    formatting reproduced exactly; emit order matches the writer (pages
-    outer, figures-then-shapes inner)."""
-    import random
-
-    from .. import fixtures
-
-    values = []
-    for i in range(N_JSONL_FIG_DOCS):
-        family = JSONL_FIG_FAMILIES[i % len(JSONL_FIG_FAMILIES)]
-        rng = random.Random(42 * 1000003 + i)  # build_corpus's per-doc rng
-        _, _, pages = fixtures.build_family_pages(family, rng)
-        url = "https://fixture.test/%s/doc-%05d" % (family, i)
-        pos = 0
-        for page in pages:
-            page_h = page["clip"][3]
-            for kind_key, kind in (("figures", "figure"), ("shapes", "shape")):
-                for j, (lx, uy, rx, ly) in enumerate(page.get(kind_key, [])):
-                    values.append(
-                        "('%s', %d, '%s-%d-%d', %r, %r, %r, %r)"
-                        % (url, pos, kind, page["page_num"], j,
-                           float("%.1f" % lx), float("%.1f" % (page_h - ly)),
-                           float("%.1f" % (rx - lx)),
-                           float("%.1f" % (ly - uy))))
-                    pos += 1
-    return ("SELECT url, pos, elem_id, CAST(x AS DOUBLE) AS x,"
-            " CAST(y AS DOUBLE) AS y, CAST(w AS DOUBLE) AS w,"
-            " CAST(h AS DOUBLE) AS h"
-            " FROM (VALUES\n%s\n) AS t(url, pos, elem_id, x, y, w, h)"
-            % ",\n".join(values))
+    """The PDF writer's y flip: y_pdf = clip_lower_y - lower_y."""
+    return _rect_oracle_sql(lambda page, uy, ly: page["clip"][3] - ly)
 
 
 N_ROLE_DOCS = 16
 
 
-def _make_pages_df(spark: SparkSession, rows):
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("golden_text", T.StringType()),
-        T.StructField("family", T.StringType()),
-    ])
-    return spark.createDataFrame(rows, schema)
+def _role_fixture_rows():
+    return fixtures.build_corpus(N_ROLE_DOCS, families=["article-roles"])
 
 
-def _roles_config():
-    from dataclasses import replace
-
-    from ..config import DEFAULT_CONFIG
-
-    return replace(DEFAULT_CONFIG, skip_semantic_roles=False)
+def _roles_config(**options):
+    return replace(DEFAULT_CONFIG, skip_semantic_roles=False, **options)
 
 
 def extract_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T15 — role prediction enabled over the article-roles family; the
     oracle carries non-default roles (title/author-info/heading), so a
     regression in role prediction is driver-visible."""
-    from pyspark.sql import functions as F
-
-    from .. import engine, fixtures
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_ROLE_DOCS, families=["article-roles"]))
-    out = engine.extract_pages(pages, config=_roles_config(),
-                               with_spans=True, num_partitions=8)
-    return (out.select("url", F.posexplode("blocks").alias("pos", "block"))
-            .select("url", "pos",
-                    F.col("block.text").alias("block_text"),
-                    F.col("block.role").alias("role")))
+    return _block_rows(_extract(spark, _role_fixture_rows(),
+                                config=_roles_config(), with_spans=True))
 
 
 def extract_roles_oracle_sql() -> str:
-    from .. import fixtures
-
-    rows = fixtures.build_corpus(N_ROLE_DOCS, families=["article-roles"])
     values = []
-    for r in rows:
+    for r in _role_fixture_rows():
         texts = fixtures.golden_block_texts(r["golden_intent"])
         for pos, (text, role) in enumerate(zip(texts, fixtures.ARTICLE_ROLES)):
             values.append("('%s', %d, '%s', '%s')"
@@ -942,23 +761,9 @@ def extract_roles_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSTM over shipped BPE ids + layout features; kernel/roles_net.py) run
     end-to-end through Spark; same non-default-role oracle as
     extract_roles."""
-    from dataclasses import replace
-
-    from pyspark.sql import functions as F
-
-    from .. import engine, fixtures
-    from ..config import DEFAULT_CONFIG
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_ROLE_DOCS, families=["article-roles"]))
-    cfg = replace(DEFAULT_CONFIG, skip_semantic_roles=False,
-                  role_head="model")
-    out = engine.extract_pages(pages, config=cfg,
-                               with_spans=True, num_partitions=8)
-    return (out.select("url", F.posexplode("blocks").alias("pos", "block"))
-            .select("url", "pos",
-                    F.col("block.text").alias("block_text"),
-                    F.col("block.role").alias("role")))
+    return _block_rows(_extract(spark, _role_fixture_rows(),
+                                config=_roles_config(role_head="model"),
+                                with_spans=True))
 
 
 ROLE_FILTER = ("title", "heading")
@@ -968,21 +773,14 @@ def extract_text_role_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T17 — serializer-level role filter (the reference CLI's --role,
     pdftotext++.cpp:236-241): TXT output restricted to title+heading
     blocks."""
-    from .. import engine, fixtures
-
-    pages = _make_pages_df(spark, fixtures.build_corpus(
-        N_ROLE_DOCS, families=["article-roles"]))
-    out = engine.extract_pages(pages, config=_roles_config(),
-                               num_partitions=8, roles=ROLE_FILTER)
+    out = _extract(spark, _role_fixture_rows(), config=_roles_config(),
+                   roles=ROLE_FILTER)
     return out.select("url", "extracted_text")
 
 
 def extract_text_role_filtered_oracle_sql() -> str:
-    from .. import fixtures
-
-    rows = fixtures.build_corpus(N_ROLE_DOCS, families=["article-roles"])
     values = []
-    for r in rows:
+    for r in _role_fixture_rows():
         blocks = fixtures.golden_dehyphenated_blocks(r["golden_intent"])
         kept = [" ".join(ws) for ws, role in zip(blocks, fixtures.ARTICLE_ROLES)
                 if role in ROLE_FILTER]
@@ -996,19 +794,13 @@ def extract_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-url physical word count — checks T2/T3 word segmentation through
     the driver (the intent token count equals the detected word count for
     every fixture family)."""
-    from .. import engine
-
-    pages = _fixture_pages_df(spark)
-    out = engine.extract_pages(pages, num_partitions=8)
-    return out.select("url", "n_words", "n_blocks", "n_pages")
+    return (_extract(spark, _fixture_rows())
+            .select("url", "n_words", "n_blocks", "n_pages"))
 
 
 def extract_word_counts_oracle_sql() -> str:
-    from .. import fixtures
-
-    rows = fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16)
     values = []
-    for r in rows:
+    for r in _fixture_rows():
         intent = r["golden_intent"]
         n_words = sum(len(line) for block in intent for line in block)
         n_blocks = len(r["golden_blocks"])
@@ -1022,11 +814,7 @@ def extract_word_counts_oracle_sql() -> str:
 def extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-family aggregate over extraction outputs — byte-identity rate and
     block/word totals, checked against intent-level golden aggregates."""
-    from pyspark.sql import functions as F
-
-    from .. import engine
-
-    pages = _fixture_pages_df(spark)
+    pages = _make_pages_df(spark, _fixture_rows())
     out = engine.extract_pages(pages, num_partitions=8)
     joined = out.join(pages.select("url", "family", "golden_text"), "url")
     return (joined.groupBy("family")
@@ -1038,13 +826,8 @@ def extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extract_stats_oracle_sql() -> str:
-    from collections import defaultdict
-
-    from .. import fixtures
-
-    rows = fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16)
     agg = defaultdict(lambda: [0, 0, 0, 0])
-    for r in rows:
+    for r in _fixture_rows():
         intent = r["golden_intent"]
         a = agg[r["family"]]
         a[0] += 1                                    # n_docs
@@ -1058,343 +841,90 @@ def extract_stats_oracle_sql() -> str:
             "n_byte_identical, total_blocks, total_words)" % values)
 
 
-# rows-only queries (no SQL-expressible oracle)
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.ann_lsh_topk(spark, sf_dir)
-
-
-# ORDERING IS DELIBERATE: the driver's CORRECTNESS artifact records at most
-# the FIRST 50 registered queries (r03 stopped at exactly 50 and dropped the
-# last two registered).  Round-5 rotation (VERDICT r4 item #7): `simhash`
-# and `minhash_signatures` — whose transitive-coverage argument was the
-# weakest (banding vs signature surface) — were promoted into the first 50
-# so they get driver-artifact rows; demoted in exchange were the two
-# extraction variants whose oracle SQL is shared verbatim with an earlier
-# entry (`extract_roles_model` reuses extract_roles' oracle,
-# `stream_extract_equivalence` reuses extract_text's oracle — the streaming
-# path additionally has dedicated pytest coverage in test_streaming.py).
-# Round-6 rotation: the NEW `ann_ivf2_topk` enters the head (first driver
-# row this round); `minhash_signatures`, green r5 row in hand, returns to
-# the tail.  Round-6 rotation #2 (late-round operator batch): the four
-# brand-new ops `duplicate_ngram_spans`, `semdedup_prune`,
-# `c4_quality_filter`, `bigram_surprisal` enter the head so their first
-# round gets driver rows; demoted in exchange — each with a green r5
-# driver row in hand and a head sibling covering its unique surface —
-# are `simhash` (simhash_near_pairs runs the same one-groupBy fold plus
-# banding), `audio_meta` (audio_energy_fingerprint runs the same WAV
-# decode plus framing), `vocab_top_tokens` (tfidf_keywords runs the same
-# token-df agg plus ranking), and `per_source_topk` (its window-topk
-# shape is tfidf_keywords' ranking window; its source dim is
-# source_mix_weights', both head).
-# Round-6 rotation #3 (sampling layer batch): `c4_line_dedup`,
-# `stratified_sample`, `dsir_importance_weights`, `sequence_packing`
-# enter the head; demoted in exchange (green r5 rows + head siblings,
-# rationale at the tail entries) are `quality_score`,
-# `source_mix_weights`, `image_phash`, `audio_energy_fingerprint`.
-# Round-6 rotation #5 (webtext batch-4): `url_normalize_dedup`,
-# `domain_stats`, `bloom_url_filter`, `perplexity_buckets`,
-# `link_pagerank` enter the head; demoted in exchange (green r5 rows +
-# head siblings, rationale at the tail entries) are `token_counts`,
-# `fingerprint`, `repetition_stats`, `pii_scrub`, `tfidf_keywords`.
-# Round-6 rotation #6 (batch-5: crawl-native source + streaming dedup):
-# `robots_filter`, `warc_extract_equivalence`, `streaming_url_dedup`
-# enter the head; demoted in exchange (green r5 rows + head siblings,
-# rationale at the tail entries) are `video_frame_sample`,
-# `boilerplate_strip`, `benchmark_decontaminate`.
-# The new `extract_visualization_pdf` starts at the tail: its
-# layer content is the same as head entry `extract_visualization` (SVG
-# form), its unique surface (PDF writer + content-stream parse-back) is
-# pytest- and ORACLE_PARITY-covered.
-# Round-7 rotation #7 (re-certification, oldest-green-first per the
-# r6 verdict): promoted into the head are `extract_visualization_pdf`
-# (the only entry never touched by a driver artifact) plus the nine
-# tail entries with the stalest driver rows — r3: `ann_lsh_topk`,
-# `lang_id`, `multimodal_meta`, `dedup_clusters`,
-# `dedup_clusters_fixpoint`, `event_tumbling_counts`,
-# `extract_jsonl_pages`; r4: `stream_extract_equivalence`,
-# `extract_roles_model`.  Demoted in exchange (ALL hold fresh r6-green
-# driver rows; rationale at each tail entry): `extract_jsonl_shapes`,
-# `extract_jsonl_chars`, `extract_text_extended`, `shipping_priority`,
-# `inactive_customers`, `event_hopping_counts`, `simhash_near_pairs`,
-# `c4_line_dedup`, `bloom_url_filter`, `perplexity_buckets`.
-# Round-7 batch #7 (webtext: anchor text / redirect chains / bitext
-# pairing / crawl-snapshot diff): the four BRAND-NEW ops
-# `anchor_text_topk`, `redirect_resolution`, `bitext_url_pairs`,
-# `crawl_snapshot_diff` enter the head so their first round gets driver
-# rows; demoted in exchange (all r6-green, rationale at the tail
-# entries): `gopher_quality_filter`, `unigram_surprisal`,
-# `dsir_importance_weights`, `image_resize_meta`.
-# Round-7 batch #8 (crawl operations: deterministic-HLL cardinality /
-# budget apportionment / frontier scheduling / host-graph rollup): the
-# four BRAND-NEW ops `hll_url_cardinality`, `crawl_budget_allocation`,
-# `url_frontier_priority`, `host_graph_stats` enter the head so their
-# first round gets driver rows; demoted in exchange (all r6-green,
-# rationale at the tail entries): `extract_jsonl_words`,
-# `ngram_jaccard_pairs`, `ann_lsh_multiprobe_topk`, `big_orders`.
-# Batch #8 addendum: `warc_wet_records` (the WARC->WET conversion
-# product, oracled against the extract_text golden) also enters the
-# head; `pricing_summary` (r6-green) demoted in exchange.
-# Batch #9: `warc_wat_records` (the WAT metadata product — the triad's
-# third file type) enters the head; `url_normalize_dedup` (r6-green,
-# canonicalizer now exercised by two head siblings) demoted.
-# Batch #10: `containment_pairs` (asymmetric quote containment) and
-# `trust_propagation` (seeded TrustRank) enter the head;
-# `event_sessionize` and `ann_bruteforce_topk` (both r6-green, shapes
-# covered — rationale at the tail entries) demoted.
-# Round-8 rotation (VERDICT r7 item #1 — freshness refresh, oldest
-# driver rows first): promoted are the FOUR rotation-#7 orphans that the
-# late batch-#8/#9/#10 promotions displaced past the driver's 50-row cap
-# before the r7 driver ran (`minhash_signatures`, `chunk_documents`,
-# `dedup_keep_list`, `extract_jsonl_figures` — newest rows r4/r5), EIGHT
-# more r5-stale queries (`simhash`, `token_counts`, `tfidf_keywords`,
-# `embedding_near_dup`, `image_phash`, `audio_energy_fingerprint`,
-# `audio_meta`, `video_frame_sample`), and the TWO round-8 ops
-# (`ann_ivfpq_topk`, `bm25_topk` — brand-new, first-round driver rows).
-# Demoted in exchange (ALL fourteen hold r7-green driver rows; rationale
-# at the tail entries): `extract_roles_model`,
-# `extract_text_role_filtered`, `stream_extract_equivalence`,
-# `regional_revenue`, `event_tumbling_counts`, `exact_dedup`,
-# `bigram_surprisal`, `lang_id`, `c4_quality_filter`,
-# `stratified_sample`, `sequence_packing`, `anchor_text_topk`,
-# `bitext_url_pairs`, `crawl_snapshot_diff`.  The dedup-cluster family
-# (`dedup_clusters`, `dedup_clusters_fixpoint`, `dedup_keep_list`) and
-# `containment_pairs` stay in/enter the head deliberately: their code
-# changed post-r7 (star-edge graph + B-side bound, VERDICT r7 items
-# #2/#6) and the fresh driver rows certify the changed code.
-# Round-8 batch #11 (same round): the three brand-new ops
-# `image_phash_near_pairs` (pHash Hamming<=3 image dedup via pigeonhole
-# banding over the decoded-pixel signature), `hits_scores` (Kleinberg
-# hubs/authorities, integer-ppm normalization, beside
-# PageRank/TrustRank), and `quality_classifier` (fastText/DCLM-style
-# fixed-weight integer linear scorer) enter the head for first-round
-# driver rows; demoted in exchange (all r7-green; rationale at the tail
-# entries): `semdedup_prune`, `ann_lsh_topk`, `duplicate_ngram_spans`.
-# Round-8 batch #12 (same round): the three brand-new ops
-# `ccnet_pipeline` (the CCNet dedup->lang->perplexity-band curation
-# composition), `url_classify` (URL-feature fetch gating: type +
-# crawler-trap heuristics), and `html_outline` (DOM heading hierarchy
-# via the reference's monotonic-stack line-hierarchy semantics) enter
-# the head for first-round driver rows; demoted in exchange (all
-# r7-green; rationale at the tail entries): `extract_jsonl_pages`,
-# `multimodal_meta`, `extract_stats`.
-# Round-8 batch #17 (same round): the two brand-new ops
-# `mirror_host_pairs` (mirror-site detection by content-hash
-# containment — hash-bucket equi-join candidates, integer threshold on
-# the smaller host) and `length_percentiles` (exact per-language
-# p10/p50/p90 via a value-histogram rollup — one (lang, n_chars) hash
-# agg then dim-sized cumulative math; no global sort at any scale)
-# enter the head; demoted in exchange (both r7-green AND unchanged
-# since): `redirect_resolution`, `warc_wat_records`.
-# Round-8 batch #16 (same round): the two brand-new ops
-# `dedup_representatives` (quality-argmax member per near-dup cluster —
-# the RefinedWeb/FineWeb keep rule, composing the fixpoint components
-# with the quality classifier's integer logit) and
-# `weighted_sample_topk` (Efraimidis-Spirakis weighted sampling as an
-# integer-exact exponential race, WindowGroupLimit top-K per source)
-# enter the head; demoted in exchange (both r7-green AND unchanged
-# since): `robots_filter`, `warc_wet_records`.
-# Round-8 batch #15 (same round): the two brand-new ops
-# `change_rate_estimate` (Cho & Garcia-Molina per-domain recrawl-rate
-# estimation over the snapshot diff) and `postings_gap_stats` (postings
-# d-gap + varint index-size accounting) enter the head, and
-# `crawl_snapshot_diff` is RE-promoted because its carving key changed
-# this round (phase-shifted DIV-20 residues — the changed-code
-# discipline); demoted in exchange (all r7-green AND unchanged since):
-# `domain_stats`, `host_graph_stats`, `trust_propagation`.
-# Round-8 batch #14 (same round): the three brand-new ops
-# `host_template_ratio` (CCNet onion-pass boilerplate detection by
-# within-host line document frequency), `sitemap_extract` (sharded
-# sitemap synthesis + regexp extraction, independent-construction
-# oracle), and `content_type_sniff` (magic-byte dispatch on real binary
-# payloads vs declared extension) enter the head for first-round driver
-# rows; demoted in exchange (all r7-green AND unchanged since r7 —
-# NEVER this round's own stale-row promotions, the VERDICT r7 item-#1
-# discipline; rationale at the tail entries): `extract_word_counts`,
-# `hll_url_cardinality`, `crawl_budget_allocation`.
-# Round-8 batch #13 (same round): the two brand-new ops
-# `warc_revisit_records` (ISO 28500 revisit records — cross-snapshot
-# payload dedup at WARC write time, digest-journal equi-join + writer/
-# parser round trip) and `fetch_scheduler` (politeness fetch timetable
-# composed over the frontier's top-K) enter the head for first-round
-# driver rows; demoted in exchange (both r7-green; rationale at the
-# tail entries): `extract_visualization`, `warc_cdx_index`.
-# The tail entries remain transitively covered by an earlier entry AND by
-# the pytest oracle gate (test_datapipe.py runs ALL entries vs DuckDB):
-#   dedup_clusters      — the bounded variant of dedup_clusters_fixpoint
-#   event_tumbling_counts — the hop==width special case of hopping counts
-#   ann_lsh_topk        — the single-table special case of the multiprobe
-#                         multi-table ANN (also recall-tested in pytest)
-#   lang_id             — the stopword-ratio special case of the trigram
-#                         profile detector (lang_id_trigram)
-#   multimodal_meta     — runs the same full pixel decode as
-#                         image_resize_meta (which checksums the decoded
-#                         pixels); its unique surface is only the
-#                         decode-derived payload_bytes projection
-#   extract_jsonl_pages — the trivial projection of the extract_jsonl
-#                         sink surface (page dims only)
-#   dedup_clusters_fixpoint — called by (and oracled inside)
-#                         dedup_keep_list, the pipeline's end decision
-#   extract_roles_model / stream_extract_equivalence — see rotation note
-# scripts/check_oracles.py still verifies every entry; ORACLE_PARITY.md
-# records the full in-repo run.
+# The one query table: name -> (Spark callable, oracle), where the oracle
+# is the DuckDB SQL itself or the zero-argument builder that makes it
+# (the VALUES-table oracles run the fixture generator, so oracle_sql()
+# builds them on first use).  The ORDER is fixed: the driver's
+# CORRECTNESS artifact records only the first 50 entries, and
+# test_datapipe.py::test_registry_order pins those 50 to the ones in
+# CORRECTNESS_r09.json.  Position says nothing about coverage: every
+# entry, wherever it sits, is oracle-checked against DuckDB by
+# test_datapipe.py (and by scripts/check_oracles.py).
+Oracle = Union[str, Callable[[], str]]
 QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame],
-                         Optional[str]]] = {
-    # extraction engine (SURVEY.md §2 operators, end-to-end)
-    "extract_text": (extract_text, None),     # oracle filled in lazily below
-    "extract_blocks": (extract_blocks, None),  # oracle filled in lazily below
-    "extract_jsonl": (extract_jsonl, None),    # oracle filled in lazily below
-    # rotation #7 promotion (r6 verdict item #3): the ONLY registry
-    # entry never exercised by a driver artifact (was position 73)
-    "extract_visualization_pdf": (extract_visualization_pdf, None),
-    "extract_roles": (extract_roles, None),    # oracle filled in lazily below
-    # rotation #8 promotion: rotation-#7 orphan (r4 driver row, displaced
-    # past the 50-cap by the batch-#8/#9/#10 promotions before the driver
-    # ran — VERDICT r7 item #1)
-    "extract_jsonl_figures": (extract_jsonl_figures, None),  # oracle below
-    # dedup family
+                         Oracle]] = {
+    "extract_text": (extract_text, extract_text_oracle_sql),
+    "extract_blocks": (extract_blocks, extract_blocks_oracle_sql),
+    "extract_jsonl": (extract_jsonl, extract_jsonl_oracle_sql),
+    "extract_visualization_pdf": (extract_visualization_pdf,
+                                  extract_visualization_pdf_oracle_sql),
+    "extract_roles": (extract_roles, extract_roles_oracle_sql),
+    "extract_jsonl_figures": (extract_jsonl_figures,
+                              extract_jsonl_figures_oracle_sql),
     "minhash_lsh_pairs": (dedup.minhash_lsh_pairs,
                           dedup.MINHASH_LSH_PAIRS_SQL),
-    # rotation #8 promotions: rotation-#7 orphan (r5) + r5-stale sibling
     "minhash_signatures": (dedup.minhash_signatures,
                            dedup.MINHASH_SIGNATURES_SQL),
     "simhash": (dedup.simhash, dedup.SIMHASH_SQL),
-    # round 7 batch #10: asymmetric containment (quote detection) — the
-    # signal Jaccard misses; A-prefix-filtered exact candidates
     "containment_pairs": (dedup.containment_pairs,
                           dedup.CONTAINMENT_PAIRS_SQL),
-    # rotation #7 promotions: stalest driver rows (r3); star-edge graph
-    # rebuild landed post-r7 (VERDICT r7 item #2) — kept in the head so
-    # the changed code gets a fresh driver row
     "dedup_clusters": (chunking.dedup_clusters,
                        chunking.DEDUP_CLUSTERS_SQL),
     "dedup_clusters_fixpoint": (chunking.dedup_clusters_fixpoint,
                                 chunking.DEDUP_CLUSTERS_FIXPOINT_SQL),
-    # rotation #8 promotions: rotation-#7 orphans (r4 driver rows) — and
-    # dedup_keep_list consumes the post-r7 star-edge graph, so its fresh
-    # driver row certifies the changed code end to end
     "dedup_keep_list": (chunking.dedup_keep_list,
                         chunking.DEDUP_KEEP_LIST_SQL),
-    # round 8 batch #16: quality-argmax representative per near-dup
-    # cluster (RefinedWeb/FineWeb keep the BEST member, not the lowest
-    # id) — composes the fixpoint components with quality_classifier's
-    # integer logit; brand-new, head
     "dedup_representatives": (chunking.dedup_representatives,
                               chunking.DEDUP_REPRESENTATIVES_SQL),
     "chunk_documents": (chunking.chunk_documents,
                         chunking.CHUNK_DOCUMENTS_SQL),
-    # similarity search
     "ann_ivf_topk": (similarity.ann_ivf_topk, similarity.ANN_IVF_SQL),
-    # round 6 (VERDICT r5 item #1): the two-level quantizer, promoted
-    # straight into the head so its first round gets a driver row
     "ann_ivf2_topk": (similarity.ann_ivf2_topk, similarity.ANN_IVF2_SQL),
-    # round 8 (VERDICT r7 item #3): IVF-PQ — product-quantized residuals,
-    # ADC scan, exact re-rank; brand-new, straight into the head
     "ann_ivfpq_topk": (similarity.ann_ivfpq_topk, similarity.ANN_IVFPQ_SQL),
-    # rotation #8 promotion: r5-stale exact near-dup baseline
     "embedding_near_dup": (dedup.embedding_near_dup,
                            dedup.EMBEDDING_NEAR_DUP_SQL),
-    # text analysis
-    # rotation #8 promotions: r5-stale token/ranking surfaces
     "token_counts": (textstats.token_counts, textstats.TOKEN_COUNTS_SQL),
     "tfidf_keywords": (textstats.tfidf_keywords,
                        textstats.TFIDF_KEYWORDS_SQL),
-    # round 8 batch #11: the MODEL-SHAPED quality gate (fastText/DCLM-
-    # style fixed-weight linear scorer, integer logits) — brand-new,
-    # straight into the head
     "quality_classifier": (textstats.quality_classifier,
                            textstats.QUALITY_CLASSIFIER_SQL),
-    # round 8 batch #17: exact per-language length percentiles via the
-    # value-histogram rollup (no global sort at any corpus size) —
-    # brand-new, head
     "length_percentiles": (textstats.length_percentiles,
                            textstats.LENGTH_PERCENTILES_SQL),
-    # round 6 batch #3: the flagship composition — dedup + Gopher gate +
-    # surprisal band + stratified sample composed end to end; the oracle
-    # nests each component's own SQL as a CTE
     "training_mix_pipeline": (sampling.training_mix_pipeline,
                               sampling.TRAINING_MIX_SQL),
-    # round 8 batch #16: Efraimidis-Spirakis weighted sampling in an
-    # integer-exact exponential race (arrival = md5_60bit DIV weight,
-    # WindowGroupLimit top-K per source) — brand-new, head
     "weighted_sample_topk": (sampling.weighted_sample_topk,
                              sampling.WEIGHTED_SAMPLE_TOPK_SQL),
-    # round 8 batch #12: the CCNet curation composition (exact dedup ->
-    # language -> per-lang perplexity tercile, tail band dropped) —
-    # brand-new, straight into the head
     "ccnet_pipeline": (webtext.ccnet_pipeline, webtext.CCNET_PIPELINE_SQL),
-    # round 8 batch #14: CCNet's other half — per-host template
-    # (boilerplate) line detection by within-host document frequency —
-    # brand-new, straight into the head
     "host_template_ratio": (webtext.host_template_ratio,
                             webtext.HOST_TEMPLATE_RATIO_SQL),
-    # round 6 batch #4: webtext provenance layer (URLs / domains / link
-    # graph) — see rotation #5 in the ORDERING note
     "link_pagerank": (webtext.link_pagerank, webtext.LINK_PAGERANK_SQL),
-    # round 8 batch #11: HITS hubs & authorities (integer-exact ppm
-    # normalization) beside PageRank/TrustRank — brand-new, head
     "hits_scores": (webtext.hits_scores, webtext.HITS_SCORES_SQL),
     "inverted_index": (webtext.inverted_index, webtext.INVERTED_INDEX_SQL),
-    # round 8 batch #15: postings d-gap + varint size accounting (the
-    # index-compression estimator) — brand-new, head
     "postings_gap_stats": (webtext.postings_gap_stats,
                            webtext.POSTINGS_GAP_STATS_SQL),
-    # round 8 (VERDICT r7 item #7): BM25 ranked retrieval over the index
-    # — brand-new, straight into the head
     "bm25_topk": (webtext.bm25_topk, webtext.BM25_TOPK_SQL),
-    # round 8 batch #14: the crawl's URL-discovery channel — sharded
-    # sitemap synthesis + regexp extraction, oracled against an
-    # INDEPENDENT direct construction (no XML in the oracle) —
-    # brand-new, straight into the head
     "sitemap_extract": (crawlops.sitemap_extract,
                         crawlops.SITEMAP_EXTRACT_SQL),
-    # round 8 batch #14: magic-byte content-type sniffing over REAL
-    # binary payloads vs the URL-declared extension (the post-fetch
-    # gate beside url_classify's pre-fetch gate) — brand-new, head
     "content_type_sniff": (crawlops.content_type_sniff,
                            crawlops.CONTENT_TYPE_SNIFF_SQL),
     "url_frontier_priority": (crawlops.url_frontier_priority,
                               crawlops.URL_FRONTIER_PRIORITY_SQL),
-    # round 8 batch #12: URL-feature fetch gating (doc-type + crawler-
-    # trap heuristics, pure codegen projection) — brand-new, head
     "url_classify": (crawlops.url_classify, crawlops.URL_CLASSIFY_SQL),
-    # round 8 batch #13: the politeness fetch timetable composed over
-    # the frontier's per-domain top-K — brand-new, head
     "fetch_scheduler": (crawlops.fetch_scheduler,
                         crawlops.FETCH_SCHEDULER_SQL),
-    # round 8 batch #15: per-domain recrawl-rate estimation (Cho &
-    # Garcia-Molina) composed over crawl_snapshot_diff — brand-new, head
     "change_rate_estimate": (webtext.change_rate_estimate,
                              webtext.CHANGE_RATE_ESTIMATE_SQL),
-    # batch-#15 re-promotion: crawl_snapshot_diff's carving key changed
-    # this round (phase-shifted DIV-20 residues so every domain sees a
-    # MIX of verdicts — change_rate_estimate's input requirement); the
-    # changed code gets a fresh driver row (the dedup_clusters
-    # precedent)
     "crawl_snapshot_diff": (webtext.crawl_snapshot_diff,
                             webtext.CRAWL_SNAPSHOT_DIFF_SQL),
-    # round 8 batch #17: mirror-host detection by content-hash
-    # containment (synthesized m.-mirrors = true positives, a partial
-    # cross-source scraper = the threshold's negative cases) —
-    # brand-new, head
     "mirror_host_pairs": (crawlops.mirror_host_pairs,
                           crawlops.MIRROR_HOST_PAIRS_SQL),
-    # round 6 batch #5: crawl-native source + streaming dedup
-    "warc_extract_equivalence": (warc_extract_equivalence, None),  # below
-    # round 8 batch #13: ISO 28500 revisit records (cross-snapshot
-    # payload dedup at WARC write time) — brand-new, head
+    "warc_extract_equivalence": (warc_extract_equivalence,
+                                 extract_text_oracle_sql),
     "warc_revisit_records": (warc_revisit_records,
                              WARC_REVISIT_RECORDS_SQL),
-    # round 7 batch #9: the WAT metadata product (JSON envelopes),
-    # completing the WARC/WAT/WET triad; oracled against an independent
-    # index_warc+read_record+hashlib construction
     "streaming_url_dedup": (streaming_url_dedup_equivalence,
                             STREAMING_URL_DEDUP_SQL),
-    # rotation #8 promotions: the r5-stale decoded-content signatures
-    # (PNG/JPEG pixel decode, WAV framing, MJPEG demux) — their newest
-    # driver rows all date from r5
     "image_phash": (multimodal.image_phash, multimodal.IMAGE_PHASH_SQL),
-    # round 8 batch #11: pHash near-dup IMAGE pairs (pigeonhole banding
-    # over the decoded-pixel signature) — brand-new, head
     "image_phash_near_pairs": (multimodal.image_phash_near_pairs,
                                multimodal.IMAGE_PHASH_NEAR_PAIRS_SQL),
     "audio_energy_fingerprint": (multimodal.audio_energy_fingerprint,
@@ -1402,40 +932,16 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame],
     "audio_meta": (multimodal.audio_meta, multimodal.AUDIO_META_SQL),
     "video_frame_sample": (multimodal.video_frame_sample,
                            multimodal.VIDEO_FRAME_SAMPLE_SQL),
-    # HTML boilerplate strip (north-rule raw-HTML surface)
-    "main_content_blocks": (
-        lambda spark, sf_dir: htmlstrip.main_content_blocks(spark, sf_dir),
-        None),  # oracle filled in lazily below
-    # round 8 batch #12: DOM heading hierarchy (monotonic-stack parents,
-    # the reference's line-hierarchy semantics on the HTML side) —
-    # brand-new, head
-    "html_outline": (
-        lambda spark, sf_dir: htmlstrip.html_outline(spark, sf_dir),
-        None),  # oracle filled in lazily below
-    # --- tail: transitively-covered variants (see ORDERING note above).
-    # Rotation #8 demotions (ALL hold r7-green driver rows; VERDICT r7
-    # item #1 rotation, oldest-stale-first promotions in exchange):
-    # extract_roles_model / stream_extract_equivalence share their oracle
-    # SQL verbatim with head extract_roles / extract_text (the historical
-    # demotion rationale) and streaming has dedicated pytest coverage;
-    # extract_text_role_filtered is the serializer roles= path of head
-    # extract_text + extract_roles; regional_revenue's join+agg shape is
-    # the TPC-H tail family's; event_tumbling_counts is the hop==width
-    # special case of event_hopping_counts (tail, pytest-covered);
-    # exact_dedup's one-hash-agg runs inside head training_mix_pipeline;
-    # bigram_surprisal's integer-bit-length plan is unigram_surprisal's
-    # plus one bounded join and the surprisal band runs inside head
-    # training_mix_pipeline; lang_id is the stopword special case of
-    # lang_id_trigram; c4_quality_filter's line-rule gate shape is shared
-    # with c4_line_dedup and the head Gopher gate; stratified_sample and
-    # sequence_packing are composed inside head training_mix_pipeline;
-    # anchor_text_topk's WindowGroupLimit top-K shape is head
-    # url_frontier_priority's and inverted_index's; bitext_url_pairs'
-    # agg + slot equi-join and crawl_snapshot_diff's hash-reduced
-    # full-outer join got their first driver rows in r7.
-    "extract_roles_model": (extract_roles_model, None),  # same oracle shape
-    "extract_text_role_filtered": (extract_text_role_filtered, None),
-    "stream_extract_equivalence": (stream_extract_equivalence, None),
+    "main_content_blocks": (htmlstrip.main_content_blocks,
+                            htmlstrip.main_content_blocks_oracle_sql),
+    "html_outline": (htmlstrip.html_outline,
+                     htmlstrip.html_outline_oracle_sql),
+    # the first 50 entries end here
+    "extract_roles_model": (extract_roles_model, extract_roles_oracle_sql),
+    "extract_text_role_filtered": (extract_text_role_filtered,
+                                   extract_text_role_filtered_oracle_sql),
+    "stream_extract_equivalence": (stream_extract_equivalence,
+                                   extract_text_oracle_sql),
     "regional_revenue": (relational.regional_revenue,
                          relational.REGIONAL_REVENUE_SQL),
     "event_tumbling_counts": (events.tumbling_counts,
@@ -1444,7 +950,8 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame],
     "bigram_surprisal": (textstats.bigram_surprisal,
                          textstats.BIGRAM_SURPRISAL_SQL),
     "lang_id": (textstats.lang_id, textstats.LANG_ID_SQL),
-    "c4_quality_filter": (textstats.c4_quality_filter, None),
+    "c4_quality_filter": (textstats.c4_quality_filter,
+                          textstats.c4_quality_filter_oracle_sql),
     "stratified_sample": (sampling.stratified_sample,
                           sampling.STRATIFIED_SAMPLE_SQL),
     "sequence_packing": (sampling.sequence_packing,
@@ -1453,148 +960,57 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame],
                          webtext.ANCHOR_TEXT_TOPK_SQL),
     "bitext_url_pairs": (webtext.bitext_url_pairs,
                          webtext.BITEXT_URL_PAIRS_SQL),
-    # batch-#11 demotions (ALL r7-green; the three new ops take their
-    # head slots): semdedup_prune's cluster assignment is the ANN
-    # ladder's quantizer (head) and its within-cluster pairwise stage is
-    # embedding_near_dup's tiled kernel (now head); ann_lsh_topk is the
-    # single-table special case of ann_lsh_multiprobe_topk (tail,
-    # recall-gated in pytest) with the bucketed-ANN surface carried by
-    # head ivf/ivf2/ivfpq; duplicate_ngram_spans' gram hash-agg +
-    # frequency-join shape is containment_pairs' candidate machinery
-    # (head) and its 10x probe exponent (0.98, linear gram explode) is
-    # on record in three round artifacts.
-    # batch-#13 demotions (both r7-green; the two new ops take their
-    # head slots): extract_visualization's SVG layer content is head
-    # extract_visualization_pdf's annotation layer over the same rect
-    # source (the historical pairing — r6 kept the SVG form and demoted
-    # the PDF form; the driver has green rows for BOTH now, so they
-    # swap); warc_cdx_index's random-access contract (seek+read_record
-    # byte-identity) is pytest-covered and its container coordinates are
-    # re-derived and oracled inside head warc_wat_records' JSON
-    # envelopes.
-    "extract_visualization": (extract_visualization, None),  # oracle below
-    "warc_cdx_index": (warc_cdx_index, None),  # oracle filled lazily below
-    # batch-#12 demotions (ALL r7-green; the three new ops take their
-    # head slots): extract_jsonl_pages is the trivial page-dims
-    # projection of head extract_jsonl's sink surface; multimodal_meta
-    # runs the same full pixel decode as head image_phash /
-    # image_phash_near_pairs (which checksum the decoded content) — its
-    # unique surface is only the decode-derived payload_bytes
-    # projection; extract_stats' A1-A3 statistics kernels run
-    # transitively inside EVERY head extraction query (they gate word/
-    # line/block detection) and carry dedicated pytest coverage
-    # (test_kernel_stages).
-    "extract_jsonl_pages": (extract_jsonl_pages, None),  # oracle below
+    "extract_visualization": (extract_visualization,
+                              extract_visualization_oracle_sql),
+    "warc_cdx_index": (warc_cdx_index, warc_cdx_index_oracle_sql),
+    "extract_jsonl_pages": (extract_jsonl_pages,
+                            extract_jsonl_pages_oracle_sql),
     "multimodal_meta": (multimodal.multimodal_meta,
                         multimodal.MULTIMODAL_META_SQL),
-    "extract_stats": (extract_stats, None),    # oracle filled in lazily below
+    "extract_stats": (extract_stats, extract_stats_oracle_sql),
     "semdedup_prune": (similarity.semdedup_prune,
                        similarity.SEMDEDUP_PRUNE_SQL),
-    "ann_lsh_topk": (ann_lsh_topk, similarity.ANN_LSH_SQL),
+    "ann_lsh_topk": (similarity.ann_lsh_topk, similarity.ANN_LSH_SQL),
     "duplicate_ngram_spans": (dedup.duplicate_ngram_spans,
                               dedup.DUPLICATE_NGRAM_SPANS_SQL),
-    # round-6 rotation #3 demotions (batch-3 promotions displaced four
-    # r5-green rows): quality_score's length/punct gate is covered
-    # by head gopher_quality_filter; source_mix_weights'
-    # count-agg shape is stratified_sample's rate dim
     "quality_score": (textstats.quality_score, textstats.QUALITY_SCORE_SQL),
     "source_mix_weights": (textstats.source_mix_weights,
                            textstats.SOURCE_MIX_WEIGHTS_SQL),
-    # rotation #4 (flagship promotion): lang_id_trigram has a green r5
-    # driver row; its stopword sibling lang_id sits here too and the
-    # trigram-profile surface stays pytest+parity covered
     "lang_id_trigram": (textstats.lang_id_trigram,
                         textstats.LANG_ID_TRIGRAM_SQL),
     "vocab_top_tokens": (textstats.vocab_top_tokens,
                          textstats.VOCAB_TOP_TOKENS_SQL),
     "per_source_topk": (textstats.per_source_topk,
                         textstats.PER_SOURCE_TOPK_SQL),
-    # round-6 rotation #5 demotions: fingerprint / repetition_stats
-    # share the token hash-agg shape with head unigram-surprisal-style
-    # plans and dsir_importance_weights; pii_scrub's regexp-gate shape is
-    # the C4 gate's.
     "fingerprint": (textstats.fingerprint, textstats.FINGERPRINT_SQL),
     "repetition_stats": (textstats.repetition_stats,
                          textstats.REPETITION_STATS_SQL),
     "pii_scrub": (textstats.pii_scrub, textstats.PII_SCRUB_SQL),
-    "boilerplate_strip": (
-        lambda spark, sf_dir: htmlstrip.boilerplate_strip(spark, sf_dir),
-        None),  # oracle filled in lazily below
+    "boilerplate_strip": (htmlstrip.boilerplate_strip,
+                          htmlstrip.boilerplate_strip_oracle_sql),
     "benchmark_decontaminate": (dedup.benchmark_decontaminate,
                                 dedup.BENCHMARK_DECONTAMINATE_SQL),
-    # rotation #6 addendum 2: inverted_index promotion displaces
-    # event_gap_stats (green r5 row; its lag-window shape is head
-    # event_sessionize's gap computation, its agg shape event_hopping's)
     "event_gap_stats": (events.event_gap_stats, events.EVENT_GAP_STATS_SQL),
-    # round-7 rotation #7 demotions (ALL hold fresh r6-green driver
-    # rows; surfaces stay head- or pytest-covered):
-    #   extract_jsonl_shapes — shape layer is head extract_visualization's
-    #     rect source AND the promoted extract_visualization_pdf's
-    #     annotation layer; named by the r6 verdict as the swap
-    #   extract_jsonl_chars — the char unit rides the same serializer
-    #     path as head extract_jsonl/_words; glyph-level decode is
-    #     pytest-covered (test_serializers, 3720-row golden)
-    #   extract_text_extended — head extract_text's serializer with the
-    #     block-separator flag; byte-identity pytest-covered
-    #   shipping_priority / inactive_customers — TPC-H-style join+agg /
-    #     anti-join shapes, shared with head big_orders +
-    #     regional_revenue; r6-green
-    #   event_hopping_counts — the promoted event_tumbling_counts is its
-    #     hop==width special case; the general overlap explode stays
-    #     pytest+parity covered
-    #   simhash_near_pairs — pigeonhole banding is pytest-covered
-    #     (test_datapipe recall gates) and tail sibling simhash carries
-    #     the signature fold; r6-green
-    #   c4_line_dedup — head c4_quality_filter shares the line-structured
-    #     corpus; the cross-page first-wins window is pytest-covered
-    #   bloom_url_filter / perplexity_buckets — broadcast-bitset probe /
-    #     per-lang ntile window, both r6-green; shapes shared with head
-    #     benchmark gates and sequence_packing's per-shard window
-    "extract_jsonl_shapes": (extract_jsonl_shapes, None),  # oracle below
-    # round-7 rotation #8 demotions (ALL hold fresh r6-green driver
-    # rows; surfaces stay head- or pytest-covered):
-    #   extract_jsonl_words — the word unit rides the same serializer
-    #     path as head extract_jsonl; word detection is pytest-covered
-    #     (test_serializers, 1502-row golden) and exercised by head
-    #     extract_word_counts
-    #   ngram_jaccard_pairs — the PPJoin prefix-filter pair surface is
-    #     head minhash_lsh_pairs' band-join shape over the same shingle
-    #     stream; the exact-Jaccard kernel is pytest-covered
-    #   ann_lsh_multiprobe_topk — the probe-mask expansion of tail
-    #     ann_lsh_topk; head ann_ivf/_ivf2 carry the bucketed-ANN
-    #     surface, recall gates stay in pytest
-    #   big_orders — TPC-H-style group-filter shape shared with head
-    #     pricing_summary + regional_revenue
-    "extract_jsonl_words": (extract_jsonl_words, None),  # oracle below
+    "extract_jsonl_shapes": (extract_jsonl_shapes,
+                             extract_jsonl_shapes_oracle_sql),
+    "extract_jsonl_words": (extract_jsonl_words,
+                            extract_jsonl_words_oracle_sql),
     "ngram_jaccard_pairs": (dedup.ngram_jaccard_pairs,
                             dedup.NGRAM_JACCARD_SQL),
     "ann_lsh_multiprobe_topk": (similarity.ann_lsh_multiprobe_topk,
                                 similarity.ANN_MULTIPROBE_SQL),
     "big_orders": (relational.big_orders, relational.BIG_ORDERS_SQL),
-    #   pricing_summary — demoted for the warc_wet_records promotion
-    #     (r6-green; its filter+group agg shape is head regional_revenue's
-    #     join+agg minus the join, and big_orders sits one entry up)
     "pricing_summary": (relational.pricing_summary,
                         relational.PRICING_SUMMARY_SQL),
-    # round-7 rotation #10 demotions (batch-#10 promotions; both r6-green):
-    #   event_sessionize — its gap-flag + cumsum window shape is tail
-    #     event_gap_stats' lag window and head event_tumbling_counts'
-    #     bucketing; sessionization logic stays pytest-covered
-    #     (test_streaming stateful sessionize == batch)
-    #   ann_bruteforce_topk — the exact baseline whose cosine kernel runs
-    #     INSIDE head ann_ivf/ann_ivf2 rescoring; every CI run compares
-    #     the LSH/IVF paths against it via the recall gates
     "event_sessionize": (events.sessionize, events.SESSIONIZE_SQL),
     "ann_bruteforce_topk": (similarity.ann_bruteforce_topk,
                             similarity.ANN_BRUTEFORCE_SQL),
-    #   url_normalize_dedup — demoted for the warc_wat_records promotion
-    #     (r6-green; its codegen canonicalizer is exercised verbatim by
-    #     head url_frontier_priority AND hll_url_cardinality, its
-    #     hash-agg+join-back dedup shape by head exact_dedup)
     "url_normalize_dedup": (webtext.url_normalize_dedup,
                             webtext.URL_NORMALIZE_DEDUP_SQL),
-    "extract_jsonl_chars": (extract_jsonl_chars, None),  # oracle below
-    "extract_text_extended": (extract_text_extended, None),  # oracle below
+    "extract_jsonl_chars": (extract_jsonl_chars,
+                            extract_jsonl_chars_oracle_sql),
+    "extract_text_extended": (extract_text_extended,
+                              extract_text_extended_oracle_sql),
     "shipping_priority": (relational.shipping_priority,
                           relational.SHIPPING_PRIORITY_SQL),
     "inactive_customers": (relational.inactive_customers,
@@ -1603,22 +1019,12 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame],
                              events.HOPPING_COUNTS_SQL),
     "simhash_near_pairs": (dedup.simhash_near_pairs,
                            dedup.SIMHASH_NEAR_PAIRS_SQL),
-    "c4_line_dedup": (textstats.c4_line_dedup, None),
+    "c4_line_dedup": (textstats.c4_line_dedup,
+                      textstats.c4_line_dedup_oracle_sql),
     "bloom_url_filter": (webtext.bloom_url_filter,
                          webtext.BLOOM_URL_FILTER_SQL),
     "perplexity_buckets": (webtext.perplexity_buckets,
                            webtext.PERPLEXITY_BUCKETS_SQL),
-    # round-7 batch #7 demotions (all r6-green):
-    #   gopher_quality_filter / unigram_surprisal — BOTH are nested
-    #     verbatim as CTEs inside head training_mix_pipeline's oracle, so
-    #     every driver round still value-checks them end to end; their
-    #     gate/agg shapes are head c4_quality_filter's and
-    #     bigram_surprisal's
-    #   dsir_importance_weights — the single-token-pass dim-join shape of
-    #     the surprisal family (bigram_surprisal stays head); r6-green
-    #   image_resize_meta — same full pixel decode as promoted head
-    #     sibling multimodal_meta rides on; its unique resize checksum
-    #     surface stays pytest-covered (test_datapipe + codec tests)
     "gopher_quality_filter": (textstats.gopher_quality_filter,
                               textstats.GOPHER_QUALITY_FILTER_SQL),
     "unigram_surprisal": (textstats.unigram_surprisal,
@@ -1627,65 +1033,22 @@ QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame],
                                 sampling.DSIR_IMPORTANCE_SQL),
     "image_resize_meta": (multimodal.image_resize_meta,
                           multimodal.IMAGE_RESIZE_SQL),
-    # round-8 batch #14 demotions (ALL hold r7-green driver rows and
-    # are unchanged since; surfaces stay head- or pytest-covered):
-    #   extract_word_counts — the trivial per-page count projection of
-    #     the word unit; head extract_text/extract_jsonl ride the same
-    #     word-detection path and test_serializers carries the golden
-    #   hll_url_cardinality — the deterministic-HLL register math is
-    #     pytest-covered (snapshot-merge property test) and its
-    #     canonicalizer input is head url_frontier_priority's verbatim
-    #   crawl_budget_allocation — Hamilton largest-remainder is
-    #     pytest-covered (sums-to-budget exact); its host dimension agg
-    #     is head host_graph_stats' coarsened shape
-    "extract_word_counts": (extract_word_counts, None),  # oracle below
+    "extract_word_counts": (extract_word_counts,
+                            extract_word_counts_oracle_sql),
     "hll_url_cardinality": (crawlops.hll_url_cardinality,
                             crawlops.HLL_URL_CARDINALITY_SQL),
     "crawl_budget_allocation": (crawlops.crawl_budget_allocation,
                                 crawlops.CRAWL_BUDGET_ALLOCATION_SQL),
-    # round-8 batch #15 demotions (ALL hold r7-green driver rows and
-    # are unchanged since; surfaces stay head- or pytest-covered):
-    #   domain_stats — its per-domain agg + bounded top-K window shape
-    #     is carried by head change_rate_estimate (domain agg) and
-    #     url_frontier_priority (WindowGroupLimit); the r6 cast fix is
-    #     pinned by the DESCRIBE type-parity pytest
-    #   host_graph_stats — the coarsen-to-host-pairs rollup rides the
-    #     same EDGES fragment as head link_pagerank/hits_scores; edge
-    #     conservation stays pytest-covered
-    #   trust_propagation — shares rank_iterations verbatim with head
-    #     link_pagerank (the seed-gated teleport is the only delta,
-    #     pytest-covered)
     "domain_stats": (webtext.domain_stats, webtext.DOMAIN_STATS_SQL),
     "host_graph_stats": (crawlops.host_graph_stats,
                          crawlops.HOST_GRAPH_STATS_SQL),
     "trust_propagation": (crawlops.trust_propagation,
                           crawlops.TRUST_PROPAGATION_SQL),
-    # round-8 batch #16 demotions (BOTH hold r7-green driver rows and
-    # are unchanged since; surfaces stay head- or pytest-covered):
-    #   robots_filter — the prefix-gate semantics are pytest-covered
-    #     (crafted robots fixtures) and the TRY_CAST totality parity is
-    #     pinned by the type-parity suite; its broadcast-dim join shape
-    #     is head bloom/frontier territory
-    #   warc_wet_records — the WET writer/parser round trip stays
-    #     byte-anchored to the extract_text goldens in pytest
-    #     (test_warc), and head warc_revisit_records + warc_wat_records
-    #     carry the ISO 28500 writer/parser surface every round
     "robots_filter": (webtext.robots_filter, webtext.ROBOTS_FILTER_SQL),
-    "warc_wet_records": (warc_wet_records, None),  # oracle filled below
-    # round-8 batch #17 demotions (BOTH hold r7-green driver rows and
-    # are unchanged since; surfaces stay head- or pytest-covered):
-    #   redirect_resolution — the pointer-doubling join chain is carried
-    #     every round by head dedup_clusters_fixpoint (the same
-    #     log-rounds localCheckpoint discipline); hop/loop semantics
-    #     stay pytest-covered
-    #   warc_wat_records — the WAT JSON-envelope product; head
-    #     warc_extract_equivalence + warc_revisit_records carry the ISO
-    #     28500 writer/parser surface every round, and the WAT
-    #     canonical-JSON construction stays pinned by its independent
-    #     index+digest oracle in pytest
+    "warc_wet_records": (warc_wet_records, extract_text_oracle_sql),
     "redirect_resolution": (webtext.redirect_resolution,
                             webtext.REDIRECT_RESOLUTION_SQL),
-    "warc_wat_records": (warc_wat_records, None),  # oracle filled below
+    "warc_wat_records": (warc_wat_records, warc_wat_records_oracle_sql),
 }
 
 
@@ -1693,52 +1056,13 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: fn for name, (fn, _) in QUERIES.items()}
 
 
-# oracle_sql() memo: every lazy oracle is a pure function of the fixture
-# corpora (deterministic by construction), but BUILDING them runs the
-# whole reference kernel over the goldens — per-test rebuilds dominated
-# the suite's wall clock.  Built once, returned as a copy.
-_ORACLE_SQL_CACHE: Optional[Dict[str, str]] = None
+@functools.cache
+def _built_oracles() -> Dict[str, str]:
+    # built once: the VALUES-table oracles run the fixture generator (and
+    # the goldens), and per-test rebuilds dominated the suite's wall clock
+    return {name: oracle if isinstance(oracle, str) else oracle()
+            for name, (_, oracle) in QUERIES.items()}
 
 
 def oracle_sql() -> Dict[str, str]:
-    global _ORACLE_SQL_CACHE
-    if _ORACLE_SQL_CACHE is not None:
-        return dict(_ORACLE_SQL_CACHE)
-    oracles = {name: sql for name, (_, sql) in QUERIES.items()
-               if sql is not None}
-    oracles["extract_text"] = extract_text_oracle_sql()
-    # streamed output must equal the batch path's golden, per url
-    oracles["stream_extract_equivalence"] = extract_text_oracle_sql()
-    # WARC-ingested output must equal the same golden, per url
-    oracles["warc_extract_equivalence"] = extract_text_oracle_sql()
-    # the WET parse-back must ALSO equal the same golden, per url —
-    # byte-faithful writer + parser or the hash fails
-    oracles["warc_wet_records"] = extract_text_oracle_sql()
-    # CDX index rows must equal the deterministic-construction index
-    oracles["warc_cdx_index"] = warc_cdx_index_oracle_sql()
-    # WAT envelopes must equal the independent digest/offset construction
-    oracles["warc_wat_records"] = warc_wat_records_oracle_sql()
-    oracles["extract_blocks"] = extract_blocks_oracle_sql()
-    oracles["boilerplate_strip"] = htmlstrip.boilerplate_strip_oracle_sql()
-    oracles["main_content_blocks"] = htmlstrip.main_content_blocks_oracle_sql()
-    oracles["html_outline"] = htmlstrip.html_outline_oracle_sql()
-    oracles["c4_quality_filter"] = textstats.c4_quality_filter_oracle_sql()
-    oracles["c4_line_dedup"] = textstats.c4_line_dedup_oracle_sql()
-    oracles["extract_word_counts"] = extract_word_counts_oracle_sql()
-    oracles["extract_text_extended"] = extract_text_extended_oracle_sql()
-    oracles["extract_jsonl"] = extract_jsonl_oracle_sql()
-    oracles["extract_jsonl_words"] = extract_jsonl_words_oracle_sql()
-    oracles["extract_jsonl_pages"] = extract_jsonl_pages_oracle_sql()
-    oracles["extract_jsonl_chars"] = extract_jsonl_chars_oracle_sql()
-    oracles["extract_jsonl_figures"] = extract_jsonl_figures_oracle_sql()
-    oracles["extract_jsonl_shapes"] = extract_jsonl_shapes_oracle_sql()
-    oracles["extract_visualization"] = extract_visualization_oracle_sql()
-    oracles["extract_visualization_pdf"] = \
-        extract_visualization_pdf_oracle_sql()
-    oracles["extract_roles"] = extract_roles_oracle_sql()
-    oracles["extract_roles_model"] = extract_roles_oracle_sql()
-    oracles["extract_text_role_filtered"] = \
-        extract_text_role_filtered_oracle_sql()
-    oracles["extract_stats"] = extract_stats_oracle_sql()
-    _ORACLE_SQL_CACHE = oracles
-    return dict(_ORACLE_SQL_CACHE)
+    return dict(_built_oracles())

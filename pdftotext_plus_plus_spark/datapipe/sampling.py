@@ -18,9 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from . import _documents, spread
 
 
 # ---------------------------------------------------------------------------
@@ -108,7 +106,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-token bits back on the stream, one per-doc partial agg.  The
     unigram_surprisal plan with a two-column dim.
     """
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     toks = (docs.select("doc_id", "lang",
                         F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))

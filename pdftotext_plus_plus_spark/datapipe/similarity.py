@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import spread
+
 TOP_K = 10
 N_QUERIES = 5
 N_PLANES = 4
@@ -30,7 +32,6 @@ MP_PROBE_HAMMING = 2
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import spread
     return spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import _documents, spread
+
 # tiny n-gram-free heuristic: share of English stopword tokens
 EN_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
                 "on", "for", "with", "as", "at", "by", "from", "that", "this")
@@ -15,10 +17,6 @@ STOPWORD_RATIO_EN = 0.05
 
 FP_WINDOW = 16
 FP_STRIDE = 8
-
-
-def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
@@ -160,7 +158,6 @@ FROM toks GROUP BY doc_id
 def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style fingerprint: lexicographic min of md5 over 16-char
     windows at stride 8 (one representative hash per document)."""
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     return (docs
             .select("doc_id",
@@ -401,7 +398,6 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per token), so Zipf-skewed tokens fan out but never blow up; the
     corpus doc count joins as a broadcast single-row frame (no driver
     action)."""
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     toks = _tokens(docs)
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
@@ -769,7 +765,6 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast for the corpus total, an N:1 token-dim join back to the
     token stream, one (doc_id) partial agg — the tfidf plan minus the
     ranking window."""
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     toks = _tokens(docs)
     tf = toks.groupBy("tok").agg(F.count("*").alias("tf"))
@@ -841,7 +836,6 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-bigram table), then two N:1 dim joins back onto the bigram
     stream — the unigram_surprisal plan with one extra bounded join.
     """
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     toked = docs.select(
         "doc_id",

@@ -32,9 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from . import _documents, spread
 
 
 # ---------------------------------------------------------------------------
@@ -757,7 +755,6 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded collect_list runs over ≤POSTINGS_HEAD rows.  The final
     token-dim equi-join is vocab-sized on both sides.
     """
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     toks = (docs.select("doc_id",
                         F.explode(F.split(F.trim("text"), r"\s+"))
@@ -858,7 +855,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges now carry ~candidate-matching rows instead of every bigram
     in the corpus.  Corpus stats (n_docs, avgdl) come from array lengths
     alone — no bigram materialization on that pass."""
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     # terms = word bigrams of the whitespace token stream
     toked = docs.select(
@@ -1435,7 +1431,6 @@ def host_template_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-occurrence min — no window, no self-join; the host dimension
     (n_docs) is tiny and broadcasts.
     """
-    from . import spread
     docs = spread(_documents(spark, sf_dir))
     pages = docs.select(
         "doc_id",

@@ -264,7 +264,6 @@ def salted_repartition(df, num_partitions: Optional[int] = None,
 def extract_pages(df, config: PipelineConfig = DEFAULT_CONFIG,
                   with_spans: bool = False,
                   num_partitions: Optional[int] = None,
-                  salted: bool = True,
                   roles=None,
                   jsonl_units=None,
                   svg_units=None,
@@ -285,11 +284,8 @@ def extract_pages(df, config: PipelineConfig = DEFAULT_CONFIG,
     task's last row and NULL on all others."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    projected = df.select("url", "html")  # column pruning reaches the scan
-    if salted:
-        projected = salted_repartition(projected, num_partitions)
-    elif num_partitions:
-        projected = projected.repartition(num_partitions)
+    # column pruning reaches the scan
+    projected = salted_repartition(df.select("url", "html"), num_partitions)
     roles = frozenset(roles) if roles else None
     jsonl_units = tuple(jsonl_units) if jsonl_units else None
     svg_units = tuple(svg_units) if svg_units else None
@@ -336,20 +332,32 @@ def lineage_frame(result_df):
     return result_df.groupBy("part_id").agg(*aggs)
 
 
+def _has_files(spark, path: str) -> bool:
+    """Whether ``path`` holds an entry a parquet read would see (hidden
+    names start with '_' or '.'), from a Hadoop FileSystem listing.  It
+    starts no Spark job, and a missing or empty directory raises nothing:
+    a failed read would, and once a session has run ``observe`` Spark's
+    execution listener logs each such failure as an ERROR."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    return fs.exists(p) and any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(p))
+
+
 def run_job(spark, input_path: str, output_path: str,
             config: PipelineConfig = DEFAULT_CONFIG,
             with_spans: bool = False,
             num_partitions: Optional[int] = None,
             resume: bool = True,
             roles=None,
-            jsonl_units=None,
-            with_timings: bool = True) -> dict:
+            jsonl_units=None) -> dict:
     """Batch extraction job with snapshot + lineage + exact resume.
 
-    ``with_timings`` (default on) stores the per-row ``stage_ms`` map in
-    the snapshot and rolls it up into per-stage ``ms_*`` lineage columns
-    — the distributed --print-running-times report.  ~300 bytes/row
-    against multi-KB documents; pass False to shed it.
+    The snapshot keeps the per-row ``stage_ms`` map and the lineage rows
+    its per-stage ``ms_*`` totals — the distributed --print-running-times
+    report, ~300 bytes/row against multi-KB documents.
 
     Resume semantics: rows whose ``url`` already exists in the committed
     output are skipped (anti-join), so a re-run after a mid-job failure
@@ -368,7 +376,6 @@ def run_job(spark, input_path: str, output_path: str,
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.utils import AnalysisException
 
     pages = spark.read.parquet(input_path)
     data_path = output_path.rstrip("/") + "/data"
@@ -381,7 +388,8 @@ def run_job(spark, input_path: str, output_path: str,
     # a NEW run's rows instead of double-counting the file set (the current
     # inventory is `WHERE run_id = max(run_id)`); the max() probe is an
     # O(1)-result scalar job over manifest metadata, not data
-    try:
+    run_id = 0
+    if _has_files(spark, files_path):
         # mergeSchema: a manifest touched by a pre-run_id release holds a
         # mix of stamped and legacy part files; the merged schema surfaces
         # run_id with NULL on the legacy rows, which read as run 0
@@ -402,8 +410,6 @@ def run_job(spark, input_path: str, output_path: str,
             # keeps every committed byte, and readers recover the legacy
             # rows' run via coalesce(run_id, 0) under mergeSchema.
             run_id = 1
-    except AnalysisException:
-        run_id = 0
     manifest = (pages
                 .groupBy(F.input_file_name().alias("input_file"))
                 .agg(F.count("*").alias("n_rows"),
@@ -412,11 +418,8 @@ def run_job(spark, input_path: str, output_path: str,
     manifest.write.mode("append").parquet(files_path)
 
     prior_docs = prior_failures = 0
-    try:
+    if _has_files(spark, data_path):  # else first run: no snapshot yet
         done = spark.read.parquet(data_path)
-    except AnalysisException:
-        done = None  # first run: no committed snapshot yet
-    if done is not None:
         prior_docs, prior_failures = done.agg(
             F.count("*"),
             F.coalesce(F.sum((F.col("parse_failure_code") != 0)
@@ -426,7 +429,7 @@ def run_job(spark, input_path: str, output_path: str,
 
     result = extract_pages(pages, config, with_spans, num_partitions,
                            roles=roles, jsonl_units=jsonl_units,
-                           with_timings=with_timings, with_lineage=True)
+                           with_timings=True, with_lineage=True)
     observation = Observation("lineage")
     result = result.observe(observation,
                             F.collect_list("_lineage").alias("tasks"))
@@ -439,7 +442,7 @@ def run_job(spark, input_path: str, output_path: str,
 
     tasks = observation.get["tasks"]
     lineage_schema = from_arrow_schema(
-        pa.schema(list(_lineage_type(with_timings))))
+        pa.schema(list(_lineage_type(True))))
     (spark.createDataFrame(tasks, lineage_schema)
      .withColumn("run_id", F.lit(run_id))
      .coalesce(1)  # one file per run

@@ -55,9 +55,6 @@ def main():
         sdf = fn(spark, sf_dir)
         srows = sdf.collect()
         scols = sdf.columns
-        if name not in oracles:
-            print(f"{name:24s} rows-only: {len(srows)} rows")
-            continue
         rel = con.sql(oracles[name])
         drows = rel.fetchall()
         dcols = [d[0] for d in rel.description]
@@ -71,7 +68,6 @@ def main():
             if sorted(scols) != sorted(dcols):
                 print("  spark cols:", sorted(scols))
                 print("  duck cols: ", sorted(dcols))
-            only_s = [r for r in sn if r not in set(map(repr, dn)) and repr(r) not in set(map(repr, dn))]
             sset, dset = set(map(repr, sn)), set(map(repr, dn))
             diff_s = [r for r in sn if repr(r) not in dset][:3]
             diff_d = [r for r in dn if repr(r) not in sset][:3]

@@ -29,7 +29,7 @@ def test_corrupt_payload_yields_failure_row(spark, pages_df):
     bad = spark.createDataFrame(
         [("bad://1", bytearray(b"not-a-payload")), ("bad://2", bytearray(b""))],
         "url string, html binary")
-    out = engine.extract_pages(bad, salted=False)
+    out = engine.extract_pages(bad)
     rows = {r["url"]: r for r in out.collect()}
     assert rows["bad://1"]["parse_failure_code"] != 0
     assert rows["bad://2"]["parse_failure_code"] != 0
@@ -43,8 +43,9 @@ def test_kernel_exception_yields_failure_row(spark, nan_payload):
     good = fixtures.build_corpus(4)
     rows = [("nan://1", bytearray(nan_payload))]
     rows += [(r["url"], bytearray(r["html"])) for r in good]
-    df = spark.createDataFrame(rows, "url string, html binary").coalesce(1)
-    out = engine.extract_pages(df, salted=False, with_lineage=True).collect()
+    df = spark.createDataFrame(rows, "url string, html binary")
+    out = engine.extract_pages(df, num_partitions=1,
+                               with_lineage=True).collect()
     by_url = {r["url"]: r for r in out}
     assert by_url["nan://1"]["parse_failure_code"] == codec.ERR_KERNEL
     assert by_url["nan://1"]["extracted_text"] == "\n"
@@ -231,6 +232,21 @@ def test_run_job_legacy_manifest_upgrade(spark, pages_df, tmp_path):
         F.max(F.coalesce("run_id", F.lit(0)))).first()[0] == 2
 
 
+def test_has_files_sees_only_readable_entries(spark, tmp_path):
+    """run_job's snapshot/manifest probe: a missing directory, an empty
+    one and one holding only hidden entries read as absent, so a crashed
+    first write still resumes as a first run."""
+    path = tmp_path / "snap"
+    assert not engine._has_files(spark, str(path))
+    path.mkdir()
+    assert not engine._has_files(spark, str(path))
+    (path / "_SUCCESS").write_bytes(b"")
+    (path / ".hidden.crc").write_bytes(b"")
+    assert not engine._has_files(spark, str(path))
+    spark.range(3).write.mode("append").parquet(str(path))
+    assert engine._has_files(spark, str(path))
+
+
 def test_run_job_empty_prior_manifest(spark, pages_df, tmp_path):
     """A manifest directory with zero rows (prior run over an empty
     input) must not crash the max(run_id)+1 probe (ADVICE r6)."""
@@ -266,8 +282,8 @@ def test_role_filter_through_engine(spark):
     df = spark.createDataFrame([(r["url"], r["html"]) for r in rows], schema)
     cfg = replace(DEFAULT_CONFIG, skip_semantic_roles=False)
 
-    full = engine.extract_pages(df, config=cfg, salted=False).collect()
-    only_para = engine.extract_pages(df, config=cfg, salted=False,
+    full = engine.extract_pages(df, config=cfg).collect()
+    only_para = engine.extract_pages(df, config=cfg,
                                      roles={"paragraph"},
                                      jsonl_units=("blocks",)).collect()
     by_url_full = {r["url"]: r for r in full}
