@@ -282,12 +282,6 @@ _WS_ASCII_CODES = np.array(sorted(ord(c) for c in WHITESPACE_TEXTS
                                   if ord(c) < 128), dtype=np.uint8)
 
 
-def _is_whitespace_text(text: str) -> bool:
-    if len(text) == 1:  # fast path: almost every char event is 1 char
-        return text in WHITESPACE_TEXTS
-    return len(text) > 0 and all(ch in WHITESPACE_TEXTS for ch in text)
-
-
 def decode_payload(payload: Optional[bytes]) -> Tuple[Optional[Doc], int]:
     """Decode a payload into a Doc; returns (doc, failure_code).
 

@@ -10,13 +10,6 @@ import re
 from dataclasses import dataclass, field
 from typing import Dict, FrozenSet, List, Tuple
 
-# Config.h:43
-DOUBLE_EQUAL_TOLERANCE = 0.0001
-# Config.h:49
-WORD_DELIMITERS_ALPHABET = " \t\r\n\f\v"
-# Config.h:52
-SENTENCE_DELIMITERS_ALPHABET = "?!.);"
-
 # Whitespace codepoints suppressed at decode time (PdfParsing.cpp:229-245
 # drops chars whose unicode(s) are all whitespace, incl. U+00A0).
 WHITESPACE_TEXTS = frozenset(" \t\r\n\f\v ")
@@ -27,7 +20,6 @@ SEMANTIC_ROLE_NAMES: Tuple[str, ...] = (
     "title", "author-info", "abstract", "date", "caption", "table", "other",
     "toc",
 )
-ROLE_PARAGRAPH = "paragraph"
 ROLE_TITLE = "title"
 ROLE_AUTHOR_INFO = "author-info"
 ROLE_MARGINAL = "marginal"

@@ -179,7 +179,6 @@ WHERE 5 * c.n_common >= 4 * (sa.n_sh + sb.n_sh - c.n_common)
 # asymmetric containment (quote / near-superset detection)
 # ---------------------------------------------------------------------------
 
-CONTAINMENT_THRESHOLD = 0.9
 CONTAINMENT_GRAM = 5            # word 5-grams, the decontamination unit
 
 

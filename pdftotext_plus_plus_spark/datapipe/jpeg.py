@@ -175,16 +175,6 @@ class _BitReader:
         self.pos = p + n
         return val
 
-    def huff(self, table: list) -> int:
-        p = self.pos
-        window = int.from_bytes(self.data[p >> 3:(p >> 3) + 4], "big")
-        peek = (window >> (16 - (p & 7))) & 0xFFFF
-        entry = table[peek]
-        if entry is None:
-            raise ValueError("jpeg: invalid Huffman code")
-        self.pos = p + entry[1]
-        return entry[0]
-
 
 def _category(v: int) -> int:
     return int(v).bit_length() if v > 0 else int(-v).bit_length()

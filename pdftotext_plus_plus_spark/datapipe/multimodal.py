@@ -572,7 +572,6 @@ FROM fr f JOIN ck c ON f.doc_id = c.doc_id AND f.frame_idx = c.frame_idx
 
 
 AUDIO_SAMPLE_RATE = 16000
-WAV_BLOCK_ALIGN = 2  # mono, 16-bit PCM
 
 
 def synthesize_audio_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:

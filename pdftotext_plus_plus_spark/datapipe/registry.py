@@ -9,6 +9,7 @@ not just relational ops.
 
 from __future__ import annotations
 
+import copy
 import functools
 import hashlib
 import random
@@ -37,10 +38,17 @@ N_EXTRACT_DOCS = 48
 WARC_FIXTURE_N_FILES = 4
 
 
+@functools.cache
+def _fixture_corpus() -> tuple:
+    return tuple(fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16))
+
+
 def _fixture_rows():
     """The fixture corpus behind the extraction and WARC queries and their
-    golden oracles: 48 documents, a jumbo one every 16th."""
-    return fixtures.build_corpus(N_EXTRACT_DOCS, jumbo_every=16)
+    golden oracles: 48 documents, a jumbo one every 16th.  Built once per
+    process; each call returns a deep copy, so no caller can change what
+    the next one sees."""
+    return copy.deepcopy(list(_fixture_corpus()))
 
 
 def _make_pages_df(spark: SparkSession, rows):

@@ -7,10 +7,20 @@
   bucket-equi instead of a cross join.  At 10^12 rows you probe multiple
   bucket permutations; here one table is built and recall is tested against
   the brute-force baseline.
+
+Every ANN query ends in the same exact re-rank (:func:`_exact_top_k`, and
+its SQL mirror ``_TOP_K_TAIL``); they differ only in how candidates are
+generated.  The quantizer kernels share one cosine step (:func:`_cosine_np`).
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
+from itertools import combinations
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -43,37 +53,73 @@ def _with_norm(df: DataFrame) -> DataFrame:
             F.lit(0.0), lambda acc, x: acc + x)))
 
 
-def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k for the first N_QUERIES vectors.
-
-    The query side is tiny -> broadcast join; rank by (rounded cosine desc,
-    vec_id) so the result set is deterministic across engines.
-    """
-    emb = _with_norm(_embeddings(spark, sf_dir))
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+def _queries(emb: DataFrame, *extra) -> DataFrame:
+    """The query side of every ANN plan: (query_id, q_emb, q_norm, *extra)
+    for the first N_QUERIES vectors of a :func:`_with_norm` frame."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"))
+        F.col("norm").alias("q_norm"), *extra)
+
+
+def _cosine(a: str, b: str, norm_a: str, norm_b: str):
+    """round(dot(a, b) / (norm_a * norm_b), 4) over two array columns —
+    the oracles' ``round(d.dot / (.. * ..), 4)``."""
     dot = F.aggregate(
-        F.zip_with("embedding", "q_emb",
-                   lambda x, y: x.cast("double") * y.cast("double")),
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
-    scored = (emb.join(F.broadcast(queries),
-                       F.col("vec_id") != F.col("query_id"))
-              .withColumn("cosine", F.round(dot / (F.col("norm") * F.col("q_norm")), 4)))
+    return F.round(dot / (F.col(norm_a) * F.col(norm_b)), 4)
+
+
+def _exact_top_k(pairs: DataFrame) -> DataFrame:
+    """The exact re-rank every ANN query ends in.  ``pairs`` holds a
+    candidate's (vec_id, embedding, norm) beside its query's (query_id,
+    q_emb, q_norm); each query keeps its TOP_K by (rounded cosine desc,
+    vec_id asc), so the result set is deterministic across engines."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
+    return (pairs.withColumn("cosine",
+                             _cosine("embedding", "q_emb", "norm", "q_norm"))
+            .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= TOP_K)
             .select("query_id", "rank", "vec_id", "cosine"))
 
 
-ANN_BRUTEFORCE_SQL = f"""
-WITH elems AS (
+# Oracle fragments shared word for word by the DuckDB oracles below.
+# `elems`: one row per (vector, element index); dots and norms sum over it.
+_ELEMS_CTE = """elems AS (
   SELECT vec_id, i, embedding[i]::DOUBLE AS x
   FROM (SELECT e.vec_id, e.embedding,
                unnest(generate_series(1, len(e.embedding))) AS i
         FROM embeddings e)
-), norms AS (
+)"""
+
+# the SQL mirror of _exact_top_k: `dots` (query_id, vec_id, dot) ->
+# (query_id, rank, vec_id, cosine)
+_TOP_K_TAIL = f"""scored AS (
+  SELECT d.query_id, d.vec_id, round(d.dot / (nq.norm * ne.norm), 4) AS cosine
+  FROM dots d
+  JOIN norms nq ON nq.vec_id = d.query_id
+  JOIN norms ne ON ne.vec_id = d.vec_id
+), ranked AS (
+  SELECT query_id, vec_id, cosine,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY cosine DESC, vec_id ASC) AS rank
+  FROM scored
+)
+SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
+"""
+
+
+def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k for the first N_QUERIES vectors: every vector is
+    a candidate; the query side is tiny -> broadcast join."""
+    emb = _with_norm(_embeddings(spark, sf_dir))
+    return _exact_top_k(emb.join(F.broadcast(_queries(emb)),
+                                 F.col("vec_id") != F.col("query_id")))
+
+
+ANN_BRUTEFORCE_SQL = f"""
+WITH {_ELEMS_CTE}, norms AS (
   SELECT vec_id, sqrt(sum(x * x)) AS norm FROM elems GROUP BY vec_id
 ), dots AS (
   SELECT q.vec_id AS query_id, e.vec_id, sum(q.x * e.x) AS dot
@@ -123,35 +169,16 @@ def lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN: candidates restricted to the query's LSH bucket, then exact
     cosine rank within candidates."""
-    emb = _with_norm(_embeddings(spark, sf_dir))
-    sig = lsh_signatures(spark, sf_dir)
-    emb = emb.join(sig, "vec_id")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        F.col("bucket").alias("q_bucket"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    scored = (emb.join(F.broadcast(queries),
-                       (F.col("bucket") == F.col("q_bucket"))
-                       & (F.col("vec_id") != F.col("query_id")))
-              .withColumn("cosine", F.round(dot / (F.col("norm") * F.col("q_norm")), 4)))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "vec_id", "cosine"))
+    emb = (_with_norm(_embeddings(spark, sf_dir))
+           .join(lsh_signatures(spark, sf_dir), "vec_id"))
+    queries = _queries(emb, F.col("bucket").alias("q_bucket"))
+    return _exact_top_k(emb.join(F.broadcast(queries),
+                                 (F.col("bucket") == F.col("q_bucket"))
+                                 & (F.col("vec_id") != F.col("query_id"))))
 
 
 ANN_LSH_SQL = f"""
-WITH elems AS (
-  SELECT vec_id, i, embedding[i]::DOUBLE AS x
-  FROM (SELECT e.vec_id, e.embedding,
-               unnest(generate_series(1, len(e.embedding))) AS i
-        FROM embeddings e)
-), planes AS (
+WITH {_ELEMS_CTE}, planes AS (
   SELECT p.plane, i.i,
          (('0x' || substr(md5(p.plane::VARCHAR || ':' || i.i::VARCHAR), 1, 6))::BIGINT
           % 2001 - 1000)::DOUBLE AS r
@@ -174,29 +201,13 @@ WITH elems AS (
   JOIN elems ee ON ee.vec_id = e.vec_id AND ee.i = qe.i
   WHERE q.vec_id < {N_QUERIES}
   GROUP BY q.vec_id, e.vec_id
-), scored AS (
-  SELECT d.query_id, d.vec_id, round(d.dot / (nq.norm * ne.norm), 4) AS cosine
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms ne ON ne.vec_id = d.vec_id
-), ranked AS (
-  SELECT query_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
-"""
+), {_TOP_K_TAIL}"""
 
 
 def _mp_planes(dim: int):
     """[T, P, dim] integer hyperplane weights, derived from
     md5("{table}:{plane}:{i}") — the same formula the DuckDB oracle
     computes in SQL, so both engines bucket identically."""
-    import hashlib
-
-    import numpy as np
-
     planes = np.empty((MP_TABLES, MP_PLANES, dim), dtype=np.float64)
     for t in range(MP_TABLES):
         for p in range(MP_PLANES):
@@ -206,21 +217,23 @@ def _mp_planes(dim: int):
     return planes
 
 
+def _vector_batches(batches):
+    """(pandas batch, [n, D] float64 embedding matrix) per non-empty Arrow
+    batch — a zero-row batch's matrix would have no axis 1."""
+    for pdf in batches:
+        if not pdf.empty:
+            yield pdf, np.array(list(pdf["embedding"]), dtype=np.float64)
+
+
 def mp_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, table_id, bucket) across MP_TABLES hash tables — one
     vectorized Arrow pass (the per-batch numpy einsum replaces T*P nested
     JVM aggregates, which would bloat codegen at these widths)."""
-    import numpy as np
-    import pandas as pd
-
     emb = _embeddings(spark, sf_dir).select("vec_id", "embedding")
     state = {}
 
     def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:  # zero-row Arrow batch: mat.shape has no axis 1
-                continue
-            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
+        for pdf, mat in _vector_batches(batches):
             if "planes" not in state:
                 state["planes"] = _mp_planes(mat.shape[1])
             sig = (np.einsum("tpd,nd->tnp", state["planes"], mat) > 0)
@@ -247,8 +260,6 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is hashed once per table.  At 10^12 rows the bucket join stays
     an equi-join on (table_id, bucket) with bounded per-bucket population.
     """
-    from itertools import combinations
-
     sig = mp_signatures(spark, sf_dir)
     qsig = sig.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "table_id",
@@ -271,30 +282,12 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "vec_id").distinct())
 
     emb = _with_norm(_embeddings(spark, sf_dir))
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    scored = (cand.join(emb, "vec_id").join(F.broadcast(queries), "query_id")
-              .withColumn("cosine",
-                          F.round(dot / (F.col("norm") * F.col("q_norm")), 4)))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "vec_id", "cosine"))
+    return _exact_top_k(cand.join(emb, "vec_id")
+                        .join(F.broadcast(_queries(emb)), "query_id"))
 
 
 ANN_MULTIPROBE_SQL = f"""
-WITH elems AS (
-  SELECT vec_id, i, embedding[i]::DOUBLE AS x
-  FROM (SELECT e.vec_id, e.embedding,
-               unnest(generate_series(1, len(e.embedding))) AS i
-        FROM embeddings e)
-), planes AS (
+WITH {_ELEMS_CTE}, planes AS (
   SELECT t.t AS table_id, p.plane, i.i,
          (('0x' || substr(md5(t.t::VARCHAR || ':' || p.plane::VARCHAR || ':'
                                || i.i::VARCHAR), 1, 6))::BIGINT
@@ -336,19 +329,7 @@ WITH elems AS (
   JOIN elems qe ON qe.vec_id = c.query_id
   JOIN elems ee ON ee.vec_id = c.vec_id AND ee.i = qe.i
   GROUP BY c.query_id, c.vec_id
-), scored AS (
-  SELECT d.query_id, d.vec_id, round(d.dot / (nq.norm * ne.norm), 4) AS cosine
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms ne ON ne.vec_id = d.vec_id
-), ranked AS (
-  SELECT query_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
-"""
+), {_TOP_K_TAIL}"""
 
 
 # ---------------------------------------------------------------------------
@@ -382,8 +363,6 @@ def ivf_stride(n: int) -> int:
     marks a seed.  K = min(IVF_K_CAP, ceil(sqrt(n))); stride = ceil(n / K).
     Both ceils are IEEE-double computations so the DuckDB oracle's
     ceil(sqrt(...)) arithmetic reproduces them bit-for-bit."""
-    import math
-
     if n <= 1:
         return 1
     k = min(IVF_K_CAP, int(math.ceil(math.sqrt(float(n)))))
@@ -391,26 +370,33 @@ def ivf_stride(n: int) -> int:
 
 
 def _round4_half_up(x):
-    """Vectorized HALF_UP (away-from-zero) rounding to 4 decimals — the
-    same decimal-rounding family Spark's ``F.round`` and DuckDB's
-    ``round(v, 4)`` compute for doubles."""
-    import numpy as np
-
+    """Round to 4 decimals, ties away from zero, on the binary double
+    ``x * 1e4`` — what DuckDB's ``round(v, 4)`` computes for doubles, so
+    the kernels rank exactly as the oracles do.  Spark's ``F.round``
+    differs on some four-decimal ties: it rounds the shortest decimal
+    form of ``x`` half-up, so ``-0.81695`` is ``-0.817`` there but
+    ``-0.8169`` here and in DuckDB."""
     return np.where(x >= 0, np.floor(x * 1e4 + 0.5),
                     -np.floor(-x * 1e4 + 0.5)) / 1e4
 
 
+def _cosine_np(v, mat, mat_norm):
+    """[n, K] rounded cosines of each row of ``v`` against each row of
+    ``mat`` (row norms ``mat_norm``): the kernels' :func:`_cosine`.
+    NaN (a zero norm) becomes +inf, the place the oracles sort NaN
+    (greatest), so argmax and lexsort order it alike."""
+    vn = np.sqrt((v * v).sum(axis=1))
+    sims = _round4_half_up(v @ mat.T / (vn[:, None] * mat_norm[None, :]))
+    return np.nan_to_num(sims, nan=np.inf)
+
+
 def _collect_centroid_matrix(emb: DataFrame, stride: int):
-    """(cent_ids asc, matrix, norms) for the stride-seeded centroids.
+    """(ids asc, matrix, norms) of the vectors at vec_id % stride == 0.
 
-    The collect here is BOUNDED BY CONSTRUCTION at IVF_K_CAP rows (a few
-    MB) for ANY corpus size — it is the manual build of the same
-    broadcast relation the previous plan shipped through
-    ``F.broadcast(cents)``, done once so the assignment can run as a
-    vectorized numpy matmul instead of an O(N*K) row fan-out of
-    interpreted per-element lambdas."""
-    import numpy as np
-
+    The collect is BOUNDED BY CONSTRUCTION for ANY corpus size: centroid
+    seeds are at most IVF_K_CAP rows (a few MB), codebook seeds ~PQ_CODES
+    rows.  Collected once, the centroids ride a broadcast into the
+    vectorized numpy assignment instead of an O(N*K) row fan-out."""
     rows = (emb.filter(F.col("vec_id") % stride == 0)
             .select("vec_id", "embedding").collect())
     rows.sort(key=lambda r: r[0])
@@ -420,66 +406,55 @@ def _collect_centroid_matrix(emb: DataFrame, stride: int):
     return ids, mat, norm
 
 
+def _probe_frame(qids, list_ids, sims):
+    """(query_id, cent_id) rows: each query's IVF_NPROBE best lists by
+    (sim desc, list id asc).  A list whose sim is -inf is not probed."""
+    q_out, c_out = [], []
+    for r, qid in enumerate(qids):
+        order = np.lexsort((list_ids, -sims[r]))[:IVF_NPROBE]
+        order = order[sims[r, order] > -np.inf]
+        q_out.extend([int(qid)] * len(order))
+        c_out.extend(list_ids[order])
+    return pd.DataFrame({"query_id": pd.Series(q_out, dtype="int64"),
+                         "cent_id": pd.Series(c_out, dtype="int64")})
+
+
+def _assign_and_probe(emb: DataFrame, assign_kernel, probe_kernel):
+    """(assigned, probes): the per-vector list assignment (vec_id,
+    cent_id) and the query side's probed lists (query_id, cent_id), each
+    an Arrow-batched kernel over (vec_id, embedding)."""
+    narrow = emb.select("vec_id", "embedding")
+    return (narrow.mapInPandas(assign_kernel, "vec_id bigint, cent_id bigint"),
+            narrow.filter(F.col("vec_id") < N_QUERIES)
+            .mapInPandas(probe_kernel, "query_id bigint, cent_id bigint"))
+
+
 def _ivf_assign_probes_np(spark: SparkSession, emb: DataFrame, stride: int):
-    """(assigned, probes) of the single-level stride quantizer, computed
-    in Arrow-batched numpy kernels with semantics IDENTICAL to the old
-    crossJoin + hash-agg-argmax plan: sim = round4(dot / (norm*c_norm)),
-    assignment = highest sim with ties to the smallest cent_id, probes =
-    the query rows' IVF_NPROBE best lists by (sim desc, cent_id asc).
+    """(assigned, probes) of the single-level stride quantizer:
+    sim = round4(dot / (norm*c_norm)), assignment = highest sim with ties
+    to the smallest cent_id, probes = the query rows' IVF_NPROBE best
+    lists by (sim desc, cent_id asc) — the ``csim`` window of the oracle.
 
-    The old plan materialized N*K (vector, centroid) rows and evaluated a
-    64-element aggregate-lambda per row (the measured 10x probe exponent
-    1.1-1.6 — VERDICT r8 "What's wrong" #1); this computes the same
-    argmax as one [batch, K] matmul per Arrow batch, so the per-vector
-    cost is a dense BLAS row — linear in N with a K-bounded constant,
-    and the only shuffle left is the (tiny) probes-side exchange."""
-    import numpy as np
-    import pandas as pd
-
+    One [batch, K] matmul per Arrow batch, so the per-vector cost is a
+    dense BLAS row — linear in N with a K-bounded constant, and the only
+    shuffle left is the (tiny) probes-side exchange."""
     cid, cmat, cnorm = _collect_centroid_matrix(emb, stride)
     bc = spark.sparkContext.broadcast((cid, cmat, cnorm))
 
     def assign_kernel(batches):
         ids_c, C, cn = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vn = np.sqrt((v * v).sum(axis=1))
-            sims = _round4_half_up(v @ C.T / (vn[:, None] * cn[None, :]))
-            # NaN sims (zero-norm rows) sort GREATEST in Spark; +inf
-            # reproduces that ordering for the argmax
-            sims = np.nan_to_num(sims, nan=np.inf)
-            j = sims.argmax(axis=1)   # first max = smallest cent_id
+        for pdf, v in _vector_batches(batches):
+            j = _cosine_np(v, C, cn).argmax(axis=1)  # first max = smallest id
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
                 "cent_id": ids_c[j]})
 
     def probe_kernel(batches):
         ids_c, C, cn = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vn = np.sqrt((v * v).sum(axis=1))
-            sims = _round4_half_up(v @ C.T / (vn[:, None] * cn[None, :]))
-            sims = np.nan_to_num(sims, nan=np.inf)
-            qids, cents = [], []
-            for r, qid in enumerate(pdf["vec_id"]):
-                order = np.lexsort((ids_c, -sims[r]))[:IVF_NPROBE]
-                qids.extend([int(qid)] * len(order))
-                cents.extend(ids_c[order])
-            yield pd.DataFrame({
-                "query_id": pd.Series(qids, dtype="int64"),
-                "cent_id": pd.Series(cents, dtype="int64")})
+        for pdf, v in _vector_batches(batches):
+            yield _probe_frame(pdf["vec_id"], ids_c, _cosine_np(v, C, cn))
 
-    narrow = emb.select("vec_id", "embedding")
-    assigned = narrow.mapInPandas(assign_kernel,
-                                  "vec_id bigint, cent_id bigint")
-    probes = (narrow.filter(F.col("vec_id") < N_QUERIES)
-              .mapInPandas(probe_kernel,
-                           "query_id bigint, cent_id bigint"))
-    return assigned, probes
+    return _assign_and_probe(emb, assign_kernel, probe_kernel)
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -490,53 +465,23 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The centroid table is K = min(IVF_K_CAP, ceil(sqrt(N))) rows ->
     bounded at any corpus size; assignment is one [batch, K] BLAS matmul
-    per Arrow batch (linear in N — the old per-(vector, centroid)-row
-    plan measured superlinear three rounds running); the candidate join
-    is equi on cent_id with list sizes ~N / K.  The driver-side
-    ``count()`` sizing the quantizer is an O(1)-result scalar job and
-    the centroid collect is IVF_K_CAP-bounded (see
-    _collect_centroid_matrix)."""
+    per Arrow batch (linear in N); the candidate join is equi on cent_id
+    with list sizes ~N / K.  The driver-side ``count()`` sizing the
+    quantizer is an O(1)-result scalar job and the centroid collect is
+    IVF_K_CAP-bounded (see _collect_centroid_matrix)."""
     emb = _with_norm(_embeddings(spark, sf_dir))
     stride = ivf_stride(emb.count())
     assigned, probes = _ivf_assign_probes_np(spark, emb, stride)
     cands = (assigned.join(F.broadcast(probes), "cent_id")
              .filter(F.col("vec_id") != F.col("query_id"))
              .select("query_id", "vec_id"))
-    queries = (emb.filter(F.col("vec_id") < N_QUERIES)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("q_emb"),
-                       F.col("norm").alias("q_norm")))
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    scored = (cands.join(emb, "vec_id")
-              .join(F.broadcast(queries), "query_id")
-              .withColumn("cosine",
-                          F.round(dot / (F.col("norm") * F.col("q_norm")), 4)))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "vec_id", "cosine"))
+    return _exact_top_k(cands.join(emb, "vec_id")
+                        .join(F.broadcast(_queries(emb)), "query_id"))
 
 
-ANN_IVF_SQL = f"""
-WITH elems AS (
-  SELECT vec_id, i, embedding[i]::DOUBLE AS x
-  FROM (SELECT e.vec_id, e.embedding,
-               unnest(generate_series(1, len(e.embedding))) AS i
-        FROM embeddings e)
-), norms AS (
-  SELECT vec_id, sqrt(sum(x * x)) AS norm FROM elems GROUP BY vec_id
-), stride AS (
-  -- K = min(cap, ceil(sqrt(N))), stride = ceil(N / K): the same
-  -- IEEE-double arithmetic as similarity.ivf_stride
-  SELECT greatest(1, CAST(ceil(count(*) /
-           least({IVF_K_CAP}, CAST(ceil(sqrt(CAST(count(*) AS DOUBLE)))
-                                   AS BIGINT))::DOUBLE) AS BIGINT)) AS s
-  FROM embeddings
-), cdots AS (
+# the single-level quantizer's vector-to-centroid sims, ranked per vector
+# (`rn` = 1 is the assignment), shared by ANN_IVF_SQL and SEMDEDUP_PRUNE_SQL
+_IVF_CSIM_CTES = """cdots AS (
   SELECT v.vec_id, c.vec_id AS cent_id, sum(v.x * c.x) AS dot
   FROM elems v JOIN elems c ON c.i = v.i
        AND c.vec_id % (SELECT s FROM stride) = 0
@@ -550,12 +495,11 @@ WITH elems AS (
   FROM cdots d
   JOIN norms nv ON nv.vec_id = d.vec_id
   JOIN norms nc ON nc.vec_id = d.cent_id
-), assigned AS (
-  SELECT vec_id, cent_id FROM csim WHERE rn = 1
-), probes AS (
-  SELECT vec_id AS query_id, cent_id FROM csim
-  WHERE vec_id < {N_QUERIES} AND rn <= {IVF_NPROBE}
-), cands AS (
+)"""
+
+# candidates = the probed lists' members, re-ranked exactly; shared by
+# ANN_IVF_SQL and ANN_IVF2_SQL
+_PROBED_TOP_K = f"""cands AS (
   SELECT p.query_id, a.vec_id
   FROM probes p JOIN assigned a ON a.cent_id = p.cent_id
   WHERE a.vec_id != p.query_id
@@ -565,19 +509,25 @@ WITH elems AS (
   JOIN elems qe ON qe.vec_id = c.query_id
   JOIN elems ee ON ee.vec_id = c.vec_id AND ee.i = qe.i
   GROUP BY c.query_id, c.vec_id
-), scored AS (
-  SELECT d.query_id, d.vec_id, round(d.dot / (nq.norm * ne.norm), 4) AS cosine
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms ne ON ne.vec_id = d.vec_id
-), ranked AS (
-  SELECT query_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
-"""
+), {_TOP_K_TAIL}"""
+
+
+ANN_IVF_SQL = f"""
+WITH {_ELEMS_CTE}, norms AS (
+  SELECT vec_id, sqrt(sum(x * x)) AS norm FROM elems GROUP BY vec_id
+), stride AS (
+  -- K = min(cap, ceil(sqrt(N))), stride = ceil(N / K): the same
+  -- IEEE-double arithmetic as similarity.ivf_stride
+  SELECT greatest(1, CAST(ceil(count(*) /
+           least({IVF_K_CAP}, CAST(ceil(sqrt(CAST(count(*) AS DOUBLE)))
+                                   AS BIGINT))::DOUBLE) AS BIGINT)) AS s
+  FROM embeddings
+), {_IVF_CSIM_CTES}, assigned AS (
+  SELECT vec_id, cent_id FROM csim WHERE rn = 1
+), probes AS (
+  SELECT vec_id AS query_id, cent_id FROM csim
+  WHERE vec_id < {N_QUERIES} AND rn <= {IVF_NPROBE}
+), {_PROBED_TOP_K}"""
 
 
 def ivf2_strides(n: int) -> tuple:
@@ -599,8 +549,6 @@ def ivf2_strides(n: int) -> tuple:
     broadcast remain bounded — the hierarchical extension SCALE.md
     describes, as code.
     """
-    import math
-
     if n <= 1:
         return 1, 1
     k = min(IVF_K_CAP, int(math.ceil(math.sqrt(float(n)))))
@@ -610,162 +558,99 @@ def ivf2_strides(n: int) -> tuple:
     return s, s * s2
 
 
-def _ivf2_assign_probes(emb: DataFrame, n: int, with_state: bool = False):
-    """Shared two-level quantizer core (steps 1-4 of ann_ivf2_topk's plan):
-    returns (assigned, probes, fine, queries) — the per-vector fine-list
-    assignment, the query-side probed fine lists, the K-row fine-centroid
-    table (cent_id, c_emb, c_norm), and the broadcast-sized query table.
-    Used by ann_ivf2_topk (exact rescore within probed lists) AND
-    ann_ivfpq_topk (PQ-coded fine scan within the same probed lists).
+def _ivf2_assign_probes(emb: DataFrame, n: int):
+    """The two-level quantizer core shared by ann_ivf2_topk (exact rescore
+    within the probed lists) and ann_ivfpq_topk (PQ-coded fine scan
+    within the same lists): returns (assigned, probes, bc) — the
+    per-vector fine-list assignment, the query side's probed fine lists,
+    and the broadcast (fine ids, matrix, norms, super ids, matrix, norms,
+    super of each fine list) the kernels read.
 
-    r9: assignment and probes are Arrow-batched numpy kernels against the
-    collected (IVF_K_CAP-bounded) fine-centroid matrix — the same
-    vectorization as _ivf_assign_probes_np, with the two-level routing
-    (vector -> best super -> best fine centroid routed to that super)
-    reproduced exactly: round4 half-up sims, argmax ties to the smallest
-    id at both levels, fine->super routing computed once on the driver
-    from the same matrices.  Output is identical to the old
-    crossJoin/hash-agg plan (oracle-checked)."""
-    import numpy as np
-    import pandas as pd
-
+    Both are Arrow-batched numpy kernels against the collected
+    (IVF_K_CAP-bounded) fine-centroid matrix: vector -> best super ->
+    best fine centroid routed to that super, round4 half-up sims, ties
+    to the smallest id at both levels, fine->super routing computed once
+    on the driver from the same matrices (the oracle's ``route``)."""
     s, big_s = ivf2_strides(n)
-    fine = (emb.filter(F.col("vec_id") % s == 0)
-            .select(F.col("vec_id").alias("cent_id"),
-                    F.col("embedding").alias("c_emb"),
-                    F.col("norm").alias("c_norm")))
-    queries = (emb.filter(F.col("vec_id") < N_QUERIES)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("q_emb"),
-                       F.col("norm").alias("q_norm")))
-
     fid, fmat, fnorm = _collect_centroid_matrix(emb, s)
     sup_mask = fid % big_s == 0
     sid, smat, snorm = fid[sup_mask], fmat[sup_mask], fnorm[sup_mask]
     # fine -> super routing (K x K1, driver-side): best super per fine
-    # seed, round4 sims, ties to the smallest super_id
-    rsim = _round4_half_up(fmat @ smat.T / (fnorm[:, None] * snorm[None, :]))
-    rsim = np.nan_to_num(rsim, nan=np.inf)
-    super_of_fine = sid[rsim.argmax(axis=1)]
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast(
+    # seed, ties to the smallest super_id
+    super_of_fine = sid[_cosine_np(fmat, smat, snorm).argmax(axis=1)]
+    bc = emb.sparkSession.sparkContext.broadcast(
         (fid, fmat, fnorm, sid, smat, snorm, super_of_fine))
 
     def assign_kernel(batches):
-        # vector -> best super -> argmax over the fine lists routed to
-        # that super (the broadcast equi-join in the old plan; a vector
-        # whose super has NO routed fine list is dropped, exactly like
-        # the old inner join) — see _ivf2_assign_matrix
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = np.array(list(pdf["embedding"]), dtype=np.float64)
+        for pdf, v in _vector_batches(batches):
             cent, valid = _ivf2_assign_matrix(v, bc.value)
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64)[valid],
                 "cent_id": cent[valid]})
 
     def probe_kernel(batches):
+        # IVF_NPROBE fine lists among those routed to the query's
+        # IVF2_NPROBE_SUPER best supers
         f_id, f_mat, f_norm, s_id, s_mat, s_norm, sof = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            vn = np.sqrt((v * v).sum(axis=1))
-            ssim = _round4_half_up(
-                v @ s_mat.T / (vn[:, None] * s_norm[None, :]))
-            ssim = np.nan_to_num(ssim, nan=np.inf)
-            qsim = _round4_half_up(
-                v @ f_mat.T / (vn[:, None] * f_norm[None, :]))
-            qsim = np.nan_to_num(qsim, nan=np.inf)
-            qids, cents = [], []
-            for r, qid in enumerate(pdf["vec_id"]):
-                sup_order = np.lexsort((s_id, -ssim[r]))[:IVF2_NPROBE_SUPER]
-                probed = np.isin(sof, s_id[sup_order])
-                row = qsim[r].copy()
-                row[~probed] = -np.inf
-                order = np.lexsort((f_id, -row))[:IVF_NPROBE]
-                order = order[row[order] > -np.inf]
-                qids.extend([int(qid)] * len(order))
-                cents.extend(f_id[order])
-            yield pd.DataFrame({
-                "query_id": pd.Series(qids, dtype="int64"),
-                "cent_id": pd.Series(cents, dtype="int64")})
+        for pdf, v in _vector_batches(batches):
+            ssim = _cosine_np(v, s_mat, s_norm)
+            qsim = _cosine_np(v, f_mat, f_norm)
+            for r in range(len(v)):
+                sup = s_id[np.lexsort((s_id, -ssim[r]))[:IVF2_NPROBE_SUPER]]
+                qsim[r, ~np.isin(sof, sup)] = -np.inf
+            yield _probe_frame(pdf["vec_id"], f_id, qsim)
 
-    narrow = emb.select("vec_id", "embedding")
-    assigned = narrow.mapInPandas(assign_kernel,
-                                  "vec_id bigint, cent_id bigint")
-    probes = (narrow.filter(F.col("vec_id") < N_QUERIES)
-              .mapInPandas(probe_kernel,
-                           "query_id bigint, cent_id bigint"))
-    if with_state:
-        return assigned, probes, fine, queries, bc
-    return assigned, probes, fine, queries
+    return (*_assign_and_probe(emb, assign_kernel, probe_kernel), bc)
 
 
 def _ivf2_assign_matrix(v, bc_value):
-    """The assign_kernel math for an in-memory [n, D] matrix: returns
-    (cent_ids int64, valid bool mask) with the exact kernel semantics."""
-    import numpy as np
-
+    """Two-level assignment of an in-memory [n, D] matrix: returns
+    (cent_ids int64, valid bool mask).  A vector goes to the best fine
+    list routed to its best super; one whose super has NO routed fine
+    list is invalid (dropped, as the oracle's inner join drops it)."""
     f_id, f_mat, f_norm, s_id, s_mat, s_norm, sof = bc_value
-    vn = np.sqrt((v * v).sum(axis=1))
-    ssim = _round4_half_up(v @ s_mat.T / (vn[:, None] * s_norm[None, :]))
-    ssim = np.nan_to_num(ssim, nan=np.inf)
-    best_super = s_id[ssim.argmax(axis=1)]
-    fsim = _round4_half_up(v @ f_mat.T / (vn[:, None] * f_norm[None, :]))
-    fsim = np.nan_to_num(fsim, nan=np.inf)
+    best_super = s_id[_cosine_np(v, s_mat, s_norm).argmax(axis=1)]
+    fsim = _cosine_np(v, f_mat, f_norm)
     fsim[sof[None, :] != best_super[:, None]] = -np.inf
     j = fsim.argmax(axis=1)
     valid = fsim[np.arange(len(j)), j] > -np.inf
     return f_id[j], valid
 
 
+def _ivf2_residuals(v, bc_value):
+    """(v - assigned fine centroid, valid mask) for an [n, D] matrix; the
+    residuals cover the valid rows only."""
+    cent, valid = _ivf2_assign_matrix(v, bc_value)
+    f_id, f_mat = bc_value[0], bc_value[1]
+    return v[valid] - f_mat[np.searchsorted(f_id, cent[valid])], valid
+
+
 def ann_ivf2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level (hierarchical) IVF ANN top-k.
 
     Plan shape, bottom-up:
-      1. supers (K1 rows) broadcast against the corpus -> per-vector
-         super-list argmax as ONE hash agg (no window over N*K1 rows);
-      2. fine centroids route to supers on a K-row subtree (the cross
-         join is filtered to fine seeds BEFORE the agg, so the routing
-         cost is K*K1, not N*K1);
-      3. per-vector fine assignment joins the vector's super id against
-         the broadcast routed-centroid table — an equi-join on super_id
-         with ~K/K1 centroids per super, again folded by hash-agg argmax;
-      4. queries probe IVF2_NPROBE_SUPER super lists, then IVF_NPROBE
-         fine lists within them (both ranks run on the tiny query slice);
-      5. candidates = probed fine lists, rescored exactly.
+      1. every vector picks its best of the K1 supers, then its best of
+         the ~K/K1 fine centroids routed to that super (one Arrow kernel;
+         see _ivf2_assign_probes);
+      2. fine centroids route to supers on the driver (K*K1 sims, not
+         N*K1);
+      3. queries probe IVF2_NPROBE_SUPER super lists, then IVF_NPROBE
+         fine lists within them (on the tiny query slice);
+      4. candidates = probed fine lists, rescored exactly.
     """
     emb = _with_norm(_embeddings(spark, sf_dir))
-    assigned, probes, _fine, queries = _ivf2_assign_probes(emb, emb.count())
+    assigned, probes, _bc = _ivf2_assign_probes(emb, emb.count())
     cands = (probes.join(assigned, "cent_id")
              .filter(F.col("vec_id") != F.col("query_id"))
              .select("query_id", "vec_id"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    scored = (cands.join(emb, "vec_id")
-              .join(F.broadcast(queries), "query_id")
-              .withColumn("cosine",
-                          F.round(dot / (F.col("norm") * F.col("q_norm")), 4)))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "vec_id", "cosine"))
+    return _exact_top_k(cands.join(emb, "vec_id")
+                        .join(F.broadcast(_queries(emb)), "query_id"))
 
 
 # the two-level quantizer core CTEs (through `assigned` + `probes`),
 # shared verbatim by ANN_IVF2_SQL and ANN_IVFPQ_SQL — the SQL mirror of
 # _ivf2_assign_probes
-_IVF2_CORE_CTES = f"""elems AS (
-  SELECT vec_id, i, embedding[i]::DOUBLE AS x
-  FROM (SELECT e.vec_id, e.embedding,
-               unnest(generate_series(1, len(e.embedding))) AS i
-        FROM embeddings e)
-), norms AS (
+_IVF2_CORE_CTES = f"""{_ELEMS_CTE}, norms AS (
   SELECT vec_id, sqrt(sum(x * x)) AS norm FROM elems GROUP BY vec_id
 ), params AS (
   -- the same IEEE-double arithmetic as similarity.ivf2_strides:
@@ -843,29 +728,7 @@ _IVF2_CORE_CTES = f"""elems AS (
 
 
 ANN_IVF2_SQL = f"""
-WITH {_IVF2_CORE_CTES}, cands AS (
-  SELECT p.query_id, a.vec_id
-  FROM probes p JOIN assigned a ON a.cent_id = p.cent_id
-  WHERE a.vec_id != p.query_id
-), dots AS (
-  SELECT c.query_id, c.vec_id, sum(qe.x * ee.x) AS dot
-  FROM cands c
-  JOIN elems qe ON qe.vec_id = c.query_id
-  JOIN elems ee ON ee.vec_id = c.vec_id AND ee.i = qe.i
-  GROUP BY c.query_id, c.vec_id
-), scored AS (
-  SELECT d.query_id, d.vec_id, round(d.dot / (nq.norm * ne.norm), 4) AS cosine
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms ne ON ne.vec_id = d.vec_id
-), ranked AS (
-  SELECT query_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
-"""
+WITH {_IVF2_CORE_CTES}, {_PROBED_TOP_K}"""
 
 
 # ---------------------------------------------------------------------------
@@ -919,15 +782,13 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape, bottom-up:
       1. coarse assignment + query probes = ann_ivf2_topk's two-level
          core (_ivf2_assign_probes: bounded broadcasts at BOTH levels,
-         argmax as hash aggs, O(N*2*sqrt(K)) assignment);
-      2. residual r(v) = v - centroid(v), a zip_with projection —
-         no extra shuffle (rides the assignment join);
+         O(N*2*sqrt(K)) assignment);
+      2. residual r(v) = v - centroid(v), computed in the encoding kernel
+         from the same broadcast;
       3. codebook = PQ_CODES seed residuals split into PQ_M subvectors
-         (PQ_M * PQ_CODES rows -> broadcast); per-(vector, subspace)
-         encoding argmin is ONE hash agg over a broadcast-join fan-out
-         of PQ_CODES — the corpus-side cost is O(N * PQ_M * PQ_CODES)
-         narrow rows, embarrassingly parallel, shuffled once on
-         (vec_id, m) for the argmin partial agg;
+         (collected on the driver, ~PQ_CODES rows at any corpus size,
+         broadcast); per-(vector, subspace) encoding argmin in the same
+         Arrow kernel — O(N * PQ_M * PQ_CODES), embarrassingly parallel;
       4. ADC table: per (query, probed list, subspace, codeword) squared
          distance between the QUERY residual subvector and the codeword
          — N_QUERIES * IVF_NPROBE * PQ_M * PQ_CODES rows, broadcast;
@@ -938,65 +799,36 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
          true cosine (a shortlist-sized join back to the vectors) and
          ranked; output schema matches the rest of the ANN ladder.
     """
-    import numpy as np
-    import pandas as pd
-
     emb = _with_norm(_embeddings(spark, sf_dir))
     n = emb.count()
-    cbs = pq_seed_stride(n)
-    assigned, probes, fine, queries, bc = _ivf2_assign_probes(
-        emb, n, with_state=True)
-    cents = fine.select("cent_id", "c_emb")
+    assigned, probes, bc = _ivf2_assign_probes(emb, n)
+    queries = _queries(emb)
+    cents = (emb.filter(F.col("vec_id") % ivf2_strides(n)[0] == 0)
+             .select(F.col("vec_id").alias("cent_id"),
+                     F.col("embedding").alias("c_emb")))
 
-    # Codebook, driver-side (r9): the seed set is ~PQ_CODES rows at ANY
-    # corpus size (stride n // PQ_CODES), so collecting it is bounded
-    # like the centroid matrix.  Seed residuals use the SAME assignment
-    # math as the kernels (_ivf2_assign_matrix), and the code numbering
-    # reproduces the old row_number-over-vec_id window: assigned seeds
-    # only, ascending vec_id, first PQ_CODES.
-    seed_rows = sorted(
-        emb.filter(F.col("vec_id") % cbs == 0)
-        .select("vec_id", "embedding").collect(),
-        key=lambda r: r[0])
-    seed_mat = np.array([list(r[1]) for r in seed_rows], dtype=np.float64)
-    f_id = bc.value[0]
-    f_mat = bc.value[1]
-    seed_cent, seed_valid = _ivf2_assign_matrix(seed_mat, bc.value)
-    fpos = {int(c): k for k, c in enumerate(f_id)}
-    seed_resid = [seed_mat[k] - f_mat[fpos[int(seed_cent[k])]]
-                  for k in range(len(seed_rows)) if seed_valid[k]]
-    seed_resid = seed_resid[:PQ_CODES]
-    dim = seed_mat.shape[1]
-    sublen = dim // PQ_M
-    # [PQ_CODES, PQ_M, sublen] codeword tensor (trailing dims dropped,
-    # same as the old fixed-length slices)
-    cb = np.array([r[:PQ_M * sublen] for r in seed_resid],
-                  dtype=np.float64).reshape(-1, PQ_M, sublen)
+    # Codebook, driver-side: codeword c is the residual of the c-th
+    # ASSIGNED codebook seed (ascending vec_id, first PQ_CODES), under
+    # the same assignment math as the kernels
+    _, seed_mat, _ = _collect_centroid_matrix(emb, pq_seed_stride(n))
+    seed_resid = _ivf2_residuals(seed_mat, bc.value)[0][:PQ_CODES]
+    sublen = seed_mat.shape[1] // PQ_M
+    # [PQ_CODES, PQ_M, sublen] codeword tensor; trailing dims of a
+    # D % PQ_M != 0 vector are dropped
+    cb = seed_resid[:, :PQ_M * sublen].reshape(-1, PQ_M, sublen)
     bc_cb = spark.sparkContext.broadcast(cb)
 
-    # per-(vector, subspace) encoding argmin in the SAME Arrow kernel
-    # family as the assignment: residual against the assigned centroid,
-    # round4 squared distances, np.argmin = ties to the smaller code —
-    # replaces the subs explode + broadcast codebook join + hash agg
+    # per-(vector, subspace) encoding: residual against the assigned
+    # centroid, round4 squared distances, argmin = ties to the smaller code
     def codes_kernel(batches):
         codebook = bc_cb.value      # [C, M, L]
-        f_id_k = bc.value[0]
-        f_mat_k = bc.value[1]
-        pos = {int(c): k for k, c in enumerate(f_id_k)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            v = np.array(list(pdf["embedding"]), dtype=np.float64)
-            cent, valid = _ivf2_assign_matrix(v, bc.value)
-            v = v[valid]
-            cent = cent[valid]
+        for pdf, v in _vector_batches(batches):
+            r, valid = _ivf2_residuals(v, bc.value)
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)[valid]
             if not len(ids):
                 continue
-            ci = np.array([pos[int(c)] for c in cent], dtype=np.int64)
-            r = (v - f_mat_k[ci])[:, :PQ_M * sublen] \
-                .reshape(-1, PQ_M, sublen)
-            # [b, M, C] squared distances, rounded like the old sqdist
+            r = r[:, :PQ_M * sublen].reshape(-1, PQ_M, sublen)
+            # [b, M, C] squared distances
             d = _round4_half_up(
                 ((r[:, :, None, :] - codebook.transpose(1, 0, 2)[None]) ** 2
                  ).sum(axis=3))
@@ -1011,7 +843,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes_kernel, "vec_id bigint, m int, code int")
 
     # codebook as a (PQ_M * PQ_CODES)-row DataFrame for the (tiny) ADC
-    # subtree below — the JVM path there is unchanged
+    # subtree below
     codebook = spark.createDataFrame(
         [(c, m, [float(x) for x in cb[c, m]])
          for c in range(cb.shape[0]) for m in range(PQ_M)],
@@ -1022,7 +854,6 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0), lambda acc, x: acc + x), 4)
 
     # ADC lookup table: query residual vs every codeword, per probed list
-    # (probes and queries come from the two-level core)
     q_resid = (probes
                .join(F.broadcast(queries.select("query_id", "q_emb")),
                      "query_id")
@@ -1059,19 +890,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .select("query_id", "vec_id"))
 
     # exact re-rank of the shortlist only
-    dot = F.aggregate(
-        F.zip_with("embedding", "q_emb",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    scored = (shortlist.join(emb, "vec_id")
-              .join(F.broadcast(queries), "query_id")
-              .withColumn("cosine",
-                          F.round(dot / (F.col("norm") * F.col("q_norm")), 4)))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "rank", "vec_id", "cosine"))
+    return _exact_top_k(shortlist.join(emb, "vec_id")
+                        .join(F.broadcast(queries), "query_id"))
 
 
 ANN_IVFPQ_SQL = f"""
@@ -1157,19 +977,7 @@ WITH {_IVF2_CORE_CTES}, pqparams AS (
   JOIN elems qe ON qe.vec_id = s.query_id
   JOIN elems ee ON ee.vec_id = s.vec_id AND ee.i = qe.i
   GROUP BY s.query_id, s.vec_id
-), scored AS (
-  SELECT d.query_id, d.vec_id, round(d.dot / (nq.norm * ne.norm), 4) AS cosine
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms ne ON ne.vec_id = d.vec_id
-), ranked AS (
-  SELECT query_id, vec_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= {TOP_K}
-"""
+), {_TOP_K_TAIL}"""
 
 
 # ---------------------------------------------------------------------------
@@ -1194,16 +1002,14 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same cluster is within cosine >= SEMDEDUP_TAU (single-hop rule
     — the survivor of a duplicate neighborhood is its minimum vec_id).
 
-    Scale shape at 100 TB: centroid assignment is the ann_ivf_topk plan
-    (broadcast of <= IVF_K_CAP centroid rows, argmax as ONE hash agg);
-    the pairwise stage shuffles once on cluster_id and compares only
+    Scale shape at 100 TB: centroid assignment is ann_ivf_topk's
+    vectorized kernel (broadcast of <= IVF_K_CAP centroid rows); the
+    pairwise stage shuffles once on cluster_id and compares only
     within clusters of expected size N/K ~ sqrt(N) (capped in practice by
     cluster-size limits in production SemDeDup).  Nothing quadratic in N.
     """
     emb = _with_norm(_embeddings(spark, sf_dir))
     stride = ivf_stride(emb.count())
-    # same vectorized assignment core as ann_ivf_topk (r9: replaces the
-    # O(N*K)-row crossJoin + interpreted per-element dot lambdas)
     assigned_np, _probes = _ivf_assign_probes_np(spark, emb, stride)
     assigned = assigned_np.select(
         "vec_id", F.col("cent_id").alias("cluster_id"))
@@ -1217,14 +1023,9 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("vec_id").alias("id_b"),
                        F.col("embedding").alias("emb_b"),
                        F.col("norm").alias("norm_b"))
-    pdot = F.aggregate(
-        F.zip_with("emb_a", "emb_b",
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
     dups = (a.join(b, "cluster_id")
             .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine",
-                        F.round(pdot / (F.col("norm_a") * F.col("norm_b")), 4))
+            .withColumn("cosine", _cosine("emb_a", "emb_b", "norm_a", "norm_b"))
             .filter(F.col("cosine") >= SEMDEDUP_TAU)
             .select(F.col("id_b").alias("vec_id")).distinct()
             .withColumn("dup", F.lit(1)))
@@ -1235,33 +1036,14 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SEMDEDUP_PRUNE_SQL = f"""
-WITH elems AS (
-  SELECT vec_id, i, embedding[i]::DOUBLE AS x
-  FROM (SELECT e.vec_id, e.embedding,
-               unnest(generate_series(1, len(e.embedding))) AS i
-        FROM embeddings e)
-), norms AS (
+WITH {_ELEMS_CTE}, norms AS (
   SELECT vec_id, sqrt(sum(x * x)) AS norm FROM elems GROUP BY vec_id
 ), stride AS (
   SELECT greatest(1, CAST(ceil(count(*) /
            least({IVF_K_CAP}, CAST(ceil(sqrt(CAST(count(*) AS DOUBLE)))
                                    AS BIGINT))::DOUBLE) AS BIGINT)) AS s
   FROM embeddings
-), cdots AS (
-  SELECT v.vec_id, c.vec_id AS cent_id, sum(v.x * c.x) AS dot
-  FROM elems v JOIN elems c ON c.i = v.i
-       AND c.vec_id % (SELECT s FROM stride) = 0
-  GROUP BY v.vec_id, c.vec_id
-), csim AS (
-  SELECT d.vec_id, d.cent_id,
-         round(d.dot / (nv.norm * nc.norm), 4) AS sim,
-         row_number() OVER (PARTITION BY d.vec_id
-                            ORDER BY round(d.dot / (nv.norm * nc.norm), 4)
-                                     DESC, d.cent_id ASC) AS rn
-  FROM cdots d
-  JOIN norms nv ON nv.vec_id = d.vec_id
-  JOIN norms nc ON nc.vec_id = d.cent_id
-), assigned AS (
+), {_IVF_CSIM_CTES}, assigned AS (
   SELECT vec_id, cent_id AS cluster_id FROM csim WHERE rn = 1
 ), pdots AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(ea.x * eb.x) AS dot

@@ -56,16 +56,6 @@ class Element:
             return self.lower_y
         return self.left_x
 
-    def rot_upper_y(self) -> float:
-        r = self.rotation
-        if r == 1:
-            return self.right_x
-        if r == 2:
-            return self.lower_y
-        if r == 3:
-            return self.left_x
-        return self.upper_y
-
     def rot_right_x(self) -> float:
         r = self.rotation
         if r == 1:
@@ -115,15 +105,6 @@ class Char(Element):
         self.font_name = ""
         self.font_size = 0.0
         self.word: Optional["Word"] = None
-
-    def effective_text(self) -> str:
-        """Text as emitted by the serializers: merged-diacritic text for base
-        chars, empty for merged marks (PlainTextSerializer.cpp:76-82)."""
-        if self.base_char_of_diacritic_mark is not None:
-            return self.text_with_diacritic_mark
-        if self.diacritic_mark_of_base_char is not None:
-            return ""
-        return self.text
 
 
 class CharCols:

@@ -18,7 +18,6 @@ from .model import Doc
 # Stage names mirror the reference's --print-running-times report
 # (/root/reference/src/PdfToTextPlusPlus.cpp:86-253).
 STAGE_DECODE = "Parse payload"
-STAGE_PIPELINE = "Pipeline"
 STAGE_SERIALIZE = "Serialize"
 
 

@@ -22,12 +22,10 @@ from .engine import extract_pages
 def stream_extract(spark, input_path: str, output_path: str,
                    checkpoint_path: str, schema=None,
                    config: PipelineConfig = DEFAULT_CONFIG,
-                   num_partitions: Optional[int] = None,
-                   available_now: bool = True):
-    """Start (and by default drain) a file-source extraction stream.
-
-    Returns the StreamingQuery; with ``available_now`` the call blocks until
-    all currently-available input is processed (the test/batch-drain mode).
+                   num_partitions: Optional[int] = None):
+    """Drain a file-source extraction stream: the call blocks until all
+    currently-available input is processed, then returns the finished
+    StreamingQuery.
     """
     if schema is None:
         schema = ("url string, warc_ts timestamp, html binary, "
@@ -38,15 +36,13 @@ def stream_extract(spark, input_path: str, output_path: str,
               .format("parquet")
               .load(input_path))
     return stream_extract_from(stream, output_path, checkpoint_path,
-                               config=config, num_partitions=num_partitions,
-                               available_now=available_now)
+                               config=config, num_partitions=num_partitions)
 
 
 def stream_extract_from(stream, output_path: str, checkpoint_path: str,
                         config: PipelineConfig = DEFAULT_CONFIG,
-                        num_partitions: Optional[int] = None,
-                        available_now: bool = True):
-    """Drive an already-built streaming DataFrame through the extraction
+                        num_partitions: Optional[int] = None):
+    """Drain an already-built streaming DataFrame through the extraction
     foreachBatch sink (see :func:`stream_extract`); callers control the
     source (schema, maxFilesPerTrigger, rate limits)."""
     from pyspark.sql import functions as F
@@ -65,19 +61,30 @@ def stream_extract_from(stream, output_path: str, checkpoint_path: str,
             .partitionBy("batch_id")
             .parquet(output_path))
 
-    writer = (stream.writeStream
-              .foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return _drain(stream.writeStream
+                  .foreachBatch(process_batch)
+                  .option("checkpointLocation", checkpoint_path))
+
+
+def _drain(writer):
+    """Run a stream writer over all currently-available input and block
+    until it finishes; returns the StreamingQuery."""
+    query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
+    return query
+
+
+def _parquet_append(stream, output_path: str, checkpoint_path: str):
+    """Append-mode parquet sink writer with its checkpoint."""
+    return (stream.writeStream
+            .outputMode("append")
+            .format("parquet")
+            .option("path", output_path)
+            .option("checkpointLocation", checkpoint_path))
 
 
 def stateful_sessionize(spark, input_path: str, output_path: str,
-                        checkpoint_path: str, gap_s: int = 1800,
-                        available_now: bool = True):
+                        checkpoint_path: str, gap_s: int = 1800):
     """Custom stateful streaming operator via ``applyInPandasWithState``:
     per-user session tracking across micro-batches.
 
@@ -134,23 +141,13 @@ def stateful_sessionize(spark, input_path: str, output_path: str,
                                         "append",
                                         GroupStateTimeout.NoTimeout))
 
-    writer = (sessions.writeStream
-              .outputMode("append")
-              .format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return _drain(_parquet_append(sessions, output_path, checkpoint_path))
 
 
 def windowed_event_counts(spark, input_path: str, output_path: str,
                           checkpoint_path: str,
                           window: str = "1 hour",
-                          watermark: str = "2 hours",
-                          available_now: bool = True):
+                          watermark: str = "2 hours"):
     """Stateful streaming aggregation with late-data handling: tumbling
     windows per event_type under a watermark (the Structured Streaming form
     of :func:`~.datapipe.events.tumbling_counts`).
@@ -176,20 +173,11 @@ def windowed_event_counts(spark, input_path: str, output_path: str,
                       F.col("win.end").alias("window_end"),
                       "event_type", "n_events", "value_sum"))
 
-    writer = (counts.writeStream
-              .outputMode("append")
-              .format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return _drain(_parquet_append(counts, output_path, checkpoint_path))
 
 
 def streaming_url_dedup(spark, input_path: str, output_path: str,
-                        checkpoint_path: str, available_now: bool = True):
+                        checkpoint_path: str):
     """Streaming URL-level dedup via ``applyInPandasWithState``: the
     state per canonical URL is the best (smallest) doc_id seen so far;
     a batch emits a row only when it IMPROVES the state — first sight
@@ -228,13 +216,4 @@ def streaming_url_dedup(spark, input_path: str, output_path: str,
                                    "canon_url string, doc_id bigint",
                                    "best bigint", "append",
                                    GroupStateTimeout.NoTimeout))
-    writer = (out.writeStream
-              .outputMode("append")
-              .format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    return _drain(_parquet_append(out, output_path, checkpoint_path))

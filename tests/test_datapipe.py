@@ -446,6 +446,43 @@ def test_ann_ivf2_strides_structure():
         assert n_super <= similarity.IVF_K_CAP
 
 
+def test_fixture_rows_built_once_and_copied(monkeypatch):
+    """The registry's fixture corpus is built once per process, and each
+    caller gets its own copy: changing one leaves the next untouched."""
+    from pdftotext_plus_plus_spark import fixtures
+
+    build, calls = fixtures.build_corpus, []
+    monkeypatch.setattr(fixtures, "build_corpus",
+                        lambda *a, **k: calls.append(a) or build(*a, **k))
+    registry._fixture_corpus.cache_clear()
+    first = registry._fixture_rows()
+    first[0]["url"] = "changed"
+    first[0]["golden_blocks"].append("changed")
+    assert registry._fixture_rows() == build(registry.N_EXTRACT_DOCS,
+                                             jumbo_every=16)
+    assert len(calls) == 1
+
+
+def test_round4_half_up_matches_duckdb_round():
+    """The kernels' rounding equals the oracle engine's round(x, 4) on
+    every four-decimal tie k/10^4 + 0.00005 in [-1, 1) and on seeded
+    random doubles — the kernels must rank exactly as the oracles do."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(20)
+    x = np.concatenate([np.arange(-10000, 10000) / 1e4 + 0.00005,
+                        rng.uniform(-1, 1, 20000),
+                        rng.normal(0, 100, 5000)])
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": np.arange(len(x)), "x": x}))
+    want = np.array([r[0] for r in con.execute(
+        "SELECT round(x, 4) FROM t ORDER BY i").fetchall()])
+    got = similarity._round4_half_up(x)
+    assert np.array_equal(got, want), x[got != want][:5]
+    assert similarity._round4_half_up(np.array([-0.81695]))[0] == -0.8169
+
+
 def test_ann_ivf2_exact_within_probed_lists(spark):
     """Two-level IVF results are EXACT for the pairs they return, and
     recall@10 vs brute force clears a floor consistent with probing

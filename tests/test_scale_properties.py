@@ -226,7 +226,7 @@ def test_ivf2_assignment_matches_bruteforce_argmax(spark):
     sf = "/root/testdata/sf0.001"
     emb = similarity._with_norm(similarity._embeddings(spark, sf))
     n = emb.count()
-    assigned, _p, _f, _q = similarity._ivf2_assign_probes(emb, n)
+    assigned, _p, _bc = similarity._ivf2_assign_probes(emb, n)
     got = {r["vec_id"]: r["cent_id"] for r in assigned.collect()}
 
     rows = sorted(emb.select("vec_id", "embedding").collect(),
