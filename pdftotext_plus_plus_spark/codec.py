@@ -47,7 +47,7 @@ import numpy as np
 
 from .charmap import CHAR_MAP
 from .config import WHITESPACE_TEXTS
-from .model import Char, CharCols, Doc, FontInfo, NonTextElement, Page
+from .model import CharCols, Doc, FontInfo, NonTextElement, Page
 from .utils.mathutils import larger, round_half_away, smaller
 
 MAGIC = b"PTX1"
@@ -232,7 +232,7 @@ class _Reader:
             # fast path: every item is one single-byte (ASCII) char — the
             # common texts blob; one decode + C-level split.  With
             # lazy_ascii the caller reads ``blob_ascii1`` directly (the
-            # columnar page path never touches the per-item list).
+            # simple-page producer never touches the per-item list).
             self.blob_ascii1 = blob
             if lazy_ascii:
                 return None
@@ -271,8 +271,8 @@ def _resolve_text(raw_text: str, name: str, unicodes: List[int]) -> str:
     return ""
 
 
-# Shared single-codepoint unicode lists: Char.unicodes is read-only after
-# decode (diacritics.py only reads it), so the ubiquitous [ord(text)] case
+# Shared single-codepoint unicode lists: the unicodes column is read-only
+# after decode (diacritics.py only reads it), so the ubiquitous [ord(text)] case
 # reuses one list per ASCII codepoint instead of allocating per char.
 _ORD1 = [[i] for i in range(128)]
 _CHAR_MAP_UNI = {name: [cp] for name, (cp, _) in CHAR_MAP.items()}
@@ -280,6 +280,141 @@ _CHAR_MAP_UNI = {name: [cp] for name, (cp, _) in CHAR_MAP.items()}
 # texts blob) for the vectorized whitespace-suppression mask
 _WS_ASCII_CODES = np.array(sorted(ord(c) for c in WHITESPACE_TEXTS
                                   if ord(c) < 128), dtype=np.uint8)
+
+
+def _simple_page_cols(num, texts_ascii1, font_names, char_fields, page_num,
+                      deferred) -> CharCols:
+    """SIMPLE-PAGE producer: every char text is one ASCII codepoint, no
+    glyph names (-> no charMap, no glyph-bbox preference), no explicit
+    unicodes.  The whitespace/figure-diversion decisions collapse into one
+    numpy mask and the columns come from per-column ``tolist()``s; the
+    store's ``names`` / ``unicodes`` stay None (T1 skips the page: no marks
+    >= U+02B0 exist)."""
+    tb = np.frombuffer(texts_ascii1, dtype=np.uint8)
+    keep = ~np.isin(tb, _WS_ASCII_CODES)
+    if char_fields > 9:
+        fig = num[:, 9] >= 0
+        divert = keep & fig
+        if divert.any():
+            for row in num[divert][:, (9, 0, 1, 2, 3)].tolist():
+                deferred.append((int(row[0]), row[1], row[2], row[3], row[4]))
+        keep &= ~fig
+    kept = np.flatnonzero(keep)
+    # rows: (left, up, right, low, rotation, w_mode, font_size, base) per
+    # kept char, decode order.  Built by zipping per-COLUMN tolist()s so the
+    # font-size/base columns convert once (they are also the fsizes/bases
+    # columns) and the all-zero rotation/w_mode columns of an upright page
+    # convert never — ndarray.tolist element conversion was ~56% of decode
+    # on simple pages, and every consumer reads rows by index only
+    sub = num[kept]
+    fs_col = sub[:, 5].tolist()
+    base_col = sub[:, 4].tolist()
+    all_upright = not (bool(sub[:, 6].any()) or bool(sub[:, 7].any()))
+    if all_upright:
+        rot_col = wm_col = repeat(0.0)
+    else:
+        rot_col = sub[:, 6].tolist()
+        wm_col = sub[:, 7].tolist()
+    rows = list(zip(sub[:, 0].tolist(), sub[:, 1].tolist(),
+                    sub[:, 2].tolist(), sub[:, 3].tolist(),
+                    rot_col, wm_col, fs_col, base_col))
+    ktexts = list(bytes(tb[kept]).decode("ascii"))
+    fname_col = np.array(font_names, dtype=object)[
+        sub[:, 8].astype(np.intp)].tolist()
+    return CharCols(rows, ktexts, fname_col, fs_col, base_col, page_num,
+                    all_upright=all_upright)
+
+
+def _general_page_cols(num, names, texts, unicodes, fonts, font_names,
+                       char_fields, glyph_bboxes, page_num,
+                       deferred) -> CharCols:
+    """GENERAL producer: glyph names (charMap), ligatures, non-ASCII text,
+    explicit unicodes and the glyph-bbox preference, one char at a time.
+    Fills the same columns as :func:`_simple_page_cols` plus ``names`` and
+    ``unicodes``."""
+    # per-char lists converted once at C level (the per-row float->int
+    # casts were ~10% of decode)
+    num_list = num.tolist()
+    rot_col = num[:, 6].astype(np.int64).tolist()
+    wm_col = num[:, 7].astype(np.int64).tolist()
+    font_col = num[:, 8].astype(np.int64).tolist()
+    # S4 deep path (v3+ payloads only): per-font glyph-bbox tables + font
+    # matrices for the char-bbox preference
+    glyph_tables = [f.glyph_bboxes for f in fonts] if glyph_bboxes else None
+    matrices = [f.font_matrix for f in fonts]
+    ws = WHITESPACE_TEXTS
+    rows, ktexts, fname_col, kept_names, kept_unicodes = [], [], [], [], []
+    for i in range(len(num_list)):
+        raw = texts[i]
+        name = names[i]
+        # fast path: ordinary char (no glyph name -> no charMap)
+        if raw and not name:
+            text = raw
+        else:
+            text = _resolve_text(raw, name, unicodes[i])
+        # whitespace suppression (PdfParsing.cpp:229-245)
+        if not text:
+            continue
+        if len(text) == 1:
+            if text in ws:
+                continue
+        elif all(ch in ws for ch in text):
+            continue
+        row = num_list[i]
+        if char_fields > 9 and row[9] >= 0:
+            # clip-diverted char: belongs to a figure, not the page — it
+            # grows the figure's bbox and never enters extraction
+            # (PdfParsing.cpp:513-591)
+            deferred.append((int(row[9]), row[0], row[1], row[2], row[3]))
+            continue
+        lx, uy, rx, ly, base = row[0], row[1], row[2], row[3], row[4]
+        if glyph_tables is not None and name:
+            gb = glyph_tables[font_col[i]]
+            if gb is not None and name in gb:
+                # glyph bbox through fontMatrix, then the char's text
+                # rendering matrix; preferred when vertically LARGER
+                # (PdfParsing.cpp:423-455)
+                glx, guy, grx, gly = gb[name]
+                fm = matrices[font_col[i]]
+                lx2 = glx * fm[0] + guy * fm[2] + fm[4]
+                uy2 = glx * fm[1] + guy * fm[3] + fm[5]
+                rx2 = grx * fm[0] + gly * fm[2] + fm[4]
+                ly2 = grx * fm[1] + gly * fm[3] + fm[5]
+                lx3 = lx2 * row[10] + uy2 * row[12] + row[14]
+                uy3 = lx2 * row[11] + uy2 * row[13] + row[15]
+                rx3 = rx2 * row[10] + ly2 * row[12] + row[14]
+                ly3 = rx2 * row[11] + ly2 * row[13] + row[15]
+                alt_uy = min(uy3, ly3)
+                alt_ly = max(uy3, ly3)
+                if smaller(alt_uy, row[1], 0.1) or larger(alt_ly, row[3], 0.1):
+                    lx = round_half_away(min(lx3, rx3), 1)
+                    uy = round_half_away(alt_uy, 1)
+                    rx = round_half_away(max(lx3, rx3), 1)
+                    ly = round_half_away(alt_ly, 1)
+                    base = round_half_away(alt_ly, 1)
+        rows.append((lx, uy, rx, ly, rot_col[i], wm_col[i], row[5], base))
+        ktexts.append(text)
+        fname_col.append(font_names[font_col[i]])
+        kept_names.append(name)
+        u = unicodes[i]
+        # when the charMap overrode the char (uLen == 1 && name in map), the
+        # reference stores the MAP's codepoint, not the provided unicode
+        # (PdfParsing.cpp:207) — unicodes[0] drives diacritic merging, so
+        # this must match
+        if name and name in CHAR_MAP and (len(u) if u else len(raw)) == 1:
+            kept_unicodes.append(_CHAR_MAP_UNI[name])
+        elif u:
+            kept_unicodes.append(u)
+        elif len(text) == 1:
+            o = ord(text)
+            kept_unicodes.append(_ORD1[o] if o < 128 else [o])
+        else:
+            kept_unicodes.append([ord(ch) for ch in text])
+    all_upright = not any(row[4] or row[5] for row in rows)
+    return CharCols(rows, ktexts, fname_col, [row[6] for row in rows],
+                    [row[7] for row in rows], page_num,
+                    all_upright=all_upright, names=kept_names,
+                    unicodes=kept_unicodes)
 
 
 def decode_payload(payload: Optional[bytes]) -> Tuple[Optional[Doc], int]:
@@ -367,6 +502,7 @@ def decode_payload(payload: Optional[bytes]) -> Tuple[Optional[Doc], int]:
             fonts.append(fi)
             doc.font_infos[name] = fi
 
+        font_names = [f.name for f in fonts]
         n_pages = r.u32()
         for _ in range(n_pages):
             page_num = r.i32()
@@ -385,168 +521,17 @@ def decode_payload(payload: Optional[bytes]) -> Tuple[Optional[Doc], int]:
                 texts_ascii1 = r.blob_ascii1
                 unicodes = r.u32_blob(n_chars)
                 uni_empty = r.blob_all_empty
-                font_names = [f.name for f in fonts]
-                ws = WHITESPACE_TEXTS
                 if names_empty and uni_empty and texts_ascii1 is not None:
-                    # SIMPLE-PAGE COLUMNAR path: every char text is one
-                    # ASCII codepoint, no glyph names (-> no charMap, no
-                    # glyph-bbox preference), no explicit unicodes.  The
-                    # whitespace/figure-diversion decisions collapse into
-                    # one numpy mask; no Char objects are built at all —
-                    # the page carries a CharCols columnar store that the
-                    # words/statistics/scripts stages read directly, and
-                    # T1 can skip the page (no marks >= U+02B0 exist).
-                    page.ascii_only = True
-                    tb = np.frombuffer(texts_ascii1, dtype=np.uint8)
-                    keep = ~np.isin(tb, _WS_ASCII_CODES)
-                    if char_fields > 9:
-                        fig = num[:, 9] >= 0
-                        divert = keep & fig
-                        if divert.any():
-                            for row in num[divert][:, (9, 0, 1, 2, 3)].tolist():
-                                deferred.append((int(row[0]), row[1], row[2],
-                                                 row[3], row[4]))
-                        keep &= ~fig
-                    kept = np.flatnonzero(keep)
-                    # rows: (left, up, right, low, rotation, w_mode,
-                    #        font_size, base) per kept char, decode order.
-                    # Built by zipping per-COLUMN tolist()s so the
-                    # font-size/base columns convert once (they are also
-                    # the CharCols fsizes/bases columns) and the
-                    # all-zero rotation/w_mode columns of an upright
-                    # page convert never — ndarray.tolist element
-                    # conversion was ~56% of decode on simple pages, and
-                    # every consumer reads rows by index only
-                    sub = num[kept]
-                    fs_col = sub[:, 5].tolist()
-                    base_col = sub[:, 4].tolist()
-                    all_upright = not (bool(sub[:, 6].any())
-                                       or bool(sub[:, 7].any()))
-                    if all_upright:
-                        zcol = repeat(0.0)
-                        rows = list(zip(sub[:, 0].tolist(),
-                                        sub[:, 1].tolist(),
-                                        sub[:, 2].tolist(),
-                                        sub[:, 3].tolist(),
-                                        zcol, zcol, fs_col, base_col))
-                    else:
-                        rows = list(zip(sub[:, 0].tolist(),
-                                        sub[:, 1].tolist(),
-                                        sub[:, 2].tolist(),
-                                        sub[:, 3].tolist(),
-                                        sub[:, 6].tolist(),
-                                        sub[:, 7].tolist(),
-                                        fs_col, base_col))
-                    ktexts = list(bytes(tb[kept]).decode("ascii"))
-                    fname_col = np.array(font_names, dtype=object)[
-                        sub[:, 8].astype(np.intp)].tolist()
-                    page.char_cols = CharCols(
-                        rows, ktexts, fname_col,
-                        fs_col, base_col, page_num,
-                        all_upright=all_upright)
-                    page.characters = None  # lazy (CharCols.materialize)
-                    n_chars = 0  # general loop below skipped
-                if n_chars:
-                    # GENERAL (object) path prep: per-char lists converted
-                    # once at C level (the per-row float->int casts were
-                    # ~10% of decode)
+                    page.char_cols = _simple_page_cols(
+                        num, texts_ascii1, font_names, char_fields, page_num,
+                        deferred)
+                else:
                     if texts is None:
                         texts = list(texts_ascii1.decode("utf-8"))
-                    num_list = num.tolist()
-                    rot_col = num[:, 6].astype(np.int64).tolist()
-                    wm_col = num[:, 7].astype(np.int64).tolist()
-                    font_col = num[:, 8].astype(np.int64).tolist()
-                    # S4 deep path (v3 payloads only): per-font glyph-bbox
-                    # tables + font matrices for the char-bbox preference
-                    glyph_tables = ([f.glyph_bboxes for f in fonts]
-                                    if version >= VERSION_GLYPH_BBOX else None)
-                    matrices = [f.font_matrix for f in fonts]
-                    rank = 0
-                    append = page.characters.append
-                for i in range(n_chars):
-                    raw = texts[i]
-                    name = names[i]
-                    # fast path: ordinary char (no glyph name -> no charMap)
-                    if raw and not name:
-                        text = raw
-                    else:
-                        text = _resolve_text(raw, name, unicodes[i])
-                    # whitespace suppression (PdfParsing.cpp:229-245)
-                    if not text:
-                        continue
-                    if len(text) == 1:
-                        if text in ws:
-                            continue
-                    elif all(ch in ws for ch in text):
-                        continue
-                    row = num_list[i]
-                    if char_fields > 9 and row[9] >= 0:
-                        # clip-diverted char: belongs to a figure, not the
-                        # page — it grows the figure's bbox and never enters
-                        # extraction (PdfParsing.cpp:513-591)
-                        deferred.append((int(row[9]),
-                                         row[0], row[1], row[2], row[3]))
-                        continue
-                    # hot path: bypass __init__, set every slot explicitly
-                    c = Char.__new__(Char)
-                    c.left_x = row[0]
-                    c.upper_y = row[1]
-                    c.right_x = row[2]
-                    c.lower_y = row[3]
-                    c.base = row[4]
-                    if glyph_tables is not None and name:
-                        gb = glyph_tables[font_col[i]]
-                        if gb is not None and name in gb:
-                            # glyph bbox through fontMatrix, then the char's
-                            # text rendering matrix; preferred when
-                            # vertically LARGER (PdfParsing.cpp:423-455)
-                            glx, guy, grx, gly = gb[name]
-                            fm = matrices[font_col[i]]
-                            lx2 = glx * fm[0] + guy * fm[2] + fm[4]
-                            uy2 = glx * fm[1] + guy * fm[3] + fm[5]
-                            rx2 = grx * fm[0] + gly * fm[2] + fm[4]
-                            ly2 = grx * fm[1] + gly * fm[3] + fm[5]
-                            lx3 = lx2 * row[10] + uy2 * row[12] + row[14]
-                            uy3 = lx2 * row[11] + uy2 * row[13] + row[15]
-                            rx3 = rx2 * row[10] + ly2 * row[12] + row[14]
-                            ly3 = rx2 * row[11] + ly2 * row[13] + row[15]
-                            alt_uy = min(uy3, ly3)
-                            alt_ly = max(uy3, ly3)
-                            if (smaller(alt_uy, row[1], 0.1)
-                                    or larger(alt_ly, row[3], 0.1)):
-                                c.left_x = round_half_away(min(lx3, rx3), 1)
-                                c.upper_y = round_half_away(alt_uy, 1)
-                                c.right_x = round_half_away(max(lx3, rx3), 1)
-                                c.lower_y = round_half_away(alt_ly, 1)
-                                c.base = round_half_away(alt_ly, 1)
-                    c.font_size = row[5]
-                    c.rotation = rot_col[i]
-                    c.w_mode = wm_col[i]
-                    c.font_name = font_names[font_col[i]]
-                    c.name = name
-                    c.text = text
-                    u = unicodes[i]
-                    # when the charMap overrode the char (uLen == 1 && name
-                    # in map), the reference stores the MAP's codepoint, not
-                    # the provided unicode (PdfParsing.cpp:207) — unicodes[0]
-                    # drives diacritic merging, so this must match
-                    if name and name in CHAR_MAP and \
-                            (len(u) if u else len(raw)) == 1:
-                        c.unicodes = _CHAR_MAP_UNI[name]
-                    elif u:
-                        c.unicodes = u
-                    elif len(text) == 1:
-                        o = ord(text)
-                        c.unicodes = _ORD1[o] if o < 128 else [o]
-                    else:
-                        c.unicodes = [ord(ch) for ch in text]
-                    c.page_num = page_num
-                    c.rank = rank
-                    c.word = None
-                    # color/opacity/diacritic links/script flags: class
-                    # defaults (model.Char), not per-char stores
-                    rank += 1
-                    append(c)
+                    page.char_cols = _general_page_cols(
+                        num, names, texts, unicodes, fonts, font_names,
+                        char_fields, version >= VERSION_GLYPH_BBOX, page_num,
+                        deferred)
 
             pending_figures = deferred
             for kind, target in (("figure", page.figures),

@@ -62,13 +62,26 @@ def _queries(emb: DataFrame, *extra) -> DataFrame:
         F.col("norm").alias("q_norm"), *extra)
 
 
-def _cosine(a: str, b: str, norm_a: str, norm_b: str):
-    """round(dot(a, b) / (norm_a * norm_b), 4) over two array columns —
-    the oracles' ``round(d.dot / (.. * ..), 4)``."""
+def _round4_half_up_col(x):
+    """:func:`_round4_half_up` as a Column expression, so Spark rounds as
+    the kernels and the DuckDB oracles do.  NaN stays NaN (Spark's
+    ``floor(NaN)`` is 0)."""
+    half_up = F.when(x >= 0, F.floor(x * 1e4 + 0.5)) \
+        .otherwise(-F.floor(-x * 1e4 + 0.5))
+    return F.when(F.isnan(x), x).otherwise(half_up / 1e4)
+
+
+def _with_cosine(df: DataFrame, a: str, b: str, norm_a: str,
+                 norm_b: str) -> DataFrame:
+    """Adds ``cosine`` = round(dot(a, b) / (norm_a * norm_b), 4) over two
+    array columns — the oracles' ``round(d.dot / (.. * ..), 4)``.  The raw
+    quotient is its own projection, so the rounding's several references
+    do not re-run the dot product."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
-    return F.round(dot / (F.col(norm_a) * F.col(norm_b)), 4)
+    return (df.withColumn("cosine", dot / (F.col(norm_a) * F.col(norm_b)))
+            .withColumn("cosine", _round4_half_up_col(F.col("cosine"))))
 
 
 def _exact_top_k(pairs: DataFrame) -> DataFrame:
@@ -77,8 +90,7 @@ def _exact_top_k(pairs: DataFrame) -> DataFrame:
     q_emb, q_norm); each query keeps its TOP_K by (rounded cosine desc,
     vec_id asc), so the result set is deterministic across engines."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (pairs.withColumn("cosine",
-                             _cosine("embedding", "q_emb", "norm", "q_norm"))
+    return (_with_cosine(pairs, "embedding", "q_emb", "norm", "q_norm")
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= TOP_K)
             .select("query_id", "rank", "vec_id", "cosine"))
@@ -375,14 +387,15 @@ def _round4_half_up(x):
     the kernels rank exactly as the oracles do.  Spark's ``F.round``
     differs on some four-decimal ties: it rounds the shortest decimal
     form of ``x`` half-up, so ``-0.81695`` is ``-0.817`` there but
-    ``-0.8169`` here and in DuckDB."""
+    ``-0.8169`` here and in DuckDB (:func:`_round4_half_up_col` is the
+    Spark form)."""
     return np.where(x >= 0, np.floor(x * 1e4 + 0.5),
                     -np.floor(-x * 1e4 + 0.5)) / 1e4
 
 
 def _cosine_np(v, mat, mat_norm):
     """[n, K] rounded cosines of each row of ``v`` against each row of
-    ``mat`` (row norms ``mat_norm``): the kernels' :func:`_cosine`.
+    ``mat`` (row norms ``mat_norm``): the kernels' :func:`_with_cosine`.
     NaN (a zero norm) becomes +inf, the place the oracles sort NaN
     (greatest), so argmax and lexsort order it alike."""
     vn = np.sqrt((v * v).sum(axis=1))
@@ -1023,9 +1036,9 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("vec_id").alias("id_b"),
                        F.col("embedding").alias("emb_b"),
                        F.col("norm").alias("norm_b"))
-    dups = (a.join(b, "cluster_id")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine", _cosine("emb_a", "emb_b", "norm_a", "norm_b"))
+    dups = (_with_cosine(a.join(b, "cluster_id")
+                         .filter(F.col("id_a") < F.col("id_b")),
+                         "emb_a", "emb_b", "norm_a", "norm_b")
             .filter(F.col("cosine") >= SEMDEDUP_TAU)
             .select(F.col("id_b").alias("vec_id")).distinct()
             .withColumn("dup", F.lit(1)))

@@ -557,13 +557,14 @@ class _BlocksDetector:
         special_fs = self._special_fs
         empty = frozenset()
         for word in line.words:
-            # fast path (columnar words only — every char text is a single
-            # ASCII char there): a word with no script chars and no
-            # special-alphabet chars can never yield a label (every
-            # is_label test fails).  Object-path words keep the per-char
-            # loop because a multi-char text's FIRST char drives is_label.
+            # fast path (pages without glyph names, where every char text
+            # is a single ASCII char — CharCols.names is None): a word with
+            # no script chars and no special-alphabet chars can never yield
+            # a label (every is_label test fails).  Other pages keep the
+            # per-char loop because a multi-char text's FIRST char drives
+            # is_label.
             if (word.char_sup is None and word.char_sub is None
-                    and word.char_src is not None
+                    and word.char_src[0].names is None
                     and special_fs.isdisjoint(word.char_texts)):
                 continue
             sup = word.char_sup or empty

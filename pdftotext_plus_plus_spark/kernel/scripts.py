@@ -2,9 +2,9 @@
 
 Reference: /root/reference/src/SubSuperScriptsDetection.cpp:48-104.
 
-Operates on the per-word char geometry columns (``Word.char_rows``, built
-once at word materialization) instead of Char objects — on simple pages no
-Char objects exist at all.  Flags are per-word index sets
+Operates on the per-word char geometry columns (``Word.char_rows``, sliced
+once from the page's char store at word materialization).  Flags are
+per-word index sets
 (``Word.char_sup`` / ``char_sub``; None = no script chars, the common
 case), read by the block label rules (kernel/blocks.py).
 """

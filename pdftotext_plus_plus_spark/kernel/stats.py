@@ -14,36 +14,26 @@ from __future__ import annotations
 from ..config import PipelineConfig
 from ..model import Doc
 from ..utils.counter import ModeCounter, most_freq
-from ..utils.elements import (horizontal_gap, max_y_overlap_ratio, vertical_gap)
-from ..utils.mathutils import (equal, equal_or_larger, equal_or_smaller,
-                               round_half_away, smaller)
+from ..utils.elements import horizontal_gap, vertical_gap
+from ..utils.mathutils import equal, round_half_away
 
 
 def compute_glyph_statistics(doc: Doc) -> None:
     """A1: mostFreqFontSize/Name (mode over chars), avgCharWidth/Height.
 
-    Columnar pages (Page.char_cols) contribute via per-column C-level
-    passes; sums stay sequential left-to-right (``math.fsum``-free plain
-    adds in both paths) so mixed-page documents accumulate identically to
-    the all-object path."""
+    Reads each page's char store (Page.char_cols) before T1 widens any
+    merged base; sums stay sequential left-to-right plain adds."""
     font_sizes = []
     font_names = []
     sum_widths = 0.0
     sum_heights = 0.0
     for page in doc.pages:
         cols = page.char_cols
-        if cols is not None:
-            font_sizes.extend(cols.fsizes)
-            font_names.extend(cols.font_names)
-            for row in cols.rows:
-                sum_widths += row[2] - row[0]
-                sum_heights += row[3] - row[1]
-        else:
-            for ch in page.characters:
-                font_sizes.append(ch.font_size)
-                font_names.append(ch.font_name)
-                sum_widths += ch.right_x - ch.left_x
-                sum_heights += ch.lower_y - ch.upper_y
+        font_sizes.extend(cols.fsizes)
+        font_names.extend(cols.font_names)
+        for row in cols.rows:
+            sum_widths += row[2] - row[0]
+            sum_heights += row[3] - row[1]
     n = len(font_sizes)
     if n == 0:
         return

@@ -29,54 +29,39 @@ _TOL = 0.0001
 
 def _detect_words_page(doc: Doc, page: Page, config: PipelineConfig) -> None:
     """Sequential scan with the break rules of startsWord
-    (WordsDetection.cpp:77-258), inlined on plain floats for speed — the
-    semantics (tolerance comparators, asymmetric leftmost selection in the
-    horizontal gap, rotation sign flips) are byte-for-byte those of
-    utils.elements/utils.mathutils."""
+    (WordsDetection.cpp:77-258) over the page's char store rows, inlined on
+    plain floats for speed — the semantics (tolerance comparators,
+    asymmetric leftmost selection in the horizontal gap, rotation sign
+    flips) are byte-for-byte those of utils.elements/utils.mathutils."""
     min_y_ratio = config.words_min_y_overlap_ratio
     gap_factor = config.word_gap_threshold_factor
 
-    ccols = page.char_cols
-    if ccols is not None:
-        # COLUMNAR path (simple pages): the decode columns ARE the word
-        # detector's input — no Char objects exist, no attribute reads
-        if not ccols.rows:
-            return
-        filtered = None
-        data = ccols.rows
-        raws = texts = ccols.texts
-        fnames = ccols.font_names
-        fsizes = ccols.fsizes
-        bases = ccols.bases
-        names = None
-    else:
-        if not page.characters:
-            return
+    store = page.char_cols
+    data = store.rows
+    raws = texts = store.texts
+    fnames = store.font_names
+    fsizes = store.fsizes
+    bases = store.bases
+    names = store.names
+    marks = store.marks
+    # store row index of each scanned char; None = identity (no marks)
+    index = None
+    if marks:
         # merged diacritic marks never start/join words (…cpp:117-121);
-        # words are contiguous runs over the filtered sequence, so the
-        # active word is just a start index plus the accumulated bbox state
-        filtered = [c for c in page.characters
-                    if c.diacritic_mark_of_base_char is None]
-        if not filtered:
-            return
-        # a merged mark implies a filtered char, so equal lengths mean the
-        # page has no diacritics at all -> the branch-free text fast path
-        has_dia = len(filtered) != len(page.characters)
-        data = [(c.left_x, c.upper_y, c.right_x, c.lower_y,
-                 c.rotation, c.w_mode, c.font_size, c.base) for c in filtered]
-        # page-level attribute columns: words materialize from C-level
-        # slices of these instead of re-touching every Char object per word
-        if has_dia:
-            raws = [c.text for c in filtered]
-            texts = [c.text_with_diacritic_mark
-                     if c.base_char_of_diacritic_mark is not None else c.text
-                     for c in filtered]
-        else:
-            raws = texts = [c.text for c in filtered]
-        fnames = [c.font_name for c in filtered]
-        fsizes = [c.font_size for c in filtered]
-        bases = [c.base for c in filtered]
-        names = [c.name for c in filtered]
+        # words are contiguous runs over the remaining rows, and a merged
+        # base contributes its merged text
+        index = [i for i in range(len(data)) if i not in marks]
+        merged = store.merged
+        data = [data[i] for i in index]
+        raws = [texts[i] for i in index]
+        texts = [merged.get(i, texts[i]) for i in index]
+        fnames = [fnames[i] for i in index]
+        fsizes = [fsizes[i] for i in index]
+        bases = [bases[i] for i in index]
+        if names is not None:
+            names = [names[i] for i in index]
+    if not data:
+        return
     cols = (texts, fnames, fsizes, bases, raws, names)
 
     start = -1
@@ -84,10 +69,10 @@ def _detect_words_page(doc: Doc, page: Page, config: PipelineConfig) -> None:
     aw_right = aw_low = -math.inf
     aw_rot = aw_wmode = 0
     aw_fs = 0.0
-    bounds = [0]  # word-start indices into `filtered` (words are contiguous)
+    bounds = [0]  # word-start indices into `data` (words are contiguous)
     wboxes = []   # finished-word bboxes, tracked by the scan itself
 
-    if ccols is not None and ccols.all_upright:
+    if store.all_upright:
         # UPRIGHT specialization (rotation == w_mode == 0 for every char,
         # a decode-time page fact): the rotation/w_mode break test and the
         # rotation sign flips in horizontal_gap vanish; identical
@@ -137,8 +122,7 @@ def _detect_words_page(doc: Doc, page: Page, config: PipelineConfig) -> None:
             if c_fs > aw_fs:
                 aw_fs = c_fs
         wboxes.append((aw_left, aw_up, aw_right, aw_low))
-        _materialize_words(page, filtered, data, cols, bounds, wboxes,
-                           config)
+        _materialize_words(page, index, data, cols, bounds, wboxes, config)
         return
 
     for i, row in enumerate(data):
@@ -202,10 +186,10 @@ def _detect_words_page(doc: Doc, page: Page, config: PipelineConfig) -> None:
             aw_fs = c_fs
 
     wboxes.append((aw_left, aw_up, aw_right, aw_low))
-    _materialize_words(page, filtered, data, cols, bounds, wboxes, config)
+    _materialize_words(page, index, data, cols, bounds, wboxes, config)
 
 
-def _materialize_words(page, filtered, data, cols, bounds, wboxes,
+def _materialize_words(page, index, data, cols, bounds, wboxes,
                        config: PipelineConfig) -> None:
     """Materialize all of a page's words (createWord,
     WordsDetectionUtils.cpp:43-106) from page-level attribute columns.
@@ -217,13 +201,14 @@ def _materialize_words(page, filtered, data, cols, bounds, wboxes,
     as class defaults, model.Word).  The T4 stacked-math base flag (raw
     char text / glyph name in the config sets, WordsDetection.cpp:272-283)
     is two C-level ``isdisjoint`` scans over the raw-text and name column
-    slices."""
+    slices.  ``index`` maps scan positions to store rows (None = identity)
+    for ``Word.char_src``."""
     texts, fnames, fsizes, bases, raws, names = cols
     stm_texts = config.stacked_math_char_texts
     stm_names = config.stacked_math_char_names
     stm_words = config.stacked_math_words
     n = len(data)
-    ccols = page.char_cols if filtered is None else None
+    store = page.char_cols
     # page-uniform font fast path: with one font name AND one font size on
     # the page, every word's mode is that value — the two per-word
     # most_freq passes collapse to constants
@@ -273,12 +258,10 @@ def _materialize_words(page, filtered, data, cols, bounds, wboxes,
         row = data[s]
         word.rotation = int(row[4])
         word.w_mode = int(row[5])
-        if ccols is None:
-            word._chars = filtered[s:e]  # slot direct: skip the descriptor
-            word.char_src = None
+        if index is None:
+            word.char_src = (store, s, e)
         else:
-            word._chars = None  # lazy: CharCols.materialize(s, e)
-            word.char_src = (ccols, s, e)
+            word.char_src = (store, index[s], index[e - 1] + 1)
         word.line = None
         word.rank = wi
         if (word.text in stm_words
@@ -287,7 +270,6 @@ def _materialize_words(page, filtered, data, cols, bounds, wboxes,
                     and not stm_names.isdisjoint(names[s:e]))):
             word.is_stacked_math_base = True
         words.append(word)
-
 
 
 def _merge_stacked_math_symbols(page: Page, config: PipelineConfig) -> None:

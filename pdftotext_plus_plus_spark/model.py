@@ -1,7 +1,9 @@
 """Per-document element model.
 
 Mirrors the reference's containment hierarchy (/root/reference/src/Types.h):
-Doc -> Page -> {Char, Figure, Shape, Graphic, Word, Segment -> Line, Block}.
+Doc -> Page -> {Char, Figure, Shape, Graphic, Word, Segment -> Line, Block},
+except that a page's chars live in one columnar store (:class:`CharCols`)
+and ``Char`` objects are only views built from it on demand.
 Pointer links (prev/next/parent/sibling) are plain Python references — they
 live only inside one kernel invocation and never cross rows, so they need no
 serialization.  Ids are deterministic (``{type}-{page}-{rank}``) per the
@@ -78,72 +80,68 @@ class Element:
 
 
 class Char(Element):
-    """cf. PdfCharacter (Types.h:452-527)."""
+    """cf. PdfCharacter (Types.h:452-527) — a read-only view of one row of
+    the page's :class:`CharCols` store, built only by
+    :meth:`CharCols.materialize`."""
 
-    # Constant-default / rarely-written fields live as CLASS attributes
-    # (color, opacity, the diacritic links, the script flags): the decode
-    # hot loop then skips 7 per-char stores, and the lazy ``__dict__`` slot
-    # only materializes for the few chars a later stage actually annotates.
+    # ``text_with_diacritic_mark`` is the merged NFC text of a diacritic
+    # base (Types.h:502-510), "" on every other char
     __slots__ = ("text", "name", "unicodes", "base", "font_name", "font_size",
-                 "word", "__dict__")
+                 "text_with_diacritic_mark")
 
     color = (0.0, 0.0, 0.0)
     opacity = 1.0
-    # diacritic links (Types.h:502-510)
-    diacritic_mark_of_base_char: Optional["Char"] = None
-    base_char_of_diacritic_mark: Optional["Char"] = None
-    text_with_diacritic_mark = ""
-    is_subscript = False
-    is_superscript = False
-
-    def __init__(self):
-        super().__init__()
-        self.text = ""
-        self.name = ""
-        self.unicodes: List[int] = []
-        self.base = 0.0
-        self.font_name = ""
-        self.font_size = 0.0
-        self.word: Optional["Word"] = None
 
 
 class CharCols:
-    """Columnar character store for simple (all-ASCII, no-glyph-name) pages.
+    """The page's one character store (cf. the PdfCharacter list of a
+    PdfPage, Types.h:1005-1069): one row per kept char (after whitespace
+    suppression and figure diversion, in decode order — so a row index IS
+    the char rank).  Every stage reads these columns; ``Char`` objects are
+    only built by :meth:`materialize` (``Page.characters`` /
+    ``Word.characters``), for the JSONL characters unit and tests.
 
-    The decode fast path fills these columns instead of one ``Char`` object
-    per character; the word detector, statistics, sub/superscript and block
-    label stages read the columns directly.  ``rows`` holds one
-    ``(left_x, upper_y, right_x, lower_y, rotation, w_mode, font_size,
-    base)`` tuple per kept char (post whitespace suppression / figure
-    diversion, in decode order — so the list index IS the char rank).
-    ``Char`` objects are materialized lazily (``Page.characters`` /
-    ``Word.characters``) only for the rare consumers that need them
-    (the JSONL characters unit)."""
+    * ``rows``: ``(left_x, upper_y, right_x, lower_y, rotation, w_mode,
+      font_size, base)`` per char; T1 widens a merged base's bbox in place;
+    * ``texts`` / ``font_names`` / ``fsizes`` / ``bases``: per-char columns
+      (``fsizes`` / ``bases`` equal the row fields);
+    * ``names`` / ``unicodes``: per-char glyph names and codepoint lists,
+      both None on pages where no char has a glyph name or explicit
+      unicodes and every text is one ASCII codepoint (the unicodes are then
+      ``[ord(text)]``; the codec's numpy producer fills those pages);
+    * ``all_upright``: every char has rotation == w_mode == 0;
+    * ``marks`` / ``merged``: set by T1 (kernel/diacritics.py) — the row
+      indices of merged diacritic marks, and each base row's merged NFC
+      text; None when the page has no merged marks."""
 
-    __slots__ = ("rows", "texts", "font_names", "fsizes", "bases",
-                 "page_num", "all_upright")
+    __slots__ = ("rows", "texts", "font_names", "fsizes", "bases", "names",
+                 "unicodes", "page_num", "all_upright", "marks", "merged")
 
     def __init__(self, rows, texts, font_names, fsizes, bases, page_num,
-                 all_upright=False):
+                 all_upright=False, names=None, unicodes=None):
         self.rows = rows
         self.texts = texts
         self.font_names = font_names
         self.fsizes = fsizes
         self.bases = bases
+        self.names = names
+        self.unicodes = unicodes
         self.page_num = page_num
-        # every char has rotation == 0 and w_mode == 0: the word scanner
-        # drops the rotation branches entirely
         self.all_upright = all_upright
+        self.marks = None
+        self.merged = None
 
     def __len__(self):
         return len(self.rows)
 
-    def materialize(self, start: int, end: int) -> List["Char"]:
-        """Build Char objects for rows [start, end) — rank = row index."""
+    def materialize(self, indices) -> List["Char"]:
+        """Build Char objects for the given row indices — rank = row index."""
         out = []
         rows, texts, fnames = self.rows, self.texts, self.font_names
+        names, unicodes = self.names, self.unicodes
+        merged = self.merged or {}
         page_num = self.page_num
-        for i in range(start, end):
+        for i in indices:
             row = rows[i]
             c = Char.__new__(Char)
             c.left_x = row[0]
@@ -155,13 +153,13 @@ class CharCols:
             c.font_size = row[6]
             c.base = row[7]
             c.font_name = fnames[i]
-            c.name = ""
+            c.name = names[i] if names is not None else ""
             c.text = texts[i]
-            o = ord(texts[i])
-            c.unicodes = [o]
+            c.unicodes = (unicodes[i] if unicodes is not None
+                          else [ord(texts[i])])
             c.page_num = page_num
             c.rank = i
-            c.word = None
+            c.text_with_diacritic_mark = merged.get(i, "")
             out.append(c)
         return out
 
@@ -179,20 +177,19 @@ class NonTextElement(Element):
 class Word(Element):
     """cf. PdfWord (Types.h:535-614)."""
 
-    __slots__ = ("_chars", "char_src", "text", "font_name", "font_size",
-                 "line",
-                 # per-char attribute caches built once in _create_word and
-                 # reused by _compute_line_properties / scripts / block label
-                 # rules (chars are immutable between word creation and line
-                 # creation): geometry rows, raw texts, fonts, bases
+    __slots__ = ("char_src", "text", "font_name", "font_size", "line",
+                 # per-char columns sliced once from the page's CharCols in
+                 # _materialize_words and reused by _compute_line_properties
+                 # / scripts / block label rules: geometry rows, raw texts,
+                 # fonts, bases
                  "char_rows", "char_texts",
                  "char_font_names", "char_font_sizes", "char_bases",
                  "__dict__")
 
-    # Rarely-written annotation fields live as CLASS defaults (the Char
-    # trick): word materialization — the #2 kernel hotspot — skips 4 stores
-    # per word, and the lazy ``__dict__`` slot only materializes for the few
-    # words a later stage actually links.  ``is_base_of_stacked_math_symbol``
+    # Rarely-written annotation fields live as CLASS defaults: word
+    # materialization — the #2 kernel hotspot — skips 4 stores per word,
+    # and the lazy ``__dict__`` slot only materializes for the few words a
+    # later stage actually links.  ``is_base_of_stacked_math_symbol``
     # defaults to an immutable empty tuple; writers install a fresh list
     # before appending (kernel/words.py).
     is_part_of_stacked_math_symbol: Optional["Word"] = None
@@ -210,7 +207,8 @@ class Word(Element):
 
     def __init__(self):
         super().__init__()
-        self._chars: Optional[List[Char]] = []
+        # (cols, start, end): the word's chars are the store rows
+        # [start, end) minus merged diacritic marks
         self.char_src = None
         self.text = ""
         self.font_name = ""
@@ -224,16 +222,13 @@ class Word(Element):
 
     @property
     def characters(self) -> List[Char]:
-        """Char objects — materialized lazily from the page's columnar
-        store for simple-page words (``char_src = (cols, start, end)``)."""
-        if self._chars is None:
-            cols, s, e = self.char_src
-            self._chars = cols.materialize(s, e)
-        return self._chars
-
-    @characters.setter
-    def characters(self, value) -> None:
-        self._chars = value
+        """Char objects built from the page's store (merged marks never
+        belong to a word, WordsDetection.cpp:117-121)."""
+        cols, s, e = self.char_src
+        marks = cols.marks
+        if marks:
+            return cols.materialize(i for i in range(s, e) if i not in marks)
+        return cols.materialize(range(s, e))
 
 
 class Line(Element):
@@ -353,23 +348,18 @@ class Page:
     """cf. PdfPage (Types.h:1005-1069)."""
 
     __slots__ = ("page_num", "clip_left_x", "clip_upper_y", "clip_right_x",
-                 "clip_lower_y", "_characters", "char_cols", "figures",
+                 "clip_lower_y", "char_cols", "figures",
                  "shapes", "graphics", "words", "segments", "blocks",
-                 "ascii_only", "segment_cuts", "reading_order_cuts")
+                 "segment_cuts", "reading_order_cuts")
 
     def __init__(self, page_num: int = 1):
         self.page_num = page_num
-        # decode-time fact: every char text is one ASCII codepoint, so no
-        # combining/spacing marks (>= U+02B0) can exist -> T1 skips the page
-        self.ascii_only = False
         self.clip_left_x = 0.0
         self.clip_upper_y = 0.0
         self.clip_right_x = 612.0
         self.clip_lower_y = 792.0
-        self._characters: Optional[List[Char]] = []
-        # columnar char store (CharCols) for simple pages; None on the
-        # general (object) decode path
-        self.char_cols: Optional[CharCols] = None
+        # the page's one char store; the decoder replaces this empty one
+        self.char_cols = CharCols([], [], [], [], [], page_num)
         self.figures: List[NonTextElement] = []
         self.shapes: List[NonTextElement] = []
         self.graphics: List[NonTextElement] = []
@@ -384,22 +374,12 @@ class Page:
 
     @property
     def characters(self) -> List[Char]:
-        """Char objects; materialized lazily from ``char_cols`` on simple
-        pages (only the rare object consumers pay the cost)."""
-        if self._characters is None:
-            self._characters = self.char_cols.materialize(
-                0, len(self.char_cols))
-        return self._characters
-
-    @characters.setter
-    def characters(self, value) -> None:
-        self._characters = value
+        """Char objects built from ``char_cols``, marks included."""
+        return self.char_cols.materialize(range(len(self.char_cols)))
 
     @property
     def n_chars(self) -> int:
-        if self.char_cols is not None:
-            return len(self.char_cols)
-        return len(self._characters)
+        return len(self.char_cols)
 
     @property
     def width(self) -> float:
@@ -438,15 +418,11 @@ class Doc:
 
         The graph is held together by reference cycles (word <-> line,
         line <-> block / segment, the prev/next, parent and sibling chains,
-        the lazy ``__dict__`` link annotations on chars and words), so
-        without this only the cyclic GC could free a document.  Afterwards
-        reference counting frees it as soon as its last outside reference
-        goes.  The document is unusable once released."""
+        the lazy ``__dict__`` link annotations on words), so without this
+        only the cyclic GC could free a document.  Afterwards reference
+        counting frees it as soon as its last outside reference goes.  The
+        document is unusable once released."""
         for page in self.pages:
-            for char in page._characters or ():
-                links = char.__dict__
-                if links:
-                    links.clear()
             for word in page.words:
                 word.line = None
                 links = word.__dict__

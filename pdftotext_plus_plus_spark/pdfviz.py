@@ -115,14 +115,8 @@ def _page_stream(page: Page, units, height: float) -> str:
         ops.append("1 w")
         ops.append(_rgb_ops(scheme[0], stroke=True))
         if unit == "characters":
-            cols = page.char_cols
-            if cols is not None:
-                for row in cols.rows:
-                    _rect_ops(row[0], row[1], row[2], row[3], height, ops)
-            else:
-                for ch in page.characters:
-                    _rect_ops(ch.left_x, ch.upper_y, ch.right_x,
-                              ch.lower_y, height, ops)
+            for row in page.char_cols.rows:
+                _rect_ops(row[0], row[1], row[2], row[3], height, ops)
         elif unit == "blocks":
             ops.append(_rgb_ops(scheme[0], stroke=False))
             for block in page.blocks:

@@ -170,7 +170,8 @@ def serialize_jsonl(doc: Doc, units: Iterable[str] = ("blocks",),
                                    block.page_num, block.rank))
         elif unit == "characters":
             # JsonlSerializer.cpp:101-156: chars of serialized blocks only,
-            # merged diacritic marks skipped, merged text substituted
+            # merged diacritic marks skipped (they belong to no word),
+            # merged text substituted
             for page in doc.pages:
                 for block in page.blocks:
                     if roles is not None and block.role not in roles:
@@ -178,12 +179,8 @@ def serialize_jsonl(doc: Doc, units: Iterable[str] = ("blocks",),
                     for line in block.lines:
                         for word in line.words:
                             for c in word.characters:
-                                if c.diacritic_mark_of_base_char is not None:
-                                    continue
                                 font = doc.font_infos.get(c.font_name)
-                                text = (c.text_with_diacritic_mark
-                                        if c.base_char_of_diacritic_mark is not None
-                                        else c.text)
+                                text = c.text_with_diacritic_mark or c.text
                                 out.append(
                                     '{"type": "char", "id": "char-%d-%d", '
                                     '"rank": %d, "page": %d, "minX": %s, '

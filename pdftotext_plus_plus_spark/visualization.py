@@ -70,15 +70,23 @@ def _num(v: float) -> str:
     return s[:-2] if s.endswith(".0") else s
 
 
-def _rect(el, color: str, unit: str, out: List[str]) -> None:
-    lx, rx = (el.left_x, el.right_x) if el.left_x <= el.right_x \
-        else (el.right_x, el.left_x)
-    uy, ly = (el.upper_y, el.lower_y) if el.upper_y <= el.lower_y \
-        else (el.lower_y, el.upper_y)
+def _rect(el, color: str, unit: str, out: List[str],
+          elem_id: str = "") -> None:
+    _rect_box(el.left_x, el.upper_y, el.right_x, el.lower_y, color, unit,
+              out, elem_id)
+
+
+def _rect_box(lx: float, uy: float, rx: float, ly: float, color: str,
+              unit: str, out: List[str], elem_id: str = "") -> None:
+    if not lx <= rx:
+        lx, rx = rx, lx
+    if not uy <= ly:
+        uy, ly = ly, uy
     out.append(
-        '<rect class="%s" x="%s" y="%s" width="%s" height="%s" '
+        '<rect class="%s"%s x="%s" y="%s" width="%s" height="%s" '
         'fill="none" stroke="%s"/>'
-        % (unit, _num(lx), _num(uy), _num(rx - lx), _num(ly - uy), color))
+        % (unit, ' id="%s"' % elem_id if elem_id else "", _num(lx),
+           _num(uy), _num(rx - lx), _num(ly - uy), color))
 
 
 def _page_elements(page: Page, unit: str):
@@ -121,21 +129,10 @@ def serialize_svg(doc: Optional[Doc],
             primary = _rgb(scheme[0])
             parts.append('<g class="%s">' % unit)
             if unit == "characters":
-                cols = page.char_cols
-                if cols is not None:
-                    # columnar pages: rects straight from the rows, no
-                    # Char materialization
-                    for row in cols.rows:
-                        parts.append(
-                            '<rect class="characters" x="%s" y="%s" '
-                            'width="%s" height="%s" fill="none" '
-                            'stroke="%s"/>'
-                            % (_num(row[0]), _num(row[1]),
-                               _num(row[2] - row[0]), _num(row[3] - row[1]),
-                               primary))
-                else:
-                    for ch in page.characters:
-                        _rect(ch, primary, "characters", parts)
+                # rects straight from the store rows, no Char objects
+                for row in page.char_cols.rows:
+                    _rect_box(row[0], row[1], row[2], row[3], primary,
+                              "characters", parts)
             elif unit == "blocks":
                 for block in page.blocks:
                     _rect(block, primary, "blocks", parts)
@@ -158,17 +155,8 @@ def serialize_svg(doc: Optional[Doc],
                 # machine-parseable without the group nesting
                 kind = unit[:-1]
                 for i, el in enumerate(_page_elements(page, unit)):
-                    lx, rx = ((el.left_x, el.right_x)
-                              if el.left_x <= el.right_x
-                              else (el.right_x, el.left_x))
-                    uy, ly = ((el.upper_y, el.lower_y)
-                              if el.upper_y <= el.lower_y
-                              else (el.lower_y, el.upper_y))
-                    parts.append(
-                        '<rect class="%s" id="%s-%d-%d" x="%s" y="%s" '
-                        'width="%s" height="%s" fill="none" stroke="%s"/>'
-                        % (unit, kind, page.page_num, i, _num(lx), _num(uy),
-                           _num(rx - lx), _num(ly - uy), primary))
+                    _rect(el, primary, unit, parts,
+                          "%s-%d-%d" % (kind, page.page_num, i))
             else:
                 for el in _page_elements(page, unit):
                     _rect(el, primary, unit, parts)

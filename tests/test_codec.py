@@ -207,3 +207,35 @@ def test_columnar_rows_semantics_upright_and_rotated():
     assert (cols.rows[1][4], cols.rows[1][5]) == (2.0, 1.0)
     chars = doc.pages[0].characters
     assert (chars[1].rotation, chars[1].w_mode) == (2, 1)
+
+
+def test_every_page_has_one_char_store(monkeypatch):
+    """Every decoded page of every fixture family and the jumbo doc holds
+    its chars in one CharCols store, and a full extraction without the
+    JSONL characters unit builds no Char object."""
+    import random
+
+    from pdftotext_plus_plus_spark import fixtures, model, pipeline
+    from pdftotext_plus_plus_spark.visualization import ALL_UNITS
+
+    builders = dict(fixtures.FAMILY_BUILDERS, jumbo=fixtures.build_jumbo)
+    assert len(builders) == 25
+    payloads = [builders[f](random.Random(1))[0] for f in sorted(builders)]
+    for payload in payloads:
+        doc, code = decode_payload(payload)
+        assert code == codec.OK
+        for page in doc.pages:
+            cols = page.char_cols
+            assert isinstance(cols, model.CharCols)
+            assert page.n_chars == len(cols.texts) == len(cols.font_names)
+
+    def no_chars(self, indices):
+        raise AssertionError("Char materialized")
+
+    monkeypatch.setattr(model.CharCols, "materialize", no_chars)
+    for payload in payloads:
+        res = pipeline.extract(
+            payload, jsonl_units=("pages", "blocks", "words", "figures",
+                                  "shapes"),
+            svg_units=ALL_UNITS, pdf_units=ALL_UNITS)
+        assert res.parse_failure_code == codec.OK

@@ -2,6 +2,7 @@
 (the same comparison the driver runs at sf0.01) for every registry entry,
 plus behavior checks the oracles do not make (recall, real decoding)."""
 
+import hashlib
 import json
 import math
 import os
@@ -49,6 +50,17 @@ def test_registry_order():
     assert list(registry.queries())[:50] == recorded
     assert len(registry.QUERIES) == 114
     assert set(registry.oracle_sql()) == set(registry.QUERIES)
+
+
+def test_registry_oracle_and_order_digests():
+    """Every oracle SQL string and the query order are pinned byte for
+    byte: a refactor of the registry or its query modules must leave both
+    unchanged."""
+    oracles = json.dumps(sorted(registry.oracle_sql().items()))
+    assert hashlib.md5(oracles.encode()).hexdigest() == \
+        "3390016e6015c5924e761392e413fac8"
+    assert hashlib.md5(" ".join(registry.queries()).encode()).hexdigest() \
+        == "1ce38c75734b509468a48b7633504881"
 
 
 # types DuckDB produces that Spark never does: a hash over these passes
@@ -481,6 +493,31 @@ def test_round4_half_up_matches_duckdb_round():
     got = similarity._round4_half_up(x)
     assert np.array_equal(got, want), x[got != want][:5]
     assert similarity._round4_half_up(np.array([-0.81695]))[0] == -0.8169
+
+
+def test_round4_half_up_col_matches_duckdb_round(spark):
+    """The Spark form of the rounding equals DuckDB's round(x, 4) on every
+    four-decimal tie k/10^4 + 0.00005 in [-1, 1), and keeps NaN as NaN —
+    so the Spark ANN queries round their cosines as their oracles do."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    x = np.append(np.arange(-10000, 10000) / 1e4 + 0.00005, np.nan)
+    df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(x)],
+                               "i long, x double")
+    got = np.array([r["r"] for r in df.select(
+        "i", similarity._round4_half_up_col(F.col("x")).alias("r"))
+        .orderBy("i").collect()])
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": np.arange(len(x)), "x": x}))
+    # a registered pandas NaN arrives as NULL: restore the NaN
+    want = np.array([r[0] for r in con.execute(
+        "SELECT round(coalesce(x, 'nan'::double), 4) FROM t ORDER BY i")
+        .fetchall()])
+    assert np.isnan(got[-1]) and np.isnan(want[-1])
+    assert np.array_equal(got[:-1], want[:-1]), x[:-1][got[:-1] != want[:-1]][:5]
+    assert got[np.flatnonzero(np.isclose(x, -0.81695))[0]] == -0.8169
 
 
 def test_ann_ivf2_exact_within_probed_lists(spark):

@@ -47,9 +47,25 @@ def test_jsonl_units_parse_and_counts():
 def test_jsonl_diacritics_merged_chars():
     doc, _ = _doc("diacritics")
     text = serializers.serialize_jsonl(doc, units=("characters",))
-    chars = [json.loads(line)["text"] for line in text.strip().split("\n")]
+    records = [json.loads(line) for line in text.strip().split("\n")]
+    chars = [r["text"] for r in records]
     assert "é" in chars          # merged NFC text substituted
     assert "́" not in chars      # the bare combining mark is skipped
+    # rank is the store index, marks included: the mark right after the
+    # merged base leaves a gap, and every id carries its rank
+    at = chars.index("é")
+    assert chars[at + 1:] == list("mood")
+    assert records[at + 1]["rank"] == records[at]["rank"] + 2
+    assert [r["id"] for r in records] == \
+        ["char-%d-%d" % (r["page"], r["rank"]) for r in records]
+    ranks = [r["rank"] for r in records]
+    assert ranks == sorted(set(ranks))
+    # the store keeps the mark's row; the base row was widened over it
+    cols = doc.pages[0].char_cols
+    mark = records[at]["rank"] + 1
+    assert cols.marks == {mark} and cols.texts[mark] == "\u0301"
+    assert cols.merged == {mark - 1: "é"}
+    assert records[at]["minY"] == cols.rows[mark][1] < cols.rows[mark - 2][1]
 
 
 def test_skip_flags_change_output():

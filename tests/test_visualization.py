@@ -98,21 +98,30 @@ def test_svg_reading_order_cuts_recorded():
 
 
 def test_svg_deterministic_and_char_parity():
-    """Same payload -> byte-identical SVG; the characters layer on a
-    columnar page matches the lazily-materialized Char objects."""
-    doc1, _ = _doc_for("plain-1col", seed=3)
-    doc2, _ = _doc_for("plain-1col", seed=3)
-    svg1 = visualization.serialize_svg(doc1)
-    assert svg1 == visualization.serialize_svg(doc2)
-    page = doc1.pages[0]
-    assert page.char_cols is not None  # columnar (all-ASCII) page
-    n_rects = len(re.findall(r'<rect class="characters"', svg1))
-    assert n_rects == sum(p.n_chars for p in doc1.pages)
-    # geometry parity with the object representation
-    first = RECT_RX.search(svg1.split('<g class="characters">')[1])
-    ch = page.characters[0]
-    assert float(first.group("x")) == pytest.approx(min(ch.left_x, ch.right_x))
-    assert float(first.group("y")) == pytest.approx(min(ch.upper_y, ch.lower_y))
+    """Same payload -> byte-identical SVG; the characters layer matches the
+    Char objects materialized from the page's store, on a page without
+    glyph names (plain-1col) and one with them (rotated)."""
+    for family in ("plain-1col", "rotated"):
+        doc1, _ = _doc_for(family, seed=3)
+        doc2, _ = _doc_for(family, seed=3)
+        svg1 = visualization.serialize_svg(doc1)
+        assert svg1 == visualization.serialize_svg(doc2)
+        page = doc1.pages[0]
+        assert (page.char_cols.names is None) == (family == "plain-1col")
+        n_rects = len(re.findall(r'<rect class="characters"', svg1))
+        assert n_rects == sum(p.n_chars for p in doc1.pages)
+        # geometry parity with the object representation, every char
+        layer = svg1.split('<g class="characters">')[1].split("</g>")[0]
+        rects = list(RECT_RX.finditer(layer))
+        chars = page.characters
+        assert len(rects) == len(chars) == page.n_chars
+        for m, ch in zip(rects, chars):
+            assert float(m.group("x")) == \
+                pytest.approx(min(ch.left_x, ch.right_x))
+            assert float(m.group("y")) == \
+                pytest.approx(min(ch.upper_y, ch.lower_y))
+            assert float(m.group("w")) == \
+                pytest.approx(abs(ch.right_x - ch.left_x))
 
 
 def test_svg_unknown_unit_and_empty_doc():
