@@ -182,7 +182,10 @@ def dedup_clusters_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", F.col("label").alias("cluster_id"))
 
 
-DEDUP_CLUSTERS_FIXPOINT_SQL = f"""
+# the all-pairs reachability CTEs of the three fixpoint oracles: LSH
+# pairs -> symmetric edges plus self loops -> recursive reach, whose
+# min(label) per doc_id is the component label
+_FIXPOINT_REACH_CTES = f"""
 WITH RECURSIVE pairs AS ({MINHASH_LSH_PAIRS_SQL}),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
@@ -194,7 +197,9 @@ reach(doc_id, label) AS (
   UNION
   SELECT e.src AS doc_id, r.label
   FROM edges e JOIN reach r ON e.dst = r.doc_id
-)
+)"""
+
+DEDUP_CLUSTERS_FIXPOINT_SQL = f"""{_FIXPOINT_REACH_CTES}
 SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id
 """
 
@@ -249,19 +254,7 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .cast("int").alias("keep")))
 
 
-DEDUP_KEEP_LIST_SQL = f"""
-WITH RECURSIVE pairs AS ({MINHASH_LSH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs
-  UNION ALL SELECT doc_id AS src, doc_id AS dst FROM documents
-),
-reach(doc_id, label) AS (
-  SELECT doc_id, doc_id AS label FROM documents
-  UNION
-  SELECT e.src AS doc_id, r.label
-  FROM edges e JOIN reach r ON e.dst = r.doc_id
-),
+DEDUP_KEEP_LIST_SQL = f"""{_FIXPOINT_REACH_CTES},
 labels AS (
   SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id
 ),
@@ -321,19 +314,7 @@ def dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dedup_representatives_sql() -> str:
     from . import textstats as _textstats
-    return f"""
-WITH RECURSIVE pairs AS ({MINHASH_LSH_PAIRS_SQL}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs
-  UNION ALL SELECT doc_id AS src, doc_id AS dst FROM documents
-),
-reach(doc_id, label) AS (
-  SELECT doc_id, doc_id AS label FROM documents
-  UNION
-  SELECT e.src AS doc_id, r.label
-  FROM edges e JOIN reach r ON e.dst = r.doc_id
-),
+    return f"""{_FIXPOINT_REACH_CTES},
 labels AS (
   SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id
 ),

@@ -159,23 +159,6 @@ class _BitWriter:
         return bytes(self.out)
 
 
-class _BitReader:
-    """Reader over UNSTUFFED entropy bytes; windowed int reads (no
-    per-bit numpy indexing)."""
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data + b"\x00\x00\x00\x00"
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        window = int.from_bytes(self.data[p >> 3:(p >> 3) + 4], "big")
-        val = (window >> (32 - (p & 7) - n)) & ((1 << n) - 1)
-        self.pos = p + n
-        return val
-
-
 def _category(v: int) -> int:
     return int(v).bit_length() if v > 0 else int(-v).bit_length()
 
@@ -643,7 +626,7 @@ def decode_gray_jpeg(blob: bytes) -> np.ndarray:
                             8, axis=1)
             return out[:h, :w]
     # Hot loop (r9): windowed bit reads inlined on local variables (no
-    # _BitReader method dispatch), DC values collected in a flat Python
+    # per-read method dispatch), DC values collected in a flat Python
     # list and AC coefficients as sparse (flat_index, value) pairs —
     # numpy scalar row writes in the old loop cost more than the Huffman
     # decode itself.  The dense zz matrix is assembled vectorized below.

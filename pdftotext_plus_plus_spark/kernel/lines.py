@@ -66,7 +66,13 @@ def _detect_segment_lines(doc: Doc, segment: Segment, num_lines: int,
         else:
             lines.sort(key=lambda l: -l.rot_lower_y())
 
-        # iterative merge rounds until fixpoint (…cpp:219-308)
+        # iterative merge rounds until fixpoint (…cpp:219-308). A merge
+        # widens only the absorbing line's bbox, the one input of the next
+        # overlap test; its other properties are computed once, after the
+        # fixpoint, which keeps the loop linear in words. Each line's words
+        # are already sorted, so one stable sort of the concatenation gives
+        # the order a sort after every merge would.
+        absorbed = set()
         while True:
             merged = False
             merged_lines: List[Line] = []
@@ -81,7 +87,15 @@ def _detect_segment_lines(doc: Doc, segment: Segment, num_lines: int,
                                  else config.line_merge_ratio_large_gap)
                     if equal_or_larger(y_overlap, threshold):
                         prev_line.words.extend(curr_line.words)
-                        _compute_line_properties(prev_line)
+                        prev_line.left_x = min(prev_line.left_x,
+                                               curr_line.left_x)
+                        prev_line.upper_y = min(prev_line.upper_y,
+                                                curr_line.upper_y)
+                        prev_line.right_x = max(prev_line.right_x,
+                                                curr_line.right_x)
+                        prev_line.lower_y = max(prev_line.lower_y,
+                                                curr_line.lower_y)
+                        absorbed.add(prev_line)
                         merged = True
                         continue
                 merged_lines.append(curr_line)
@@ -90,6 +104,8 @@ def _detect_segment_lines(doc: Doc, segment: Segment, num_lines: int,
                 break
 
         for i, line in enumerate(lines):
+            if line in absorbed:
+                _compute_line_properties(line)
             line.rank = num_lines
             num_lines += 1
             line.prev_line = lines[i - 1] if i > 0 else None
@@ -99,9 +115,9 @@ def _detect_segment_lines(doc: Doc, segment: Segment, num_lines: int,
     return num_lines
 
 
-# rotation -> (sort key, reverse) for the line word sort: rot_left_x() is
-# left_x/upper_y/right_x/lower_y for rotation 0/1/2/3 (Types.cpp:45-128);
-# rotations 2/3 sort descending
+# rotation -> (sort key, reverse) for the line word sort: the rotated left
+# edge is left_x/upper_y/right_x/lower_y for rotation 0/1/2/3
+# (Types.cpp:45-128); rotations 2/3 sort descending
 _ROT_SORT = {0: (attrgetter("left_x"), False),
              1: (attrgetter("upper_y"), False),
              2: (attrgetter("right_x"), True),
@@ -126,9 +142,9 @@ def _compute_line_properties(line: Line) -> None:
     line.w_mode = line.words[0].w_mode
     line.page_num = line.words[0].page_num
 
-    # rot_left_x() resolved once per rotation value: C-level attrgetter
-    # keys; descending sort via reverse=True (same stable tie order as the
-    # old -rot_left_x() key)
+    # the rotated left edge resolved once per rotation value: C-level
+    # attrgetter keys; descending sort via reverse=True (same stable tie
+    # order as a negated-left-edge key)
     key, reverse = _ROT_SORT[rotation]
     line.words.sort(key=key, reverse=reverse)
 

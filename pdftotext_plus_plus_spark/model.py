@@ -48,16 +48,6 @@ class Element:
         return self.lower_y - self.upper_y
 
     # --- rotation-aware accessors (Types.cpp:45-128) --------------------
-    def rot_left_x(self) -> float:
-        r = self.rotation
-        if r == 1:
-            return self.upper_y
-        if r == 2:
-            return self.right_x
-        if r == 3:
-            return self.lower_y
-        return self.left_x
-
     def rot_right_x(self) -> float:
         r = self.rotation
         if r == 1:

@@ -3,39 +3,36 @@
 A web-scale corpus arrives as WARC (the CommonCrawl container), not as
 parquet: concatenated records, each a CRLF header block (WARC-Type,
 WARC-Target-URI, WARC-Date, Content-Length) followed by exactly
-Content-Length payload bytes and a blank-line separator.  This module
-provides
+Content-Length payload bytes and a blank-line separator.  The WARC,
+WET, WAT and revisit products share one writer, :func:`_warc_file` (a
+warcinfo head record, then the caller's (headers, block) records), and
+one reader, :func:`_split_records`, the bounded splitter behind every
+Spark reader.  The splitter owns the tolerant record walk, which
+resynchronizes at the next ``WARC/1.0`` magic on corrupt framing instead
+of failing the task (failures are ROWS, not exceptions), and the flush
+at ``WARC_SPLIT_BATCH_ROWS`` / ``WARC_SPLIT_BATCH_BYTES``; each reader,
+and each eager ``parse_*``, gives only a row function.
 
-* :func:`encode_warc` — a writer producing spec-shaped WARC/1.0 bytes
-  (warcinfo head record + one response record per page, HTTP response
-  framing inside the payload), used by fixtures/tests and as the
-  round-trip oracle;
-* :func:`parse_warc` — a tolerant streaming parser: walks records by
-  Content-Length, skips non-response records (warcinfo, request,
-  metadata), and on corrupt framing resynchronizes at the next
-  ``WARC/1.0`` magic instead of failing the task (the engine's
-  corrupt-input contract: failures are ROWS, not exceptions);
-* :func:`read_warc` — the Spark source: ``spark.read.format
-  ("binaryFile")`` over a directory of ``.warc`` files, then an
-  Arrow-batched ``mapInPandas`` record splitter emitting the engine's
-  input schema (url, warc_ts, html).
-
-Plan shape at 100 TB: binaryFile gives one input split per WARC file
+Plan shape at 100 TB: the shard scan gives one input split per WARC file
 (CommonCrawl shards are ~1 GB — the natural task granularity); the
 splitter is a per-file batch kernel with bounded memory (one file's
-records), and everything downstream is the ordinary extraction plan.
-Reference parity: the reference engine reads PDFs from a local
-filesystem walk (pdftotext++.cpp main); the WARC path is this repo's
-crawl-native ingestion form of the same S1 source surface.
+bytes plus one output batch), and everything downstream is the ordinary
+extraction plan.  Reference parity: the reference engine reads PDFs
+from a local filesystem walk (pdftotext++.cpp main); the WARC path is
+this repo's crawl-native ingestion form of the same S1 source surface.
 """
 
 from __future__ import annotations
 
 import datetime
+import hashlib
+import json
+import os
 from typing import Iterable, List, Tuple
 
 _CRLF = b"\r\n"
 _MAGIC = b"WARC/1.0\r\n"
+_HTTP_RESPONSE = "application/http; msgtype=response"
 
 
 def _http_wrap(payload: bytes) -> bytes:
@@ -61,25 +58,35 @@ def _record(headers: List[Tuple[str, str]], block: bytes) -> bytes:
     return b"".join(out)
 
 
+def _headers(rtype: str, url: str, date: str, record_id: str,
+             content_type: str, *extra) -> List[Tuple[str, str]]:
+    """Type, target, date, id, the ``extra`` pairs, content type."""
+    return [("WARC-Type", rtype), ("WARC-Target-URI", url),
+            ("WARC-Date", date), ("WARC-Record-ID", record_id),
+            *extra, ("Content-Type", content_type)]
+
+
+def _warc_file(filename: str, date: str, records) -> bytes:
+    """The one file writer: a warcinfo head record naming ``filename``,
+    then one record per ``(headers, block)`` pair of ``records``."""
+    parts = [_record(
+        [("WARC-Type", "warcinfo"),
+         ("WARC-Date", date),
+         ("WARC-Filename", filename),
+         ("Content-Type", "application/warc-fields")],
+        b"software: pdftotext_plus_plus_spark\r\n")]
+    parts.extend(_record(headers, block) for headers, block in records)
+    return b"".join(parts)
+
+
 def encode_warc(records: Iterable[Tuple[str, datetime.datetime, bytes]],
                 filename: str = "fixture.warc") -> bytes:
     """Serialize (url, timestamp, payload) triples as one WARC file."""
-    info_block = b"software: pdftotext_plus_plus_spark\r\n"
-    parts = [_record(
-        [("WARC-Type", "warcinfo"),
-         ("WARC-Date", "2024-01-01T00:00:00Z"),
-         ("WARC-Filename", filename),
-         ("Content-Type", "application/warc-fields")], info_block)]
-    for i, (url, ts, payload) in enumerate(records):
-        http = _http_wrap(payload)
-        parts.append(_record(
-            [("WARC-Type", "response"),
-             ("WARC-Target-URI", url),
-             ("WARC-Date", ts.strftime("%Y-%m-%dT%H:%M:%SZ")),
-             ("WARC-Record-ID",
-              "<urn:fixture:%s:%d>" % (filename, i)),
-             ("Content-Type", "application/http; msgtype=response")], http))
-    return b"".join(parts)
+    return _warc_file(filename, "2024-01-01T00:00:00Z", (
+        (_headers("response", url, ts.strftime("%Y-%m-%dT%H:%M:%SZ"),
+                  "<urn:fixture:%s:%d>" % (filename, i), _HTTP_RESPONSE),
+         _http_wrap(payload))
+        for i, (url, ts, payload) in enumerate(records)))
 
 
 def _parse_headers(blob: bytes, pos: int):
@@ -113,15 +120,10 @@ def _iter_records(blob: bytes, stats: dict):
     whose framing fails, leading junk before the first magic, AND
     unconsumed bytes between one record's end and the next magic."""
     pos = blob.find(_MAGIC)
-    if pos < 0:
-        if blob:
-            stats["corrupt"] += 1
-        return
-    if pos > 0:
-        stats["corrupt"] += 1               # junk before the first record
+    if pos != 0 and blob:
+        stats["corrupt"] += 1     # junk before the first record, or no magic
     while pos >= 0:
         parsed = _parse_headers(blob, pos + len(_MAGIC))
-        advanced = None
         record = None
         if parsed is not None:
             headers, body_at = parsed
@@ -130,23 +132,20 @@ def _iter_records(blob: bytes, stats: dict):
             except ValueError:
                 clen = -1
             if 0 <= clen <= len(blob) - body_at:
-                body = blob[body_at:body_at + clen]
                 end = body_at + clen
                 if blob[end:end + 4] == _CRLF + _CRLF:
                     end += 4
-                record = (headers, body, pos, end)
-                advanced = end
-        ok = advanced is not None
-        if not ok:
+                record = (headers, blob[body_at:body_at + clen], pos, end)
+        if record is None:
             stats["corrupt"] += 1
-            advanced = pos + len(_MAGIC)
-        pos = blob.find(_MAGIC, advanced)
+            pos = blob.find(_MAGIC, pos + len(_MAGIC))
+            continue
+        pos = blob.find(_MAGIC, end)
         # a gap after a WELL-FRAMED record is its own corrupt range (a
         # failed record's resync skip was already counted above)
-        if ok and (pos > advanced or (pos < 0 and advanced < len(blob))):
+        if pos > end or (pos < 0 and end < len(blob)):
             stats["corrupt"] += 1
-        if record is not None:
-            yield record
+        yield record
 
 
 def _walk(blob: bytes):
@@ -162,6 +161,31 @@ def _payload_of(body: bytes) -> bytes:
     return body[http_at + 4:] if http_at >= 0 else body
 
 
+# Row functions: row_fn(name, headers, body, start, end) -> one row, or
+# None to skip the record.  The eager parsers and the Spark readers share
+# them, so each product's record type filter and columns are written once.
+
+def _warc_row(name, h, body, start, end):
+    """(url, warc_date, payload) of a response record."""
+    if h.get("warc-type") == "response":
+        return (h.get("warc-target-uri", ""), h.get("warc-date", ""),
+                _payload_of(body))
+
+
+def _cdx_row(name, h, body, start, end):
+    """(url, warc_date, filename, offset, length) of a response record."""
+    if h.get("warc-type") == "response":
+        return (h.get("warc-target-uri", ""), h.get("warc-date", ""), name,
+                start, end - start)
+
+
+def _eager_rows(blob: bytes, row_fn):
+    """([row_fn row per record of blob], n_corrupt) over :func:`_walk`."""
+    records, n_corrupt = _walk(blob)
+    rows = (row_fn("", *record) for record in records)
+    return [row for row in rows if row is not None], n_corrupt
+
+
 def parse_warc(blob: bytes):
     """Return ([(url, warc_date, payload_bytes) per response record],
     n_corrupt).
@@ -171,11 +195,7 @@ def parse_warc(blob: bytes):
     resynchronizes at the next ``WARC/1.0`` magic.  Returns the parsed
     records plus the count of skipped corrupt byte ranges.
     """
-    records, n_corrupt = _walk(blob)
-    out = [(h.get("warc-target-uri", ""), h.get("warc-date", ""),
-            _payload_of(body))
-           for h, body, _, _ in records if h.get("warc-type") == "response"]
-    return out, n_corrupt
+    return _eager_rows(blob, _warc_row)
 
 
 def index_warc(blob: bytes):
@@ -183,11 +203,8 @@ def index_warc(blob: bytes):
     response record, where blob[offset:offset+length] is the complete
     standalone record — the random-access contract a CDX index exists
     for (fetch one page from a 1 GB shard without scanning it)."""
-    records, _ = _walk(blob)
-    return [(h.get("warc-target-uri", ""), h.get("warc-date", ""),
-             start, end - start)
-            for h, _, start, end in records
-            if h.get("warc-type") == "response"]
+    rows, _ = _eager_rows(blob, _cdx_row)
+    return [(url, date, off, ln) for url, date, _, off, ln in rows]
 
 
 def read_record(blob_slice: bytes) -> Tuple[str, bytes]:
@@ -208,53 +225,79 @@ WARC_SPLIT_BATCH_ROWS = 1024
 WARC_SPLIT_BATCH_BYTES = 64 << 20
 
 
-def split_warc_batches(batches, max_rows: int = None, max_bytes: int = None):
-    """The shard-splitter kernel behind :func:`read_warc` (module-level so
-    the bounded-batch contract is directly testable): consumes binaryFile
-    (path, content) pandas batches, streams each shard's response records
-    via :func:`_iter_records`, and flushes an output frame whenever the
-    accumulated batch reaches ``max_rows`` rows or ``max_bytes`` payload
-    bytes — never holding a whole shard's records at once."""
+def _shard_blobs(batches):
+    """(basename of ``path`` or "", blob) per row of shard batches."""
+    for pdf in batches:
+        paths = pdf["path"] if "path" in pdf else [""] * len(pdf)
+        for path, blob in zip(paths, pdf["content"]):
+            yield os.path.basename(path), bytes(blob)
+
+
+def _walk_rows(blobs, row_fn):
+    """(row, block bytes) per record of each (name, blob) whose ``row_fn``
+    row is not None.  Streams via :func:`_iter_records`, NOT the eager
+    :func:`_walk`, which materializes every record of the shard first
+    (per-task peak would be the whole shard's decoded records, ADVICE
+    r7): one record is in flight, so the flush bound is real."""
+    for name, blob in blobs:
+        for h, body, start, end in _iter_records(blob, {"corrupt": 0}):
+            row = row_fn(name, h, body, start, end)
+            if row is not None:
+                yield row, len(body)
+
+
+def _split_records(blobs, row_fn, columns, max_rows: int = None,
+                   max_bytes: int = None):
+    """Pandas frames of ``columns`` over :func:`_walk_rows`, flushed at
+    ``max_rows`` rows or ``max_bytes`` record block bytes (an upper bound
+    on every reader's payload or text) — never a whole shard at once."""
     import pandas as pd
 
     max_rows = max_rows or WARC_SPLIT_BATCH_ROWS
     max_bytes = max_bytes or WARC_SPLIT_BATCH_BYTES
-    urls, dates, payloads, acc_bytes = [], [], [], 0
-    for pdf in batches:
-        for blob in pdf["content"]:
-            stats = {"corrupt": 0}
-            for h, body, _, _ in _iter_records(bytes(blob), stats):
-                if h.get("warc-type") != "response":
-                    continue
-                urls.append(h.get("warc-target-uri", ""))
-                dates.append(h.get("warc-date", ""))
-                payload = _payload_of(body)
-                payloads.append(payload)
-                acc_bytes += len(payload)
-                if len(urls) >= max_rows or acc_bytes >= max_bytes:
-                    yield pd.DataFrame({"url": urls, "warc_date": dates,
-                                        "html": payloads})
-                    urls, dates, payloads, acc_bytes = [], [], [], 0
-    if urls:
-        yield pd.DataFrame({"url": urls, "warc_date": dates,
-                            "html": payloads})
+    cols, acc_bytes = [[] for _ in columns], 0
+    for row, size in _walk_rows(blobs, row_fn):
+        for col, value in zip(cols, row):
+            col.append(value)
+        acc_bytes += size
+        if len(cols[0]) >= max_rows or acc_bytes >= max_bytes:
+            yield pd.DataFrame(dict(zip(columns, cols)))
+            cols, acc_bytes = [[] for _ in columns], 0
+    if cols[0]:
+        yield pd.DataFrame(dict(zip(columns, cols)))
+
+
+def _map_records(shards, row_fn, schema: str, blobs=_shard_blobs):
+    """``mapInPandas`` of the splitter with ``row_fn``, named by ``schema``."""
+    columns = [field.split()[0] for field in schema.split(",")]
+    return shards.mapInPandas(
+        lambda batches: _split_records(blobs(batches), row_fn, columns),
+        schema)
+
+
+def split_warc_batches(batches, max_rows: int = None, max_bytes: int = None):
+    """The shard-splitter kernel behind :func:`read_warc` (module-level so
+    the bounded-batch contract is directly testable): consumes
+    (path, content) pandas batches and yields (url, warc_date, html)
+    frames of the response records through :func:`_split_records`."""
+    return _split_records(_shard_blobs(batches), _warc_row,
+                          ("url", "warc_date", "html"), max_rows, max_bytes)
+
+
+def _scan_shards(spark, path: str):
+    """One (path, content) row and one input split per .warc file."""
+    return (spark.read.format("binaryFile")
+            .option("pathGlobFilter", "*.warc").load(path)
+            .select("path", "content"))
 
 
 def read_warc(spark, path: str):
-    """Read a directory of .warc files into the engine's page schema.
-
-    ``binaryFile`` yields (path, modificationTime, length, content) with
-    one row per file; the splitter is an Arrow-batched kernel bounded by
-    one file's bytes plus one output batch (see
-    :func:`split_warc_batches`).  Dates parse to timestamps JVM-side.
-    """
+    """Read a directory of .warc files into the engine's page schema:
+    one row per file from :func:`_scan_shards`, split into pages by
+    :func:`split_warc_batches`; dates parse to timestamps JVM-side."""
     from pyspark.sql import functions as F
 
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", "*.warc").load(path)
-           .select("path", "content"))
-
-    pages = raw.mapInPandas(
+    pages = _scan_shards(spark, path).mapInPandas(
         split_warc_batches, "url string, warc_date string, html binary")
     return pages.select(
         "url",
@@ -278,8 +321,6 @@ def shard_files(rows, n_files: int = 4):
 
 def write_warc_dir(rows, out_dir: str, n_files: int = 4) -> None:
     """Write fixture corpus rows as n_files .warc files (round-robin)."""
-    import os
-
     os.makedirs(out_dir, exist_ok=True)
     for name, blob in shard_files(rows, n_files):
         with open(os.path.join(out_dir, name), "wb") as f:
@@ -290,40 +331,37 @@ def cdx_index(spark, path: str):
     """Build a CDX-style index over a directory of .warc files: one row
     (url, warc_date, filename, offset, length) per response record.
 
-    Plan shape at 100 TB: the same one-task-per-shard binaryFile scan as
+    Plan shape at 100 TB: the same one-task-per-shard scan as
     :func:`read_warc`; the index is ~100 bytes/page vs ~100 KB/page of
     content (a 1000x reduction BEFORE any shuffle), so the sort/partition
-    that makes the index servable is over the tiny side.  Random access
-    then reads blob[offset:offset+length] from the shard — fetch one
-    page from a 1 GB shard without scanning it.
+    that makes the index servable is over the tiny side; random access
+    is :func:`index_warc`'s contract.
     """
-    import os as _os
-
-    import pandas as pd
-
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", "*.warc").load(path)
-           .select("path", "content"))
-
-    def index_files(batches):
-        for pdf in batches:
-            urls, dates, files, offs, lens = [], [], [], [], []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                name = _os.path.basename(p)
-                for url, date, off, ln in index_warc(bytes(blob)):
-                    urls.append(url)
-                    dates.append(date)
-                    files.append(name)
-                    offs.append(off)
-                    lens.append(ln)
-            yield pd.DataFrame({"url": urls, "warc_date": dates,
-                                "filename": files, "offset": offs,
-                                "length": lens})
-
-    return raw.mapInPandas(
-        index_files,
+    return _map_records(
+        _scan_shards(spark, path), _cdx_row,
         "url string, warc_date string, filename string, "
         "offset long, length long")
+
+
+def _bucket_shards(df, n_shards: int, name_fmt: str, sort_cols, encode):
+    """One (filename, content) row per url-hash bucket of ``df``: ONE
+    grouped map keyed on the bucket, each task holding one shard's rows
+    sorted by ``sort_cols`` (so shard bytes are deterministic under any
+    upstream partitioning) and emitting ``encode(rows, filename)`` as
+    one blob.  Shard count is the parallelism knob at 100 TB."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    def build(key, pdf):
+        name = name_fmt % int(key[0])
+        blob = encode(pdf.sort_values(sort_cols), name)
+        return pd.DataFrame({"filename": [name], "content": [blob]})
+
+    return (df
+            .withColumn("bucket",
+                        F.pmod(F.xxhash64("url"), F.lit(n_shards)))
+            .groupBy("bucket")
+            .applyInPandas(build, "filename string, content binary"))
 
 
 # ---------------------------------------------------------------------------
@@ -348,101 +386,48 @@ def encode_wet(records, filename: str = "fixture.warc.wet") -> bytes:
     block is the UTF-8 extracted text.  Content-Length framing makes
     text containing the record magic safe (the body is length-counted,
     never scanned)."""
-    info_block = b"software: pdftotext_plus_plus_spark\r\n"
-    parts = [_record(
-        [("WARC-Type", "warcinfo"),
-         ("WARC-Date", WET_DATE),
-         ("WARC-Filename", filename),
-         ("Content-Type", "application/warc-fields")], info_block)]
-    for i, rec in enumerate(records):
-        url, text = rec[0], rec[1]
+    def record(i, rec):
         refers_to = rec[2] if len(rec) > 2 else ""
-        headers = [("WARC-Type", "conversion"),
-                   ("WARC-Target-URI", url),
-                   ("WARC-Date", WET_DATE),
-                   ("WARC-Record-ID", "<urn:wet:%s:%d>" % (filename, i))]
-        if refers_to:
-            headers.append(("WARC-Refers-To", refers_to))
-        headers.append(("Content-Type", "text/plain"))
-        parts.append(_record(headers, text.encode("utf-8")))
-    return b"".join(parts)
+        extra = [("WARC-Refers-To", refers_to)] if refers_to else []
+        return (_headers("conversion", rec[0], WET_DATE,
+                         "<urn:wet:%s:%d>" % (filename, i), "text/plain",
+                         *extra),
+                rec[1].encode("utf-8"))
+
+    return _warc_file(filename, WET_DATE,
+                      (record(i, rec) for i, rec in enumerate(records)))
+
+
+def _wet_row(name, h, body, start, end):
+    """(url, text) of a conversion record: WET bodies have no HTTP head."""
+    if h.get("warc-type") == "conversion":
+        return h.get("warc-target-uri", ""), body.decode("utf-8", "replace")
 
 
 def parse_wet(blob: bytes):
     """Return ([(url, text) per conversion record], n_corrupt).  Same
-    tolerant resync walk as :func:`parse_warc`; the body IS the text
-    (WET records carry no HTTP envelope)."""
-    records, n_corrupt = _walk(blob)
-    out = [(h.get("warc-target-uri", ""), body.decode("utf-8", "replace"))
-           for h, body, _, _ in records
-           if h.get("warc-type") == "conversion"]
-    return out, n_corrupt
+    tolerant resync walk as :func:`parse_warc`."""
+    return _eager_rows(blob, _wet_row)
 
 
 def wet_convert(extracted, n_shards: int = 4):
     """(url, extracted_text) DataFrame -> one (filename, content) row per
-    WET shard blob.
-
-    Plan shape at 100 TB: ONE applyInPandas keyed on a url-hash bucket —
-    each task holds one shard's text (WET is the post-extraction product,
-    ~10x smaller than the WARC input), encodes it, emits one row.  Shard
-    count is the parallelism knob; rows within a shard sort by url so
-    shard bytes are deterministic under any upstream partitioning."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def build(key, pdf):
-        name = "part-%02d.warc.wet" % int(key[0])
-        # BOTH columns in the sort key: a duplicate url (re-crawl,
-        # duplicate ingest) under a url-only unstable sort would leave
-        # its rows in partition-arrival order and break the
-        # deterministic-bytes contract
-        pdf = pdf.sort_values(["url", "extracted_text"])
-        blob = encode_wet(
-            list(zip(pdf["url"], pdf["extracted_text"])), filename=name)
-        return pd.DataFrame({"filename": [name], "content": [blob]})
-
-    return (extracted
-            .withColumn("bucket",
-                        F.pmod(F.xxhash64("url"), F.lit(n_shards)))
-            .groupBy("bucket")
-            .applyInPandas(build, "filename string, content binary"))
+    WET shard blob, one url-hash bucket each (:func:`_bucket_shards`):
+    each task holds one shard's text (WET is the post-extraction
+    product, ~10x smaller than the WARC input) and encodes it."""
+    # BOTH columns in the sort key: a duplicate url (re-crawl, duplicate
+    # ingest) under a url-only unstable sort would leave its rows in
+    # partition-arrival order and break the deterministic-bytes contract
+    return _bucket_shards(
+        extracted, n_shards, "part-%02d.warc.wet", ["url", "extracted_text"],
+        lambda pdf, name: encode_wet(
+            list(zip(pdf["url"], pdf["extracted_text"])), filename=name))
 
 
 def read_wet_blobs(shards):
     """(filename, content) WET blobs -> (url, extracted_text) rows,
-    streaming each shard's records through :func:`_iter_records` with
-    the same bounded flush discipline as :func:`split_warc_batches`
-    (one shard's bytes + one output batch of peak memory per task)."""
-    import pandas as pd
-
-    def split(batches):
-        urls, texts, acc_bytes = [], [], 0
-        for pdf in batches:
-            for blob in pdf["content"]:
-                # stream via _iter_records (NOT the eager parse_wet,
-                # which materializes every record of the shard before
-                # the flush loop can run — per-task peak would be the
-                # whole shard's decoded text, ADVICE r7): one record is
-                # in flight at a time, so the flush bound below is real
-                stats = {"corrupt": 0}
-                for h, body, _, _ in _iter_records(bytes(blob), stats):
-                    if h.get("warc-type") != "conversion":
-                        continue
-                    url = h.get("warc-target-uri", "")
-                    text = body.decode("utf-8", "replace")
-                    urls.append(url)
-                    texts.append(text)
-                    acc_bytes += len(text)
-                    if (len(urls) >= WARC_SPLIT_BATCH_ROWS
-                            or acc_bytes >= WARC_SPLIT_BATCH_BYTES):
-                        yield pd.DataFrame(
-                            {"url": urls, "extracted_text": texts})
-                        urls, texts, acc_bytes = [], [], 0
-        if urls:
-            yield pd.DataFrame({"url": urls, "extracted_text": texts})
-
-    return shards.mapInPandas(split, "url string, extracted_text string")
+    streamed through the bounded splitter."""
+    return _map_records(shards, _wet_row, "url string, extracted_text string")
 
 
 # ---------------------------------------------------------------------------
@@ -457,6 +442,15 @@ def read_wet_blobs(shards):
 # are deterministic and the parse-back oracles exactly.
 
 
+def _wat_meta(name, h, body, start, end):
+    """The WAT row: the CDX row plus the payload's md5 digest and length."""
+    row = _cdx_row(name, h, body, start, end)
+    if row is not None:
+        payload = _payload_of(body)
+        return row + ("md5:" + hashlib.md5(payload).hexdigest(),
+                      len(payload))
+
+
 def wat_from_warc(name: str, blob: bytes) -> bytes:
     """Build the WAT file for one WARC shard: a warcinfo head record
     plus one ``metadata`` record per RESPONSE record, whose JSON block
@@ -464,53 +458,56 @@ def wat_from_warc(name: str, blob: bytes) -> bytes:
     (md5 digest + byte length of the HTTP-stripped payload) and the
     container coordinates (filename, offset, record length) — the same
     random-access contract the CDX index serves, in WAT's JSON form."""
-    import hashlib
-    import json
-
-    info_block = b"software: pdftotext_plus_plus_spark\r\n"
-    parts = [_record(
-        [("WARC-Type", "warcinfo"),
-         ("WARC-Date", WET_DATE),
-         ("WARC-Filename", name + ".wat"),
-         ("Content-Type", "application/warc-fields")], info_block)]
-    i = 0
-    # stream via the generator: the eager _walk would hold every body
-    # slice at once — a second full copy of the shard's bytes on top of
-    # the blob itself, breaking the one-shard + one-in-flight-record
-    # memory envelope this module documents
-    for h, body, start, end in _iter_records(blob, {"corrupt": 0}):
-        if h.get("warc-type") != "response":
-            continue
-        payload = _payload_of(body)
+    def record(i, row):
+        url, date, filename, offset, length, digest, payload_len = row
         env = {
             "Envelope": {
                 "WARC-Header-Metadata": {
                     "WARC-Type": "response",
-                    "WARC-Target-URI": h.get("warc-target-uri", ""),
-                    "WARC-Date": h.get("warc-date", ""),
+                    "WARC-Target-URI": url,
+                    "WARC-Date": date,
                 },
                 "Payload-Metadata": {
-                    "Actual-Content-Length": len(payload),
-                    "Block-Digest":
-                        "md5:" + hashlib.md5(payload).hexdigest(),
+                    "Actual-Content-Length": payload_len,
+                    "Block-Digest": digest,
                 },
             },
             "Container": {
-                "Filename": name,
-                "Offset": start,
-                "Length": end - start,
+                "Filename": filename,
+                "Offset": offset,
+                "Length": length,
             },
         }
         block = json.dumps(env, sort_keys=True,
                            separators=(",", ":")).encode("utf-8")
-        parts.append(_record(
-            [("WARC-Type", "metadata"),
-             ("WARC-Target-URI", h.get("warc-target-uri", "")),
-             ("WARC-Date", WET_DATE),
-             ("WARC-Record-ID", "<urn:wat:%s:%d>" % (name, i)),
-             ("Content-Type", "application/json")], block))
-        i += 1
-    return b"".join(parts)
+        return _headers("metadata", url, WET_DATE,
+                        "<urn:wat:%s:%d>" % (name, i),
+                        "application/json"), block
+
+    # stream via the record walk: the eager _walk would hold every body
+    # slice at once — a second full copy of the shard's bytes on top of
+    # the blob itself, breaking the one-shard + one-in-flight-record
+    # memory envelope this module documents
+    rows = (row for row, _ in _walk_rows([(name, blob)], _wat_meta))
+    return _warc_file(name + ".wat", WET_DATE,
+                      (record(i, row) for i, row in enumerate(rows)))
+
+
+def _wat_row(name, h, body, start, end):
+    """The flat row of a metadata record's JSON envelope; None when the
+    record is not metadata or the envelope is malformed."""
+    if h.get("warc-type") != "metadata":
+        return None
+    try:
+        env = json.loads(body.decode("utf-8"))
+        hdr = env["Envelope"]["WARC-Header-Metadata"]
+        pay = env["Envelope"]["Payload-Metadata"]
+        cont = env["Container"]
+        return (hdr["WARC-Target-URI"], hdr["WARC-Date"],
+                cont["Filename"], int(cont["Offset"]), int(cont["Length"]),
+                pay["Block-Digest"], int(pay["Actual-Content-Length"]))
+    except (ValueError, KeyError, TypeError):
+        return None
 
 
 def parse_wat(blob: bytes):
@@ -518,26 +515,11 @@ def parse_wat(blob: bytes):
     payload_len) per metadata record], n_corrupt) — the JSON envelopes
     decoded back to flat rows; malformed JSON counts as corrupt and the
     walk continues (same tolerance contract as parse_warc)."""
-    import json
-
     records, n_corrupt = _walk(blob)
-    out = []
-    for h, body, _, _ in records:
-        if h.get("warc-type") != "metadata":
-            continue
-        try:
-            env = json.loads(body.decode("utf-8"))
-            hdr = env["Envelope"]["WARC-Header-Metadata"]
-            pay = env["Envelope"]["Payload-Metadata"]
-            cont = env["Container"]
-            out.append((hdr["WARC-Target-URI"], hdr["WARC-Date"],
-                        cont["Filename"], int(cont["Offset"]),
-                        int(cont["Length"]),
-                        pay["Block-Digest"],
-                        int(pay["Actual-Content-Length"])))
-        except (ValueError, KeyError, TypeError):
-            n_corrupt += 1
-    return out, n_corrupt
+    rows = [_wat_row("", *record) for record in records]
+    n_metadata = sum(h.get("warc-type") == "metadata" for h, *_ in records)
+    out = [row for row in rows if row is not None]
+    return out, n_corrupt + n_metadata - len(out)
 
 
 def wat_index(spark, path: str):
@@ -545,44 +527,19 @@ def wat_index(spark, path: str):
     each shard's WAT bytes in its own task, parse them back, and emit
     one flat row per response record.
 
-    Plan shape at 100 TB: the same one-task-per-~1 GB-shard binaryFile
-    scan as read_warc/cdx_index; the WAT product is ~200 bytes/page vs
+    Plan shape at 100 TB: the same one-task-per-~1 GB-shard scan as
+    read_warc/cdx_index; the WAT product is ~200 bytes/page vs
     ~100 KB/page of content, so — like the CDX index — everything after
     the per-shard kernel is over the tiny side.  Build and parse-back
     run in ONE task so the query output proves the writer/parser pair
     round-trips, not just that the writer ran.
     """
-    import os as _os
-
-    import pandas as pd
-
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", "*.warc").load(path)
-           .select("path", "content"))
-
-    def build(batches):
-        for pdf in batches:
-            cols = {k: [] for k in ("url", "warc_date", "filename",
-                                    "offset", "length", "payload_digest",
-                                    "payload_len")}
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                name = _os.path.basename(p)
-                wat = wat_from_warc(name, bytes(blob))
-                rows, _ = parse_wat(wat)
-                for url, date, fn, off, ln, dig, pln in rows:
-                    cols["url"].append(url)
-                    cols["warc_date"].append(date)
-                    cols["filename"].append(fn)
-                    cols["offset"].append(off)
-                    cols["length"].append(ln)
-                    cols["payload_digest"].append(dig)
-                    cols["payload_len"].append(pln)
-            yield pd.DataFrame(cols)
-
-    return raw.mapInPandas(
-        build,
+    return _map_records(
+        _scan_shards(spark, path), _wat_row,
         "url string, warc_date string, filename string, offset long, "
-        "length long, payload_digest string, payload_len long")
+        "length long, payload_digest string, payload_len long",
+        blobs=lambda batches: ((name, wat_from_warc(name, blob))
+                               for name, blob in _shard_blobs(batches)))
 
 
 # ---------------------------------------------------------------------------
@@ -608,37 +565,23 @@ def encode_snapshot_warc(rows, filename: str = "snap.warc") -> bytes:
     WARC-Refers-To-Target-URI + WARC-Payload-Digest); anything else —
     new url or changed payload — becomes a full ``response`` record.
     """
-    import hashlib
-
-    info_block = b"software: pdftotext_plus_plus_spark\r\n"
-    parts = [_record(
-        [("WARC-Type", "warcinfo"),
-         ("WARC-Date", SNAP_DATE),
-         ("WARC-Filename", filename),
-         ("Content-Type", "application/warc-fields")], info_block)]
-    for i, (url, payload, journal_digest) in enumerate(rows):
+    def record(i, url, payload, journal_digest):
         digest = hashlib.md5(payload).hexdigest()
+        extra = ("WARC-Payload-Digest", "md5:" + digest)
         if journal_digest is not None and digest == journal_digest:
-            parts.append(_record(
-                [("WARC-Type", "revisit"),
-                 ("WARC-Target-URI", url),
-                 ("WARC-Date", SNAP_DATE),
-                 ("WARC-Record-ID", "<urn:revisit:%s:%d>" % (filename, i)),
-                 ("WARC-Profile", REVISIT_PROFILE),
-                 ("WARC-Refers-To-Target-URI", url),
-                 ("WARC-Payload-Digest", "md5:" + digest),
-                 ("Content-Type", "application/http; msgtype=response")],
-                b""))
-        else:
-            parts.append(_record(
-                [("WARC-Type", "response"),
-                 ("WARC-Target-URI", url),
-                 ("WARC-Date", SNAP_DATE),
-                 ("WARC-Record-ID", "<urn:snap:%s:%d>" % (filename, i)),
-                 ("WARC-Payload-Digest", "md5:" + digest),
-                 ("Content-Type", "application/http; msgtype=response")],
-                _http_wrap(payload)))
-    return b"".join(parts)
+            return (_headers("revisit", url, SNAP_DATE,
+                             "<urn:revisit:%s:%d>" % (filename, i),
+                             _HTTP_RESPONSE,
+                             ("WARC-Profile", REVISIT_PROFILE),
+                             ("WARC-Refers-To-Target-URI", url), extra),
+                    b"")
+        return (_headers("response", url, SNAP_DATE,
+                         "<urn:snap:%s:%d>" % (filename, i), _HTTP_RESPONSE,
+                         extra),
+                _http_wrap(payload))
+
+    return _warc_file(filename, SNAP_DATE,
+                      (record(i, *row) for i, row in enumerate(rows)))
 
 
 def snapshot_warc_shards(joined, n_shards: int = 4):
@@ -648,74 +591,40 @@ def snapshot_warc_shards(joined, n_shards: int = 4):
     Plan shape at 100 TB: the journal comparison data arrives as a
     COLUMN (the caller's url-keyed equi-join against snapshot A's digest
     journal — hash join, AQE-splittable), so the writer kernel is one
-    applyInPandas per url-hash bucket exactly like wet_convert: each
-    task holds one shard's rows, sorts by url for deterministic shard
-    bytes, and emits one blob."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    task per url-hash bucket exactly like wet_convert
+    (:func:`_bucket_shards`), rows sorted by url."""
+    def encode(pdf, name):
+        return encode_snapshot_warc(
+            [(u, bytes(p), d if isinstance(d, str) else None)
+             for u, p, d in zip(pdf["url"], pdf["payload"],
+                                pdf["journal_digest"])], name)
 
-    def build(key, pdf):
-        name = "snap-%02d.warc" % int(key[0])
-        pdf = pdf.sort_values(["url"])
-        rows = [(u, bytes(p), d if isinstance(d, str) else None)
-                for u, p, d in zip(pdf["url"], pdf["payload"],
-                                   pdf["journal_digest"])]
-        return pd.DataFrame(
-            {"filename": [name], "content": [encode_snapshot_warc(rows, name)]})
+    return _bucket_shards(joined, n_shards, "snap-%02d.warc", ["url"], encode)
 
-    return (joined
-            .withColumn("bucket",
-                        F.pmod(F.xxhash64("url"), F.lit(n_shards)))
-            .groupBy("bucket")
-            .applyInPandas(build, "filename string, content binary"))
+
+def _snapshot_row(name, h, body, start, end):
+    """(url, record_type, payload_digest, stored_len) of a stored record."""
+    rtype = h.get("warc-type")
+    if rtype == "response":
+        payload = _payload_of(body)
+        return (h.get("warc-target-uri", ""), rtype,
+                hashlib.md5(payload).hexdigest(), len(payload))
+    if rtype == "revisit":
+        return (h.get("warc-target-uri", ""), rtype,
+                h.get("warc-payload-digest", "").split(":", 1)[-1], 0)
 
 
 def read_snapshot_records(shards):
     """(filename, content) snapshot shards -> one row per stored record:
-    (url, record_type, payload_digest, stored_len), streamed via
-    :func:`_iter_records` with the splitter's bounded flush discipline.
+    (url, record_type, payload_digest, stored_len), streamed through the
+    bounded splitter.
 
     ``stored_len`` is the byte length of the payload the archive
     actually stores — 0 for a revisit record (whose digest is read back
     from its WARC-Payload-Digest header), the HTTP-stripped payload
     length for a response record (whose digest is recomputed from the
     stored bytes, so a writer/parser byte slip fails the oracle hash)."""
-    import hashlib
-
-    import pandas as pd
-
-    def split(batches):
-        cols = {k: [] for k in ("url", "record_type", "payload_digest",
-                                "stored_len")}
-        n = 0
-        for pdf in batches:
-            for blob in pdf["content"]:
-                stats = {"corrupt": 0}
-                for h, body, _, _ in _iter_records(bytes(blob), stats):
-                    rtype = h.get("warc-type")
-                    if rtype == "response":
-                        payload = _payload_of(body)
-                        digest = hashlib.md5(payload).hexdigest()
-                        slen = len(payload)
-                    elif rtype == "revisit":
-                        digest = h.get("warc-payload-digest",
-                                       "").split(":", 1)[-1]
-                        slen = 0
-                    else:
-                        continue
-                    cols["url"].append(h.get("warc-target-uri", ""))
-                    cols["record_type"].append(rtype)
-                    cols["payload_digest"].append(digest)
-                    cols["stored_len"].append(slen)
-                    n += 1
-                    if n >= WARC_SPLIT_BATCH_ROWS:
-                        yield pd.DataFrame(cols)
-                        cols = {k: [] for k in cols}
-                        n = 0
-        if n:
-            yield pd.DataFrame(cols)
-
-    return shards.mapInPandas(
-        split,
+    return _map_records(
+        shards, _snapshot_row,
         "url string, record_type string, payload_digest string, "
         "stored_len long")

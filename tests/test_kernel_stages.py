@@ -236,3 +236,31 @@ def test_statistics_skip_flags():
     cfg2 = replace(DEFAULT_CONFIG, skip_glyph_statistics=True)
     res2 = pipeline.extract(payload, config=cfg2)
     assert res2.parse_failure_code == 0
+
+
+def test_line_merging_feeds_each_word_at_most_twice(monkeypatch):
+    """Merging lines to a fixpoint widens only the absorbing line's bbox;
+    line properties run once per created line and once per line that
+    absorbed merges, so the words fed to them stay within 2x the page's
+    words. Recomputing them after every merge is quadratic on a page of
+    scattered one-char words."""
+    from pdftotext_plus_plus_spark.kernel import lines
+
+    rng = random.Random(1)
+    page = _PageBuilder(1)
+    for _ in range(1000):
+        place_word(page, rng.choice("abcdefghijklmnopqrstuvwxyz"),
+                   round(rng.uniform(40, 560), 1), round(rng.uniform(60, 750), 1))
+    fed, words = [], set()
+    compute = lines._compute_line_properties
+
+    def counting(line):
+        fed.append(len(line.words))
+        words.update(map(id, line.words))
+        compute(line)
+
+    monkeypatch.setattr(lines, "_compute_line_properties", counting)
+    doc = run([page.to_dict()])
+    assert sum(len(s.lines) for s in doc.pages[0].segments) > 0
+    assert len(words) == len(doc.pages[0].words)
+    assert sum(fed) <= 2 * len(words)

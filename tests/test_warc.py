@@ -89,6 +89,45 @@ def test_split_kernel_emits_bounded_batches():
     assert all(len(f) == 1 for f in tiny)
     assert sum(len(f) for f in tiny) == len(rows)
 
+    # the same splitter under the WET reader's row function
+    texts = [(r["url"], r["golden_text"]) for r in rows]
+    wet = warc.encode_wet(texts, filename="part-00.warc.wet")
+    frames = list(warc._split_records(
+        [("part-00.warc.wet", wet)], warc._wet_row,
+        ("url", "extracted_text"), max_rows=5))
+    assert len(frames) > 1
+    assert all(len(f) <= 5 for f in frames)
+    cat = pd.concat(frames, ignore_index=True)
+    assert list(zip(cat["url"], cat["extracted_text"])) == texts
+    assert list(zip(cat["url"], cat["extracted_text"])) == warc.parse_wet(wet)[0]
+
+    # ...and under the snapshot reader's: odd rows match their journal
+    # digest (revisit records), even rows are new (response records)
+    import hashlib
+
+    snap = [(r["url"], r["html"],
+             hashlib.md5(r["html"]).hexdigest() if i % 2 else None)
+            for i, r in enumerate(rows)]
+    sblob = warc.encode_snapshot_warc(snap, "snap-00.warc")
+    frames = list(warc._split_records(
+        [("snap-00.warc", sblob)], warc._snapshot_row,
+        ("url", "record_type", "payload_digest", "stored_len"), max_rows=5))
+    assert len(frames) > 1
+    assert all(len(f) <= 5 for f in frames)
+    cat = pd.concat(frames, ignore_index=True)
+    records, n_corrupt = warc._walk(sblob)
+    assert n_corrupt == 0
+    eager = [(h["warc-target-uri"], h["warc-type"],
+              h["warc-payload-digest"][len("md5:"):],
+              len(warc._payload_of(body)) if h["warc-type"] == "response"
+              else len(body))
+             for h, body, _, _ in records if h["warc-type"] != "warcinfo"]
+    assert list(cat.itertuples(index=False, name=None)) == eager
+    assert eager == [(url, "revisit" if i % 2 else "response",
+                      hashlib.md5(payload).hexdigest(),
+                      0 if i % 2 else len(payload))
+                     for i, (url, payload, _) in enumerate(snap)]
+
 
 def test_spark_read_warc_matches_corpus(spark, tmp_path):
     rows = fixtures.build_corpus(12, jumbo_every=6)
