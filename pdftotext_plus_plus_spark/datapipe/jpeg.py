@@ -250,59 +250,12 @@ _EOB_CODE, _EOB_LEN = AC_ENC[0x00]
 _POW2 = np.array([1 << k for k in range(13)], dtype=np.int64)
 
 
-def _pack_bits(vals: np.ndarray, lens: np.ndarray) -> bytearray:
-    """Concatenate per-block (value, bit-length) pairs MSB-first into a
-    byte stream, 1-padded to a byte boundary, 0xFF bytes stuffed — the
-    exact _BitWriter output, computed with numpy instead of a per-block
-    Python loop.  Bits of adjacent blocks never overlap mid-byte-add
-    (each output byte receives disjoint bit ranges), so scattered adds
-    compose the stream without carries."""
-    total = int(lens.sum())
-    pad = (-total) % 8
-    if pad:
-        # flush pads with 1-bits — fold them into a final pseudo-block
-        vals = np.append(vals, np.uint64((1 << pad) - 1))
-        lens = np.append(lens, np.uint64(pad))
-        total += pad
-    nbytes = total // 8
-    offs = np.concatenate(([0], np.cumsum(lens)))[:-1].astype(np.uint64)
-    sh = np.uint64(64) - (offs % np.uint64(8)) - lens
-    shifted = vals << sh
-    out = np.zeros(nbytes + 8, dtype=np.uint8)
-    b0 = (offs // np.uint64(8)).astype(np.int64)
-    for k in range(8):
-        np.add.at(out, b0 + k,
-                  ((shifted >> np.uint64(8 * (7 - k)))
-                   & np.uint64(0xFF)).astype(np.uint8))
-    # byte stuffing (T.81 F.1.2.3) as one C-level replace
-    return bytearray(out[:nbytes].tobytes().replace(b"\xff", b"\xff\x00"))
-
-
-def _encode_dc_only(dc: np.ndarray) -> bytes:
-    """Vectorized entropy coding for the DC-only block family (every AC
-    coefficient zero — the corpus's block-constant images and all video
-    frames).  Byte-identical to _encode_blocks: per block the DC
-    category code, the category's difference bits, and an EOB."""
-    diffs = np.empty_like(dc)
-    diffs[0] = dc[0]
-    np.subtract(dc[1:], dc[:-1], out=diffs[1:])
-    ab = np.abs(diffs)
-    cat = np.searchsorted(_POW2, ab, side="right").astype(np.int64)
-    bits = np.where(diffs > 0, diffs, diffs + (1 << cat) - 1).astype(
-        np.uint64)
-    catu = cat.astype(np.uint64)
-    vals = ((_DC_CODE_ARR[cat] << catu) | bits)
-    vals = (vals << np.uint64(_EOB_LEN)) | np.uint64(_EOB_CODE)
-    lens = _DC_LEN_ARR[cat] + catu + np.uint64(_EOB_LEN)
-    return bytes(_pack_bits(vals, lens))
-
-
 def _encode_blocks(zz) -> bytes:
     """Huffman-encode a run of zigzagged blocks as ONE restart segment
     (fresh DC predictor, byte-aligned flush)."""
     arr = np.asarray(zz)
     if arr.size and not arr[:, 1:].any():
-        return _encode_dc_only(arr[:, 0])
+        return _encode_dc_only(arr[None, :, 0])[0]
     bw = _BitWriter()
     prev_dc = 0
     for blk in zz:
@@ -342,6 +295,37 @@ def _encode_blocks(zz) -> bytes:
     return bw.flush()
 
 
+def _quantized_zigzag(imgs: np.ndarray) -> np.ndarray:
+    """The coefficient step of both encoders: a stack of 8-bit grayscale
+    images [n, h, w] (dims multiples of 8) -> [n, n_blocks, 64]
+    quantized, zigzagged DCT coefficients, blocks in raster order."""
+    n, h, w = imgs.shape
+    if h % 8 or w % 8:
+        raise ValueError("jpeg: dims must be multiples of 8 (this encoder)")
+    nb = (h // 8) * (w // 8)
+    # Block-constant shortcut (r9): when every 8x8 block is a constant
+    # (checked EXACTLY on the uint8 pixels, not a float property), the
+    # DCT is DC-only with S00 = 8*(v - 128) and round(S00/8) = v - 128
+    # exactly — the same zz the float path computes (its AC magnitudes
+    # are ~1e-13, far below the 0.5 rounding radius; its DC error is
+    # ~1e-12 on an integer target), so the emitted bytes are identical
+    # and the corpus encode skips the full-einsum DCT.
+    corners = imgs[:, ::8, ::8]
+    if np.array_equal(np.repeat(np.repeat(corners, 8, axis=1), 8, axis=2),
+                      imgs):
+        zz = np.zeros((n, nb, 64), dtype=np.int64)
+        zz[:, :, 0] = corners.reshape(n, nb).astype(np.int64) - 128
+        return zz
+    # forward DCT + quantization, all blocks of all images vectorized
+    s = imgs.astype(np.float64) - 128.0
+    blocks = (s.reshape(n, h // 8, 8, w // 8, 8).transpose(0, 1, 3, 2, 4)
+              .reshape(-1, 8, 8))
+    coef = np.einsum("un,bnm,vm->buv", _C, blocks, _C, optimize=True)
+    q = np.round(coef / QUANT.reshape(8, 8).astype(np.float64)) \
+        .astype(np.int64)
+    return q.reshape(n, nb, 64)[:, :, ZIGZAG]
+
+
 def encode_gray_jpeg(img: np.ndarray, restart_interval: int = 0) -> bytes:
     """Encode an 8-bit grayscale image (dims multiples of 8) as a real
     baseline JPEG: full DQT/DHT/SOF0/SOS framing + Huffman entropy data.
@@ -350,30 +334,7 @@ def encode_gray_jpeg(img: np.ndarray, restart_interval: int = 0) -> bytes:
     byte-aligned restart segments separated by RST0-7 markers (T.81
     F.1.2.6) — the form externally produced baseline files commonly use."""
     h, w = img.shape
-    if h % 8 or w % 8:
-        raise ValueError("jpeg: dims must be multiples of 8 (this encoder)")
-
-    # Block-constant shortcut (r9): when every 8x8 block is a constant
-    # (checked EXACTLY on the uint8 pixels, not a float property), the
-    # DCT is DC-only with S00 = 8*(v - 128) and round(S00/8) = v - 128
-    # exactly — the same zz the float path computes (its AC magnitudes
-    # are ~1e-13, far below the 0.5 rounding radius; its DC error is
-    # ~1e-12 on an integer target), so the emitted bytes are identical
-    # and the corpus encode skips the full-einsum DCT.
-    rep = np.repeat(np.repeat(img[::8, ::8], 8, axis=0), 8, axis=1)
-    if np.array_equal(rep, img):
-        zz = np.zeros(((h // 8) * (w // 8), 64), dtype=np.int64)
-        zz[:, 0] = img[::8, ::8].astype(np.int64).reshape(-1) - 128
-    else:
-        # forward DCT + quantization, all blocks vectorized
-        s = img.astype(np.float64) - 128.0
-        blocks = (s.reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3))
-        coef = np.einsum("un,bcnm,vm->bcuv", _C, blocks, _C, optimize=True)
-        q = np.round(coef.reshape(-1, 8, 8)
-                     / QUANT.reshape(8, 8).astype(np.float64)) \
-            .astype(np.int64)
-        zz = q.reshape(-1, 64)[:, ZIGZAG]
-
+    zz = _quantized_zigzag(img[None])[0]
     if restart_interval:
         parts = [_encode_blocks(zz[i:i + restart_interval])
                  for i in range(0, len(zz), restart_interval)]
@@ -424,36 +385,34 @@ def encode_gray_jpeg_batch(imgs: np.ndarray) -> list:
     baseline JPEGs, byte-identical to per-image ``encode_gray_jpeg``
     (no restart markers).
 
-    One DCT einsum over every block of every frame, ONE vectorized
+    One coefficient step over every block of every frame, ONE vectorized
     entropy pack for the whole stack (each frame's stream is
     byte-aligned and 1-padded, so the global pack splits exactly at
     frame boundaries), per-frame byte stuffing as a C-level replace —
     the per-frame Python overhead that dominated MJPEG synthesis drops
-    to a list slice (r9).  Falls back to the general encoder for any
-    frame with a nonzero AC coefficient."""
-    n, h, w = imgs.shape
-    if h % 8 or w % 8:
-        raise ValueError("jpeg: dims must be multiples of 8 (this encoder)")
-    s = imgs.astype(np.float64) - 128.0
-    blocks = (s.reshape(n, h // 8, 8, w // 8, 8).transpose(0, 1, 3, 2, 4)
-              .reshape(-1, 8, 8))
-    coef = np.einsum("un,bnm,vm->buv", _C, blocks, _C, optimize=True)
-    q = np.round(coef / QUANT.reshape(8, 8).astype(np.float64)) \
-        .astype(np.int64)
-    zz = q.reshape(-1, 64)[:, ZIGZAG]
-    if zz[:, 1:].any():
-        return [encode_gray_jpeg(img) for img in imgs]
-    nb = (h // 8) * (w // 8)
-    dc2 = zz[:, 0].reshape(n, nb)
+    to a list slice (r9).  Falls back to the general per-frame entropy
+    coder when any frame has a nonzero AC coefficient."""
+    _, h, w = imgs.shape
+    zz = _quantized_zigzag(imgs)
     hdr = _jpeg_header(h, w, 0)
-    return [hdr + e + b"\xff\xd9" for e in _encode_dc_only_multi(dc2)]
+    if zz[:, :, 1:].any():
+        return [hdr + _encode_blocks(frame) + b"\xff\xd9" for frame in zz]
+    return [hdr + e + b"\xff\xd9" for e in _encode_dc_only(zz[:, :, 0])]
 
 
-def _encode_dc_only_multi(dc2: np.ndarray) -> list:
-    """Per-row DC-only entropy streams for a [n_frames, n_blocks] DC
-    matrix — one global vectorized pack, split at the per-frame byte
-    boundaries (each frame's stream is independently 1-padded to a byte,
-    exactly _encode_dc_only's output per row)."""
+def _encode_dc_only(dc2: np.ndarray) -> list:
+    """The one DC-only entropy packer, for the block family whose every
+    AC coefficient is zero (the corpus's block-constant images and all
+    video frames): per-row streams for a [n_rows, n_blocks] DC matrix,
+    byte-identical per row to _encode_blocks' general loop — per block
+    the DC category code, the category's difference bits and an EOB.
+
+    One global vectorized pack, split at the per-row byte boundaries
+    (each row's stream is independently 1-padded to a byte).  Bits of
+    adjacent blocks never overlap mid-byte-add (each output byte
+    receives disjoint bit ranges), so scattered adds compose the stream
+    without carries; byte stuffing (T.81 F.1.2.3) is one C-level replace
+    per row."""
     n, nb = dc2.shape
     diffs = np.empty_like(dc2)
     diffs[:, 0] = dc2[:, 0]

@@ -23,6 +23,14 @@ is real and tested, and the blobs carry REAL container bytes END TO END:
   sampled frame to pixels through the jpeg codec.  No multimodal stub
   remains.
 
+Every Arrow-batched step is one mapper, :func:`_map_blobs`: a
+``mapInPandas`` over (doc_id, blob) rows whose per-blob function yields
+the output rows (the decoders emit one row per blob, the video sampler
+one per sampled frame), named and typed by the query's DDL string.  The
+three synthesizers go through the same mapper via :func:`_synthesize`,
+each giving only its blob function, so the per-row Python boundary is
+written once.
+
 Dimensions/counts remain deterministic functions of doc_id
 (``width = (doc_id * 37) % 1024 + 1``, ``height = (doc_id * 73) % 768 +
 1``, ``n_samples = (doc_id * 997) % 16000 + 800``), so the ANSI-SQL
@@ -34,16 +42,47 @@ round-trip-checked.
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Tuple
+from typing import Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _documents, pixels, spread
+from . import _documents, jpeg, pixels, spread
 
 PNG_SIG = pixels.PNG_SIG
+
+# pandas dtype of each DDL type a mapper schema uses
+_PANDAS_DTYPES = {"bigint": "int64", "boolean": "bool", "binary": "object"}
+
+
+def _map_blobs(blobs: DataFrame, rows_of, schema: str) -> DataFrame:
+    """The one Arrow-batched kernel: ``mapInPandas`` over (doc_id, blob)
+    rows, where ``rows_of(doc_id, blob)`` yields the output row tuples of
+    one blob (``blob`` is None when the input has no blob column), named
+    and typed by the DDL ``schema``."""
+    fields = [field.split() for field in schema.split(",")]
+
+    def map_batches(batches):
+        for pdf in batches:
+            blob_col = pdf["blob"] if "blob" in pdf else [None] * len(pdf)
+            rows = [row for doc_id, blob in zip(pdf["doc_id"], blob_col)
+                    for row in rows_of(int(doc_id), blob)]
+            cols = list(zip(*rows)) or [()] * len(fields)
+            yield pd.DataFrame({
+                name: pd.Series(col, dtype=_PANDAS_DTYPES[ddl_type])
+                for (name, ddl_type), col in zip(fields, cols)})
+
+    return blobs.mapInPandas(map_batches, schema)
+
+
+def _synthesize(spark: SparkSession, sf_dir: str, blob_of) -> DataFrame:
+    """documents -> (doc_id, ``blob_of(doc_id)``) through the mapper:
+    blob synthesis is itself the write half of the real scale path."""
+    docs = spread(_documents(spark, sf_dir).select("doc_id"))
+    return _map_blobs(docs, lambda doc_id, _: [(doc_id, blob_of(doc_id))],
+                      "doc_id bigint, blob binary")
 
 
 # Small-image threshold below which the PNG encoder rotates through ALL
@@ -62,37 +101,22 @@ def image_dims(doc_id: int) -> Tuple[int, int]:
     return ((doc_id * 37) % 128) * 8 + 8, ((doc_id * 73) % 96) * 8 + 8
 
 
+def _image_blob(doc_id: int) -> bytes:
+    w, h = image_dims(doc_id)
+    if doc_id % 2 == 0:
+        mode = "all" if w * h <= PNG_ALL_FILTERS_MAX_PX else "fast"
+        return pixels.png_encode(pixels.synth_gray(doc_id, w, h),
+                                 filter_mode=mode)
+    return jpeg.encode_gray_jpeg(jpeg.synth_block_gray(doc_id, w, h))
+
+
 def synthesize_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, blob binary): a COMPLETE valid image per
     doc — PNG (even doc_ids: grayscale formula pixels, real filters +
     zlib IDAT + CRCs) or baseline JPEG (odd doc_ids: block-constant
     formula pixels through the REAL DCT/quant/Huffman encoder in
-    datapipe.jpeg).  Built in an Arrow-batched kernel: blob synthesis is
-    itself the write half of the real scale path."""
-    from . import jpeg
-
-    docs = spread(_documents(spark, sf_dir).select("doc_id"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = image_dims(doc_id)
-                if doc_id % 2 == 0:
-                    mode = "all" if w * h <= PNG_ALL_FILTERS_MAX_PX \
-                        else "fast"
-                    blob = pixels.png_encode(
-                        pixels.synth_gray(doc_id, w, h), filter_mode=mode)
-                else:
-                    blob = jpeg.encode_gray_jpeg(
-                        jpeg.synth_block_gray(doc_id, w, h))
-                ids.append(doc_id)
-                blobs.append(blob)
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                "blob": blobs})
-
-    return docs.mapInPandas(kernel, "doc_id bigint, blob binary")
+    datapipe.jpeg)."""
+    return _synthesize(spark, sf_dir, _image_blob)
 
 
 def parse_image_header(blob: bytes) -> Tuple[int, int, int]:
@@ -127,42 +151,24 @@ def parse_image_header(blob: bytes) -> Tuple[int, int, int]:
     raise ValueError("unknown image container")
 
 
-def decode_image(blob: bytes):
-    """Image pixel decode: a real np.uint8 array for BOTH containers —
-    PNG via pixels.py (inflate + unfilter), baseline JPEG via
-    datapipe.jpeg (Huffman + IDCT)."""
-    return pixels.decode_pixels(blob)
+def _decoded_meta(doc_id: int, blob: bytes):
+    img = pixels.decode_pixels(blob)
+    h, w = img.shape
+    n = h * (w + 1) if blob[:8] == PNG_SIG else h * w
+    yield doc_id, w, h, n
 
 
 def decode_meta(spark_df: DataFrame) -> DataFrame:
-    """Arrow-batched metadata extraction over the binary column via
-    mapInPandas — the real scale path for multimodal feature extraction.
+    """Arrow-batched metadata extraction over the binary column — the
+    real scale path for multimodal feature extraction.
 
     Every row runs the FULL pixel decode; the reported payload size is
     decode-derived evidence it ran — the decompressed filtered-stream
     length ``height * (width + 1)`` for PNG, the decoded sample count
     ``height * width`` for JPEG."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            widths, heights, payload_sizes = [], [], []
-            for blob in pdf["blob"]:
-                b = bytes(blob)
-                img = pixels.decode_pixels(b)
-                h, w = img.shape
-                n = h * (w + 1) if b[:8] == pixels.PNG_SIG else h * w
-                widths.append(w)
-                heights.append(h)
-                payload_sizes.append(n)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.Series(widths, dtype="int64"),
-                "height": pd.Series(heights, dtype="int64"),
-                "payload_bytes": pd.Series(payload_sizes, dtype="int64"),
-            })
-
-    return spark_df.mapInPandas(
-        kernel, "doc_id bigint, width bigint, height bigint, payload_bytes bigint")
+    return _map_blobs(
+        spark_df, _decoded_meta,
+        "doc_id bigint, width bigint, height bigint, payload_bytes bigint")
 
 
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,15 +177,18 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_meta(synthesize_blobs(spark, sf_dir))
 
 
-MULTIMODAL_META_SQL = """
-WITH dims AS (
+# the image dims of image_dims() as the oracles' first CTE
+_DIMS_CTE = """dims AS (
   SELECT doc_id,
          CASE WHEN doc_id % 2 = 0 THEN (doc_id * 37) % 1024 + 1
               ELSE ((doc_id * 37) % 128) * 8 + 8 END AS w,
          CASE WHEN doc_id % 2 = 0 THEN (doc_id * 73) % 768 + 1
               ELSE ((doc_id * 73) % 96) * 8 + 8 END AS h
   FROM documents
-)
+)"""
+
+MULTIMODAL_META_SQL = f"""
+WITH {_DIMS_CTE}
 SELECT doc_id, w AS width, h AS height,
        CASE WHEN doc_id % 2 = 0 THEN h * (w + 1) ELSE h * w END
          AS payload_bytes
@@ -195,6 +204,19 @@ RESIZE_MAX_DIM = 256
 VIDEO_FPS = 24
 
 
+def _resized_meta(doc_id: int, blob: bytes):
+    w, h, _ = parse_image_header(blob)
+    m = w if w > h else h
+    if m > RESIZE_MAX_DIM:
+        out_w = max(1, (w * RESIZE_MAX_DIM) // m)
+        out_h = max(1, (h * RESIZE_MAX_DIM) // m)
+    else:
+        out_w, out_h = w, h
+    resized = pixels.resize_nearest(pixels.decode_pixels(blob), out_w, out_h)
+    yield (doc_id, out_w, out_h, m > RESIZE_MAX_DIM,
+           int(resized.astype(np.int64).sum()))
+
+
 def image_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize-to-fit over the binary column: target box RESIZE_MAX_DIM,
     aspect preserved, integer math (floor) so the SQL oracle reproduces it
@@ -204,38 +226,8 @@ def image_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixels — and the oracle recomputes that checksum in closed form from
     the corpus pixel formulas, so a wrong unfilter, entropy decode, or
     index mapping fails the hash."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ow, oh, scaled, checks = [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                b = bytes(blob)
-                w, h, _ = parse_image_header(b)
-                m = w if w > h else h
-                if m > RESIZE_MAX_DIM:
-                    out_w = max(1, (w * RESIZE_MAX_DIM) // m)
-                    out_h = max(1, (h * RESIZE_MAX_DIM) // m)
-                    did_scale = True
-                else:
-                    out_w, out_h = w, h
-                    did_scale = False
-                resized = pixels.resize_nearest(
-                    pixels.decode_pixels(b), out_w, out_h)
-                ids.append(doc_id)
-                ow.append(out_w)
-                oh.append(out_h)
-                scaled.append(did_scale)
-                checks.append(int(resized.astype(np.int64).sum()))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "out_width": pd.Series(ow, dtype="int64"),
-                "out_height": pd.Series(oh, dtype="int64"),
-                "scaled": pd.Series(scaled, dtype="bool"),
-                "pixel_checksum": pd.Series(checks, dtype="int64"),
-            })
-
-    return synthesize_blobs(spark, sf_dir).mapInPandas(
-        kernel,
+    return _map_blobs(
+        synthesize_blobs(spark, sf_dir), _resized_meta,
         "doc_id bigint, out_width bigint, out_height bigint, "
         "scaled boolean, pixel_checksum bigint")
 
@@ -245,14 +237,7 @@ def image_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gray value is (doc_id*7 + 3*sx + 5*sy) % 256 — summed over the out grid
 # (flattened index k: ox = k % out_w, oy = k // out_w)
 IMAGE_RESIZE_SQL = f"""
-WITH dims AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 2 = 0 THEN (doc_id * 37) % 1024 + 1
-              ELSE ((doc_id * 37) % 128) * 8 + 8 END AS w,
-         CASE WHEN doc_id % 2 = 0 THEN (doc_id * 73) % 768 + 1
-              ELSE ((doc_id * 73) % 96) * 8 + 8 END AS h
-  FROM documents
-), plan AS (
+WITH {_DIMS_CTE}, plan AS (
   SELECT doc_id, w, h,
          CASE WHEN greatest(w, h) > {RESIZE_MAX_DIM}
               THEN greatest(1, (w * {RESIZE_MAX_DIM}) // greatest(w, h))
@@ -316,9 +301,10 @@ VIDEO_FRAME_W, VIDEO_FRAME_H = 32, 24
 VIDEO_MAX_FRAMES = 96  # up to 4 s of 24 fps MJPEG per doc
 
 
-def frame_pixels(doc_id: int, i: int) -> np.ndarray:
+def frame_pixels(doc_id: int, i) -> np.ndarray:
     """Frame i's pixels: constant per 8x8 block (the jpeg codec's
-    exactness family), value (13*doc_id + 7i + 3*bx + 5*by) % 256."""
+    exactness family), value (13*doc_id + 7i + 3*bx + 5*by) % 256.  An
+    index array of shape [n, 1, 1] gives the [n, H, W] frame stack."""
     by = np.arange(VIDEO_FRAME_H, dtype=np.int64)[:, None] // 8
     bx = np.arange(VIDEO_FRAME_W, dtype=np.int64)[None, :] // 8
     return ((doc_id * 13 + i * 7 + 3 * bx + 5 * by) % 256).astype(np.uint8)
@@ -347,25 +333,17 @@ def build_mp4(doc_id: int, n_frames: int) -> bytes:
     stsz/stsc/stco per ISO/IEC 14496-12) + an mdat whose samples are
     REAL baseline-JPEG frames (datapipe.jpeg) — so a demuxer seeks to
     any frame and a JPEG decoder yields its pixels."""
-    from . import jpeg as jp
-
     # all frames synthesized and encoded in one vectorized batch (r9):
-    # frame_pixels' formula over the [n_frames, H, W] grid, then the
-    # batch encoder (one DCT einsum + one entropy pack for the stack,
-    # byte-identical per frame to encode_gray_jpeg(frame_pixels(...)))
-    fi = np.arange(n_frames, dtype=np.int64)[:, None, None]
-    by = (np.arange(VIDEO_FRAME_H, dtype=np.int64) // 8)[None, :, None]
-    bx = (np.arange(VIDEO_FRAME_W, dtype=np.int64) // 8)[None, None, :]
-    pix = ((doc_id * 13 + fi * 7 + 3 * bx + 5 * by) % 256).astype(np.uint8)
-    frames = jp.encode_gray_jpeg_batch(pix)
+    # frame_pixels over the [n_frames, H, W] grid, then the batch encoder
+    # (byte-identical per frame to encode_gray_jpeg(frame_pixels(...)))
+    frames = jpeg.encode_gray_jpeg_batch(frame_pixels(
+        doc_id, np.arange(n_frames, dtype=np.int64)[:, None, None]))
     sizes = [len(f) for f in frames]
 
     stts = _full_box(b"stts", struct.pack(">III", 1, n_frames, 1))
     stsz = _full_box(b"stsz", struct.pack(">II", 0, n_frames)
                      + struct.pack(">%dI" % n_frames, *sizes))
     stsc = _full_box(b"stsc", struct.pack(">IIII", 1, 1, n_frames, 1))
-    # stco needs the absolute mdat payload offset — all earlier box sizes
-    # are known before mdat is built, so compute it first
     mdhd = _full_box(b"mdhd", struct.pack(">IIIIHH", 0, 0, MP4_TIMESCALE,
                                           n_frames, 0x55C4, 0))
     hdlr = _full_box(b"hdlr", struct.pack(">I4s", 0, b"vide")
@@ -381,70 +359,29 @@ def build_mp4(doc_id: int, n_frames: int) -> bytes:
                  + MP4_MVHD_TAIL)
     mvhd = _box(b"mvhd", mvhd_body)
 
-    stco_placeholder = _full_box(b"stco", struct.pack(">II", 1, 0))
-    stbl = _box(b"stbl", _stsd_jpeg() + stts + stsz + stsc + stco_placeholder)
-    minf = _box(b"minf", stbl)
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    trak = _box(b"trak", tkhd + mdia)
-    moov = _box(b"moov", mvhd + trak)
-    mdat_payload_off = len(MP4_FTYP) + len(moov) + 8  # + mdat header
-    stco = _full_box(b"stco", struct.pack(">II", 1, mdat_payload_off))
-    stbl = _box(b"stbl", _stsd_jpeg() + stts + stsz + stsc + stco)
-    minf = _box(b"minf", stbl)
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    trak = _box(b"trak", tkhd + mdia)
-    moov = _box(b"moov", mvhd + trak)
+    def moov(chunk_offset: int) -> bytes:
+        stco = _full_box(b"stco", struct.pack(">II", 1, chunk_offset))
+        stbl = _box(b"stbl", _stsd_jpeg() + stts + stsz + stsc + stco)
+        mdia = _box(b"mdia", mdhd + hdlr + _box(b"minf", stbl))
+        return _box(b"moov", mvhd + _box(b"trak", tkhd + mdia))
 
-    return MP4_FTYP + moov + _box(b"mdat", b"".join(frames))
+    # stco holds the absolute mdat payload offset, and its own size does
+    # not depend on that offset: size moov once, then build it for real
+    mdat_payload_off = len(MP4_FTYP) + len(moov(0)) + 8  # + mdat header
+    return (MP4_FTYP + moov(mdat_payload_off)
+            + _box(b"mdat", b"".join(frames)))
 
 
 def synthesize_video_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, blob): complete demuxable MP4s (mvhd +
-    sample tables + formula frame payloads in mdat), built in an
-    Arrow-batched kernel."""
-    docs = spread(_documents(spark, sf_dir).select("doc_id"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                ids.append(doc_id)
-                blobs.append(build_mp4(doc_id, doc_id % VIDEO_MAX_FRAMES + 1))
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                "blob": blobs})
-
-    return docs.mapInPandas(kernel, "doc_id bigint, blob binary")
-
-
-def parse_mp4_header(blob: bytes) -> Tuple[int, int]:
-    """REAL MP4 box walk: returns (timescale, duration) from the
-    moov/mvhd box, stdlib-only (ISO/IEC 14496-12 box layout)."""
-    def walk(buf, start, end, path):
-        pos = start
-        while pos + 8 <= end:
-            size, btype = struct.unpack(">I4s", buf[pos:pos + 8])
-            if size < 8:
-                raise ValueError("mp4: bad box size")
-            if btype == path[0]:
-                if len(path) == 1:
-                    return pos
-                return walk(buf, pos + 8, pos + size, path[1:])
-            pos += size
-        raise ValueError("mp4: box not found: %r" % (path,))
-
-    mvhd = walk(blob, 0, len(blob), [b"moov", b"mvhd"])
-    version = blob[mvhd + 8]
-    if version == 0:
-        timescale, duration = struct.unpack(
-            ">II", blob[mvhd + 20:mvhd + 28])
-    else:  # version 1: 64-bit times
-        timescale = struct.unpack(">I", blob[mvhd + 28:mvhd + 32])[0]
-        duration = struct.unpack(">Q", blob[mvhd + 32:mvhd + 40])[0]
-    return timescale, duration
+    sample tables + formula frame payloads in mdat)."""
+    return _synthesize(spark, sf_dir, lambda doc_id: build_mp4(
+        doc_id, doc_id % VIDEO_MAX_FRAMES + 1))
 
 
 def _walk_box(buf: bytes, start: int, end: int, path) -> int:
+    """Offset of the box at ``path`` (a list of fourccs, outermost
+    first) within ``buf[start:end]``."""
     pos = start
     while pos + 8 <= end:
         size, btype = struct.unpack(">I4s", buf[pos:pos + 8])
@@ -456,6 +393,20 @@ def _walk_box(buf: bytes, start: int, end: int, path) -> int:
             return _walk_box(buf, pos + 8, pos + size, path[1:])
         pos += size
     raise ValueError("mp4: box not found: %r" % (path,))
+
+
+def parse_mp4_header(blob: bytes) -> Tuple[int, int]:
+    """REAL MP4 box walk: returns (timescale, duration) from the
+    moov/mvhd box, stdlib-only (ISO/IEC 14496-12 box layout)."""
+    mvhd = _walk_box(blob, 0, len(blob), [b"moov", b"mvhd"])
+    version = blob[mvhd + 8]
+    if version == 0:
+        timescale, duration = struct.unpack(
+            ">II", blob[mvhd + 20:mvhd + 28])
+    else:  # version 1: 64-bit times
+        timescale = struct.unpack(">I", blob[mvhd + 28:mvhd + 32])[0]
+        duration = struct.unpack(">Q", blob[mvhd + 32:mvhd + 40])[0]
+    return timescale, duration
 
 
 def parse_mp4_samples(blob: bytes):
@@ -496,6 +447,20 @@ def parse_mp4_samples(blob: bytes):
     return timescale, codec, sizes, chunk_offset
 
 
+def _sampled_frames(doc_id: int, blob: bytes):
+    fps, codec, sizes, base = parse_mp4_samples(blob)
+    if codec != b"jpeg":
+        raise ValueError("unsupported video codec %r" % codec)
+    offset = base
+    for i, sz in enumerate(sizes):
+        if i % fps == 0:
+            frame = jpeg.decode_gray_jpeg(blob[offset:offset + sz])
+            fh, fw = frame.shape
+            yield (doc_id, i, i * 1000 // fps, fw, fh,
+                   int(frame.astype(np.int64).sum()))
+        offset += sz
+
+
 def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One DECODED frame per second of Motion-JPEG video: the kernel
     demuxes each blob for real (stsd codec check, stsz/stco seek),
@@ -507,40 +472,10 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     are both real.  The explode-inside-Arrow-kernel shape (one input
     row -> many output rows, no JVM explode) is the real scale
     pattern."""
-    from . import jpeg as jp
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, stamps, fws, fhs, checks = [], [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                b = bytes(blob)
-                fps, codec, sizes, base = parse_mp4_samples(b)
-                if codec != b"jpeg":
-                    raise ValueError("unsupported video codec %r" % codec)
-                offset = base
-                for i, sz in enumerate(sizes):
-                    if i % fps == 0:
-                        frame = jp.decode_gray_jpeg(b[offset:offset + sz])
-                        fh, fw = frame.shape
-                        ids.append(doc_id)
-                        idxs.append(i)
-                        stamps.append(i * 1000 // fps)
-                        fws.append(fw)
-                        fhs.append(fh)
-                        checks.append(int(frame.astype(np.int64).sum()))
-                    offset += sz
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int64"),
-                "ts_ms": pd.Series(stamps, dtype="int64"),
-                "frame_w": pd.Series(fws, dtype="int64"),
-                "frame_h": pd.Series(fhs, dtype="int64"),
-                "pixel_checksum": pd.Series(checks, dtype="int64"),
-            })
-
-    return synthesize_video_blobs(spark, sf_dir).mapInPandas(
-        kernel, "doc_id bigint, frame_idx bigint, ts_ms bigint, "
-                "frame_w bigint, frame_h bigint, pixel_checksum bigint")
+    return _map_blobs(
+        synthesize_video_blobs(spark, sf_dir), _sampled_frames,
+        "doc_id bigint, frame_idx bigint, ts_ms bigint, "
+        "frame_w bigint, frame_h bigint, pixel_checksum bigint")
 
 
 # pixel checksum in closed form: frames are block-constant (4x3 blocks of
@@ -580,21 +515,9 @@ def synthesize_audio_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic formula (``pixels.synth_samples``), so the decode
     side can compute genuine waveform statistics the SQL oracle
     reproduces in closed form."""
-    docs = spread(_documents(spark, sf_dir).select("doc_id"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = (doc_id * 997) % 16000 + 800
-                blobs.append(pixels.wav_encode(
-                    pixels.synth_samples(doc_id, n), AUDIO_SAMPLE_RATE))
-                ids.append(doc_id)
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                "blob": blobs})
-
-    return docs.mapInPandas(kernel, "doc_id bigint, blob binary")
+    return _synthesize(spark, sf_dir, lambda doc_id: pixels.wav_encode(
+        pixels.synth_samples(doc_id, (doc_id * 997) % 16000 + 800),
+        AUDIO_SAMPLE_RATE))
 
 
 def parse_wav_header(blob: bytes) -> Tuple[int, int]:
@@ -619,6 +542,15 @@ def parse_wav_header(blob: bytes) -> Tuple[int, int]:
     return sample_rate, data_size // block_align
 
 
+def _wav_meta(doc_id: int, blob: bytes):
+    rate, samples = pixels.wav_decode(blob)
+    s64 = samples.astype(np.int64)
+    n = len(s64)
+    yield (doc_id, rate, n, n * 1000 // rate,
+           int(np.abs(s64).max()) if n else 0,
+           int((s64 * s64).sum() // n) if n else 0)
+
+
 def audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio metadata over complete real WAVs: the blob decodes through
     the STDLIB ``wave`` reader and the statistics are computed from the
@@ -626,38 +558,20 @@ def audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum(s^2) // n, the integer power the SQL oracle reproduces exactly).
     The header-derived fields (rate, count, duration) must agree with the
     sample-derived ones by construction."""
+    return _map_blobs(
+        synthesize_audio_blobs(spark, sf_dir), _wav_meta,
+        "doc_id bigint, sample_rate bigint, n_samples bigint, "
+        "duration_ms bigint, peak_amp bigint, mean_square bigint")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rates, counts, durs, peaks, msqs = [], [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                rate, samples = pixels.wav_decode(bytes(blob))
-                s64 = samples.astype(np.int64)
-                n = len(s64)
-                ids.append(doc_id)
-                rates.append(rate)
-                counts.append(n)
-                durs.append(n * 1000 // rate)
-                peaks.append(int(np.abs(s64).max()) if n else 0)
-                msqs.append(int((s64 * s64).sum() // n) if n else 0)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "sample_rate": pd.Series(rates, dtype="int64"),
-                "n_samples": pd.Series(counts, dtype="int64"),
-                "duration_ms": pd.Series(durs, dtype="int64"),
-                "peak_amp": pd.Series(peaks, dtype="int64"),
-                "mean_square": pd.Series(msqs, dtype="int64"),
-            })
 
-    return synthesize_audio_blobs(spark, sf_dir).mapInPandas(
-        kernel, "doc_id bigint, sample_rate bigint, n_samples bigint, "
-                "duration_ms bigint, peak_amp bigint, mean_square bigint")
-
+# the per-doc sample count of synthesize_audio_blobs as the oracles'
+# first CTE
+_PAR_CTE = """par AS (
+  SELECT doc_id, (doc_id * 997) % 16000 + 800 AS n FROM documents
+)"""
 
 AUDIO_META_SQL = f"""
-WITH par AS (
-  SELECT doc_id, (doc_id * 997) % 16000 + 800 AS n FROM documents
-), smp AS (
+WITH {_PAR_CTE}, smp AS (
   SELECT doc_id, n, unnest(generate_series(0, n - 1)) AS i FROM par
 ), vals AS (
   SELECT doc_id, ((doc_id * 31 + i * 17) % 65536) - 32768 AS s FROM smp
@@ -682,6 +596,20 @@ FROM par p JOIN agg a ON p.doc_id = a.doc_id
 PHASH_DIM = 8  # aHash grid: 8x8 -> 64-bit signature
 
 
+def _phash(doc_id: int, blob: bytes):
+    small = pixels.resize_nearest(
+        pixels.decode_pixels(blob), PHASH_DIM, PHASH_DIM).astype(np.int64)
+    mean = int(small.sum()) // (PHASH_DIM * PHASH_DIM)
+    bits = (small > mean).flatten()
+    h = 0
+    for k in range(PHASH_DIM * PHASH_DIM):
+        if bits[k]:
+            h |= 1 << k
+    if h >= 1 << 63:          # two's-complement BIGINT
+        h -= 1 << 64
+    yield doc_id, h, mean
+
+
 def image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual average-hash (aHash) over DECODED pixels — the
     image-dedup primitive a multimodal corpus pipeline runs (LAION-style
@@ -692,33 +620,8 @@ def image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode, resample, or threshold flips bits and fails the hash.
     Signatures then dedup by equality (one hash-agg) or band into
     pigeonhole buckets exactly like simhash_near_pairs."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, means = [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                img = pixels.decode_pixels(bytes(blob))
-                small = pixels.resize_nearest(
-                    img, PHASH_DIM, PHASH_DIM).astype(np.int64)
-                mean = int(small.sum()) // (PHASH_DIM * PHASH_DIM)
-                bits = (small > mean).flatten()
-                h = 0
-                for k in range(PHASH_DIM * PHASH_DIM):
-                    if bits[k]:
-                        h |= 1 << k
-                if h >= 1 << 63:          # two's-complement BIGINT
-                    h -= 1 << 64
-                ids.append(doc_id)
-                hashes.append(h)
-                means.append(mean)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "phash": pd.Series(hashes, dtype="int64"),
-                "mean_gray": pd.Series(means, dtype="int64"),
-            })
-
-    return synthesize_blobs(spark, sf_dir).mapInPandas(
-        kernel, "doc_id bigint, phash bigint, mean_gray bigint")
+    return _map_blobs(synthesize_blobs(spark, sf_dir), _phash,
+                      "doc_id bigint, phash bigint, mean_gray bigint")
 
 
 # bit 63 via the explicit min-BIGINT literal (1<<63 overflows in DuckDB)
@@ -727,14 +630,7 @@ _PHASH_BITVAL = ("CASE WHEN k = 63 THEN (-9223372036854775807 - 1)"
 
 # the pHash computation as a reusable CTE chain (image_phash emits it
 # directly; image_phash_near_pairs bands over it)
-_IMAGE_PHASH_CTES = f"""dims AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 2 = 0 THEN (doc_id * 37) % 1024 + 1
-              ELSE ((doc_id * 37) % 128) * 8 + 8 END AS w,
-         CASE WHEN doc_id % 2 = 0 THEN (doc_id * 73) % 768 + 1
-              ELSE ((doc_id * 73) % 96) * 8 + 8 END AS h
-  FROM documents
-), px AS (
+_IMAGE_PHASH_CTES = f"""{_DIMS_CTE}, px AS (
   SELECT doc_id, k,
          CASE WHEN doc_id % 2 = 0
               THEN (doc_id * 7 + ((k % {PHASH_DIM}) * w // {PHASH_DIM}) * 3
@@ -831,6 +727,21 @@ WHERE bit_count(xor(a.phash, b.phash)) <= {PHASH_HAMMING_MAX}
 AUDIO_FP_WINDOWS = 16
 
 
+def _energy_fingerprint(doc_id: int, blob: bytes):
+    _rate, samples = pixels.wav_decode(blob)
+    s = samples.astype(np.int64)
+    wlen = len(s) // AUDIO_FP_WINDOWS
+    used = s[:wlen * AUDIO_FP_WINDOWS]
+    sq = used * used
+    msq = sq.reshape(AUDIO_FP_WINDOWS, wlen).sum(axis=1) // wlen
+    overall = int(msq.sum()) // AUDIO_FP_WINDOWS
+    fp = 0
+    for j in range(AUDIO_FP_WINDOWS):
+        if int(msq[j]) > overall:
+            fp |= 1 << j
+    yield doc_id, fp, int(sq.sum())
+
+
 def audio_energy_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-dup fingerprint over DECODED PCM samples: split the
     clip into AUDIO_FP_WINDOWS equal windows (truncating the remainder),
@@ -838,39 +749,13 @@ def audio_energy_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     window j's energy exceeds the across-window mean — the
     energy-envelope hash an audio-dedup pass buckets on.  All integer
     math; the oracle reproduces it from the sample formula."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps_, energies = [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                _rate, samples = pixels.wav_decode(bytes(blob))
-                s = samples.astype(np.int64)
-                wlen = len(s) // AUDIO_FP_WINDOWS
-                used = s[:wlen * AUDIO_FP_WINDOWS]
-                sq = used * used
-                msq = sq.reshape(AUDIO_FP_WINDOWS, wlen).sum(axis=1) // wlen
-                overall = int(msq.sum()) // AUDIO_FP_WINDOWS
-                fp = 0
-                for j in range(AUDIO_FP_WINDOWS):
-                    if int(msq[j]) > overall:
-                        fp |= 1 << j
-                ids.append(doc_id)
-                fps_.append(fp)
-                energies.append(int(sq.sum()))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "energy_fp": pd.Series(fps_, dtype="int64"),
-                "total_energy": pd.Series(energies, dtype="int64"),
-            })
-
-    return synthesize_audio_blobs(spark, sf_dir).mapInPandas(
-        kernel, "doc_id bigint, energy_fp bigint, total_energy bigint")
+    return _map_blobs(synthesize_audio_blobs(spark, sf_dir),
+                      _energy_fingerprint,
+                      "doc_id bigint, energy_fp bigint, total_energy bigint")
 
 
 AUDIO_ENERGY_FP_SQL = f"""
-WITH par AS (
-  SELECT doc_id, (doc_id * 997) % 16000 + 800 AS n FROM documents
-), smp AS (
+WITH {_PAR_CTE}, smp AS (
   SELECT doc_id, n, (n // {AUDIO_FP_WINDOWS}) AS wlen,
          unnest(generate_series(0, (n // {AUDIO_FP_WINDOWS})
                                    * {AUDIO_FP_WINDOWS} - 1)) AS i

@@ -27,8 +27,11 @@ from __future__ import annotations
 import datetime
 import hashlib
 import json
+import logging
 import os
 from typing import Iterable, List, Tuple
+
+_log = logging.getLogger(__name__)
 
 _CRLF = b"\r\n"
 _MAGIC = b"WARC/1.0\r\n"
@@ -238,12 +241,18 @@ def _walk_rows(blobs, row_fn):
     row is not None.  Streams via :func:`_iter_records`, NOT the eager
     :func:`_walk`, which materializes every record of the shard first
     (per-task peak would be the whole shard's decoded records, ADVICE
-    r7): one record is in flight, so the flush bound is real."""
+    r7): one record is in flight, so the flush bound is real.  A shard
+    with corrupt byte ranges logs one warning with its count, the figure
+    the eager ``parse_*`` return."""
     for name, blob in blobs:
-        for h, body, start, end in _iter_records(blob, {"corrupt": 0}):
+        stats = {"corrupt": 0}
+        for h, body, start, end in _iter_records(blob, stats):
             row = row_fn(name, h, body, start, end)
             if row is not None:
                 yield row, len(body)
+        if stats["corrupt"]:
+            _log.warning("skipped %d corrupt byte range(s) in WARC shard %s",
+                         stats["corrupt"], name or "<unnamed>")
 
 
 def _split_records(blobs, row_fn, columns, max_rows: int = None,

@@ -4,9 +4,13 @@ registry query on Spark and its DuckDB oracle on the same parquet dir,
 compare row counts + sorted values (column order normalized by name).
 
 Usage: python3 scripts/check_oracles.py [sf_dir] [query ...]
+
+Spark runs at local[$SPARK_GRAFT_CPUS], the variable bench.py reads and
+the tier-1 command in ROADMAP.md exports; unset, it uses every core.
 """
 
 import math
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -39,7 +43,8 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:] or list(registry.QUERIES)
 
-    spark = build_session(cpus=8, driver_memory="6g")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = build_session(cpus=cpus, driver_memory="6g")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

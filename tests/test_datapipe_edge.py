@@ -69,7 +69,8 @@ EDGE_QUERIES = [
     # single-member clusters are exactly edge-corpus territory)
     "dedup_representatives", "weighted_sample_topk",
     "multimodal_meta", "image_resize_meta", "audio_meta",
-    "video_frame_sample", "image_phash", "audio_energy_fingerprint",
+    "video_frame_sample", "image_phash", "image_phash_near_pairs",
+    "audio_energy_fingerprint",
     # r9 (ADVICE r8, low): the seven documents-only batch 14-17 ops that
     # were missing from this list — pure regression guard so future
     # Spark/DuckDB string-edge divergences in these kernels fail here

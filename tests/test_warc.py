@@ -50,6 +50,38 @@ def test_garbage_between_records_resyncs_and_is_counted():
     assert len(recs2) == 4 and bad2 == 1
 
 
+def test_spark_splitter_logs_the_corrupt_range_count(caplog):
+    """The Spark shard splitter drops no corruption silently: it logs the
+    shard's corrupt-range count, the same figure the eager parse returns,
+    and its rows are the eager parse's."""
+    import logging
+    import re
+
+    import pandas as pd
+
+    _, triples = _triples(4)
+    parts = [warc.encode_warc([t]) for t in triples]
+    blob = parts[0] + b"\x00garbage-without-magic\x00" + b"".join(parts[1:])
+    recs, bad = warc.parse_warc(blob)
+    assert bad == 1
+    with caplog.at_level(logging.WARNING, logger=warc.__name__):
+        frames = list(warc.split_warc_batches(iter([pd.DataFrame(
+            {"path": ["file:/shards/part-7.warc"], "content": [blob]})])))
+    assert list(pd.concat(frames)["url"]) == [r[0] for r in recs]
+    logged = [rec.getMessage() for rec in caplog.records
+              if rec.name == warc.__name__]
+    assert len(logged) == 1 and "part-7.warc" in logged[0]
+    assert int(re.search(r"skipped (\d+) corrupt", logged[0]).group(1)) \
+        == bad
+
+    # a clean shard logs nothing
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=warc.__name__):
+        list(warc.split_warc_batches(iter([pd.DataFrame(
+            {"content": [b"".join(parts)]})])))
+    assert not [rec for rec in caplog.records if rec.name == warc.__name__]
+
+
 def test_header_without_colon_is_corrupt_not_fatal():
     _, triples = _triples(2)
     good = warc.encode_warc([triples[1]])
