@@ -12,13 +12,69 @@ semantics*: a Spark DataFrame implementation and a DuckDB oracle.  The only
 primitives used on both sides are md5 (identical hex), substr (1-based),
 lexicographic string min, and integer arithmetic — no engine-specific hash
 functions, so value-hash comparisons are exact.
+
+Tokenization lives here and nowhere else.  A text's tokens come from
+trimming its spaces and splitting it on runs of ``WS``, the class
+``[\\t\\n\\f\\r ]``: RE2's ``\\s``, which the oracles' ``'\\s+'`` means.
+Spark's Java ``\\s`` would also split on vertical tab (``\\x0B``), so the
+Spark side never spells ``\\s``.  There are two rules:
+
+* raw (:func:`split_tokens`): the split array as it falls, empty tokens
+  kept — ``""`` and ``"\\t\\r\\n \\r\\n\\t"`` give ``['']`` and
+  ``['', '']``.  Chunking, the MinHash shingles, containment and
+  decontamination use it (oracle: ``string_split_regex`` unfiltered);
+* filtered (:func:`tokens`, :func:`token_rows`): the same array with the
+  empty tokens dropped (oracle: ``TOKEN_LIST_SQL``, ``TOKS_CTE_SQL``).
 """
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+WS = r"[\t\n\f\r ]+"
+
+# the oracle forms of the filtered rule: one (doc_id, tok) row per token,
+# and one token list per document (``text`` in scope)
+TOKS_CTE_SQL = """toks AS (
+  SELECT doc_id, tok
+  FROM (SELECT d.doc_id, unnest(string_split_regex(trim(d.text, ' '), '\\s+')) AS tok
+        FROM documents d)
+  WHERE length(tok) > 0
+)"""
+
+TOKEN_LIST_SQL = """list_filter(string_split_regex(trim(text, ' '), '\\s+'),
+                     x -> length(x) > 0)"""
+
 
 def _documents(spark, sf_dir: str):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def split_tokens(col="text"):
+    """The raw rule: ``col`` trimmed of spaces, split on ``WS``."""
+    return F.split(F.trim(col), WS)
+
+
+def tokens(col="text"):
+    """The filtered rule: :func:`split_tokens` without empty tokens."""
+    return F.filter(split_tokens(col), lambda x: F.length(x) > 0)
+
+
+def token_rows(docs, *cols):
+    """One (doc_id, *cols, tok) row per filtered token of ``text``."""
+    return (docs.select("doc_id", *cols,
+                        F.explode(split_tokens()).alias("tok"))
+            .filter(F.length("tok") > 0))
+
+
+def ngrams(toks: str, n: int):
+    """Every window of ``n`` consecutive tokens of the projected array
+    column ``toks``, joined by single spaces; no window (an empty array)
+    when the array is shorter than ``n``."""
+    return F.expr(f"CASE WHEN size({toks}) >= {n} THEN"
+                  f" transform(sequence(1, size({toks}) - {n - 1}),"
+                  f" i -> array_join(slice({toks}, i, {n}), ' '))"
+                  f" ELSE array() END")
 
 
 def spread(df):

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _documents, spread
+from . import WS, _documents, spread, split_tokens, textstats
 from .dedup import (MINHASH_LSH_PAIRS_SQL, MINHASH_SIG_CTES,
                     minhash_signatures)
 
@@ -31,16 +31,15 @@ PROP_ROUNDS = 3
 
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(_documents(spark, sf_dir))
-    toks = F.split(F.trim("text"), r"\s+")
     return (docs
-            .select("doc_id", toks.alias("toks"))
+            .select("doc_id", split_tokens().alias("toks"))
             .select("doc_id",
                     F.posexplode(F.expr(
                         f"transform(sequence(1, greatest(1, size(toks) - {CHUNK_TOKENS - CHUNK_STRIDE}), {CHUNK_STRIDE}),"
                         f" i -> array_join(slice(toks, i, {CHUNK_TOKENS}), ' '))"))
                     .alias("chunk_idx", "chunk_text"))
             .withColumn("n_chunk_tokens",
-                        F.size(F.split("chunk_text", r"\s+"))))
+                        F.size(F.split("chunk_text", WS))))
 
 
 CHUNK_DOCUMENTS_SQL = f"""
@@ -290,9 +289,8 @@ def dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(best_logit) + a min(doc_id) tie-break — never a per-cluster
     sort of the members.
     """
-    from . import textstats as _textstats
     clusters = dedup_clusters_fixpoint(spark, sf_dir)
-    qual = _textstats.quality_classifier(spark, sf_dir) \
+    qual = textstats.quality_classifier(spark, sf_dir) \
         .select("doc_id", "logit")
     # j feeds three consumers (best, rep, the final select) — one narrow
     # (doc_id, cluster_id, logit) row per doc, materialized once so the
@@ -312,13 +310,11 @@ def dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("is_representative")))
 
 
-def _dedup_representatives_sql() -> str:
-    from . import textstats as _textstats
-    return f"""{_FIXPOINT_REACH_CTES},
+DEDUP_REPRESENTATIVES_SQL = f"""{_FIXPOINT_REACH_CTES},
 labels AS (
   SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id
 ),
-qual AS ({_textstats.QUALITY_CLASSIFIER_SQL}),
+qual AS ({textstats.QUALITY_CLASSIFIER_SQL}),
 j AS (
   SELECT l.doc_id, l.cluster_id, q.logit
   FROM labels l JOIN qual q ON q.doc_id = l.doc_id
@@ -341,6 +337,3 @@ FROM j
 JOIN best b ON b.cluster_id = j.cluster_id
 JOIN rep r ON r.cluster_id = j.cluster_id
 """
-
-
-DEDUP_REPRESENTATIVES_SQL = _dedup_representatives_sql()

@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import _documents, spread
+from . import (TOKEN_LIST_SQL, _documents, ngrams, spread, split_tokens,
+               token_rows, tokens)
 
 N_BANDS = 8
 SHINGLE = 3
@@ -48,7 +49,7 @@ def _token_shingles(docs: DataFrame) -> DataFrame:
     explode factor is n_tokens, not n_chars)."""
     docs = spread(docs)   # heavy explode map side: parallelize the scan
     return (docs
-            .select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
+            .select("doc_id", split_tokens().alias("toks"))
             .select("doc_id",
                     F.explode(F.expr(
                         "transform(sequence(1, greatest(1, size(toks) - 2)),"
@@ -193,14 +194,9 @@ def _word_grams(docs: DataFrame) -> DataFrame:
     5 tokens has NO 5-gram signal and emits no grams (it cannot pair),
     rather than pairing on a sub-unit fragment."""
     docs = spread(docs)   # heavy explode map side: parallelize the scan
-    ts = F.split(F.trim(F.col("text")), r"\s+")
-    grams = F.expr(
-        f"CASE WHEN size(ts) >= {CONTAINMENT_GRAM} THEN "
-        f"transform(sequence(1, size(ts) - {CONTAINMENT_GRAM - 1}),"
-        f" i -> array_join(slice(ts, i, {CONTAINMENT_GRAM}), ' ')) "
-        f"ELSE array() END")
-    return (docs.select("doc_id", ts.alias("ts"))
-            .select("doc_id", F.explode(grams).alias("g"))
+    return (docs.select("doc_id", split_tokens().alias("ts"))
+            .select("doc_id",
+                    F.explode(ngrams("ts", CONTAINMENT_GRAM)).alias("g"))
             .dropDuplicates(["doc_id", "g"]))
 
 
@@ -342,13 +338,17 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mins.selectExpr("doc_id", stack_expr)
 
 
-MINHASH_SIGNATURES_SQL = f"""
-WITH sh AS ({TOKEN_SHINGLES_SQL_CTE}), h AS (
+# the (sh, h) shingle-hash CTE chain: the double-hashing inputs of
+# every minhash signature oracle
+_MINHASH_H_CTES = f"""sh AS ({TOKEN_SHINGLES_SQL_CTE}), h AS (
   SELECT doc_id,
          (('0x' || substr(md5(sh), 1, 8))::BIGINT % {MINHASH_P}) AS h1,
          (('0x' || substr(md5(sh), 9, 8))::BIGINT % {MINHASH_P}) AS h2
   FROM sh
-)
+)"""
+
+MINHASH_SIGNATURES_SQL = f"""
+WITH {_MINHASH_H_CTES}
 SELECT doc_id, b.band::INT AS band,
        CAST(min((h1 + b.band * h2) % {MINHASH_P}) AS BIGINT) AS minhash
 FROM h, generate_series(0, {N_BANDS - 1}) b(band)
@@ -371,12 +371,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the (sh, h, sig) CTE chain shared by every SQL that needs the minhash
 # signature table (the pair product here, the star-edge cluster graph in
 # chunking.py)
-MINHASH_SIG_CTES = f"""sh AS ({TOKEN_SHINGLES_SQL_CTE}), h AS (
-  SELECT doc_id,
-         (('0x' || substr(md5(sh), 1, 8))::BIGINT % {MINHASH_P}) AS h1,
-         (('0x' || substr(md5(sh), 9, 8))::BIGINT % {MINHASH_P}) AS h2
-  FROM sh
-), sig AS (
+MINHASH_SIG_CTES = f"""{_MINHASH_H_CTES}, sig AS (
   SELECT doc_id, b.band AS band,
          min((h1 + b.band * h2) % {MINHASH_P}) AS minhash
   FROM h, generate_series(0, {N_BANDS - 1}) b(band)
@@ -406,10 +401,7 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative — both engines agree on two's-complement BIGINT.
     """
     docs = _documents(spark, sf_dir)
-    tokens = (docs
-              .select("doc_id",
-                      F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-              .filter(F.length("tok") > 0)
+    hashed = (token_rows(docs)
               .withColumn("md", F.md5("tok"))
               .withColumn("h_hi", F.conv(F.substring("md", 1, 8), 16, 10)
                           .cast("bigint"))
@@ -419,7 +411,7 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # minhash op uses for its band minima) — no bits crossJoin, no
     # 64x row expansion, no second shuffle: the map-side partial agg
     # reduces each task's tokens straight to one 64-column row per doc.
-    sums = tokens.groupBy("doc_id").agg(*[
+    sums = hashed.groupBy("doc_id").agg(*[
         F.sum(F.expr(
             "CASE WHEN (shiftright({h}, {sh}) & 1) = 1 THEN 1 ELSE -1 END"
             .format(h="h_lo" if bit < 32 else "h_hi",
@@ -438,8 +430,8 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_BITVAL = ("CASE WHEN bit = 63 THEN (-9223372036854775807 - 1)"
                " ELSE (1::BIGINT << bit) END")
 
-SIMHASH_SQL = f"""
-WITH toks AS (
+# the per-(doc, bit) vote sums both simhash oracles start from
+_SIMHASH_SUMS_CTES = f"""toks AS (
   SELECT doc_id, ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h
   FROM (SELECT d.doc_id, unnest(string_split_regex(trim(d.text, ' '), '\\s+')) AS tok
         FROM documents d)
@@ -450,7 +442,10 @@ WITH toks AS (
   FROM toks, generate_series(0, {SIMHASH_BITS - 1}) b(bit)
 ), sums AS (
   SELECT doc_id, bit, sum(c) AS s FROM contrib GROUP BY doc_id, bit
-)
+)"""
+
+SIMHASH_SQL = f"""
+WITH {_SIMHASH_SUMS_CTES}
 SELECT doc_id,
        CAST(sum(CASE WHEN s > 0 THEN {_SQL_BITVAL} ELSE 0 END)
             AS BIGINT) AS simhash
@@ -495,27 +490,16 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIMHASH_NEAR_PAIRS_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h
-  FROM (SELECT d.doc_id, unnest(string_split_regex(trim(d.text, ' '), '\\s+')) AS tok
-        FROM documents d)
-  WHERE length(tok) > 0
-), contrib AS (
-  SELECT doc_id, b.bit,
-         CASE WHEN (h >> b.bit) & 1 = 1 THEN 1 ELSE -1 END AS c
-  FROM toks, generate_series(0, {SIMHASH_BITS - 1}) b(bit)
-), sums AS (
-  SELECT doc_id, bit, sum(c) AS s FROM contrib GROUP BY doc_id, bit
-), sig AS (
+WITH {_SIMHASH_SUMS_CTES}, sig AS (
   SELECT doc_id,
          CAST(sum(CASE WHEN s > 0 THEN {_SQL_BITVAL} ELSE 0 END)
               AS BIGINT) AS simhash
   FROM sums GROUP BY doc_id
 ), keyed AS (
   SELECT s.doc_id, s.simhash, b.band,
-         (s.simhash >> (b.band * {SIMHASH_BITS // 4}))
-         & {(1 << (SIMHASH_BITS // 4)) - 1} AS band_key
-  FROM sig s, generate_series(0, 3) b(band)
+         (s.simhash >> (b.band * {SIMHASH_BITS // SIMHASH_BANDS}))
+         & {(1 << (SIMHASH_BITS // SIMHASH_BANDS)) - 1} AS band_key
+  FROM sig s, generate_series(0, {SIMHASH_BANDS - 1}) b(band)
 )
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
@@ -641,13 +625,9 @@ def benchmark_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     countDistinct over the few surviving rows.  No quadratic stage, no
     full-corpus-wide shuffle beyond the per-doc partial agg."""
     docs = spread(_documents(spark, sf_dir))
-    raw = (docs
-           .select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
-           .select("doc_id", F.explode(F.expr(
-               f"CASE WHEN size(toks) < {DECON_GRAM} THEN array()"
-               f" ELSE transform(sequence(1, size(toks) - {DECON_GRAM - 1}),"
-               f" i -> array_join(slice(toks, i, {DECON_GRAM}), ' ')) END"))
-           .alias("gram")))
+    raw = (docs.select("doc_id", split_tokens().alias("toks"))
+           .select("doc_id",
+                   F.explode(ngrams("toks", DECON_GRAM)).alias("gram")))
     is_bench = F.col("doc_id") % DECON_BENCH_EVERY == 0
     # distinct only on the tiny benchmark side (constant-sized at scale)
     bench_grams = raw.filter(is_bench).select("gram").distinct()
@@ -714,16 +694,9 @@ def duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice).  No windows, no self-join, nothing quadratic.
     """
     docs = spread(_documents(spark, sf_dir))
-    toked = docs.select(
-        "doc_id",
-        F.expr(r"filter(split(trim(text), '\\s+'), x -> length(x) > 0)")
-        .alias("toks"))
-    grams = (toked.filter(F.size("toks") >= DUPNGRAM_N)
+    grams = (docs.select("doc_id", tokens().alias("toks"))
              .select("doc_id",
-                     F.explode(F.expr(
-                         f"transform(sequence(1, size(toks) - {DUPNGRAM_N - 1}),"
-                         f" i -> array_join(slice(toks, i, {DUPNGRAM_N}), ' '))"))
-                     .alias("gram")))
+                     F.explode(ngrams("toks", DUPNGRAM_N)).alias("gram")))
     gf = grams.groupBy("gram").agg(F.count("*").alias("gf"))
     per_doc = (grams.join(gf, "gram")
                .groupBy("doc_id")
@@ -738,8 +711,7 @@ def duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 DUPLICATE_NGRAM_SPANS_SQL = f"""
 WITH toked AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text, ' '), '\\s+'),
-                     x -> length(x) > 0) AS toks
+         {TOKEN_LIST_SQL} AS toks
   FROM documents
 ), grams AS (
   SELECT doc_id, array_to_string(toks[i:i+{DUPNGRAM_N - 1}], ' ') AS gram

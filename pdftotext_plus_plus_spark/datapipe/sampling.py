@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from . import _documents, spread
+from . import _documents, spread, token_rows, tokens
 
 
 # ---------------------------------------------------------------------------
@@ -107,9 +107,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram_surprisal plan with a two-column dim.
     """
     docs = spread(_documents(spark, sf_dir))
-    toks = (docs.select("doc_id", "lang",
-                        F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-            .filter(F.length("tok") > 0))
+    toks = token_rows(docs, "lang")
     cnt = (toks.groupBy("tok")
            .agg(F.count("*").alias("c_r"),
                 F.sum((F.col("lang") == DSIR_TARGET_LANG).cast("long"))
@@ -195,8 +193,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic after that.  Nothing global, nothing quadratic.
     """
     docs = _documents(spark, sf_dir)
-    n_tokens = F.size(F.filter(F.split(F.trim("text"), r"\s+"),
-                               lambda t: F.length(t) > 0))
+    n_tokens = F.size(tokens())
     w = (Window.partitionBy("lang").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     d = docs.select("doc_id", "lang", n_tokens.alias("n_tokens"))

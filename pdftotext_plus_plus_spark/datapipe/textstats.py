@@ -8,7 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import _documents, spread
+from . import (TOKEN_LIST_SQL, TOKS_CTE_SQL, _documents, ngrams, spread,
+               token_rows, tokens)
 
 # tiny n-gram-free heuristic: share of English stopword tokens
 EN_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
@@ -17,12 +18,6 @@ STOPWORD_RATIO_EN = 0.05
 
 FP_WINDOW = 16
 FP_STRIDE = 8
-
-
-def _tokens(docs: DataFrame) -> DataFrame:
-    return (docs.select("doc_id",
-                        F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-            .filter(F.length("tok") > 0))
 
 
 def _sw_list_sql() -> str:
@@ -38,7 +33,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB this is one narrow pass: explode -> partial agg, no joins.
     """
-    toks = _tokens(_documents(spark, sf_dir))
+    toks = token_rows(_documents(spark, sf_dir))
     agg = (toks.groupBy("doc_id")
            .agg(F.count("*").alias("n_tok"),
                 F.sum(F.col("tok").isin(*EN_STOPWORDS).cast("int"))
@@ -51,12 +46,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LANG_ID_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, tok
-  FROM (SELECT d.doc_id, unnest(string_split_regex(trim(d.text, ' '), '\\s+')) AS tok
-        FROM documents d)
-  WHERE length(tok) > 0
-), agg AS (
+WITH {TOKS_CTE_SQL}, agg AS (
   SELECT doc_id, count(*) AS n_tok,
          CAST(sum(CASE WHEN tok IN ({_sw_list_sql()}) THEN 1 ELSE 0 END)
               AS BIGINT) AS n_sw
@@ -77,7 +67,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length / punctuation / mean-word-length quality features with a
     composite keep/drop flag — the C4-style filter shape."""
     docs = _documents(spark, sf_dir)
-    toks = _tokens(docs)
+    toks = token_rows(docs)
     tok_agg = (toks.groupBy("doc_id")
                .agg(F.count("*").alias("n_tok"),
                     F.sum(F.length("tok")).alias("tok_chars")))
@@ -98,13 +88,8 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "mean_tok_len", "punct_ratio", "keep"))
 
 
-QUALITY_SCORE_SQL = """
-WITH toks AS (
-  SELECT doc_id, tok
-  FROM (SELECT d.doc_id, unnest(string_split_regex(trim(d.text, ' '), '\\s+')) AS tok
-        FROM documents d)
-  WHERE length(tok) > 0
-), tok_agg AS (
+QUALITY_SCORE_SQL = f"""
+WITH {TOKS_CTE_SQL}, tok_agg AS (
   SELECT doc_id, count(*) AS n_tok, sum(length(tok)) AS tok_chars
   FROM toks GROUP BY doc_id
 )
@@ -130,20 +115,15 @@ FROM documents d JOIN tok_agg a ON a.doc_id = d.doc_id
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count + a BPE-ish subword estimate
     (ceil(len/4) pieces per whitespace token, integer math)."""
-    toks = _tokens(_documents(spark, sf_dir))
+    toks = token_rows(_documents(spark, sf_dir))
     return (toks.groupBy("doc_id")
             .agg(F.count("*").alias("n_ws_tokens"),
                  F.sum(F.floor((F.length("tok") + 3) / 4).cast("bigint"))
                  .alias("n_subwords")))
 
 
-TOKEN_COUNTS_SQL = """
-WITH toks AS (
-  SELECT doc_id, tok
-  FROM (SELECT d.doc_id, unnest(string_split_regex(trim(d.text, ' '), '\\s+')) AS tok
-        FROM documents d)
-  WHERE length(tok) > 0
-)
+TOKEN_COUNTS_SQL = f"""
+WITH {TOKS_CTE_SQL}
 SELECT doc_id, count(*) AS n_ws_tokens,
        CAST(sum(CAST(floor((length(tok) + 3) / 4) AS BIGINT))
             AS BIGINT) AS n_subwords
@@ -203,8 +183,6 @@ def lang_id_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer profiles, argmax score per doc (ties: lexicographically first
     language), 'unknown' below LANG_MIN_HITS.  One explode + broadcast-equi
     join + two narrow aggs — no UDF, no skew (profile keys are bounded)."""
-    from pyspark.sql import Window
-
     docs = _documents(spark, sf_dir)
     tris = (docs.select(
         "doc_id",
@@ -278,16 +256,8 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg); the per-doc top share is one ranking window bounded by
     document length.  At 100 TB this is explode -> two narrow aggs."""
     docs = _documents(spark, sf_dir)
-    grams = (docs
-             .withColumn("toks", F.expr(
-                 r"filter(split(trim(text), '\\s+'), x -> length(x) > 0)"))
-             # Guard the sub-2-token case: sequence(0, -1) auto-reverses to
-             # [0, -1] and toks[i + 1] would throw under ANSI mode.
-             .withColumn("gram", F.explode(F.expr(
-                 "CASE WHEN size(toks) < 2 THEN array()"
-                 " ELSE transform(sequence(0, size(toks) - 2),"
-                 " i -> concat(toks[i], ' ', toks[i + 1])) END")))
-             .select("doc_id", "gram"))
+    grams = (docs.select("doc_id", tokens().alias("toks"))
+             .select("doc_id", F.explode(ngrams("toks", 2)).alias("gram")))
     counts = grams.groupBy("doc_id", "gram").agg(F.count("*").alias("n"))
     w = Window.partitionBy("doc_id").orderBy(F.desc("n"), F.asc("gram"))
     per_doc = (counts
@@ -312,8 +282,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 REPETITION_STATS_SQL = f"""
 WITH toked AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text, ' '), '\\s+'),
-                     x -> length(x) > 0) AS toks
+         {TOKEN_LIST_SQL} AS toks
   FROM documents
 ), grams AS (
   SELECT doc_id, toks[i] || ' ' || toks[i + 1] AS gram
@@ -358,7 +327,7 @@ def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``orderBy().limit()`` compiles to TakeOrderedAndProject: each partition
     keeps its local top-N and the driver merges N-sized heaps — no global
     sort materialization at 100 TB."""
-    toks = _tokens(_documents(spark, sf_dir))
+    toks = token_rows(_documents(spark, sf_dir))
     return (toks.groupBy("tok")
             .agg(F.count("*").alias("tf"),
                  F.countDistinct("doc_id").alias("df"))
@@ -367,12 +336,7 @@ def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 VOCAB_TOP_TOKENS_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, tok
-  FROM (SELECT d.doc_id, unnest(string_split_regex(trim(d.text, ' '), '\\s+')) AS tok
-        FROM documents d)
-  WHERE length(tok) > 0
-)
+WITH {TOKS_CTE_SQL}
 SELECT tok, count(*) AS tf, count(DISTINCT doc_id) AS df
 FROM toks GROUP BY tok
 ORDER BY tf DESC, tok ASC
@@ -399,7 +363,7 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus doc count joins as a broadcast single-row frame (no driver
     action)."""
     docs = spread(_documents(spark, sf_dir))
-    toks = _tokens(docs)
+    toks = token_rows(docs)
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     df = tf.groupBy("tok").agg(F.count("*").alias("df"))
     total = docs.agg(F.count("*").alias("n_docs"))
@@ -415,12 +379,7 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TFIDF_KEYWORDS_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, tok
-  FROM (SELECT d.doc_id, unnest(string_split_regex(trim(d.text, ' '), '\\s+')) AS tok
-        FROM documents d)
-  WHERE length(tok) > 0
-), tf AS (
+WITH {TOKS_CTE_SQL}, tf AS (
   SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY doc_id, tok
 ), df AS (
   SELECT tok, count(*) AS df FROM tf GROUP BY tok
@@ -597,10 +556,7 @@ def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize ONCE per row (projected column), then derive all three
     # metrics from it — Catalyst does not reliably CSE repeated split
     # expressions across separate Column trees
-    toked = docs.select(
-        "doc_id",
-        F.expr(r"filter(split(trim(text), '\\s+'), x -> length(x) > 0)")
-        .alias("toks"))
+    toked = docs.select("doc_id", tokens().alias("toks"))
     d = toked.select(
         "doc_id",
         F.size("toks").alias("n_tok"),
@@ -624,13 +580,12 @@ def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 GOPHER_QUALITY_FILTER_SQL = f"""
 WITH t AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text, ' '), '\\s+'),
-                     x -> length(x) > 0) AS toks
+         {TOKEN_LIST_SQL} AS toks
   FROM documents
 ), m AS (
   SELECT doc_id, len(toks) AS n_tok,
          list_sum(list_transform(toks, x -> length(x))) AS sum_len,
-         len(list_filter(toks, x -> x IN ({{sw}}))) AS stopword_hits
+         len(list_filter(toks, x -> x IN ({_sw_list_sql()}))) AS stopword_hits
   FROM t
 )
 SELECT doc_id, n_tok,
@@ -646,7 +601,7 @@ SELECT doc_id, n_tok,
              AND stopword_hits >= {GOPHER_MIN_STOPWORD_HITS}
             THEN 1 ELSE 0 END AS keep
 FROM m
-""".replace("{sw}", ", ".join("'%s'" % w for w in EN_STOPWORDS))
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -685,7 +640,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document integer logit + keep verdict from the fixed-weight
     linear scorer."""
     docs = _documents(spark, sf_dir)
-    toks = _tokens(docs)
+    toks = token_rows(docs)
     feats = toks.groupBy("doc_id").agg(
         F.count("*").alias("n_tok"),
         F.expr("div(sum(length(tok)) * 1000, count(*))").alias("mlen_milli"),
@@ -718,7 +673,7 @@ WITH toks AS (
          count(*) AS n_tok,
          sum(length(tok)) * 1000 // count(*) AS mlen_milli,
          count(DISTINCT tok) * 1000000 // count(*) AS ttr_ppm,
-         sum(CASE WHEN tok IN ({{sw}}) THEN 1 ELSE 0 END) * 1000
+         sum(CASE WHEN tok IN ({_sw_list_sql()}) THEN 1 ELSE 0 END) * 1000
            // count(*) AS stop_pm
   FROM toks GROUP BY doc_id
 )
@@ -735,7 +690,7 @@ SELECT doc_id,
                  > {QC_THRESHOLD}
             THEN 1 ELSE 0 END AS keep
 FROM feats
-""".replace("{sw}", _sw_list_sql())
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -766,7 +721,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     token stream, one (doc_id) partial agg — the tfidf plan minus the
     ranking window."""
     docs = spread(_documents(spark, sf_dir))
-    toks = _tokens(docs)
+    toks = token_rows(docs)
     tf = toks.groupBy("tok").agg(F.count("*").alias("tf"))
     total = tf.agg(F.sum("tf").alias("total"))
     bits = (tf.crossJoin(F.broadcast(total))
@@ -785,12 +740,7 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 UNIGRAM_SURPRISAL_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, tok
-  FROM (SELECT d.doc_id, unnest(string_split_regex(trim(d.text, ' '), '\\s+')) AS tok
-        FROM documents d)
-  WHERE length(tok) > 0
-), tf AS (
+WITH {TOKS_CTE_SQL}, tf AS (
   SELECT tok, count(*) AS tf FROM toks GROUP BY tok
 ), bits AS (
   SELECT tok, length(printf('%b',
@@ -837,10 +787,7 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream — the unigram_surprisal plan with one extra bounded join.
     """
     docs = spread(_documents(spark, sf_dir))
-    toked = docs.select(
-        "doc_id",
-        F.expr(r"filter(split(trim(text), '\\s+'), x -> length(x) > 0)")
-        .alias("toks"))
+    toked = docs.select("doc_id", tokens().alias("toks"))
     bigrams = (toked.filter(F.size("toks") >= 2)
                .select("doc_id",
                        F.explode(F.expr(
@@ -871,8 +818,7 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 BIGRAM_SURPRISAL_SQL = f"""
 WITH toked AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text, ' '), '\\s+'),
-                     x -> length(x) > 0) AS toks
+         {TOKEN_LIST_SQL} AS toks
   FROM documents
 ), bigrams AS (
   SELECT doc_id, toks[i] AS prev, toks[i + 1] AS cur
@@ -953,11 +899,6 @@ def build_c4_corpus(n_docs: int = C4_N_DOCS, seed: int = 11):
     return rows
 
 
-def _c4_line_words(line_col):
-    return F.filter(F.split(F.trim(line_col), r"\s+"),
-                    lambda w: F.length(w) > 0)
-
-
 def c4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 rules as pure JVM higher-order functions — runs at scan speed.
 
@@ -970,13 +911,13 @@ def c4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = F.filter(
         lines,
         lambda l: l.rlike("[.!?]$")
-        & (F.size(_c4_line_words(l)) >= C4_MIN_WORDS_PER_LINE))
+        & (F.size(tokens(l)) >= C4_MIN_WORDS_PER_LINE))
     d = df.select(
         "url", "text",
         F.size(lines).alias("n_lines"),
         F.size(kept).alias("n_kept_lines"),
         F.aggregate(kept, F.lit(0),
-                    lambda acc, l: acc + F.size(_c4_line_words(l)))
+                    lambda acc, l: acc + F.size(tokens(l)))
         .alias("n_kept_words"))
     keep = ((F.col("n_kept_lines") >= C4_MIN_KEPT_LINES)
             & ~F.col("text").contains("{")

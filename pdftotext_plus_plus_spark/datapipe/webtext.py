@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from . import _documents, spread
+from . import TOKEN_LIST_SQL, _documents, spread, textstats, token_rows, tokens
 
 
 # ---------------------------------------------------------------------------
@@ -309,13 +309,17 @@ def bloom_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("is_fp")))
 
 
+# the probe indexes 0 .. BLOOM_K - 1 as an inline table t(j)
+_BLOOM_J = "(VALUES %s) AS t(j)" % ", ".join(
+    "(%d)" % j for j in range(BLOOM_K))
+
 BLOOM_URL_FILTER_SQL = f"""
 WITH urls AS ({CANON_URLS_SQL}),
 probes AS (
   SELECT doc_id, canon_url,
          ('0x' || substr(md5(canon_url), 1 + 8 * j, 8))::BIGINT
            % {BLOOM_M_BITS} AS bit
-  FROM urls CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(j)
+  FROM urls CROSS JOIN {_BLOOM_J}
 ),
 block AS (
   SELECT DISTINCT canon_url FROM urls WHERE doc_id % {BLOOM_BLOCK_MOD} = 0
@@ -323,7 +327,7 @@ block AS (
 bits AS (
   SELECT DISTINCT ('0x' || substr(md5(canon_url), 1 + 8 * j, 8))::BIGINT
            % {BLOOM_M_BITS} AS bit
-  FROM block CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(j)
+  FROM block CROSS JOIN {_BLOOM_J}
 ),
 hit AS (
   SELECT p.doc_id, p.canon_url,
@@ -431,9 +435,8 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-agg percentile (broadcast, then a map-side gate); ntile is the
     integer-exact form the oracle can hash-match.
     """
-    from . import textstats as _textstats
     docs = _documents(spark, sf_dir)
-    sur = _textstats.unigram_surprisal(spark, sf_dir) \
+    sur = textstats.unigram_surprisal(spark, sf_dir) \
         .select("doc_id", "mean_centibits")
     j = docs.select("doc_id", "lang").join(sur, "doc_id")
     w = Window.partitionBy("lang").orderBy("mean_centibits", "doc_id")
@@ -445,10 +448,8 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("tail")).alias("band"))
 
 
-def _perplexity_buckets_sql() -> str:
-    from . import textstats as _textstats
-    return f"""
-WITH sur AS ({_textstats.UNIGRAM_SURPRISAL_SQL}),
+PERPLEXITY_BUCKETS_SQL = f"""
+WITH sur AS ({textstats.UNIGRAM_SURPRISAL_SQL}),
 j AS (
   SELECT d.doc_id, d.lang, s.mean_centibits
   FROM documents d JOIN sur s ON s.doc_id = d.doc_id
@@ -506,7 +507,7 @@ def _edges(docs: DataFrame) -> DataFrame:
     e = (docs.select("doc_id").crossJoin(F.broadcast(n))
          .select(F.col("doc_id").alias("src"),
                  F.explode(js).alias("j"), "n")
-         .filter(F.col("j") <= 1 + F.col("src") % 3)
+         .filter(F.col("j") <= 1 + F.col("src") % PAGERANK_FANOUT)
          .select("src", F.expr("pmod(src * 7 + j, n)").alias("dst"))
          .filter(F.col("src") != F.col("dst")))
     return e
@@ -600,8 +601,6 @@ FROM it3 r
 LEFT JOIN deg g ON g.src = r.doc_id
 LEFT JOIN indeg i ON i.dst = r.doc_id
 """
-
-PERPLEXITY_BUCKETS_SQL = _perplexity_buckets_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -756,10 +755,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-dim equi-join is vocab-sized on both sides.
     """
     docs = spread(_documents(spark, sf_dir))
-    toks = (docs.select("doc_id",
-                        F.explode(F.split(F.trim("text"), r"\s+"))
-                        .alias("tok"))
-            .filter(F.length("tok") > 0))
+    toks = token_rows(docs)
     counts = (toks.groupBy("tok")
               .agg(F.countDistinct("doc_id").alias("df"),
                    F.count("*").alias("tf_total")))
@@ -857,10 +853,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone — no bigram materialization on that pass."""
     docs = spread(_documents(spark, sf_dir))
     # terms = word bigrams of the whitespace token stream
-    toked = docs.select(
-        "doc_id",
-        F.expr(r"filter(split(trim(text), '\\s+'), x -> length(x) > 0)")
-        .alias("t")).select(
+    unitoks = docs.select("doc_id", tokens().alias("t"))
+    toked = unitoks.select(
         "doc_id",
         # zip_with of the two shifted slices == the old
         # transform(sequence, i -> concat(element_at(i), element_at(i+1)))
@@ -874,10 +868,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("toks"))
     # dl (bigram count) straight from the unigram array length: same value
     # as size(toks) without building the bigram strings for this pass
-    lens = docs.select(
-        "doc_id",
-        F.expr(r"filter(split(trim(text), '\\s+'), x -> length(x) > 0)")
-        .alias("t")).select(
+    lens = unitoks.select(
         "doc_id",
         F.expr("CASE WHEN size(t) >= 2 THEN size(t) - 1 ELSE 0 END")
         .alias("dl"))
@@ -930,8 +921,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 BM25_TOPK_SQL = f"""
 WITH unitoks AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text, ' '), '\\s+'),
-                     x -> length(x) > 0) AS t
+         {TOKEN_LIST_SQL} AS t
   FROM documents
 ), toked AS (
   SELECT doc_id,
@@ -1308,13 +1298,12 @@ def ccnet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds from a percentile sort-agg; ntile is the integer-exact
     form the oracle can hash-match (the perplexity_buckets note).
     """
-    from . import textstats as _textstats
     # NOTE: no spread() here — the composed unigram_surprisal already
     # spreads the token-heavy branch; this function's own branch is one
     # md5 hash-agg (the exact_dedup shape), for which the extra exchange
     # measured as a pure regression (r9)
     docs = _documents(spark, sf_dir)
-    sur = _textstats.unigram_surprisal(spark, sf_dir) \
+    sur = textstats.unigram_surprisal(spark, sf_dir) \
         .select("doc_id", "mean_centibits")
     keyed = docs.select("doc_id", "lang", F.md5("text").alias("h"))
     keep_ids = keyed.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
@@ -1337,10 +1326,8 @@ def ccnet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                     keep.alias("keep"))
 
 
-def _ccnet_pipeline_sql() -> str:
-    from . import textstats as _textstats
-    return f"""
-WITH sur AS ({_textstats.UNIGRAM_SURPRISAL_SQL}),
+CCNET_PIPELINE_SQL = f"""
+WITH sur AS ({textstats.UNIGRAM_SURPRISAL_SQL}),
 keyed AS (
   SELECT d.doc_id, d.lang, md5(d.text) AS h FROM documents d
 ),
@@ -1368,9 +1355,6 @@ SELECT doc_id, lang, mean_centibits, is_first_copy,
        CASE WHEN is_first_copy = 1 AND t <= 2 THEN 1 ELSE 0 END AS keep
 FROM b
 """
-
-
-CCNET_PIPELINE_SQL = _ccnet_pipeline_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -1613,11 +1597,7 @@ def postings_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle hashes).
     """
     docs = _documents(spark, sf_dir)
-    toks = (docs.select("doc_id",
-                        F.explode(F.split(F.trim("text"), r"\s+"))
-                        .alias("tok"))
-            .filter(F.length("tok") > 0)
-            .dropDuplicates(["tok", "doc_id"]))
+    toks = token_rows(docs).dropDuplicates(["tok", "doc_id"])
     w = Window.partitionBy("tok").orderBy("doc_id")
     gaps = toks.withColumn(
         "gap", F.col("doc_id") - F.coalesce(F.lag("doc_id").over(w),

@@ -45,6 +45,7 @@ EDGE_TEXTS = [
     "  padded  ",                              # 17 leading/trailing spaces
     "line1\r\nline2\rline3\nline4",            # 18 every newline convention
     "the quick brown fox jumps over the lazy dog and runs away today",  # 19
+    "tab\x0bbed vertical\x0btab text",         # 20 vertical tab: not RE2 \s
 ]
 
 
@@ -77,6 +78,10 @@ EDGE_QUERIES = [
     "host_template_ratio", "sitemap_extract", "content_type_sniff",
     "mirror_host_pairs", "length_percentiles", "change_rate_estimate",
     "postings_gap_stats",
+    # the remaining documents-only token queries: every query that
+    # tokenizes through datapipe's split helpers is gated here
+    "containment_pairs", "quality_classifier", "inverted_index",
+    "bm25_topk", "perplexity_buckets",
 ]
 
 
