@@ -38,6 +38,8 @@ from . import codec
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .kernel import STAGE_NAMES
 from .pipeline import STAGE_DECODE, STAGE_SERIALIZE, ExtractionResult, extract
+from .serializers import JSONL_UNITS, check_units
+from .visualization import UNIT_SCHEMES
 
 # stages with a summed ``ms_<stage>`` lineage column, in the reference's
 # --print-running-times order
@@ -91,7 +93,8 @@ def _arrow_schema(with_spans: bool, with_jsonl: bool = False,
                   with_svg: bool = False, with_pdf: bool = False,
                   with_timings: bool = False,
                   with_lineage: bool = False) -> pa.Schema:
-    """The kernel's output schema; the Spark schema is derived from it."""
+    """The kernel's output schema, and the one statement of its column
+    order; the Spark schema is derived from it."""
     fields = [
         ("url", pa.string()),
         ("extracted_text", pa.string()),
@@ -156,9 +159,7 @@ def _make_kernel(schema: pa.Schema, config: PipelineConfig, roles=None,
                 # whatever the pipeline raises on one document becomes
                 # that document's failure row, never a failed task
                 _log.warning("extraction raised on %s", url, exc_info=True)
-                res = ExtractionResult(extracted_text="\n",
-                                       extracted_text_extended="\n",
-                                       parse_failure_code=codec.ERR_KERNEL)
+                res = ExtractionResult.failed(codec.ERR_KERNEL)
             ms = (time.perf_counter() - t0) * 1000.0
             size = len(html) if html is not None else 0
 
@@ -175,22 +176,11 @@ def _make_kernel(schema: pa.Schema, config: PipelineConfig, roles=None,
             for name, v in res.timings_ms.items():
                 stage_ms[name] += v
 
-            out = [url, res.extracted_text, res.extracted_text_extended,
-                   res.parse_failure_code, res.n_pages, res.n_chars,
-                   res.n_words, res.n_lines, res.n_blocks, size, part_id, ms]
-            if with_spans:
-                out.append([vars(b) for b in res.blocks])
-            if jsonl_units:
-                out.append(res.jsonl)
-            if svg_units:
-                out.append(res.svg)
-            if pdf_units:
-                out.append(res.pdf)
-            if with_timings:
-                out.append(list(res.timings_ms.items()))
-            if with_lineage:
-                out.append(None)
-            return out
+            cols = dict(vars(res), url=url, payload_bytes=size,
+                        part_id=part_id, extract_ms=ms,
+                        blocks=[vars(b) for b in res.blocks],
+                        stage_ms=list(res.timings_ms.items()), _lineage=None)
+            return [cols[name] for name in schema.names]
 
         def to_batch(rows: list) -> pa.RecordBatch:
             return pa.RecordBatch.from_arrays(
@@ -220,7 +210,7 @@ def _make_kernel(schema: pa.Schema, config: PipelineConfig, roles=None,
                     if with_timings:
                         task.update((_stage_slug(name), v)
                                     for name, v in stage_ms.items())
-                    held[-1][-1] = task
+                    held[-1][schema.get_field_index("_lineage")] = task
                 yield to_batch(held)
         finally:
             if gc_was_enabled:
@@ -284,12 +274,16 @@ def extract_pages(df, config: PipelineConfig = DEFAULT_CONFIG,
     task's last row and NULL on all others."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
+    # an unknown unit fails the call here, not every row in the kernel
+    jsonl_units = (check_units(jsonl_units, JSONL_UNITS, "JSONL")
+                   if jsonl_units else None)
+    svg_units = (check_units(svg_units, UNIT_SCHEMES, "visualization")
+                 if svg_units else None)
+    pdf_units = (check_units(pdf_units, UNIT_SCHEMES, "visualization")
+                 if pdf_units else None)
+    roles = frozenset(roles) if roles else None
     # column pruning reaches the scan
     projected = salted_repartition(df.select("url", "html"), num_partitions)
-    roles = frozenset(roles) if roles else None
-    jsonl_units = tuple(jsonl_units) if jsonl_units else None
-    svg_units = tuple(svg_units) if svg_units else None
-    pdf_units = tuple(pdf_units) if pdf_units else None
     schema = _arrow_schema(with_spans, bool(jsonl_units), bool(svg_units),
                            bool(pdf_units), with_timings, with_lineage)
     return projected.mapInArrow(

@@ -26,6 +26,10 @@ Geometry parity with the reference's annotation emitter:
   filled square at (x1, y1) with the 1-based chosen index
   (…cpp:547-640, Config.h:762-768).
 
+The layers and their primitives come from ``visualization.walk``, the
+walk the SVG sink formats too; this module only adds the y flip and the
+color and line-width operators.
+
 Each unit layer is bracketed in REAL PDF marked content
 (``/Unit <</Name (blocks) /Page 1>> BDC … EMC``), and figure/shape rects
 carry their deterministic JSONL-parity id in an ``/Elem`` marked-content
@@ -42,14 +46,16 @@ from __future__ import annotations
 
 from typing import Iterable, List, Optional
 
-from .model import Doc, Page
-from .visualization import (ALL_UNITS, COLOR_SCHEMES, CUT_SQUARE_RADIUS,
-                            CUT_WIDTH, LABEL_FONT_SIZE,
-                            READING_ORDER_CIRCLE_RADIUS, UNIT_SCHEMES,
-                            _num, _page_elements)
+from .model import Doc
+from .visualization import (ALL_UNITS, BOX, COLOR_SCHEMES, CUT_SQUARE_RADIUS,
+                            CUT_WIDTH, LABEL_FONT_SIZE, ORDER_INDEX,
+                            ORDER_LINE, READING_ORDER_CIRCLE_RADIUS, ROLE,
+                            UNIT_SCHEMES, _num, walk)
 
 # Bezier circle constant: 4 cubic arcs with control distance k*r
 _BEZIER_K = 0.5523
+
+_WHITE = (1.0, 1.0, 1.0)
 
 
 def _rgb_ops(color, stroke: bool) -> str:
@@ -61,21 +67,6 @@ def _rgb_ops(color, stroke: bool) -> str:
 def _esc(text: str) -> str:
     return (text.replace("\\", r"\\").replace("(", r"\(")
             .replace(")", r"\)"))
-
-
-def _rect_ops(lx, uy, rx, ly, height, out: List[str],
-              elem_id: Optional[str] = None) -> None:
-    """Stroked rectangle; model coords (top-left origin) -> PDF re op
-    (bottom-left origin): the y flip the reference applies per annot."""
-    lx, rx = (lx, rx) if lx <= rx else (rx, lx)
-    uy, ly = (uy, ly) if uy <= ly else (ly, uy)
-    if elem_id is not None:
-        out.append("/Elem <</Id (%s)>> BDC" % _esc(elem_id))
-    out.append("%s %s %s %s re S"
-               % (_num(lx), _num(height - ly), _num(rx - lx),
-                  _num(ly - uy)))
-    if elem_id is not None:
-        out.append("EMC")
 
 
 def _text_ops(x, y, size: int, text: str, out: List[str],
@@ -104,94 +95,69 @@ def _circle_ops(cx, cy, r, out: List[str]) -> None:
     out.append("f")
 
 
-def _page_stream(page: Page, units, height: float) -> str:
-    """One page's content stream: a BDC/EMC-bracketed group per unit, in
-    the same layer order as the SVG sink."""
+def _page_stream(page_num: int, layers, height: float) -> str:
+    """One page's content stream: a BDC/EMC-bracketed group per unit, each
+    y flipped to ``height - y`` (the y flip the reference applies per
+    annot)."""
     ops: List[str] = []
-    for unit in units:
+    for unit, prims in layers:
         scheme = COLOR_SCHEMES[UNIT_SCHEMES[unit]]
-        ops.append("/Unit <</Name (%s) /Page %d>> BDC"
-                   % (unit, page.page_num))
+        ops.append("/Unit <</Name (%s) /Page %d>> BDC" % (unit, page_num))
         ops.append("1 w")
         ops.append(_rgb_ops(scheme[0], stroke=True))
-        if unit == "characters":
-            for row in page.char_cols.rows:
-                _rect_ops(row[0], row[1], row[2], row[3], height, ops)
-        elif unit == "blocks":
-            ops.append(_rgb_ops(scheme[0], stroke=False))
-            for block in page.blocks:
-                _rect_ops(block.left_x, block.upper_y, block.right_x,
-                          block.lower_y, height, ops)
+        if unit == "blocks":
+            ops.append(_rgb_ops(scheme[0], stroke=False))  # role labels
+        is_cuts = unit.endswith("_cuts")
+        if is_cuts:
+            ops.append("%s w" % _num(CUT_WIDTH))
+        for kind, *args in prims:
+            if kind == BOX:
+                lx, uy, rx, ly, elem_id = args
+                if elem_id is not None:
+                    ops.append("/Elem <</Id (%s)>> BDC" % _esc(elem_id))
+                ops.append("%s %s %s %s re S"
+                           % (_num(lx), _num(height - ly), _num(rx - lx),
+                              _num(ly - uy)))
+                if elem_id is not None:
+                    ops.append("EMC")
+            elif kind == ROLE:
                 # drawTextBlockSemanticRoles (…cpp:409-443): label rect
                 # lowerY = pageHeight - block.upperY (above the block top)
-                _text_ops(block.left_x, height - block.upper_y,
-                          LABEL_FONT_SIZE, block.role, ops)
-        elif unit == "reading_order":
-            _reading_order_ops(page, scheme, height, ops)
-        elif unit in ("segment_cuts", "reading_order_cuts"):
-            cuts = (page.segment_cuts if unit == "segment_cuts"
-                    else page.reading_order_cuts)
-            _cuts_ops(cuts, scheme, height, ops)
-        elif unit in ("figures", "shapes", "graphics"):
-            kind = unit[:-1]
-            for i, el in enumerate(_page_elements(page, unit)):
-                _rect_ops(el.left_x, el.upper_y, el.right_x, el.lower_y,
-                          height, ops,
-                          elem_id="%s-%d-%d" % (kind, page.page_num, i))
-        else:
-            for el in _page_elements(page, unit):
-                _rect_ops(el.left_x, el.upper_y, el.right_x, el.lower_y,
-                          height, ops)
+                x, y, role = args
+                _text_ops(x, height - y, LABEL_FONT_SIZE, role, ops)
+            elif kind == ORDER_LINE:
+                px, py, cx, cy = args
+                ops.append(_rgb_ops(scheme[0], stroke=True))
+                ops.append("%s %s m %s %s l S" % (
+                    _num(px), _num(height - py), _num(cx), _num(height - cy)))
+            elif kind == ORDER_INDEX:
+                x, y, idx = args
+                ops.append(_rgb_ops(scheme[0], stroke=False))
+                _circle_ops(x, height - y, READING_ORDER_CIRCLE_RADIUS, ops)
+                ops.append(_rgb_ops(_WHITE, stroke=False))
+                _text_ops(x, height - y, LABEL_FONT_SIZE, str(idx), ops,
+                          centered=True)
+            else:
+                x1, y1, x2, y2, idx = args
+                y1, y2 = height - y1, height - y2
+                ops.append(_rgb_ops(
+                    scheme[0] if idx else COLOR_SCHEMES["gray"][0],
+                    stroke=True))
+                ops.append("%s %s m %s %s l S"
+                           % (_num(x1), _num(y1), _num(x2), _num(y2)))
+                if idx:
+                    r = CUT_SQUARE_RADIUS
+                    ops.append(_rgb_ops(scheme[1], stroke=False))
+                    ops.append("%s %s %s %s re f"
+                               % (_num(x1 - r), _num(y1 - r), _num(2 * r),
+                                  _num(2 * r)))
+                    ops.append(_rgb_ops(_WHITE, stroke=False))
+                    _text_ops(x1, y1, LABEL_FONT_SIZE, str(idx), ops,
+                              centered=True)
+        if is_cuts:
+            ops.append("1 w")
         ops.append("EMC")
     return "\n".join(ops)
-
-
-def _reading_order_ops(page: Page, scheme, height: float,
-                       out: List[str]) -> None:
-    """drawReadingOrder (…cpp:445-548): block-midpoint polyline + 1-based
-    filled index circles (pages with >= 2 blocks, the pairwise loop)."""
-    blocks = page.blocks
-    mids = [((b.left_x + b.right_x) / 2.0,
-             height - (b.upper_y + b.lower_y) / 2.0) for b in blocks]
-    white = (1.0, 1.0, 1.0)
-    for i in range(1, len(blocks)):
-        (px, py), (cx, cy) = mids[i - 1], mids[i]
-        out.append(_rgb_ops(scheme[0], stroke=True))
-        out.append("%s %s m %s %s l S"
-                   % (_num(px), _num(py), _num(cx), _num(cy)))
-        for (x, y, idx) in (((px, py, i),)
-                            + (((cx, cy, i + 1),)
-                               if i == len(blocks) - 1 else ())):
-            out.append(_rgb_ops(scheme[0], stroke=False))
-            _circle_ops(x, y, READING_ORDER_CIRCLE_RADIUS, out)
-            out.append(_rgb_ops(white, stroke=False))
-            _text_ops(x, y, LABEL_FONT_SIZE, str(idx), out, centered=True)
-
-
-def _cuts_ops(cuts, scheme, height: float, out: List[str]) -> None:
-    """drawCuts (…cpp:547-640): width-2 candidate lines (gray when not
-    chosen); chosen cuts add a filled secondary square + white index."""
-    gray = COLOR_SCHEMES["gray"][0]
-    white = (1.0, 1.0, 1.0)
-    chosen_idx = 0
-    out.append("%s w" % _num(CUT_WIDTH))
-    for cut in cuts:
-        out.append(_rgb_ops(scheme[0] if cut.is_chosen else gray,
-                            stroke=True))
-        y1, y2 = height - cut.y1, height - cut.y2
-        out.append("%s %s m %s %s l S"
-                   % (_num(cut.x1), _num(y1), _num(cut.x2), _num(y2)))
-        if cut.is_chosen:
-            chosen_idx += 1
-            r = CUT_SQUARE_RADIUS
-            out.append(_rgb_ops(scheme[1], stroke=False))
-            out.append("%s %s %s %s re f"
-                       % (_num(cut.x1 - r), _num(y1 - r), _num(2 * r),
-                          _num(2 * r)))
-            out.append(_rgb_ops(white, stroke=False))
-            _text_ops(cut.x1, y1, LABEL_FONT_SIZE, str(chosen_idx), out,
-                      centered=True)
-    out.append("1 w")
 
 
 def serialize_pdf(doc: Optional[Doc],
@@ -204,11 +170,7 @@ def serialize_pdf(doc: Optional[Doc],
     through the PDF reproduces the model geometry at %.1f precision."""
     if doc is None:
         return ""
-    units = tuple(units)
-    for u in units:
-        if u not in UNIT_SCHEMES:
-            raise ValueError("unknown visualization unit: %r" % u)
-
+    pages = walk(doc, units)
     objects: List[str] = []   # 1-indexed body objects, in object order
 
     n_pages = len(doc.pages)
@@ -219,9 +181,9 @@ def serialize_pdf(doc: Optional[Doc],
     objects.append("<</Type /Pages /Kids [%s] /Count %d>>"
                    % (kids, n_pages))
     objects.append("<</Type /Font /Subtype /Type1 /BaseFont /Helvetica>>")
-    for i, page in enumerate(doc.pages):
+    for i, (page, layers) in enumerate(pages):
         width, height = page.clip_right_x, page.clip_lower_y
-        stream = _page_stream(page, units, height)
+        stream = _page_stream(page.page_num, layers, height)
         objects.append(
             "<</Type /Page /Parent 2 0 R /MediaBox [0 0 %s %s] "
             "/Resources <</Font <</F1 3 0 R>>>> /Contents %d 0 R>>"

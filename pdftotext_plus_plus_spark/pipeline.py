@@ -52,6 +52,13 @@ class ExtractionResult:
     pdf: str = ""
     doc: Optional[Doc] = None
 
+    @classmethod
+    def failed(cls, code: int) -> "ExtractionResult":
+        """A document that yields no text: failure ``code``, and both TXT
+        surfaces as an empty document's "\\n"."""
+        return cls(extracted_text="\n", extracted_text_extended="\n",
+                   parse_failure_code=code)
+
 
 def extract(payload: Optional[bytes],
             config: PipelineConfig = DEFAULT_CONFIG,
@@ -72,17 +79,13 @@ def extract(payload: Optional[bytes],
     ``pdf_units`` produces the annotated-PDF form of the same layers
     (the reference's literal artifact shape, pdfviz.py).
     """
-    result = ExtractionResult()
-
     t0 = time.perf_counter() if with_timings else 0.0
     doc, failure = codec.decode_payload(payload)
+    result = (ExtractionResult() if doc is not None
+              else ExtractionResult.failed(failure))
     if with_timings:
         result.timings_ms[STAGE_DECODE] = (time.perf_counter() - t0) * 1000.0
-
     if doc is None:
-        result.parse_failure_code = failure
-        result.extracted_text = "\n"  # empty document serializes to "\n"
-        result.extracted_text_extended = "\n"
         return result
 
     try:
@@ -90,8 +93,8 @@ def extract(payload: Optional[bytes],
             doc, config, timings_ms=result.timings_ms if with_timings else None)
 
         t2 = time.perf_counter() if with_timings else 0.0
-        result.extracted_text = serializers.serialize_txt(doc, roles)
-        result.extracted_text_extended = serializers.serialize_txt_extended(
+        (result.extracted_text,
+         result.extracted_text_extended) = serializers.serialize_text(
             doc, roles)
         if jsonl_units:
             result.jsonl = serializers.serialize_jsonl(doc, jsonl_units, roles)

@@ -28,6 +28,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pdftotext_plus_plus_spark.serializers import JSONL_UNITS  # noqa: E402
+
 
 def main() -> None:
     parser = argparse.ArgumentParser(description=__doc__)
@@ -41,10 +43,9 @@ def main() -> None:
                         help="only serialize blocks with these roles "
                              "(repeatable; default: all roles)")
     parser.add_argument("--type", action="append", default=None,
-                        dest="units",
+                        dest="units", choices=JSONL_UNITS,
                         help="also emit a JSONL column with these element "
-                             "types (pages/blocks/words/characters/figures/"
-                             "shapes; repeatable)")
+                             "types (repeatable)")
     parser.add_argument("--skip-dehyphenation", action="store_true")
     parser.add_argument("--skip-reading-order", action="store_true")
     parser.add_argument("--skip-diacritics-merging", action="store_true")

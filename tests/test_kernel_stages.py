@@ -81,8 +81,8 @@ def test_dehyphenation_merged_text():
     place_line(page, ["some", "frag-"], 50.0, 100.0)
     place_line(page, ["ment", "here"], 50.0, 109.0)
     doc = run([page.to_dict()])
-    from pdftotext_plus_plus_spark.serializers import serialize_txt
-    assert serialize_txt(doc) == "some fragment here\n"
+    from pdftotext_plus_plus_spark.serializers import serialize_text
+    assert serialize_text(doc)[0] == "some fragment here\n"
 
 
 def test_stacked_math_symbol_merge():

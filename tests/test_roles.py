@@ -84,8 +84,8 @@ def test_role_filter_serialization():
     rng = random.Random(11)
     payload, _ = fixtures.FAMILY_BUILDERS["headings"](rng)
     res = pipeline.extract(payload, config=ROLES_ON, keep_doc=True)
-    full = serializers.serialize_txt(res.doc)
-    only_para = serializers.serialize_txt(res.doc, roles={"paragraph"})
+    full = serializers.serialize_text(res.doc)[0]
+    only_para = serializers.serialize_text(res.doc, roles={"paragraph"})[0]
     assert len(only_para) < len(full)
     title_text = res.doc.pages[0].blocks[0].text
     assert title_text.split()[0] in full

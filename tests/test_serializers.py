@@ -5,6 +5,8 @@ import random
 
 from dataclasses import replace
 
+import pytest
+
 from pdftotext_plus_plus_spark import fixtures, pipeline, serializers
 from pdftotext_plus_plus_spark.config import DEFAULT_CONFIG
 
@@ -159,3 +161,21 @@ def test_jsonl_field_fidelity_reference_semantics():
         keys = re.findall(r'"([^"\\]+)":', line)
         assert keys == order[obj["type"]], (obj["type"], keys)
     assert any('"type": "shape"' in l for l in fig_lines)
+
+
+def test_unknown_jsonl_unit_raises():
+    """A unit the JSONL sink does not know fails the call instead of
+    returning an empty JSONL string with code 0."""
+    rng = random.Random(3)
+    payload, _ = fixtures.FAMILY_BUILDERS["plain-1col"](rng)
+    with pytest.raises(ValueError, match="unknown JSONL unit: 'block'"):
+        pipeline.extract(payload, jsonl_units=("blocks", "block"))
+    doc, _ = _doc()
+    with pytest.raises(ValueError, match="unknown JSONL unit"):
+        serializers.serialize_jsonl(doc, units=("figure",))
+    assert serializers.serialize_jsonl(doc, units=()) == ""
+    # every known unit emits its records
+    text = serializers.serialize_jsonl(_doc("figures")[0],
+                                       serializers.JSONL_UNITS)
+    assert {json.loads(line)["type"] for line in text.splitlines()} == {
+        "page", "block", "word", "char", "figure", "shape"}

@@ -56,6 +56,25 @@ def test_kernel_exception_yields_failure_row(spark, nan_payload):
     assert (task["n_docs"], task["n_failures"]) == (5, 1)
 
 
+def test_unknown_units_fail_before_any_job(spark):
+    """An unknown JSONL, SVG or PDF unit fails extract_pages itself, before
+    any job runs, instead of turning every row into an ERR_KERNEL row."""
+    df = spark.createDataFrame([("u://1", bytearray(b"x"))],
+                               "url string, html binary")
+    sc = spark.sparkContext
+    sc.setJobGroup("unknown-units", "extract_pages with unknown units")
+    try:
+        for kwargs, sink in (({"jsonl_units": ("blocks", "block")}, "JSONL"),
+                             ({"svg_units": ("nonsense",)}, "visualization"),
+                             ({"pdf_units": ("not-a-unit",)},
+                              "visualization")):
+            with pytest.raises(ValueError, match="unknown %s unit" % sink):
+                engine.extract_pages(df, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("unknown-units") == []
+
+
 def test_salted_repartition_spreads_jumbos(spark, pages_df):
     out = engine.extract_pages(pages_df, num_partitions=4)
     parts = out.select("part_id").distinct().count()
