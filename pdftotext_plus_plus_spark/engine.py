@@ -371,6 +371,9 @@ def run_job(spark, input_path: str, output_path: str,
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
 
+    # an unknown unit fails before the input manifest is written
+    if jsonl_units:
+        jsonl_units = check_units(jsonl_units, JSONL_UNITS, "JSONL")
     pages = spark.read.parquet(input_path)
     data_path = output_path.rstrip("/") + "/data"
     lineage_path = output_path.rstrip("/") + "/lineage"

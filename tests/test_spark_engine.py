@@ -75,6 +75,18 @@ def test_unknown_units_fail_before_any_job(spark):
     assert sc.statusTracker().getJobIdsForGroup("unknown-units") == []
 
 
+def test_run_job_unknown_unit_writes_nothing(spark, pages_df, tmp_path):
+    """run_job rejects an unknown JSONL unit before it appends the input
+    manifest, so a failed call leaves no run_id behind."""
+    input_path = str(tmp_path / "pages")
+    output_path = tmp_path / "out"
+    pages_df.limit(4).write.parquet(input_path)
+    with pytest.raises(ValueError, match="unknown JSONL unit: 'block'"):
+        engine.run_job(spark, input_path, str(output_path),
+                       jsonl_units=("block",))
+    assert not output_path.exists()
+
+
 def test_salted_repartition_spreads_jumbos(spark, pages_df):
     out = engine.extract_pages(pages_df, num_partitions=4)
     parts = out.select("part_id").distinct().count()
