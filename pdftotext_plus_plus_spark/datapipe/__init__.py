@@ -77,6 +77,29 @@ def ngrams(toks: str, n: int):
                   f" ELSE array() END")
 
 
+def iterate(state, step, rounds, checkpoint=False, converged=None):
+    """The one iteration driver: apply ``step`` to ``state`` for
+    ``rounds`` rounds, or until ``converged(old, new)`` is true; return
+    ``(state, rounds_run)``.  With ``checkpoint``, each state is
+    ``localCheckpoint()``ed once, just before a later round or the test
+    reads it, so a step that reads its state twice cannot grow a tree of
+    2^rounds base plans; a fixed-round loop's last state is read by
+    nothing here and joins the caller's plan unmaterialized."""
+    def keep(df):
+        return df.localCheckpoint() if checkpoint else df
+
+    state = keep(state)
+    for n in range(1, rounds + 1):
+        new = step(state)
+        if converged is None and n == rounds:
+            return new, n
+        new = keep(new)
+        if converged is not None and converged(state, new):
+            return new, n
+        state = new
+    return state, rounds
+
+
 def spread(df):
     """Conditional round-robin repartition of a SMALL scan to the
     session's default parallelism (optimization guide §2.5, "input

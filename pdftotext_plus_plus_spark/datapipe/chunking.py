@@ -20,13 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import WS, _documents, spread, split_tokens, textstats
+from . import WS, _documents, iterate, spread, split_tokens, textstats
 from .dedup import (MINHASH_LSH_PAIRS_SQL, MINHASH_SIG_CTES,
                     minhash_signatures)
 
 CHUNK_TOKENS = 64
 CHUNK_STRIDE = 48
 PROP_ROUNDS = 3
+FIXPOINT_MAX_ROUNDS = 50
 
 
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,10 +119,9 @@ def _double_labels(labels: DataFrame) -> DataFrame:
                     .alias("label")))
 
 
-def propagate_to_fixpoint(edges: DataFrame, labels: DataFrame,
-                          max_rounds: int = 50,
-                          return_rounds: bool = False):
-    """Min-label propagation + pointer doubling, iterated to a fixpoint.
+def propagate_to_fixpoint(edges: DataFrame, labels: DataFrame):
+    """Min-label propagation + pointer doubling, iterated to a fixpoint;
+    returns ``(labels, rounds)``.
 
     Plain propagation needs diameter(graph) rounds — a 10^12-row graph
     with a long near-dup chain would iterate unboundedly.  Interleaving a
@@ -130,25 +130,16 @@ def propagate_to_fixpoint(edges: DataFrame, labels: DataFrame,
     is O(log diameter) — the round-count bound the large-star/small-star
     alternating algorithm provides, expressed as two joins per round.
 
-    Each round is localCheckpoint()ed: the labels materialize and the plan
-    lineage truncates, so the iteration count cannot blow up the DAG at
-    scale.  ``max_rounds`` is a safety bound only."""
-    labels = labels.localCheckpoint()
-    rounds = 0
-    for _ in range(max_rounds):
-        new_labels = _double_labels(
-            _propagate_round(edges, labels)).localCheckpoint()
-        rounds += 1
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "doc_id")
-                   .filter(F.col("n.label") != F.col("o.label"))
-                   .limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    if return_rounds:
-        return labels, rounds
-    return labels
+    :func:`iterate` checkpoints every round's labels, so the DAG stays
+    flat at scale; FIXPOINT_MAX_ROUNDS is a safety bound only."""
+    def unchanged(old: DataFrame, new: DataFrame) -> bool:
+        return (new.alias("n").join(old.alias("o"), "doc_id")
+                .filter(F.col("n.label") != F.col("o.label"))
+                .limit(1).count()) == 0
+
+    return iterate(labels,
+                   lambda cur: _double_labels(_propagate_round(edges, cur)),
+                   FIXPOINT_MAX_ROUNDS, checkpoint=True, converged=unchanged)
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,8 +154,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _documents(spark, sf_dir).select("doc_id")
     edges = _star_edges(docs, minhash_signatures(spark, sf_dir))
     labels = docs.select(F.col("doc_id"), F.col("doc_id").alias("label"))
-    for _ in range(2 * PROP_ROUNDS):
-        labels = _propagate_round(edges, labels)
+    labels, _ = iterate(labels, lambda cur: _propagate_round(edges, cur),
+                        2 * PROP_ROUNDS)
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
@@ -177,7 +168,7 @@ def dedup_clusters_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _documents(spark, sf_dir).select("doc_id")
     edges = _star_edges(docs, minhash_signatures(spark, sf_dir)).persist()
     labels = docs.select(F.col("doc_id"), F.col("doc_id").alias("label"))
-    out = propagate_to_fixpoint(edges, labels)
+    out, _ = propagate_to_fixpoint(edges, labels)
     return out.select("doc_id", F.col("label").alias("cluster_id"))
 
 

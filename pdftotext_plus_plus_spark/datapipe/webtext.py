@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from . import TOKEN_LIST_SQL, _documents, spread, textstats, token_rows, tokens
+from . import (TOKEN_LIST_SQL, _documents, iterate, spread, textstats,
+               token_rows, tokens)
 
 
 # ---------------------------------------------------------------------------
@@ -523,16 +524,19 @@ def rank_iterations(docs: DataFrame, edges: DataFrame,
     """
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     ed = edges.join(deg, "src")
-    ranks = docs.select("doc_id", init.cast("long").alias("r"))
-    for _ in range(PAGERANK_ITERS):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = (ed.join(ranks, ed.src == ranks.doc_id)
                    .select("dst", F.expr("div(r, deg)").alias("c")))
         sums = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (docs.select("doc_id")
-                 .join(sums, F.col("doc_id") == F.col("dst"), "left")
-                 .select("doc_id",
-                         (F.expr("div(850 * coalesce(s, 0), 1000)")
-                          + teleport).cast("long").alias("r")))
+        return (docs.select("doc_id")
+                .join(sums, F.col("doc_id") == F.col("dst"), "left")
+                .select("doc_id",
+                        (F.expr("div(850 * coalesce(s, 0), 1000)")
+                         + teleport).cast("long").alias("r")))
+
+    ranks, _ = iterate(docs.select("doc_id", init.cast("long").alias("r")),
+                       step, PAGERANK_ITERS)
     return ranks, deg
 
 
@@ -543,8 +547,8 @@ def link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the current rank vector on src and one hash aggregate on dst —
     the canonical distributed PageRank shuffle pair, both keyed, both
     AQE-skew-splittable.  Iterations chain as a fixed-depth DAG (3 here);
-    an open-ended fixpoint adds per-round localCheckpoint() exactly as
-    chunking.dedup_clusters_fixpoint does, so lineage stays bounded.
+    an open-ended fixpoint gives :func:`iterate` ``checkpoint=True`` and
+    a convergence test, so lineage stays bounded.
     """
     docs = _documents(spark, sf_dir)
     edges = _edges(docs)
@@ -639,36 +643,31 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair run in both directions — plus two 1-row total aggregates that
     broadcast back for the ppm rescale.  Iterations chain as a
     fixed-depth DAG; hot pages are ordinary skewed agg keys
-    (AQE-splittable).  An open-ended fixpoint adds per-round
-    localCheckpoint() exactly as dedup_clusters_fixpoint does."""
+    (AQE-splittable).  :func:`iterate` runs the half-steps as authority,
+    (hub, authority) x (HITS_ITERS - 1), then hub."""
     docs = _documents(spark, sf_dir)
     edges = _edges(docs)
-    hub = docs.select("doc_id", F.lit(1000).cast("long").alias("h"))
-    auth = None
-    for _ in range(HITS_ITERS):
-        # the totals coalesce to 1 so a degenerate corpus (no edges, or
-        # all mass on zero-out-degree pages) yields all-zero scores
-        # instead of NULL //-by-NULL rows
-        araw = (edges.join(hub, edges.src == hub.doc_id)
-                .groupBy("dst").agg(F.sum("h").alias("ar")))
-        ta = araw.agg(F.coalesce(F.sum("ar"), F.lit(1)).alias("ta"))
-        auth = (docs.select("doc_id")
-                .join(araw, F.col("doc_id") == F.col("dst"), "left")
-                .crossJoin(F.broadcast(ta))
+
+    def half(scores: DataFrame, via: str, to: str, name: str) -> DataFrame:
+        # (doc_id, score) summed along edges via -> to, as ppm of a total
+        # coalesced to 1, so no edges (or all mass on sinks) gives 0, not NULL
+        raw = (edges.join(scores, edges[via] == scores.doc_id)
+               .groupBy(to).agg(F.sum(scores.columns[1]).alias("raw")))
+        tot = raw.agg(F.coalesce(F.sum("raw"), F.lit(1)).alias("tot"))
+        return (docs.select("doc_id")
+                .join(raw, F.col("doc_id") == F.col(to), "left")
+                .crossJoin(F.broadcast(tot))
                 .select("doc_id",
-                        F.expr(f"div(coalesce(ar, 0) * {HITS_SCALE},"
-                               f" greatest(ta, 1))")
-                        .cast("long").alias("a")))
-        hraw = (edges.join(auth, edges.dst == auth.doc_id)
-                .groupBy("src").agg(F.sum("a").alias("hr")))
-        th = hraw.agg(F.coalesce(F.sum("hr"), F.lit(1)).alias("th"))
-        hub = (docs.select("doc_id")
-               .join(hraw, F.col("doc_id") == F.col("src"), "left")
-               .crossJoin(F.broadcast(th))
-               .select("doc_id",
-                       F.expr(f"div(coalesce(hr, 0) * {HITS_SCALE},"
-                              f" greatest(th, 1))")
-                       .cast("long").alias("h")))
+                        F.expr(f"div(coalesce(raw, 0) * {HITS_SCALE},"
+                               f" greatest(tot, 1))")
+                        .cast("long").alias(name)))
+
+    hub0 = docs.select("doc_id", F.lit(1000).cast("long").alias("h"))
+    auth, _ = iterate(half(hub0, "src", "dst", "a"),
+                      lambda a: half(half(a, "dst", "src", "h"),
+                                     "src", "dst", "a"),
+                      HITS_ITERS - 1)
+    hub = half(auth, "dst", "src", "h")
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     indeg = edges.groupBy("dst").agg(F.count("*").alias("in_deg"))
     return (auth.join(hub, "doc_id")
@@ -1056,8 +1055,8 @@ FROM tot t JOIN top p ON p.dst = t.dst
 # EXCEPT in "cycle decades" ((doc_id // 10) % 97 == 0), where the landing
 # page redirects back to the top, closing a 10-cycle (redirect loops are
 # a real crawl pathology the resolver must not hang on)
-REDIRECT_MAX_HOPS = 16          # 2^REDIRECT_DOUBLINGS
 REDIRECT_DOUBLINGS = 4
+REDIRECT_MAX_HOPS = 2 ** REDIRECT_DOUBLINGS
 
 
 def _redirect_edges(docs: DataFrame) -> DataFrame:
@@ -1083,7 +1082,7 @@ def redirect_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     terminates.  Pointer doubling squares the mapping each round
     (f -> f(f)): REDIRECT_DOUBLINGS=4 self-equi-joins of the N-row
     mapping table (each co-partitioned on the join key, AQE-planned)
-    resolve any chain up to {16} hops, and a cycle simply stops making
+    resolve any chain up to 16 hops, and a cycle simply stops making
     progress — `resolved` = the final node has no outgoing redirect,
     checked with one broadcast-able left join.  Hop counts accumulate
     exactly (h' = h + h.(f)), so the output is integer-exact.
@@ -1097,19 +1096,17 @@ def redirect_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.coalesce("dst", F.col("doc_id")).alias("nxt"),
                  F.when(F.col("dst").isNull(), F.lit(0))
                  .otherwise(F.lit(1)).alias("hops")))
-    for _ in range(REDIRECT_DOUBLINGS):
-        # checkpoint each round: the doubling references m TWICE, and
-        # without materialization Catalyst expands the self-reference
-        # into a full binary tree (2^rounds copies of the base plan) —
-        # the dedup_clusters_fixpoint per-round pattern, for the same
-        # reason; on a cluster this is `checkpoint()` to durable storage
-        m = m.localCheckpoint(eager=True)
+
+    def double(m: DataFrame) -> DataFrame:
         m2 = m.select(F.col("doc_id").alias("k"),
                       F.col("nxt").alias("nxt2"),
                       F.col("hops").alias("hops2"))
-        m = (m.join(m2, m.nxt == m2.k)
-             .select("doc_id", F.col("nxt2").alias("nxt"),
-                     (F.col("hops") + F.col("hops2")).alias("hops")))
+        return (m.join(m2, m.nxt == m2.k)
+                .select("doc_id", F.col("nxt2").alias("nxt"),
+                        (F.col("hops") + F.col("hops2")).alias("hops")))
+
+    # double reads m twice: checkpointed rounds keep the plan flat
+    m, _ = iterate(m, double, REDIRECT_DOUBLINGS, checkpoint=True)
     has_out = edges.select(F.col("src").alias("nxt")).distinct() \
         .withColumn("dangling", F.lit(1))
     return (m.join(has_out, "nxt", "left")

@@ -237,7 +237,7 @@ def test_dedup_clusters_fixpoint_long_chain(spark):
     """A chain longer than PROP_ROUNDS hops: the bounded variant
     under-merges, the fixpoint variant labels the whole chain with its
     minimum (and needs per-round checkpointing to terminate)."""
-    from pdftotext_plus_plus_spark.datapipe import chunking
+    from pdftotext_plus_plus_spark.datapipe import chunking, iterate
 
     # chain 0-1-2-...-9 (9 hops) plus an isolated node 100
     docs = spark.createDataFrame([(i,) for i in list(range(10)) + [100]],
@@ -247,13 +247,13 @@ def test_dedup_clusters_fixpoint_long_chain(spark):
     edges = chunking._undirected_edges(docs, pairs)
     labels = docs.selectExpr("doc_id", "doc_id AS label")
 
-    bounded = labels
-    for _ in range(chunking.PROP_ROUNDS):
-        bounded = chunking._propagate_round(edges, bounded)
+    bounded, _ = iterate(labels,
+                         lambda cur: chunking._propagate_round(edges, cur),
+                         chunking.PROP_ROUNDS)
     bounded_map = {r.doc_id: r.label for r in bounded.collect()}
     assert bounded_map[9] != 0  # 9 hops away: NOT merged in 3 rounds
 
-    fixed = chunking.propagate_to_fixpoint(edges, labels)
+    fixed, _ = chunking.propagate_to_fixpoint(edges, labels)
     fixed_map = {r.doc_id: r.label for r in fixed.collect()}
     assert all(fixed_map[i] == 0 for i in range(10))
     assert fixed_map[100] == 100
@@ -287,10 +287,10 @@ def test_star_edges_linear_per_bucket(spark):
     fdocs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id")
     labels = fdocs.select("doc_id", F.col("doc_id").alias("label"))
-    via_star = chunking.propagate_to_fixpoint(
+    via_star, _ = chunking.propagate_to_fixpoint(
         chunking._star_edges(fdocs, dedup.minhash_signatures(spark, SF_DIR))
         .persist(), labels)
-    via_pairs = chunking.propagate_to_fixpoint(
+    via_pairs, _ = chunking.propagate_to_fixpoint(
         chunking._undirected_edges(
             fdocs, dedup.minhash_lsh_pairs(spark, SF_DIR)).persist(), labels)
     assert ({r.doc_id: r.label for r in via_star.collect()}
@@ -377,8 +377,7 @@ def test_fixpoint_long_chain_bounded_rounds(spark):
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
     edges = chunking._undirected_edges(docs, pairs)
     labels = docs.select("doc_id", F.col("doc_id").alias("label"))
-    out, rounds = chunking.propagate_to_fixpoint(edges, labels,
-                                                 return_rounds=True)
+    out, rounds = chunking.propagate_to_fixpoint(edges, labels)
     got = {r["doc_id"]: r["label"] for r in out.collect()}
     assert got == {i: 0 for i in range(n)}
     assert rounds <= 12, rounds

@@ -82,6 +82,11 @@ EDGE_QUERIES = [
     # tokenizes through datapipe's split helpers is gated here
     "containment_pairs", "quality_classifier", "inverted_index",
     "bm25_topk", "perplexity_buckets",
+    # the graph queries on the iteration driver: with 21 documents the
+    # outlink graph's pmod(.., n) wraps at a small n, ids 0-9 form one
+    # redirect cycle and ids 19 -> 10 a 9-hop redirect chain
+    "link_pagerank", "trust_propagation", "hits_scores",
+    "redirect_resolution",
 ]
 
 

@@ -194,6 +194,21 @@ def test_pagerank_plan_keyed_joins_only(spark):
     assert ".collect()" not in inspect.getsource(webtext.link_pagerank)
 
 
+def test_redirect_doubling_plan_stays_flat(spark):
+    """Each doubling reads the last mapping twice; the driver's
+    checkpoints keep that self-join from expanding the base plan into a
+    binary tree, so the optimized plan scans the documents table only
+    for the final dangling-node join (three scans: the down edges, the
+    cycle edges and their row count).  The last doubling itself stays in
+    the plan, reading the checkpointed mapping before it twice."""
+    df = webtext.redirect_resolution(spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    scans = [l for l in plan.splitlines()
+             if "Relation [" in l and l.endswith("parquet")]
+    assert len(scans) <= 3, plan
+    assert plan.count("LogicalRDD [") == 2, plan
+
+
 def test_robots_prefix_semantics_and_verdicts(spark):
     rows = webtext.robots_filter(spark, SF_DIR).collect()
     assert rows
