@@ -69,8 +69,13 @@ OK = 0
 ERR_EMPTY = 1
 ERR_MAGIC = 2
 ERR_TRUNCATED = 3
-# the payload decoded but the pipeline raised on it (engine kernel)
+# the payload decoded but a kernel stage or a sink raised on it
 ERR_KERNEL = 4
+
+# a failure row's cause for a caught exception is "<ExceptionType>:
+# <message>", cut to a fixed length so the row stays small and its bytes
+# depend only on the exception
+CAUSE_CHARS = 200
 
 _CHAR_FIELDS_V1 = 9
 _CHAR_FIELDS = 10
@@ -81,6 +86,10 @@ class PayloadError(Exception):
     def __init__(self, code: int, msg: str):
         super().__init__(msg)
         self.code = code
+
+
+def cause_of(exc: BaseException) -> str:
+    return ("%s: %s" % (type(exc).__name__, exc))[:CAUSE_CHARS]
 
 
 # ---------------------------------------------------------------------------
@@ -99,6 +108,19 @@ def _pack_u32_blob(items: List[List[int]]) -> bytes:
     np.cumsum([len(u) for u in items], out=offsets[1:])
     flat = np.array([u for us in items for u in us], dtype="<u4")
     return offsets.tobytes() + flat.tobytes()
+
+
+def _pack_glyph_table(f: FontInfo) -> bytes:
+    """A font's fontMatrix and glyph-bbox table: 6 f64, u32 n_glyphs, then
+    (when n_glyphs) the names blob and n_glyphs * 4 f64, names sorted."""
+    glyphs = f.glyph_bboxes or {}
+    names = sorted(glyphs)
+    out = [struct.pack("<6d", *f.font_matrix), struct.pack("<I", len(names))]
+    if names:
+        out.append(_pack_str_blob(names))
+        out.append(np.asarray([glyphs[n] for n in names],
+                              dtype="<f8").reshape(len(names), 4).tobytes())
+    return b"".join(out)
 
 
 def encode_payload(fonts: List[FontInfo], pages: List[dict]) -> bytes:
@@ -125,33 +147,15 @@ def encode_payload(fonts: List[FontInfo], pages: List[dict]) -> bytes:
         out.append(struct.pack("<H", len(name_b)))
         out.append(name_b)
         out.append(struct.pack("<ddiB", f.ascent, f.descent, f.weight, flags))
+        prog = b""
         if version == VERSION_TYPE1:
             # v4 block: u32 prog_len + bytes; a 0-length program is
-            # followed by the v3-style matrix+glyph table so payloads
-            # mixing program-bearing and table-bearing fonts lose nothing
+            # followed by the v3 glyph table so payloads mixing
+            # program-bearing and table-bearing fonts lose nothing
             prog = getattr(f, "font_program", None) or b""
-            out.append(struct.pack("<I", len(prog)))
-            out.append(prog)
-            if not prog:
-                out.append(struct.pack("<6d", *f.font_matrix))
-                glyphs = f.glyph_bboxes or {}
-                names = sorted(glyphs)
-                out.append(struct.pack("<I", len(names)))
-                if names:
-                    out.append(_pack_str_blob(names))
-                    arr = np.asarray([glyphs[n] for n in names],
-                                     dtype="<f8").reshape(len(names), 4)
-                    out.append(arr.tobytes())
-        elif version >= VERSION_GLYPH_BBOX:
-            out.append(struct.pack("<6d", *f.font_matrix))
-            glyphs = f.glyph_bboxes or {}
-            names = sorted(glyphs)
-            out.append(struct.pack("<I", len(names)))
-            if names:
-                out.append(_pack_str_blob(names))
-                arr = np.asarray([glyphs[n] for n in names],
-                                 dtype="<f8").reshape(len(names), 4)
-                out.append(arr.tobytes())
+            out += [struct.pack("<I", len(prog)), prog]
+        if version >= VERSION_GLYPH_BBOX and not prog:
+            out.append(_pack_glyph_table(f))
 
     n_char_fields = (_CHAR_FIELDS_V3 if version >= VERSION_GLYPH_BBOX
                      else _CHAR_FIELDS)
@@ -253,6 +257,15 @@ class _Reader:
         flat = np.frombuffer(self.take(4 * total), dtype="<u4").tolist()
         offs = offsets.tolist()
         return [flat[offs[i]:offs[i + 1]] for i in range(n)]
+
+    def glyph_table(self, fi: FontInfo) -> None:
+        """Read :func:`_pack_glyph_table`'s block into ``fi``."""
+        fi.font_matrix = tuple(float(x) for x in self.f64s(6))
+        n_glyphs = self.u32()
+        if n_glyphs:
+            g_names = self.str_blob(n_glyphs)
+            g_boxes = self.f64s(n_glyphs * 4).reshape(n_glyphs, 4).tolist()
+            fi.glyph_bboxes = dict(zip(g_names, map(tuple, g_boxes)))
 
 
 def _resolve_text(raw_text: str, name: str, unicodes: List[int]) -> str:
@@ -417,149 +430,135 @@ def _general_page_cols(num, names, texts, unicodes, fonts, font_names,
                     unicodes=kept_unicodes)
 
 
-def decode_payload(payload: Optional[bytes]) -> Tuple[Optional[Doc], int]:
-    """Decode a payload into a Doc; returns (doc, failure_code).
+def decode_payload(payload: Optional[bytes]
+                   ) -> Tuple[Optional[Doc], int, Optional[str]]:
+    """Decode a payload into a Doc; returns (doc, failure_code, cause),
+    with cause None exactly when the code is OK.
 
     Never raises on malformed input — mirrors the reference's load check
     (PdfToTextPlusPlus.cpp:88-90) by reporting a failure code so one corrupt
-    document cannot abort a partition.
+    document cannot abort a partition.  Any other exception the decode
+    meets (a bad UTF-8 blob, an out-of-range font index) reads as
+    ERR_TRUNCATED, its cause naming the exception.
     """
-    if not payload:
-        return None, ERR_EMPTY
     try:
-        r = _Reader(payload)
-        if bytes(r.take(4)) != MAGIC:
-            return None, ERR_MAGIC
-        version = r.u16()
-        if version >= VERSION_GLYPH_BBOX:
-            char_fields = _CHAR_FIELDS_V3
-        elif version == 1:
-            char_fields = _CHAR_FIELDS_V1
-        else:
-            char_fields = _CHAR_FIELDS
-
-        doc = Doc()
-        n_fonts = r.u32()
-        fonts: List[FontInfo] = []
-        for _ in range(n_fonts):
-            name = bytes(r.take(r.u16())).decode("utf-8")
-            ascent, descent, weight, flags = struct.unpack("<ddiB", r.take(21))
-            fi = FontInfo(name=name, ascent=ascent, descent=descent,
-                          weight=weight,
-                          is_italic=bool(flags & 1), is_type3=bool(flags & 2),
-                          is_serif=bool(flags & 4),
-                          is_fixed_width=bool(flags & 8),
-                          is_symbolic=bool(flags & 16))
-            if version == VERSION_TYPE1:
-                # S4 deep path over RAW font-program bytes: parse the
-                # embedded Type 1 program into the same glyph-bbox table
-                # + matrix the v3 wire format carries precomputed; fonts
-                # without a program carry the v3-style table inline
-                prog_len = r.u32()
-                if prog_len:
-                    from . import fontfile
-                    # A malformed embedded program (truncated 255-number
-                    # encoding, div-by-zero charstring, self-recursive subr)
-                    # must not fail the whole document: degrade to
-                    # parsed=None (keep wire font metadata, no glyph bboxes)
-                    # — the reference likewise extracts nothing from a font
-                    # program its parser chokes on but still emits the text.
-                    prog_bytes = bytes(r.take(prog_len))
-                    try:
-                        parsed = fontfile.parse_type1(prog_bytes)
-                    except Exception:
-                        parsed = None
-                    if parsed is not None:
-                        fi.font_matrix = parsed["font_matrix"]
-                        fi.glyph_bboxes = parsed["glyph_bboxes"] or None
-                        fi.is_italic = fi.is_italic or parsed["is_italic"]
-                        if parsed["weight"] is not None:
-                            # program /Weight overrides; absent -> keep
-                            # the wire-encoded weight
-                            fi.weight = parsed["weight"]
-                else:
-                    fi.font_matrix = tuple(float(x) for x in r.f64s(6))
-                    n_glyphs = r.u32()
-                    if n_glyphs:
-                        g_names = r.str_blob(n_glyphs)
-                        g_boxes = r.f64s(n_glyphs * 4).reshape(n_glyphs, 4)
-                        fi.glyph_bboxes = {
-                            g_names[i]: (float(g_boxes[i][0]),
-                                         float(g_boxes[i][1]),
-                                         float(g_boxes[i][2]),
-                                         float(g_boxes[i][3]))
-                            for i in range(n_glyphs)}
-            elif version >= VERSION_GLYPH_BBOX:
-                fi.font_matrix = tuple(float(x) for x in r.f64s(6))
-                n_glyphs = r.u32()
-                if n_glyphs:
-                    g_names = r.str_blob(n_glyphs)
-                    g_boxes = r.f64s(n_glyphs * 4).reshape(n_glyphs, 4)
-                    fi.glyph_bboxes = {
-                        g_names[i]: (float(g_boxes[i][0]), float(g_boxes[i][1]),
-                                     float(g_boxes[i][2]), float(g_boxes[i][3]))
-                        for i in range(n_glyphs)}
-            fonts.append(fi)
-            doc.font_infos[name] = fi
-
-        font_names = [f.name for f in fonts]
-        n_pages = r.u32()
-        for _ in range(n_pages):
-            page_num = r.i32()
-            clip = r.f64s(4)
-            page = Page(page_num)
-            page.clip_left_x, page.clip_upper_y = float(clip[0]), float(clip[1])
-            page.clip_right_x, page.clip_lower_y = float(clip[2]), float(clip[3])
-
-            n_chars = r.u32()
-            deferred = []  # (figure_idx, char bbox) for clip-diverted chars
-            if n_chars:
-                num = r.f64s(n_chars * char_fields).reshape(n_chars, char_fields)
-                names = r.str_blob(n_chars)
-                names_empty = r.blob_all_empty
-                texts = r.str_blob(n_chars, lazy_ascii=True)
-                texts_ascii1 = r.blob_ascii1
-                unicodes = r.u32_blob(n_chars)
-                uni_empty = r.blob_all_empty
-                if names_empty and uni_empty and texts_ascii1 is not None:
-                    page.char_cols = _simple_page_cols(
-                        num, texts_ascii1, font_names, char_fields, page_num,
-                        deferred)
-                else:
-                    if texts is None:
-                        texts = list(texts_ascii1.decode("utf-8"))
-                    page.char_cols = _general_page_cols(
-                        num, names, texts, unicodes, fonts, font_names,
-                        char_fields, version >= VERSION_GLYPH_BBOX, page_num,
-                        deferred)
-
-            pending_figures = deferred
-            for kind, target in (("figure", page.figures),
-                                 ("shape", page.shapes),
-                                 ("graphic", page.graphics)):
-                n = r.u32()
-                if n:
-                    arr = r.f64s(n * 4).reshape(n, 4)
-                    for i in range(n):
-                        e = NonTextElement(kind)
-                        e.left_x, e.upper_y = float(arr[i][0]), float(arr[i][1])
-                        e.right_x, e.lower_y = float(arr[i][2]), float(arr[i][3])
-                        e.page_num = page_num
-                        e.rank = i
-                        target.append(e)
-
-            # clip-diverted chars expand their figure's bbox
-            for fig_idx, lx, uy, rx, ly in pending_figures:
-                if 0 <= fig_idx < len(page.figures):
-                    fig = page.figures[fig_idx]
-                    fig.left_x = min(fig.left_x, lx)
-                    fig.upper_y = min(fig.upper_y, uy)
-                    fig.right_x = max(fig.right_x, rx)
-                    fig.lower_y = max(fig.lower_y, ly)
-
-            doc.pages.append(page)
-        return doc, OK
+        return _decode(payload), OK, None
     except PayloadError as exc:
-        return None, exc.code
-    except Exception:
-        return None, ERR_TRUNCATED
+        return None, exc.code, str(exc)
+    except Exception as exc:
+        return None, ERR_TRUNCATED, cause_of(exc)
+
+
+def page_count(payload: bytes) -> int:
+    """A payload's page count, read after its font table."""
+    return _read_header(payload)[0].u32()
+
+
+def _read_header(payload: Optional[bytes]
+                 ) -> Tuple[_Reader, int, List[FontInfo]]:
+    """(reader at n_pages, version, fonts) of a payload."""
+    if not payload:
+        raise PayloadError(ERR_EMPTY, "empty payload")
+    r = _Reader(payload)
+    if bytes(r.take(4)) != MAGIC:
+        raise PayloadError(ERR_MAGIC, "bad magic")
+    version = r.u16()
+    fonts: List[FontInfo] = []
+    for _ in range(r.u32()):
+        name = bytes(r.take(r.u16())).decode("utf-8")
+        ascent, descent, weight, flags = struct.unpack("<ddiB", r.take(21))
+        fi = FontInfo(name=name, ascent=ascent, descent=descent,
+                      weight=weight,
+                      is_italic=bool(flags & 1), is_type3=bool(flags & 2),
+                      is_serif=bool(flags & 4),
+                      is_fixed_width=bool(flags & 8),
+                      is_symbolic=bool(flags & 16))
+        # v4: S4 deep path over RAW font-program bytes — parse the embedded
+        # Type 1 program into the same glyph-bbox table + matrix the v3
+        # wire format carries precomputed; fonts without a program carry
+        # the v3 table inline
+        prog_len = r.u32() if version == VERSION_TYPE1 else 0
+        if prog_len:
+            from . import fontfile
+            # A malformed embedded program (truncated 255-number encoding,
+            # div-by-zero charstring, self-recursive subr) degrades to
+            # parsed=None (wire font metadata, no glyph bboxes), not a
+            # failed document — the reference likewise extracts nothing
+            # from a program its parser chokes on but still emits the text.
+            prog_bytes = bytes(r.take(prog_len))
+            try:
+                parsed = fontfile.parse_type1(prog_bytes)
+            except Exception:
+                parsed = None
+            if parsed is not None:
+                fi.font_matrix = parsed["font_matrix"]
+                fi.glyph_bboxes = parsed["glyph_bboxes"] or None
+                fi.is_italic = fi.is_italic or parsed["is_italic"]
+                if parsed["weight"] is not None:
+                    # program /Weight overrides; absent -> keep the
+                    # wire-encoded weight
+                    fi.weight = parsed["weight"]
+        elif version >= VERSION_GLYPH_BBOX:
+            r.glyph_table(fi)
+        fonts.append(fi)
+    return r, version, fonts
+
+
+def _decode(payload: Optional[bytes]) -> Doc:
+    r, version, fonts = _read_header(payload)
+    char_fields = (_CHAR_FIELDS_V3 if version >= VERSION_GLYPH_BBOX
+                   else _CHAR_FIELDS_V1 if version == 1 else _CHAR_FIELDS)
+    doc = Doc()
+    font_names = [f.name for f in fonts]
+    doc.font_infos.update(zip(font_names, fonts))
+    n_pages = r.u32()
+    for _ in range(n_pages):
+        page_num = r.i32()
+        clip = r.f64s(4)
+        page = Page(page_num)
+        page.clip_left_x, page.clip_upper_y = float(clip[0]), float(clip[1])
+        page.clip_right_x, page.clip_lower_y = float(clip[2]), float(clip[3])
+
+        n_chars = r.u32()
+        deferred = []  # (figure_idx, char bbox) for clip-diverted chars
+        if n_chars:
+            num = r.f64s(n_chars * char_fields).reshape(n_chars, char_fields)
+            names = r.str_blob(n_chars)
+            names_empty = r.blob_all_empty
+            texts = r.str_blob(n_chars, lazy_ascii=True)
+            texts_ascii1 = r.blob_ascii1
+            unicodes = r.u32_blob(n_chars)
+            uni_empty = r.blob_all_empty
+            if names_empty and uni_empty and texts_ascii1 is not None:
+                page.char_cols = _simple_page_cols(
+                    num, texts_ascii1, font_names, char_fields, page_num,
+                    deferred)
+            else:
+                if texts is None:
+                    texts = list(texts_ascii1.decode("utf-8"))
+                page.char_cols = _general_page_cols(
+                    num, names, texts, unicodes, fonts, font_names,
+                    char_fields, version >= VERSION_GLYPH_BBOX, page_num,
+                    deferred)
+
+        for kind, target in (("figure", page.figures),
+                             ("shape", page.shapes),
+                             ("graphic", page.graphics)):
+            n = r.u32()
+            for i, box in enumerate(r.f64s(n * 4).reshape(n, 4).tolist()):
+                e = NonTextElement(kind)
+                e.left_x, e.upper_y, e.right_x, e.lower_y = box
+                e.page_num, e.rank = page_num, i
+                target.append(e)
+
+        # clip-diverted chars expand their figure's bbox
+        for fig_idx, lx, uy, rx, ly in deferred:
+            if 0 <= fig_idx < len(page.figures):
+                fig = page.figures[fig_idx]
+                fig.left_x = min(fig.left_x, lx)
+                fig.upper_y = min(fig.upper_y, uy)
+                fig.right_x = max(fig.right_x, rx)
+                fig.lower_y = max(fig.lower_y, ly)
+
+        doc.pages.append(page)
+    return doc

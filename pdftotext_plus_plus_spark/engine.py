@@ -18,9 +18,10 @@ Design notes for 100 TB scale:
   of jumbo documents cannot serialize into one straggler task.
 * The kernel is embarrassingly parallel per document — no shuffle after the
   single repartition exchange; output writes stream per task.
-* Failures never abort a partition: corrupt payloads, and payloads the
-  pipeline raises on, yield a row with ``parse_failure_code`` != 0 (cf. the
-  reference's isOk() check, PdfToTextPlusPlus.cpp:88-90).
+* Failures never abort a partition: ``pipeline.extract`` turns a corrupt
+  payload, or one a stage raises on, into a row with ``parse_failure_code``
+  != 0 and the failing stage and cause in ``fail_stage`` / ``fail_cause``
+  (cf. the reference's isOk() check, PdfToTextPlusPlus.cpp:88-90).
 * Lineage costs no extra job: each run appends one row per task, stamped
   with its ``run_id``, from totals the kernel keeps while it extracts.
 """
@@ -28,7 +29,6 @@ Design notes for 100 TB scale:
 from __future__ import annotations
 
 import gc
-import logging
 import time
 from typing import Iterator, Optional
 
@@ -37,15 +37,18 @@ import pyarrow as pa
 from . import codec
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .kernel import STAGE_NAMES
-from .pipeline import STAGE_DECODE, STAGE_SERIALIZE, ExtractionResult, extract
-from .serializers import JSONL_UNITS, check_units
-from .visualization import UNIT_SCHEMES
+from .pipeline import STAGE_DECODE, STAGE_SERIALIZE, extract, sink_units
 
 # stages with a summed ``ms_<stage>`` lineage column, in the reference's
 # --print-running-times order
 LINEAGE_STAGES = (STAGE_DECODE,) + STAGE_NAMES + (STAGE_SERIALIZE,)
 
-_log = logging.getLogger(__name__)
+
+def _failed(code):
+    """Whether a row failed, from its ``parse_failure_code``: an int in the
+    kernel's task totals, a Spark column in the snapshot aggregates."""
+    return code != codec.OK
+
 
 # ---------------------------------------------------------------------------
 # output schemas
@@ -100,6 +103,8 @@ def _arrow_schema(with_spans: bool, with_jsonl: bool = False,
         ("extracted_text", pa.string()),
         ("extracted_text_extended", pa.string()),
         ("parse_failure_code", pa.int32()),
+        ("fail_stage", pa.string()),
+        ("fail_cause", pa.string()),
         ("n_pages", pa.int32()),
         ("n_chars", pa.int32()),
         ("n_words", pa.int32()),
@@ -137,12 +142,9 @@ def _make_kernel(schema: pa.Schema, config: PipelineConfig, roles=None,
     with_lineage = "_lineage" in schema.names
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        try:
-            from pyspark import TaskContext
-            ctx = TaskContext.get()
-            part_id = ctx.partitionId() if ctx is not None else -1
-        except Exception:
-            part_id = -1
+        from pyspark import TaskContext
+        ctx = TaskContext.get()  # None outside a Spark task
+        part_id = ctx.partitionId() if ctx is not None else -1
         task = {"part_id": part_id, "n_docs": 0, "n_failures": 0,
                 "bytes_in": 0, "extract_ms_total": 0.0, "max_doc_ms": 0.0,
                 "min_url": None, "max_url": None}
@@ -150,21 +152,15 @@ def _make_kernel(schema: pa.Schema, config: PipelineConfig, roles=None,
 
         def row(url, html) -> list:
             t0 = time.perf_counter()
-            try:
-                res = extract(html, config, with_spans=with_spans,
-                              with_timings=with_timings, roles=roles,
-                              jsonl_units=jsonl_units, svg_units=svg_units,
-                              pdf_units=pdf_units)
-            except Exception:
-                # whatever the pipeline raises on one document becomes
-                # that document's failure row, never a failed task
-                _log.warning("extraction raised on %s", url, exc_info=True)
-                res = ExtractionResult.failed(codec.ERR_KERNEL)
+            res = extract(html, config, with_spans=with_spans,
+                          with_timings=with_timings, roles=roles,
+                          jsonl_units=jsonl_units, svg_units=svg_units,
+                          pdf_units=pdf_units)
             ms = (time.perf_counter() - t0) * 1000.0
             size = len(html) if html is not None else 0
 
             task["n_docs"] += 1
-            task["n_failures"] += res.parse_failure_code != codec.OK
+            task["n_failures"] += _failed(res.parse_failure_code)
             task["bytes_in"] += size
             task["extract_ms_total"] += ms
             task["max_doc_ms"] = max(task["max_doc_ms"], ms)
@@ -274,13 +270,9 @@ def extract_pages(df, config: PipelineConfig = DEFAULT_CONFIG,
     task's last row and NULL on all others."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    # an unknown unit fails the call here, not every row in the kernel
-    jsonl_units = (check_units(jsonl_units, JSONL_UNITS, "JSONL")
-                   if jsonl_units else None)
-    svg_units = (check_units(svg_units, UNIT_SCHEMES, "visualization")
-                 if svg_units else None)
-    pdf_units = (check_units(pdf_units, UNIT_SCHEMES, "visualization")
-                 if pdf_units else None)
+    # an unknown unit fails the call here, before any job runs
+    jsonl_units, svg_units, pdf_units = sink_units(
+        jsonl_units, svg_units, pdf_units)
     roles = frozenset(roles) if roles else None
     # column pruning reaches the scan
     projected = salted_repartition(df.select("url", "html"), num_partitions)
@@ -308,7 +300,7 @@ def lineage_frame(result_df):
     from pyspark.sql import functions as F
 
     aggs = [F.count("*").alias("n_docs"),
-            F.sum((F.col("parse_failure_code") != 0).cast("int"))
+            F.count_if(_failed(F.col("parse_failure_code")))
             .alias("n_failures"),
             F.sum("payload_bytes").alias("bytes_in"),
             F.sum("extract_ms").alias("extract_ms_total"),
@@ -372,8 +364,7 @@ def run_job(spark, input_path: str, output_path: str,
     from pyspark.sql.pandas.types import from_arrow_schema
 
     # an unknown unit fails before the input manifest is written
-    if jsonl_units:
-        jsonl_units = check_units(jsonl_units, JSONL_UNITS, "JSONL")
+    jsonl_units = sink_units(jsonl_units)[0]
     pages = spark.read.parquet(input_path)
     data_path = output_path.rstrip("/") + "/data"
     lineage_path = output_path.rstrip("/") + "/lineage"
@@ -419,8 +410,7 @@ def run_job(spark, input_path: str, output_path: str,
         done = spark.read.parquet(data_path)
         prior_docs, prior_failures = done.agg(
             F.count("*"),
-            F.coalesce(F.sum((F.col("parse_failure_code") != 0)
-                             .cast("int")), F.lit(0))).first()
+            F.count_if(_failed(F.col("parse_failure_code")))).first()
         if resume:
             pages = pages.join(done.select("url"), "url", "left_anti")
 

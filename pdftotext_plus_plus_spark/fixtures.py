@@ -23,7 +23,7 @@ import random
 from dataclasses import dataclass, field
 from typing import Callable, Dict, List, Optional, Tuple
 
-from .codec import encode_payload
+from .codec import encode_payload, page_count
 from .model import FontInfo
 
 R1 = lambda x: round(x, 1)  # keep everything on the 0.1 grid
@@ -513,40 +513,6 @@ FAMILY_BUILDERS: Dict[str, Callable[[random.Random], Tuple[bytes, list]]] = {
 }
 
 
-def _count_pages(payload: bytes) -> int:
-    """Page count straight from the payload header (codec layout)."""
-    import struct
-    version = struct.unpack_from("<H", payload, 4)[0]
-    pos = 4 + 2
-    n_fonts = struct.unpack_from("<I", payload, pos)[0]
-    pos += 4
-    for _ in range(n_fonts):
-        name_len = struct.unpack_from("<H", payload, pos)[0]
-        pos += 2 + name_len + 21
-        if version == 4:  # raw font-program blob (codec v4)
-            prog_len = struct.unpack_from("<I", payload, pos)[0]
-            pos += 4 + prog_len
-            if prog_len == 0:  # v3-style table follows (mixed-font payload)
-                pos += 48
-                n_glyphs = struct.unpack_from("<I", payload, pos)[0]
-                pos += 4
-                if n_glyphs:
-                    offsets_end = pos + 4 * (n_glyphs + 1)
-                    blob_len = struct.unpack_from(
-                        "<I", payload, offsets_end - 4)[0]
-                    pos = offsets_end + blob_len + 32 * n_glyphs
-        elif version >= 3:  # fontMatrix + glyph-bbox table (codec v3)
-            pos += 48
-            n_glyphs = struct.unpack_from("<I", payload, pos)[0]
-            pos += 4
-            if n_glyphs:
-                offsets_end = pos + 4 * (n_glyphs + 1)
-                blob_len = struct.unpack_from(
-                    "<I", payload, offsets_end - 4)[0]
-                pos = offsets_end + blob_len + 32 * n_glyphs
-    return struct.unpack_from("<I", payload, pos)[0]
-
-
 def build_corpus(n_docs: int, families: Optional[List[str]] = None,
                  seed: int = 42, jumbo_every: int = 0) -> List[dict]:
     """Deterministic corpus rows matching the input_hint schema plus
@@ -574,7 +540,7 @@ def build_corpus(n_docs: int, families: Optional[List[str]] = None,
             "golden_text": golden_from_blocks(intent),
             "golden_blocks": golden_block_texts(intent),
             "golden_intent": intent,
-            "n_pages": _count_pages(payload),
+            "n_pages": page_count(payload),
             "family": family,
         })
     return rows

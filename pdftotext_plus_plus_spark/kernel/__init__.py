@@ -46,6 +46,11 @@ _STAGES = (
 STAGE_NAMES = tuple(name for name, _, _ in _STAGES)
 
 
+class StageError(Exception):
+    """Raised by :func:`process_document` when a stage raises: the message
+    is the stage's name, and ``__cause__`` is what the stage raised."""
+
+
 def process_document(doc: Doc, config: PipelineConfig = DEFAULT_CONFIG,
                      timings_ms: Optional[Dict[str, float]] = None) -> Doc:
     """Run stages 3-13 on a decoded document (stages 1-2 = codec.decode).
@@ -54,12 +59,13 @@ def process_document(doc: Doc, config: PipelineConfig = DEFAULT_CONFIG,
     the reference's stage names (Timing records, Types.h:1247-1265).
     """
     for name, skip_flag, fn in _STAGES:
-        if skip_flag is not None and getattr(config, skip_flag):
+        if getattr(config, skip_flag):
             continue
-        if timings_ms is None:
+        t0 = time.perf_counter()
+        try:
             fn(doc, config)
-        else:
-            t0 = time.perf_counter()
-            fn(doc, config)
+        except Exception as exc:
+            raise StageError(name) from exc
+        if timings_ms is not None:
             timings_ms[name] = (time.perf_counter() - t0) * 1000.0
     return doc

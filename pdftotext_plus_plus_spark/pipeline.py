@@ -6,19 +6,23 @@ also directly usable (and tested) without Spark.
 
 from __future__ import annotations
 
+import logging
 import time
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
-from . import codec, serializers
+from . import codec, pdfviz, serializers, visualization
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .kernel import process_document
+from .kernel import StageError, process_document
 from .model import Doc
+from .serializers import JSONL_UNITS, check_units
 
 # Stage names mirror the reference's --print-running-times report
 # (/root/reference/src/PdfToTextPlusPlus.cpp:86-253).
 STAGE_DECODE = "Parse payload"
 STAGE_SERIALIZE = "Serialize"
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -39,7 +43,10 @@ class BlockSpan:
 class ExtractionResult:
     extracted_text: str = ""
     extracted_text_extended: str = ""
+    # the failure record; stage and cause are None exactly when code is OK
     parse_failure_code: int = codec.OK
+    fail_stage: Optional[str] = None
+    fail_cause: Optional[str] = None
     n_pages: int = 0
     n_chars: int = 0
     n_words: int = 0
@@ -53,11 +60,24 @@ class ExtractionResult:
     doc: Optional[Doc] = None
 
     @classmethod
-    def failed(cls, code: int) -> "ExtractionResult":
-        """A document that yields no text: failure ``code``, and both TXT
-        surfaces as an empty document's "\\n"."""
+    def failed(cls, code: int, stage: str, cause: str) -> "ExtractionResult":
+        """A document that yields no text: failure ``code`` raised in
+        ``stage`` for ``cause``, and both TXT surfaces as an empty
+        document's "\\n"."""
         return cls(extracted_text="\n", extracted_text_extended="\n",
-                   parse_failure_code=code)
+                   parse_failure_code=code, fail_stage=stage,
+                   fail_cause=cause)
+
+
+def sink_units(jsonl_units=None, svg_units=None, pdf_units=None):
+    """The (JSONL, SVG, PDF) units as tuples, None where none are asked
+    for; ValueError on the first unit its sink does not know."""
+    schemes = visualization.UNIT_SCHEMES
+    return tuple(check_units(units, known, sink) if units else None
+                 for units, known, sink in (
+                     (jsonl_units, JSONL_UNITS, "JSONL"),
+                     (svg_units, schemes, "visualization"),
+                     (pdf_units, schemes, "visualization")))
 
 
 def extract(payload: Optional[bytes],
@@ -78,11 +98,17 @@ def extract(payload: Optional[bytes],
     layers (the reference's --visualize-* family, visualization.py);
     ``pdf_units`` produces the annotated-PDF form of the same layers
     (the reference's literal artifact shape, pdfviz.py).
+
+    Never raises on a payload: a document that fails is a failure row
+    (see :meth:`ExtractionResult.failed`) with the failing stage and its
+    cause.  An unknown unit raises ValueError before decode.
     """
+    jsonl_units, svg_units, pdf_units = sink_units(
+        jsonl_units, svg_units, pdf_units)
     t0 = time.perf_counter() if with_timings else 0.0
-    doc, failure = codec.decode_payload(payload)
+    doc, code, cause = codec.decode_payload(payload)
     result = (ExtractionResult() if doc is not None
-              else ExtractionResult.failed(failure))
+              else ExtractionResult.failed(code, STAGE_DECODE, cause))
     if with_timings:
         result.timings_ms[STAGE_DECODE] = (time.perf_counter() - t0) * 1000.0
     if doc is None:
@@ -99,10 +125,8 @@ def extract(payload: Optional[bytes],
         if jsonl_units:
             result.jsonl = serializers.serialize_jsonl(doc, jsonl_units, roles)
         if svg_units:
-            from . import visualization
             result.svg = visualization.serialize_svg(doc, svg_units)
         if pdf_units:
-            from . import pdfviz
             result.pdf = pdfviz.serialize_pdf(doc, pdf_units)
         if with_timings:
             result.timings_ms[STAGE_SERIALIZE] = (
@@ -122,11 +146,19 @@ def extract(payload: Optional[bytes],
                         max_x=block.right_x, max_y=block.lower_y,
                         font=block.font_name, font_size=block.font_size,
                         text=block.text, role=block.role))
-    finally:
-        if not keep_doc:
-            # reference counting frees the document now, even when a stage
-            # raised, instead of leaving it to the cyclic GC
-            doc.release()
+    except Exception as exc:
+        # whatever a stage or a sink raises is this document's failure row;
+        # the traceback goes to the log
+        _log.warning("extraction failed", exc_info=True)
+        stage, exc = ((str(exc), exc.__cause__) if isinstance(exc, StageError)
+                      else (STAGE_SERIALIZE, exc))
+        result = ExtractionResult.failed(codec.ERR_KERNEL, stage,
+                                         codec.cause_of(exc))
+        keep_doc = False
     if keep_doc:
         result.doc = doc
+    else:
+        # reference counting frees the document now, also when a stage
+        # raised, instead of leaving it to the cyclic GC
+        doc.release()
     return result

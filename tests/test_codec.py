@@ -24,7 +24,7 @@ def _payload(chars, **page_kw):
 
 
 def test_roundtrip_basic():
-    doc, code = decode_payload(_payload([_char("a", 0.0), _char("b", 5.0)]))
+    doc, code, _ = decode_payload(_payload([_char("a", 0.0), _char("b", 5.0)]))
     assert code == codec.OK
     assert len(doc.pages) == 1
     chars = doc.pages[0].characters
@@ -37,16 +37,16 @@ def test_roundtrip_basic():
 def test_charmap_fallback():
     """The charMap OVERRIDES a single provided unicode when the glyph name
     is mapped (PdfParsing.cpp:206-208: uLen == 1 && charMap.count(name))."""
-    doc, code = decode_payload(_payload(
+    doc, code, _ = decode_payload(_payload(
         [_char("", 0.0, name="summationdisplay", unicodes=[0x3F])]))
     assert code == codec.OK
     assert doc.pages[0].characters[0].text == "∑"
     # ... also when the single unicode arrives as explicit text
-    doc, _ = decode_payload(_payload(
+    doc, _, _ = decode_payload(_payload(
         [_char("?", 0.0, name="epsilon1", unicodes=[])]))
     assert doc.pages[0].characters[0].text == "ε"
     # uLen > 1: the map does NOT apply (ligature path wins)
-    doc, _ = decode_payload(_payload(
+    doc, _, _ = decode_payload(_payload(
         [_char("", 0.0, name="epsilon1", unicodes=[0x66, 0x69])]))
     assert doc.pages[0].characters[0].text == "fi"
 
@@ -55,20 +55,20 @@ def test_charmap_override_sets_map_codepoint():
     """When the map wins, unicodes[0] is the MAP's codepoint, not the
     provided one (PdfParsing.cpp:207: unicodes.push_back(map.first)) —
     unicodes[0] drives diacritic merging, so the stored value matters."""
-    doc, _ = decode_payload(_payload(
+    doc, _, _ = decode_payload(_payload(
         [_char("", 0.0, name="summationdisplay", unicodes=[0x3F])]))
     assert doc.pages[0].characters[0].unicodes == [0x2211]
     # single unicode arriving as explicit text: same override
-    doc, _ = decode_payload(_payload(
+    doc, _, _ = decode_payload(_payload(
         [_char("?", 0.0, name="epsilon1", unicodes=[])]))
     assert doc.pages[0].characters[0].unicodes == [0x03B5]
     # multi-char map text still stores the map's single codepoint
-    doc, _ = decode_payload(_payload(
+    doc, _, _ = decode_payload(_payload(
         [_char("", 0.0, name="thumbs_up", unicodes=[0x3F])]))
     ch = doc.pages[0].characters[0]
     assert ch.text == "ὄ" + "D" and ch.unicodes == [0x1F44D]
     # unmapped name: provided unicodes pass through unchanged
-    doc, _ = decode_payload(_payload(
+    doc, _, _ = decode_payload(_payload(
         [_char("", 0.0, name="nosuchglyph", unicodes=[0x41])]))
     assert doc.pages[0].characters[0].unicodes == [0x41]
 
@@ -88,7 +88,7 @@ def test_charmap_full_table():
 
 
 def test_ligature_expansion():
-    doc, code = decode_payload(_payload(
+    doc, code, _ = decode_payload(_payload(
         [_char("", 0.0, name="ffi-lig", unicodes=[0x66, 0x66, 0x69])]))
     assert doc.pages[0].characters[0].text == "ffi"
     assert doc.pages[0].characters[0].unicodes == [0x66, 0x66, 0x69]
@@ -96,7 +96,7 @@ def test_ligature_expansion():
 
 def test_whitespace_suppression():
     # space, tab, NBSP are dropped at decode (PdfParsing.cpp:229-245)
-    doc, code = decode_payload(_payload(
+    doc, code, _ = decode_payload(_payload(
         [_char(" ", 0.0), _char("\t", 5.0), _char(" ", 10.0),
          _char("x", 15.0)]))
     assert [c.text for c in doc.pages[0].characters] == ["x"]
@@ -104,15 +104,15 @@ def test_whitespace_suppression():
 
 
 def test_failure_codes():
-    assert decode_payload(None) == (None, codec.ERR_EMPTY)
-    assert decode_payload(b"") == (None, codec.ERR_EMPTY)
-    assert decode_payload(b"NOPE1234") == (None, codec.ERR_MAGIC)
+    assert decode_payload(None)[:2] == (None, codec.ERR_EMPTY)
+    assert decode_payload(b"")[:2] == (None, codec.ERR_EMPTY)
+    assert decode_payload(b"NOPE1234")[:2] == (None, codec.ERR_MAGIC)
     truncated = _payload([_char("a", 0.0)])[:-10]
-    assert decode_payload(truncated) == (None, codec.ERR_TRUNCATED)
+    assert decode_payload(truncated)[:2] == (None, codec.ERR_TRUNCATED)
 
 
 def test_non_text_elements():
-    doc, code = decode_payload(_payload(
+    doc, code, _ = decode_payload(_payload(
         [_char("a", 0.0)],
         figures=[(0.0, 0.0, 100.0, 50.0)],
         shapes=[(10.0, 10.0, 20.0, 20.0), (30.0, 10.0, 40.0, 20.0)]))
@@ -147,7 +147,7 @@ def test_glyph_bbox_preference_v3():
                                  _char("b", 40.0)]}])
     # v3 wire version on the payload
     assert payload[4:6] == VERSION_GLYPH_BBOX.to_bytes(2, "little")
-    doc, code = decode_payload(payload)
+    doc, code, _ = decode_payload(payload)
     assert code == codec.OK
     tall, short, plain = doc.pages[0].characters
     # branch TAKEN: alt = (0, 92.5, 5, 100), base -> alt lowerY
@@ -178,7 +178,7 @@ def test_columnar_rows_semantics_upright_and_rotated():
     with the lazily materialized Char objects on BOTH branches."""
     # all-upright page: every rotation/w_mode is 0
     up = [_char("a", 0.0, unicodes=[]), _char("b", 5.0, unicodes=[])]
-    doc, code = decode_payload(_payload(up))
+    doc, code, _ = decode_payload(_payload(up))
     assert code == codec.OK
     cols = doc.pages[0].char_cols
     assert cols is not None and cols.all_upright
@@ -199,7 +199,7 @@ def test_columnar_rows_semantics_upright_and_rotated():
     rot = [_char("a", 0.0, unicodes=[]), _char("b", 5.0, unicodes=[])]
     rot[1]["rotation"] = 2
     rot[1]["w_mode"] = 1
-    doc, code = decode_payload(_payload(rot))
+    doc, code, _ = decode_payload(_payload(rot))
     assert code == codec.OK
     cols = doc.pages[0].char_cols
     assert cols is not None and not cols.all_upright
@@ -222,7 +222,7 @@ def test_every_page_has_one_char_store(monkeypatch):
     assert len(builders) == 25
     payloads = [builders[f](random.Random(1))[0] for f in sorted(builders)]
     for payload in payloads:
-        doc, code = decode_payload(payload)
+        doc, code, _ = decode_payload(payload)
         assert code == codec.OK
         for page in doc.pages:
             cols = page.char_cols

@@ -10,8 +10,8 @@ from pdftotext_plus_plus_spark import codec, pipeline
 @settings(max_examples=300, deadline=None)
 @given(st.binary(max_size=400))
 def test_decode_never_raises(data):
-    doc, code = codec.decode_payload(data)
-    assert (doc is None) == (code != codec.OK)
+    doc, code, cause = codec.decode_payload(data)
+    assert (doc is None) == (code != codec.OK) == (cause is not None)
 
 
 @settings(max_examples=100, deadline=None)
@@ -32,5 +32,5 @@ def test_truncated_valid_payload(cut, rnd):
 
     payload, _ = fixtures.build_plain_1col(random.Random(1))
     truncated = payload[:min(cut, len(payload))]
-    doc, code = codec.decode_payload(truncated)
+    doc, code, _ = codec.decode_payload(truncated)
     assert (doc is None) == (code != codec.OK)

@@ -204,7 +204,7 @@ def test_v4_weight_merge_and_zero_angle_variants():
             "name": "", "text": "x", "unicodes": [120], "left_x": 10.0,
             "upper_y": 90.0, "right_x": 15.0, "lower_y": 100.0,
             "base": 100.0, "font_size": 10.0, "font": "f"}]}])
-    doc, code = codec.decode_payload(payload)
+    doc, code, _ = codec.decode_payload(payload)
     assert code == 0
     assert doc.font_infos["f"].weight == 700  # wire weight preserved
 
@@ -234,7 +234,7 @@ def test_v4_mixed_program_and_table_fonts():
             "name": "", "text": "x", "unicodes": [120], "left_x": 10.0,
             "upper_y": 90.0, "right_x": 15.0, "lower_y": 100.0,
             "base": 100.0, "font_size": 10.0, "font": "fp"}]}])
-    doc, code = codec.decode_payload(payload)
+    doc, code, _ = codec.decode_payload(payload)
     assert code == 0
     assert doc.font_infos["fp"].glyph_bboxes["a"] == (0.0, 0.0, 100.0, 200.0)
     assert doc.font_infos["ft"].glyph_bboxes == {"z": (1.0, 2.0, 3.0, 4.0)}
@@ -280,7 +280,7 @@ def test_corrupt_font_program_degrades_not_document():
                 "name": "", "text": "x", "unicodes": [120], "left_x": 10.0,
                 "upper_y": 90.0, "right_x": 15.0, "lower_y": 100.0,
                 "base": 100.0, "font_size": 10.0, "font": "f"}]}])
-        doc, code = codec.decode_payload(payload)
+        doc, code, _ = codec.decode_payload(payload)
         assert code == 0                       # document survives
         assert doc.font_infos["f"].weight == 700  # wire metadata kept
         assert doc.font_infos["f"].glyph_bboxes is None

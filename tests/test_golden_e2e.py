@@ -7,7 +7,7 @@ import random
 
 import pytest
 
-from pdftotext_plus_plus_spark import fixtures, pipeline
+from pdftotext_plus_plus_spark import codec, fixtures, pipeline
 
 FAMILIES = sorted(fixtures.FAMILY_BUILDERS)
 SEEDS = [0, 1, 7, 42, 99]
@@ -138,10 +138,8 @@ def test_extract_leaves_no_cyclic_garbage(nan_payload):
                              jsonl_units=("pages", "blocks", "words",
                                           "characters", "figures", "shapes"),
                              svg_units=ALL_UNITS, pdf_units=ALL_UNITS)
-        try:
-            pipeline.extract(nan_payload)
-        except Exception:
-            pass
+        res = pipeline.extract(nan_payload)
+        assert res.parse_failure_code == codec.ERR_KERNEL
         assert gc.collect() == 0
     finally:
         gc.set_debug(0)

@@ -12,7 +12,7 @@ from pdftotext_plus_plus_spark.model import FontInfo
 
 
 def run(pages, config=DEFAULT_CONFIG):
-    doc, code = decode_payload(encode_payload(FONTS, pages))
+    doc, code, _ = decode_payload(encode_payload(FONTS, pages))
     assert code == 0
     return process_document(doc, config)
 

@@ -38,8 +38,9 @@ def test_corrupt_payload_yields_failure_row(spark, pages_df):
 
 def test_kernel_exception_yields_failure_row(spark, nan_payload):
     """A payload that decodes cleanly but makes the pipeline raise (a NaN
-    coordinate) becomes a failure row; the four good documents sharing
-    its task still extract, and the task's lineage counts the failure."""
+    coordinate) becomes a failure row naming the stage and the cause; the
+    four good documents sharing its task still extract with no failure
+    record, and the task's lineage counts the failure."""
     good = fixtures.build_corpus(4)
     rows = [("nan://1", bytearray(nan_payload))]
     rows += [(r["url"], bytearray(r["html"])) for r in good]
@@ -48,9 +49,13 @@ def test_kernel_exception_yields_failure_row(spark, nan_payload):
                                with_lineage=True).collect()
     by_url = {r["url"]: r for r in out}
     assert by_url["nan://1"]["parse_failure_code"] == codec.ERR_KERNEL
+    assert by_url["nan://1"]["fail_stage"] == "Detect lines"
+    assert by_url["nan://1"]["fail_cause"].startswith("OverflowError: ")
     assert by_url["nan://1"]["extracted_text"] == "\n"
     for r in good:
         assert by_url[r["url"]]["parse_failure_code"] == 0
+        assert by_url[r["url"]]["fail_stage"] is None
+        assert by_url[r["url"]]["fail_cause"] is None
         assert by_url[r["url"]]["extracted_text"] == r["golden_text"]
     [task] = [r["_lineage"] for r in out if r["_lineage"] is not None]
     assert (task["n_docs"], task["n_failures"]) == (5, 1)
@@ -167,6 +172,40 @@ def test_run_job_lineage_rides_on_the_write(spark, pages_df, tmp_path):
                 assert got[col] == value, col
     assert result["n_docs"] == sum(r["n_docs"] for r in expected.values())
     assert result["n_failures"] == 0
+
+
+def test_run_job_snapshot_carries_failure_record(spark, nan_payload,
+                                                 tmp_path):
+    """The snapshot holds fail_stage and fail_cause beside
+    parse_failure_code: set on every failed row, NULL on every OK row; the
+    summary counts the failures, also from the prior snapshot on resume."""
+    good = fixtures.build_corpus(3)
+    rows = [("nan://1", bytearray(nan_payload)),
+            ("bad://1", bytearray(b"not-a-payload"))]
+    rows += [(r["url"], bytearray(r["html"])) for r in good]
+    input_path = str(tmp_path / "pages")
+    output_path = str(tmp_path / "out")
+    (spark.createDataFrame(rows, "url string, html binary")
+     .write.parquet(input_path))
+
+    result = engine.run_job(spark, input_path, output_path, num_partitions=2)
+    assert (result["n_docs"], result["n_failures"]) == (5, 2)
+    data = spark.read.parquet(result["output"])
+    cols = data.columns
+    i = cols.index("parse_failure_code")
+    assert cols[i:i + 3] == ["parse_failure_code", "fail_stage",
+                             "fail_cause"]
+    got = {r["url"]: (r["parse_failure_code"], r["fail_stage"],
+                      r["fail_cause"]) for r in data.collect()}
+    code, stage, cause = got.pop("nan://1")
+    assert (code, stage) == (codec.ERR_KERNEL, "Detect lines")
+    assert cause.startswith("OverflowError: ")
+    assert got.pop("bad://1") == (codec.ERR_MAGIC, "Parse payload",
+                                  "bad magic")
+    assert got == {r["url"]: (0, None, None) for r in good}
+
+    resumed = engine.run_job(spark, input_path, output_path)
+    assert (resumed["n_docs"], resumed["n_failures"]) == (5, 2)
 
 
 def test_run_job_resume_appends_own_lineage(spark, pages_df, tmp_path):

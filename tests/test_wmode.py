@@ -20,7 +20,7 @@ def test_wmode_splits_words_and_blocks():
             "lower_y": 118.0, "base": 118.0, "font_size": 10.0,
             "rotation": 0, "w_mode": 1, "font": BODY_FONT.name})
         x += 5.0
-    doc, code = decode_payload(encode_payload(FONTS, [page.to_dict()]))
+    doc, code, _ = decode_payload(encode_payload(FONTS, [page.to_dict()]))
     assert code == 0
     process_document(doc, DEFAULT_CONFIG)
     wmode_words = [w for p in doc.pages for w in p.words if w.w_mode == 1]
