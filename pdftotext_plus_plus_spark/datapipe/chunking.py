@@ -6,28 +6,42 @@
 * ``dedup_clusters`` — assigns each document the minimum doc_id reachable
   within K hops of the MinHash-LSH near-dup graph (bounded min-label
   propagation).  K fixed rounds keeps it SQL-expressible and
-  oracle-checkable; the 10^12-row path iterates the same join to a
-  fixpoint (or uses a connected-components step), checkpointing labels
-  between rounds.  The graph is the STAR-EDGE form (member <-> bucket
+  oracle-checkable.  The graph is the STAR-EDGE form (member <-> bucket
   hub), never the all-pairs LSH pair list: identical connected
   components at O(M) instead of O(M^2) edges per bucket — the quadratic
   pair blow-up inside degenerate boilerplate buckets is exactly the
   100 TB skew case.
+* ``dedup_clusters_fixpoint`` — the full components, labelled with their
+  minimum doc_id: a union-find over the (band, minhash) buckets on the
+  driver while the signature table fits DRIVER_UNION_MAX_ROWS rows, and
+  above that the same propagation iterated to a fixpoint with pointer doubling,
+  checkpointing labels between rounds.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import WS, _documents, iterate, spread, split_tokens, textstats
-from .dedup import (MINHASH_LSH_PAIRS_SQL, MINHASH_SIG_CTES,
-                    minhash_signatures)
+from .dedup import MINHASH_LSH_PAIRS_SQL, MINHASH_SIG_CTES, _minhash_sig
 
 CHUNK_TOKENS = 64
 CHUNK_STRIDE = 48
 PROP_ROUNDS = 3
 FIXPOINT_MAX_ROUNDS = 50
+# dedup_clusters_fixpoint solves components on the driver when both its
+# signature table (N_BANDS rows per document) and its doc ids fit this
+# many rows.  Measured on
+# synthetic tables of 0.4M-8M rows, the driver holds ~75 bytes per row
+# while it does (20 for the Arrow columns, ~55 at peak for the sort
+# arrays and the Python edge lists), so 2M rows stay under ~200 MB with
+# the collect's own buffers, a tenth of a 2 GB driver, and solve in
+# under a second.  A larger table stays distributed in
+# propagate_to_fixpoint.
+DRIVER_UNION_MAX_ROWS = 2_000_000
 
 
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -151,25 +165,84 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reach of PROP_ROUNDS rounds over the all-pairs graph (measured at
     sf0.01: strictly closer to the fixpoint labels than the pair-graph
     variant ever was), at O(M) instead of O(M^2) edges per bucket."""
-    docs = _documents(spark, sf_dir).select("doc_id")
-    edges = _star_edges(docs, minhash_signatures(spark, sf_dir))
+    table = _documents(spark, sf_dir)
+    docs = table.select("doc_id")
+    edges = _star_edges(docs, _minhash_sig(table))
     labels = docs.select(F.col("doc_id"), F.col("doc_id").alias("label"))
     labels, _ = iterate(labels, lambda cur: _propagate_round(edges, cur),
                         2 * PROP_ROUNDS)
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
-def dedup_clusters_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scale path: the same propagation iterated to a FIXPOINT (chains
-    longer than PROP_ROUNDS hops under-merge in the bounded variant), with
-    per-round checkpointing.  The oracle deliberately stays the all-pairs
-    brute-force graph: star edges produce identical components, and the
-    independent construction is what PROVES it."""
-    docs = _documents(spark, sf_dir).select("doc_id")
-    edges = _star_edges(docs, minhash_signatures(spark, sf_dir)).persist()
+def _bucket_components(doc_ids: np.ndarray, sig: pa.Table):
+    """``(doc_id, cluster_id)`` arrays for the distinct ``doc_ids``: the
+    docs of each (band, minhash) bucket of the Arrow signature table
+    ``sig`` unioned on the driver, each component labelled with its
+    minimum doc_id.  A bucket's union is its star (every member joined
+    to the bucket's minimum), so these are the components, and the
+    labels, :func:`propagate_to_fixpoint` reaches over
+    :func:`_star_edges`; a doc in no bucket is its own component."""
+    ids = np.unique(doc_ids)  # node order = doc_id order
+    node = np.searchsorted(ids, sig.column("doc_id").to_numpy())
+    band = sig.column("band").to_numpy()
+    minhash = sig.column("minhash").to_numpy()
+    order = np.lexsort((node, minhash, band))
+    node, band, minhash = node[order], band[order], minhash[order]
+    first = np.ones(len(node), dtype=bool)
+    first[1:] = (band[1:] != band[:-1]) | (minhash[1:] != minhash[:-1])
+    hub = node[np.flatnonzero(first)[np.cumsum(first) - 1]]
+
+    # union-find whose root is always its set's minimum node
+    parent = list(range(len(ids)))
+
+    def root(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for member, h in zip(node[~first].tolist(), hub[~first].tolist()):
+        a, b = root(member), root(h)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return ids, ids[[root(x) for x in range(len(ids))]]
+
+
+def _components(docs: DataFrame, sig: DataFrame) -> DataFrame:
+    """``(doc_id, cluster_id)`` for every doc: the minimum doc_id of its
+    component in the star-edge bucket graph of ``sig`` (whose docs are
+    among ``docs``).  While the signature table and the doc ids each fit
+    DRIVER_UNION_MAX_ROWS rows, both are collected and unioned on the
+    driver (:func:`_bucket_components`); otherwise
+    :func:`propagate_to_fixpoint` runs over the star edges.  Docs without
+    a signature row keep their own id either way."""
+    sig = sig.persist()
+    table = sig.limit(DRIVER_UNION_MAX_ROWS + 1).toArrow()
+    if table.num_rows <= DRIVER_UNION_MAX_ROWS:
+        doc_ids = docs.limit(DRIVER_UNION_MAX_ROWS + 1).toArrow()
+        if doc_ids.num_rows <= DRIVER_UNION_MAX_ROWS:
+            sig.unpersist()
+            ids, labels = _bucket_components(
+                doc_ids.column("doc_id").to_numpy(), table)
+            return docs.sparkSession.createDataFrame(pa.table(
+                {"doc_id": ids, "cluster_id": labels}))
+    edges = _star_edges(docs, sig).persist()
     labels = docs.select(F.col("doc_id"), F.col("doc_id").alias("label"))
     out, _ = propagate_to_fixpoint(edges, labels)
+    # the loop's last labels are checkpointed: nothing reads the caches
+    edges.unpersist()
+    sig.unpersist()
     return out.select("doc_id", F.col("label").alias("cluster_id"))
+
+
+def dedup_clusters_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The scale path: the full components of the star-edge bucket graph
+    (:func:`_components`), which the bounded variant under-merges when a
+    chain is longer than PROP_ROUNDS hops.  The oracle deliberately stays
+    the all-pairs brute-force graph: star edges produce identical
+    components, and the independent construction is what PROVES it."""
+    table = _documents(spark, sf_dir)
+    return _components(table.select("doc_id"), _minhash_sig(table))
 
 
 # the all-pairs reachability CTEs of the three fixpoint oracles: LSH
@@ -264,7 +337,7 @@ FROM labels l JOIN sizes s ON s.cluster_id = l.cluster_id
 # Production dedup does not keep the lowest doc_id — it keeps the
 # highest-QUALITY member of each near-duplicate cluster (RefinedWeb,
 # FineWeb both select representatives by quality signals).  Composed
-# from dedup_clusters_fixpoint (the pointer-doubling components) and
+# from dedup_clusters_fixpoint (the near-dup components) and
 # textstats.quality_classifier's integer logit; ties break to the
 # smallest doc_id so the verdict is total and engine-exact.
 
@@ -273,7 +346,8 @@ def dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document cluster assignment + the quality-argmax
     representative verdict.
 
-    Plan shape at 100 TB: the fixpoint component plan (O(log d)
+    Plan shape: the component labels (a driver-side union-find up to
+    DRIVER_UNION_MAX_ROWS signature rows; at 100 TB, O(log d)
     pointer-doubling rounds over star edges) + the classifier's one
     token hash-agg, then ONE per-cluster max agg and ONE broadcast-able
     join back (cluster dim: one row per cluster).  The argmax is

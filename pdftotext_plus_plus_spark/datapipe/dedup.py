@@ -322,7 +322,11 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy pass (8 min-columns, then stack) instead of exploding every
     shingle 8x through a band crossJoin.  Integer arithmetic end-to-end,
     so the identical family is computable in the DuckDB oracle."""
-    docs = _documents(spark, sf_dir)
+    return _minhash_sig(_documents(spark, sf_dir))
+
+
+def _minhash_sig(docs: DataFrame) -> DataFrame:
+    """:func:`minhash_signatures` over a documents frame already read."""
     sh = _token_shingles(docs)
     h = sh.select(
         "doc_id",

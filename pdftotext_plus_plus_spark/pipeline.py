@@ -60,13 +60,16 @@ class ExtractionResult:
     doc: Optional[Doc] = None
 
     @classmethod
-    def failed(cls, code: int, stage: str, cause: str) -> "ExtractionResult":
+    def failed(cls, code: int, stage: str, cause: str,
+               timings_ms: Optional[Dict[str, float]] = None
+               ) -> "ExtractionResult":
         """A document that yields no text: failure ``code`` raised in
         ``stage`` for ``cause``, and both TXT surfaces as an empty
-        document's "\\n"."""
+        document's "\\n"; ``timings_ms`` keeps the times of the stages
+        that finished before it."""
         return cls(extracted_text="\n", extracted_text_extended="\n",
                    parse_failure_code=code, fail_stage=stage,
-                   fail_cause=cause)
+                   fail_cause=cause, timings_ms=timings_ms or {})
 
 
 def sink_units(jsonl_units=None, svg_units=None, pdf_units=None):
@@ -153,7 +156,8 @@ def extract(payload: Optional[bytes],
         stage, exc = ((str(exc), exc.__cause__) if isinstance(exc, StageError)
                       else (STAGE_SERIALIZE, exc))
         result = ExtractionResult.failed(codec.ERR_KERNEL, stage,
-                                         codec.cause_of(exc))
+                                         codec.cause_of(exc),
+                                         result.timings_ms)
         keep_doc = False
     if keep_doc:
         result.doc = doc

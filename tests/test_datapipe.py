@@ -9,6 +9,7 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from pdftotext_plus_plus_spark.datapipe import registry, similarity
 
@@ -381,6 +382,102 @@ def test_fixpoint_long_chain_bounded_rounds(spark):
     got = {r["doc_id"]: r["label"] for r in out.collect()}
     assert got == {i: 0 for i in range(n)}
     assert rounds <= 12, rounds
+
+
+def _sig_frame(spark, rows):
+    return spark.createDataFrame(rows, "doc_id bigint, band int, minhash bigint")
+
+
+def _chain_input(spark):
+    """64 docs; bucket k holds docs k and k+1 (bands alternate so no doc
+    sits twice in one band)."""
+    docs = spark.range(64).select(F.col("id").alias("doc_id"))
+    sig = _sig_frame(spark, [(d, k % 2, k) for k in range(63)
+                             for d in (k, k + 1)])
+    return docs, sig, {i: 0 for i in range(64)}
+
+
+def _unsigned_input(spark):
+    """Docs 0 and 2 have no signature row; 1 and 3 share a bucket."""
+    docs = spark.range(4).select(F.col("id").alias("doc_id"))
+    sig = _sig_frame(spark, [(1, 0, 7), (3, 0, 7)])
+    return docs, sig, {0: 0, 1: 1, 2: 2, 3: 1}
+
+
+def _sf_input(spark):
+    from pdftotext_plus_plus_spark.datapipe import dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id")
+    return docs, dedup.minhash_signatures(spark, SF_DIR), None
+
+
+@pytest.mark.parametrize("build", [_sf_input, _chain_input, _unsigned_input],
+                         ids=["sf0.001", "chain64", "unsigned_doc"])
+def test_driver_components_match_fixpoint_loop(spark, build):
+    """Below DRIVER_UNION_MAX_ROWS the components come from the driver's
+    union-find over the (band, minhash) buckets; its rows equal
+    propagate_to_fixpoint's over the star edges, with exceptAll finding
+    nothing in either direction."""
+    from pdftotext_plus_plus_spark.datapipe import chunking
+
+    docs, sig, expected = build(spark)
+    driver = chunking._components(docs, sig)
+    loop, _ = chunking.propagate_to_fixpoint(
+        chunking._star_edges(docs, sig),
+        docs.select("doc_id", F.col("doc_id").alias("label")))
+    loop = loop.select("doc_id", F.col("label").alias("cluster_id"))
+    assert driver.exceptAll(loop).count() == 0
+    assert loop.exceptAll(driver).count() == 0
+    got = {r.doc_id: r.cluster_id for r in driver.collect()}
+    assert len(got) == docs.count()
+    if expected is not None:
+        assert got == expected
+    else:  # the sf table has real near-dup clusters
+        assert len(set(got.values())) < len(got)
+
+
+FIXPOINT_FAMILY = ("dedup_clusters_fixpoint", "dedup_keep_list",
+                   "dedup_representatives")
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("name", FIXPOINT_FAMILY)
+def test_fixpoint_family_job_count_and_cache(spark, name):
+    """Each fixpoint-family query runs at most 20 Spark jobs at sf0.001,
+    where the driver path solves its components, and leaves nothing in
+    the session's cache."""
+    from pdftotext_plus_plus_spark.datapipe import chunking
+
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = f"fixpoint-family-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        getattr(chunking, name)(spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 20, jobs
+    assert _cache_is_empty(spark)
+
+
+@pytest.mark.parametrize("name", FIXPOINT_FAMILY)
+def test_fixpoint_family_loop_path(spark, monkeypatch, name):
+    """Above DRIVER_UNION_MAX_ROWS the components come from
+    propagate_to_fixpoint over the star edges: the query's rows at
+    sf0.001 equal the driver path's, and neither the signature table
+    nor the edges stay cached."""
+    from pdftotext_plus_plus_spark.datapipe import chunking
+
+    driver = sorted(getattr(chunking, name)(spark, SF_DIR).collect())
+    spark.catalog.clearCache()
+    monkeypatch.setattr(chunking, "DRIVER_UNION_MAX_ROWS", 100)
+    loop = sorted(getattr(chunking, name)(spark, SF_DIR).collect())
+    assert loop == driver
+    assert _cache_is_empty(spark)
 
 
 def test_repetition_stats_sub2_token_docs(spark, tmp_path):

@@ -92,3 +92,17 @@ def test_unknown_unit_raises_before_decode(kwargs, sink):
     fail to decode."""
     with pytest.raises(ValueError, match="unknown %s unit" % sink):
         pipeline.extract(None, **kwargs)
+
+
+def test_kernel_failure_row_keeps_finished_stage_timings(nan_payload):
+    """A kernel failure row keeps the times of Parse payload and of every
+    stage that finished before the one that raised, so the lineage's
+    ``ms_*`` sums count failed documents too."""
+    from pdftotext_plus_plus_spark.kernel import STAGE_NAMES
+
+    res = pipeline.extract(nan_payload, with_timings=True)
+    assert (res.parse_failure_code, res.fail_stage) == (
+        codec.ERR_KERNEL, "Detect lines")
+    finished = STAGE_NAMES[:STAGE_NAMES.index("Detect lines")]
+    assert list(res.timings_ms) == [pipeline.STAGE_DECODE, *finished]
+    assert all(ms >= 0.0 for ms in res.timings_ms.values())
