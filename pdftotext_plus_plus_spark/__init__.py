@@ -22,6 +22,7 @@ Layout:
 * :mod:`.kernel`       — the 13 pipeline stages as pure functions
 * :mod:`.serializers`  — TXT / TXT-extended / JSONL sinks
 * :mod:`.engine`       — Spark integration (mapInArrow, salting, lineage)
+* :mod:`.rowframes`    — the per-row kernels' one bounded frame builder
 * :mod:`.fixtures`     — deterministic synthetic corpus + golden outputs
 * :mod:`.datapipe`     — large-scale training-data ops (dedup, ANN, text stats)
 """

@@ -349,26 +349,20 @@ def dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: the component labels (a driver-side union-find up to
     DRIVER_UNION_MAX_ROWS signature rows; at 100 TB, O(log d)
     pointer-doubling rounds over star edges) + the classifier's one
-    token hash-agg, then ONE per-cluster max agg and ONE broadcast-able
-    join back (cluster dim: one row per cluster).  The argmax is
-    max(best_logit) + a min(doc_id) tie-break — never a per-cluster
-    sort of the members.
+    token hash-agg, then ONE per-cluster partial agg and ONE join back
+    (cluster dim: one row per cluster).  The agg decides size and
+    representative together: ``min(struct(-logit, doc_id))`` is the
+    max-logit member with the min-doc_id tie-break — never a per-cluster
+    sort of the members, which a window would do.
     """
-    clusters = dedup_clusters_fixpoint(spark, sf_dir)
-    qual = textstats.quality_classifier(spark, sf_dir) \
-        .select("doc_id", "logit")
-    # j feeds three consumers (best, rep, the final select) — one narrow
-    # (doc_id, cluster_id, logit) row per doc, materialized once so the
-    # classifier's token agg does not run three times (r9)
-    j = clusters.join(qual, "doc_id").localCheckpoint()
-    best = (j.groupBy("cluster_id")
-            .agg(F.count("*").alias("cluster_size"),
-                 F.max("logit").alias("best_logit")))
-    rep = (j.join(best, "cluster_id")
-           .filter(F.col("logit") == F.col("best_logit"))
-           .groupBy("cluster_id")
-           .agg(F.min("doc_id").alias("rep_doc_id")))
-    return (j.join(best, "cluster_id").join(rep, "cluster_id")
+    j = dedup_clusters_fixpoint(spark, sf_dir).join(
+        textstats.quality_classifier(spark, sf_dir).select("doc_id", "logit"),
+        "doc_id")
+    rep = (j.groupBy("cluster_id")
+           .agg(F.count("*").alias("cluster_size"),
+                F.min(F.struct(-F.col("logit"), F.col("doc_id")))
+                .getField("doc_id").alias("rep_doc_id")))
+    return (j.join(rep, "cluster_id")
             .select("doc_id", "cluster_id", "cluster_size", "logit",
                     "rep_doc_id",
                     (F.col("doc_id") == F.col("rep_doc_id")).cast("int")

@@ -12,6 +12,11 @@ driver query; the oracle is a VALUES table of goldens computed by an
 independent Python mirror (``strip_boilerplate_py``), so the Spark
 expression chain is checked against a second implementation, not against
 itself.
+
+The two per-page extractors, main-content blocks and the heading
+outline, run in Python: each gives only a rows function (one page -> its
+kept blocks or headings) to the package's one bounded frame builder,
+:func:`rowframes.map_rows`.
 """
 
 from __future__ import annotations
@@ -22,6 +27,8 @@ from typing import List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..rowframes import map_rows
 
 N_HTML_DOCS = 40
 
@@ -169,29 +176,17 @@ def build_main_content_corpus(n_docs: int = N_HTML_DOCS,
 
 def main_content_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched main-content extraction: one input page -> N kept
-    blocks, computed inside the kernel (mapInPandas), never a driver loop.
-    At 10^12 rows this is one narrow pass over the html column."""
-    import pandas as pd
+    blocks, computed inside the kernel, never a driver loop.  At 10^12
+    rows this is one narrow pass over the html column."""
+    def rows(pdf):
+        for url, html in zip(pdf["url"], pdf["html"]):
+            for j, text in enumerate(main_content_blocks_py(html)):
+                yield (url, j, text), len(text)
 
     corpus = [(u, h) for u, h, _ in build_main_content_corpus()]
     df = spark.createDataFrame(corpus, "url string, html string")
-
-    def kernel(batches):
-        for pdf in batches:
-            urls, idxs, texts = [], [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for j, text in enumerate(main_content_blocks_py(html)):
-                    urls.append(url)
-                    idxs.append(j)
-                    texts.append(text)
-            yield pd.DataFrame({
-                "url": pd.Series(urls, dtype="object"),
-                "block_idx": pd.Series(idxs, dtype="int64"),
-                "block_text": pd.Series(texts, dtype="object"),
-            })
-
-    return df.mapInPandas(
-        kernel, "url string, block_idx bigint, block_text string")
+    return map_rows(df, rows,
+                    "url string, block_idx bigint, block_text string")
 
 
 def main_content_blocks_oracle_sql() -> str:
@@ -279,36 +274,19 @@ def outline_py(html: str):
 
 def html_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched outline extraction: one page -> N ordered headings
-    with hierarchy, computed inside the kernel (mapInPandas).  At 10^12
-    rows this is one narrow pass over the html column — no shuffle; the
-    per-page stack state never leaves the kernel."""
-    import pandas as pd
+    with hierarchy, computed inside the kernel.  At 10^12 rows this is
+    one narrow pass over the html column — no shuffle; the per-page
+    stack state never leaves the kernel."""
+    def rows(pdf):
+        for url, html in zip(pdf["url"], pdf["html"]):
+            for idx, level, text, parent in outline_py(html):
+                yield (url, idx, level, text, parent), len(text)
 
     corpus = [(u, h) for u, h, _ in build_outline_corpus()]
     df = spark.createDataFrame(corpus, "url string, html string")
-
-    def kernel(batches):
-        for pdf in batches:
-            urls, idxs, levels, texts, parents = [], [], [], [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for idx, level, text, parent in outline_py(html):
-                    urls.append(url)
-                    idxs.append(idx)
-                    levels.append(level)
-                    texts.append(text)
-                    parents.append(parent)
-            yield pd.DataFrame({
-                "url": pd.Series(urls, dtype="object"),
-                "heading_idx": pd.Series(idxs, dtype="int64"),
-                "level": pd.Series(levels, dtype="int64"),
-                "heading": pd.Series(texts, dtype="object"),
-                "parent_idx": pd.Series(parents, dtype="int64"),
-            })
-
-    return df.mapInPandas(
-        kernel,
-        "url string, heading_idx bigint, level bigint, "
-        "heading string, parent_idx bigint")
+    return map_rows(df, rows,
+                    "url string, heading_idx bigint, level bigint, "
+                    "heading string, parent_idx bigint")
 
 
 def html_outline_oracle_sql() -> str:

@@ -23,13 +23,13 @@ is real and tested, and the blobs carry REAL container bytes END TO END:
   sampled frame to pixels through the jpeg codec.  No multimodal stub
   remains.
 
-Every Arrow-batched step is one mapper, :func:`_map_blobs`: a
-``mapInPandas`` over (doc_id, blob) rows whose per-blob function yields
-the output rows (the decoders emit one row per blob, the video sampler
-one per sampled frame), named and typed by the query's DDL string.  The
-three synthesizers go through the same mapper via :func:`_synthesize`,
-each giving only its blob function, so the per-row Python boundary is
-written once.
+Every Arrow-batched step enters Spark through the package's one bounded
+frame builder, :func:`rowframes.map_rows`.  A decoder gives only its
+per-blob function, which yields the output rows of one (doc_id, blob)
+row (one row per blob, or one per sampled frame for the video sampler),
+adapted by :func:`_per_blob`; the three synthesizers give only their
+blob function, adapted by :func:`_per_doc`, whose rows count their
+blob's bytes against ``rowframes.FRAME_BYTES``.
 
 Dimensions/counts remain deterministic functions of doc_id
 (``width = (doc_id * 37) % 1024 + 1``, ``height = (doc_id * 73) % 768 +
@@ -45,44 +45,41 @@ import struct
 from typing import Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..rowframes import map_rows
 from . import _documents, jpeg, pixels, spread
 
 PNG_SIG = pixels.PNG_SIG
 
-# pandas dtype of each DDL type a mapper schema uses
-_PANDAS_DTYPES = {"bigint": "int64", "boolean": "bool", "binary": "object"}
+
+def _per_blob(rows_of):
+    """The rows function of a decoder: ``rows_of(doc_id, blob)``'s rows
+    for each (doc_id, blob) row of a batch.  The rows are a few integers
+    each, so they count no bytes and the row bound alone flushes."""
+    def rows(pdf):
+        for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
+            for row in rows_of(int(doc_id), blob):
+                yield row, 0
+    return rows
 
 
-def _map_blobs(blobs: DataFrame, rows_of, schema: str) -> DataFrame:
-    """The one Arrow-batched kernel: ``mapInPandas`` over (doc_id, blob)
-    rows, where ``rows_of(doc_id, blob)`` yields the output row tuples of
-    one blob (``blob`` is None when the input has no blob column), named
-    and typed by the DDL ``schema``."""
-    fields = [field.split() for field in schema.split(",")]
-
-    def map_batches(batches):
-        for pdf in batches:
-            blob_col = pdf["blob"] if "blob" in pdf else [None] * len(pdf)
-            rows = [row for doc_id, blob in zip(pdf["doc_id"], blob_col)
-                    for row in rows_of(int(doc_id), blob)]
-            cols = list(zip(*rows)) or [()] * len(fields)
-            yield pd.DataFrame({
-                name: pd.Series(col, dtype=_PANDAS_DTYPES[ddl_type])
-                for (name, ddl_type), col in zip(fields, cols)})
-
-    return blobs.mapInPandas(map_batches, schema)
+def _per_doc(blob_of):
+    """The rows function of a synthesizer: (doc_id, ``blob_of(doc_id)``)
+    for each doc_id of a batch, counted at the blob's bytes."""
+    def rows(pdf):
+        for doc_id in pdf["doc_id"]:
+            blob = blob_of(int(doc_id))
+            yield (int(doc_id), blob), len(blob)
+    return rows
 
 
 def _synthesize(spark: SparkSession, sf_dir: str, blob_of) -> DataFrame:
-    """documents -> (doc_id, ``blob_of(doc_id)``) through the mapper:
-    blob synthesis is itself the write half of the real scale path."""
+    """documents -> (doc_id, blob) through the frame builder: blob
+    synthesis is itself the write half of the real scale path."""
     docs = spread(_documents(spark, sf_dir).select("doc_id"))
-    return _map_blobs(docs, lambda doc_id, _: [(doc_id, blob_of(doc_id))],
-                      "doc_id bigint, blob binary")
+    return map_rows(docs, _per_doc(blob_of), "doc_id bigint, blob binary")
 
 
 # Small-image threshold below which the PNG encoder rotates through ALL
@@ -166,8 +163,8 @@ def decode_meta(spark_df: DataFrame) -> DataFrame:
     decode-derived evidence it ran — the decompressed filtered-stream
     length ``height * (width + 1)`` for PNG, the decoded sample count
     ``height * width`` for JPEG."""
-    return _map_blobs(
-        spark_df, _decoded_meta,
+    return map_rows(
+        spark_df, _per_blob(_decoded_meta),
         "doc_id bigint, width bigint, height bigint, payload_bytes bigint")
 
 
@@ -226,8 +223,8 @@ def image_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixels — and the oracle recomputes that checksum in closed form from
     the corpus pixel formulas, so a wrong unfilter, entropy decode, or
     index mapping fails the hash."""
-    return _map_blobs(
-        synthesize_blobs(spark, sf_dir), _resized_meta,
+    return map_rows(
+        synthesize_blobs(spark, sf_dir), _per_blob(_resized_meta),
         "doc_id bigint, out_width bigint, out_height bigint, "
         "scaled boolean, pixel_checksum bigint")
 
@@ -472,8 +469,8 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     are both real.  The explode-inside-Arrow-kernel shape (one input
     row -> many output rows, no JVM explode) is the real scale
     pattern."""
-    return _map_blobs(
-        synthesize_video_blobs(spark, sf_dir), _sampled_frames,
+    return map_rows(
+        synthesize_video_blobs(spark, sf_dir), _per_blob(_sampled_frames),
         "doc_id bigint, frame_idx bigint, ts_ms bigint, "
         "frame_w bigint, frame_h bigint, pixel_checksum bigint")
 
@@ -558,8 +555,8 @@ def audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum(s^2) // n, the integer power the SQL oracle reproduces exactly).
     The header-derived fields (rate, count, duration) must agree with the
     sample-derived ones by construction."""
-    return _map_blobs(
-        synthesize_audio_blobs(spark, sf_dir), _wav_meta,
+    return map_rows(
+        synthesize_audio_blobs(spark, sf_dir), _per_blob(_wav_meta),
         "doc_id bigint, sample_rate bigint, n_samples bigint, "
         "duration_ms bigint, peak_amp bigint, mean_square bigint")
 
@@ -620,8 +617,8 @@ def image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode, resample, or threshold flips bits and fails the hash.
     Signatures then dedup by equality (one hash-agg) or band into
     pigeonhole buckets exactly like simhash_near_pairs."""
-    return _map_blobs(synthesize_blobs(spark, sf_dir), _phash,
-                      "doc_id bigint, phash bigint, mean_gray bigint")
+    return map_rows(synthesize_blobs(spark, sf_dir), _per_blob(_phash),
+                    "doc_id bigint, phash bigint, mean_gray bigint")
 
 
 # bit 63 via the explicit min-BIGINT literal (1<<63 overflows in DuckDB)
@@ -749,9 +746,9 @@ def audio_energy_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     window j's energy exceeds the across-window mean — the
     energy-envelope hash an audio-dedup pass buckets on.  All integer
     math; the oracle reproduces it from the sample formula."""
-    return _map_blobs(synthesize_audio_blobs(spark, sf_dir),
-                      _energy_fingerprint,
-                      "doc_id bigint, energy_fp bigint, total_energy bigint")
+    return map_rows(synthesize_audio_blobs(spark, sf_dir),
+                    _per_blob(_energy_fingerprint),
+                    "doc_id bigint, energy_fp bigint, total_energy bigint")
 
 
 AUDIO_ENERGY_FP_SQL = f"""

@@ -219,26 +219,28 @@ def _make_kernel(schema: pa.Schema, config: PipelineConfig, roles=None,
 # public API
 # ---------------------------------------------------------------------------
 
-def salted_repartition(df, num_partitions: Optional[int] = None,
-                       salt_buckets: int = 1024):
+# url salts per size bucket in salted_repartition.  Must be >> the task
+# count: hash partitioning lumps whole (bucket, salt) KEYS into tasks, so
+# each key's population rides together — with 64 salts a 10x bench corpus
+# put ~9 jumbo documents in every jumbo-bucket key and the busiest task
+# ran 3.8x the median; at 1024 salts the same corpus measured 2.1x and
+# -29% wall (round-6 straggler probe, BASELINE.md).  Keys are free; 1024
+# stays tiny vs the shuffle itself at any scale.
+SALT_BUCKETS = 1024
+
+
+def salted_repartition(df, num_partitions: Optional[int] = None):
     """Repartition by (payload-size bucket, salt of url).
 
-    Documents land in log2-size buckets; the salt spreads each bucket across
-    partitions so jumbo documents cannot pile into one task (north-rule skew
-    handling).  At 100 TB this is the only shuffle in the job.
-
-    ``salt_buckets`` must be >> the task count: hash partitioning lumps
-    whole (bucket, salt) KEYS into tasks, so each key's population rides
-    together — with 64 salts a 10x bench corpus put ~9 jumbo documents in
-    every jumbo-bucket key and the busiest task ran 3.8x the median; at
-    1024 salts the same corpus measured 2.1x and -29% wall (round-6
-    straggler probe, BASELINE.md).  Keys are free; 1024 stays tiny vs the
-    shuffle itself at any scale.
+    Documents land in log2-size buckets; the salt (one of
+    ``SALT_BUCKETS``) spreads each bucket across partitions so jumbo
+    documents cannot pile into one task (north-rule skew handling).  At
+    100 TB this is the only shuffle in the job.
     """
     from pyspark.sql import functions as F
 
     size_bucket = F.ceil(F.log2(F.length(F.col("html")) + F.lit(2)))
-    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(SALT_BUCKETS))
     df = df.withColumn("_size_bucket", size_bucket).withColumn("_salt", salt)
     if num_partitions:
         df = df.repartition(num_partitions, "_size_bucket", "_salt")

@@ -6,17 +6,16 @@ WARC-Target-URI, WARC-Date, Content-Length) followed by exactly
 Content-Length payload bytes and a blank-line separator.  The WARC,
 WET, WAT and revisit products share one writer, :func:`_warc_file` (a
 warcinfo head record, then the caller's (headers, block) records), and
-one reader, :func:`_split_records`, the bounded splitter behind every
-Spark reader.  The splitter owns the tolerant record walk, which
-resynchronizes at the next ``WARC/1.0`` magic on corrupt framing instead
-of failing the task (failures are ROWS, not exceptions), and the flush
-at ``WARC_SPLIT_BATCH_ROWS`` / ``WARC_SPLIT_BATCH_BYTES``; each reader,
-and each eager ``parse_*``, gives only a row function.
+one record walk, :func:`_walk_rows`, which resynchronizes at the next
+``WARC/1.0`` magic on corrupt framing instead of failing the task
+(failures are ROWS, not exceptions).  Each Spark reader, and each eager
+``parse_*``, gives only a row function; the readers enter Spark through
+the package's one bounded frame builder, :func:`rowframes.map_rows`.
 
 Plan shape at 100 TB: the shard scan gives one input split per WARC file
-(CommonCrawl shards are ~1 GB — the natural task granularity); the
-splitter is a per-file batch kernel with bounded memory (one file's
-bytes plus one output batch), and everything downstream is the ordinary
+(CommonCrawl shards are ~1 GB — the natural task granularity); each
+reader is a per-file batch kernel with bounded memory (one file's bytes
+plus one output frame), and everything downstream is the ordinary
 extraction plan.  Reference parity: the reference engine reads PDFs
 from a local filesystem walk (pdftotext++.cpp main); the WARC path is
 this repo's crawl-native ingestion form of the same S1 source surface.
@@ -30,6 +29,8 @@ import json
 import logging
 import os
 from typing import Iterable, List, Tuple
+
+from .rowframes import map_rows
 
 _log = logging.getLogger(__name__)
 
@@ -220,20 +221,11 @@ def read_record(blob_slice: bytes) -> Tuple[str, bytes]:
     return h.get("warc-target-uri", ""), _payload_of(body)
 
 
-# output batching bounds for the shard splitter: a flushed pandas frame
-# never exceeds ~these, so per-task peak memory is ONE shard's bytes plus
-# O(batch) regardless of how many records the shard holds (SCALE.md
-# §Webtext documents the full envelope)
-WARC_SPLIT_BATCH_ROWS = 1024
-WARC_SPLIT_BATCH_BYTES = 64 << 20
-
-
-def _shard_blobs(batches):
-    """(basename of ``path`` or "", blob) per row of shard batches."""
-    for pdf in batches:
-        paths = pdf["path"] if "path" in pdf else [""] * len(pdf)
-        for path, blob in zip(paths, pdf["content"]):
-            yield os.path.basename(path), bytes(blob)
+def _shard_blobs(pdf):
+    """(basename of ``path`` or "", blob) per row of a shard batch."""
+    paths = pdf["path"] if "path" in pdf else [""] * len(pdf)
+    for path, blob in zip(paths, pdf["content"]):
+        yield os.path.basename(path), bytes(blob)
 
 
 def _walk_rows(blobs, row_fn):
@@ -241,7 +233,7 @@ def _walk_rows(blobs, row_fn):
     row is not None.  Streams via :func:`_iter_records`, NOT the eager
     :func:`_walk`, which materializes every record of the shard first
     (per-task peak would be the whole shard's decoded records, ADVICE
-    r7): one record is in flight, so the flush bound is real.  A shard
+    r7): one record is in flight, so the frame bound is real.  A shard
     with corrupt byte ranges logs one warning with its count, the figure
     the eager ``parse_*`` return."""
     for name, blob in blobs:
@@ -255,42 +247,12 @@ def _walk_rows(blobs, row_fn):
                          stats["corrupt"], name or "<unnamed>")
 
 
-def _split_records(blobs, row_fn, columns, max_rows: int = None,
-                   max_bytes: int = None):
-    """Pandas frames of ``columns`` over :func:`_walk_rows`, flushed at
-    ``max_rows`` rows or ``max_bytes`` record block bytes (an upper bound
-    on every reader's payload or text) — never a whole shard at once."""
-    import pandas as pd
-
-    max_rows = max_rows or WARC_SPLIT_BATCH_ROWS
-    max_bytes = max_bytes or WARC_SPLIT_BATCH_BYTES
-    cols, acc_bytes = [[] for _ in columns], 0
-    for row, size in _walk_rows(blobs, row_fn):
-        for col, value in zip(cols, row):
-            col.append(value)
-        acc_bytes += size
-        if len(cols[0]) >= max_rows or acc_bytes >= max_bytes:
-            yield pd.DataFrame(dict(zip(columns, cols)))
-            cols, acc_bytes = [[] for _ in columns], 0
-    if cols[0]:
-        yield pd.DataFrame(dict(zip(columns, cols)))
-
-
-def _map_records(shards, row_fn, schema: str, blobs=_shard_blobs):
-    """``mapInPandas`` of the splitter with ``row_fn``, named by ``schema``."""
-    columns = [field.split()[0] for field in schema.split(",")]
-    return shards.mapInPandas(
-        lambda batches: _split_records(blobs(batches), row_fn, columns),
-        schema)
-
-
-def split_warc_batches(batches, max_rows: int = None, max_bytes: int = None):
-    """The shard-splitter kernel behind :func:`read_warc` (module-level so
-    the bounded-batch contract is directly testable): consumes
-    (path, content) pandas batches and yields (url, warc_date, html)
-    frames of the response records through :func:`_split_records`."""
-    return _split_records(_shard_blobs(batches), _warc_row,
-                          ("url", "warc_date", "html"), max_rows, max_bytes)
+def _shard_rows(row_fn, blobs=_shard_blobs):
+    """The rows function of a shard reader: :func:`_walk_rows` with
+    ``row_fn`` over the (name, blob) pairs ``blobs`` gives for one
+    (path, content) batch.  A record counts at its block bytes, an upper
+    bound on every reader's payload or text."""
+    return lambda pdf: _walk_rows(blobs(pdf), row_fn)
 
 
 def _scan_shards(spark, path: str):
@@ -302,12 +264,12 @@ def _scan_shards(spark, path: str):
 
 def read_warc(spark, path: str):
     """Read a directory of .warc files into the engine's page schema:
-    one row per file from :func:`_scan_shards`, split into pages by
-    :func:`split_warc_batches`; dates parse to timestamps JVM-side."""
+    one row per file from :func:`_scan_shards`, split into one page per
+    response record; dates parse to timestamps JVM-side."""
     from pyspark.sql import functions as F
 
-    pages = _scan_shards(spark, path).mapInPandas(
-        split_warc_batches, "url string, warc_date string, html binary")
+    pages = map_rows(_scan_shards(spark, path), _shard_rows(_warc_row),
+                     "url string, warc_date string, html binary")
     return pages.select(
         "url",
         F.to_timestamp("warc_date", "yyyy-MM-dd'T'HH:mm:ss'Z'")
@@ -346,8 +308,8 @@ def cdx_index(spark, path: str):
     that makes the index servable is over the tiny side; random access
     is :func:`index_warc`'s contract.
     """
-    return _map_records(
-        _scan_shards(spark, path), _cdx_row,
+    return map_rows(
+        _scan_shards(spark, path), _shard_rows(_cdx_row),
         "url string, warc_date string, filename string, "
         "offset long, length long")
 
@@ -435,8 +397,9 @@ def wet_convert(extracted, n_shards: int = 4):
 
 def read_wet_blobs(shards):
     """(filename, content) WET blobs -> (url, extracted_text) rows,
-    streamed through the bounded splitter."""
-    return _map_records(shards, _wet_row, "url string, extracted_text string")
+    streamed through the bounded frame builder."""
+    return map_rows(shards, _shard_rows(_wet_row),
+                    "url string, extracted_text string")
 
 
 # ---------------------------------------------------------------------------
@@ -543,12 +506,13 @@ def wat_index(spark, path: str):
     run in ONE task so the query output proves the writer/parser pair
     round-trips, not just that the writer ran.
     """
-    return _map_records(
-        _scan_shards(spark, path), _wat_row,
+    return map_rows(
+        _scan_shards(spark, path),
+        _shard_rows(_wat_row, blobs=lambda pdf: (
+            (name, wat_from_warc(name, blob))
+            for name, blob in _shard_blobs(pdf))),
         "url string, warc_date string, filename string, offset long, "
-        "length long, payload_digest string, payload_len long",
-        blobs=lambda batches: ((name, wat_from_warc(name, blob))
-                               for name, blob in _shard_blobs(batches)))
+        "length long, payload_digest string, payload_len long")
 
 
 # ---------------------------------------------------------------------------
@@ -626,14 +590,14 @@ def _snapshot_row(name, h, body, start, end):
 def read_snapshot_records(shards):
     """(filename, content) snapshot shards -> one row per stored record:
     (url, record_type, payload_digest, stored_len), streamed through the
-    bounded splitter.
+    bounded frame builder.
 
     ``stored_len`` is the byte length of the payload the archive
     actually stores — 0 for a revisit record (whose digest is read back
     from its WARC-Payload-Digest header), the HTTP-stripped payload
     length for a response record (whose digest is recomputed from the
     stored bytes, so a writer/parser byte slip fails the oracle hash)."""
-    return _map_records(
-        shards, _snapshot_row,
+    return map_rows(
+        shards, _shard_rows(_snapshot_row),
         "url string, record_type string, payload_digest string, "
         "stored_len long")

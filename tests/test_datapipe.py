@@ -288,14 +288,18 @@ def test_star_edges_linear_per_bucket(spark):
     fdocs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id")
     labels = fdocs.select("doc_id", F.col("doc_id").alias("label"))
-    via_star, _ = chunking.propagate_to_fixpoint(
-        chunking._star_edges(fdocs, dedup.minhash_signatures(spark, SF_DIR))
-        .persist(), labels)
-    via_pairs, _ = chunking.propagate_to_fixpoint(
-        chunking._undirected_edges(
-            fdocs, dedup.minhash_lsh_pairs(spark, SF_DIR)).persist(), labels)
-    assert ({r.doc_id: r.label for r in via_star.collect()}
-            == {r.doc_id: r.label for r in via_pairs.collect()})
+    star_edges = chunking._star_edges(
+        fdocs, dedup.minhash_signatures(spark, SF_DIR)).persist()
+    pair_edges = chunking._undirected_edges(
+        fdocs, dedup.minhash_lsh_pairs(spark, SF_DIR)).persist()
+    try:
+        via_star, _ = chunking.propagate_to_fixpoint(star_edges, labels)
+        via_pairs, _ = chunking.propagate_to_fixpoint(pair_edges, labels)
+        assert ({r.doc_id: r.label for r in via_star.collect()}
+                == {r.doc_id: r.label for r in via_pairs.collect()})
+    finally:
+        star_edges.unpersist()
+        pair_edges.unpersist()
 
 
 def test_ann_multiprobe_recall(spark):

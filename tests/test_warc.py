@@ -3,7 +3,9 @@ Spark binaryFile + Arrow-splitter ingestion path."""
 
 import datetime
 
-from pdftotext_plus_plus_spark import fixtures, warc
+from pdftotext_plus_plus_spark import fixtures, rowframes, warc
+
+_WARC_COLUMNS = ("url", "warc_date", "html")
 
 
 def _triples(n=8, jumbo_every=4):
@@ -65,8 +67,9 @@ def test_spark_splitter_logs_the_corrupt_range_count(caplog):
     recs, bad = warc.parse_warc(blob)
     assert bad == 1
     with caplog.at_level(logging.WARNING, logger=warc.__name__):
-        frames = list(warc.split_warc_batches(iter([pd.DataFrame(
-            {"path": ["file:/shards/part-7.warc"], "content": [blob]})])))
+        frames = list(rowframes.row_frames(iter([pd.DataFrame(
+            {"path": ["file:/shards/part-7.warc"], "content": [blob]})]),
+            warc._shard_rows(warc._warc_row), _WARC_COLUMNS))
     assert list(pd.concat(frames)["url"]) == [r[0] for r in recs]
     logged = [rec.getMessage() for rec in caplog.records
               if rec.name == warc.__name__]
@@ -77,8 +80,9 @@ def test_spark_splitter_logs_the_corrupt_range_count(caplog):
     # a clean shard logs nothing
     caplog.clear()
     with caplog.at_level(logging.WARNING, logger=warc.__name__):
-        list(warc.split_warc_batches(iter([pd.DataFrame(
-            {"content": [b"".join(parts)]})])))
+        list(rowframes.row_frames(iter([pd.DataFrame(
+            {"content": [b"".join(parts)]})]),
+            warc._shard_rows(warc._warc_row), _WARC_COLUMNS))
     assert not [rec for rec in caplog.records if rec.name == warc.__name__]
 
 
@@ -105,8 +109,9 @@ def test_split_kernel_emits_bounded_batches():
 
     rows, triples = _triples(n=24, jumbo_every=6)
     blob = warc.encode_warc(triples)
-    frames = list(warc.split_warc_batches(
-        iter([pd.DataFrame({"content": [blob]})]), max_rows=5))
+    frames = list(rowframes.row_frames(
+        iter([pd.DataFrame({"content": [blob]})]),
+        warc._shard_rows(warc._warc_row), _WARC_COLUMNS, max_rows=5))
     assert len(frames) > 1                       # really batched
     assert all(len(f) <= 5 for f in frames)
     # concatenation == the unbatched parse, in order, byte-identical
@@ -116,17 +121,19 @@ def test_split_kernel_emits_bounded_batches():
 
     # byte bound: each flushed frame stops at the first record crossing
     # the cap (payload >= 1 byte each -> max_bytes=1 means 1 row/frame)
-    tiny = list(warc.split_warc_batches(
-        iter([pd.DataFrame({"content": [blob]})]), max_bytes=1))
+    tiny = list(rowframes.row_frames(
+        iter([pd.DataFrame({"content": [blob]})]),
+        warc._shard_rows(warc._warc_row), _WARC_COLUMNS, max_bytes=1))
     assert all(len(f) == 1 for f in tiny)
     assert sum(len(f) for f in tiny) == len(rows)
 
     # the same splitter under the WET reader's row function
     texts = [(r["url"], r["golden_text"]) for r in rows]
     wet = warc.encode_wet(texts, filename="part-00.warc.wet")
-    frames = list(warc._split_records(
-        [("part-00.warc.wet", wet)], warc._wet_row,
-        ("url", "extracted_text"), max_rows=5))
+    frames = list(rowframes.row_frames(
+        iter([pd.DataFrame({"path": ["part-00.warc.wet"], "content": [wet]})]),
+        warc._shard_rows(warc._wet_row), ("url", "extracted_text"),
+        max_rows=5))
     assert len(frames) > 1
     assert all(len(f) <= 5 for f in frames)
     cat = pd.concat(frames, ignore_index=True)
@@ -141,8 +148,9 @@ def test_split_kernel_emits_bounded_batches():
              hashlib.md5(r["html"]).hexdigest() if i % 2 else None)
             for i, r in enumerate(rows)]
     sblob = warc.encode_snapshot_warc(snap, "snap-00.warc")
-    frames = list(warc._split_records(
-        [("snap-00.warc", sblob)], warc._snapshot_row,
+    frames = list(rowframes.row_frames(
+        iter([pd.DataFrame({"path": ["snap-00.warc"], "content": [sblob]})]),
+        warc._shard_rows(warc._snapshot_row),
         ("url", "record_type", "payload_digest", "stored_len"), max_rows=5))
     assert len(frames) > 1
     assert all(len(f) <= 5 for f in frames)
