@@ -12,7 +12,8 @@ decode step, replicating the decode-time semantics the pipeline depends on:
 * whitespace-char suppression incl. U+00A0 (PdfParsing.cpp:229-245);
 * coordinates already on a 0.1pt grid (coordinatePrecision=1, Config.h:85).
 
-Layout (little-endian), version 2 (v1 readable: 9 numeric char fields)::
+Layout (little-endian), version 2 (v3 and v4 extend it, see below; any
+other version fails to decode with ERR_MAGIC)::
 
     b"PTX1"  u16 version
     u32 n_fonts
@@ -77,7 +78,6 @@ ERR_KERNEL = 4
 # depend only on the exception
 CAUSE_CHARS = 200
 
-_CHAR_FIELDS_V1 = 9
 _CHAR_FIELDS = 10
 _CHAR_FIELDS_V3 = 16  # v2 fields + 6-f64 per-char text rendering matrix
 
@@ -295,7 +295,7 @@ _WS_ASCII_CODES = np.array(sorted(ord(c) for c in WHITESPACE_TEXTS
                                   if ord(c) < 128), dtype=np.uint8)
 
 
-def _simple_page_cols(num, texts_ascii1, font_names, char_fields, page_num,
+def _simple_page_cols(num, texts_ascii1, font_names, page_num,
                       deferred) -> CharCols:
     """SIMPLE-PAGE producer: every char text is one ASCII codepoint, no
     glyph names (-> no charMap, no glyph-bbox preference), no explicit
@@ -305,13 +305,12 @@ def _simple_page_cols(num, texts_ascii1, font_names, char_fields, page_num,
     >= U+02B0 exist)."""
     tb = np.frombuffer(texts_ascii1, dtype=np.uint8)
     keep = ~np.isin(tb, _WS_ASCII_CODES)
-    if char_fields > 9:
-        fig = num[:, 9] >= 0
-        divert = keep & fig
-        if divert.any():
-            for row in num[divert][:, (9, 0, 1, 2, 3)].tolist():
-                deferred.append((int(row[0]), row[1], row[2], row[3], row[4]))
-        keep &= ~fig
+    fig = num[:, 9] >= 0
+    divert = keep & fig
+    if divert.any():
+        for row in num[divert][:, (9, 0, 1, 2, 3)].tolist():
+            deferred.append((int(row[0]), row[1], row[2], row[3], row[4]))
+    keep &= ~fig
     kept = np.flatnonzero(keep)
     # rows: (left, up, right, low, rotation, w_mode, font_size, base) per
     # kept char, decode order.  Built by zipping per-COLUMN tolist()s so the
@@ -339,8 +338,7 @@ def _simple_page_cols(num, texts_ascii1, font_names, char_fields, page_num,
 
 
 def _general_page_cols(num, names, texts, unicodes, fonts, font_names,
-                       char_fields, glyph_bboxes, page_num,
-                       deferred) -> CharCols:
+                       glyph_bboxes, page_num, deferred) -> CharCols:
     """GENERAL producer: glyph names (charMap), ligatures, non-ASCII text,
     explicit unicodes and the glyph-bbox preference, one char at a time.
     Fills the same columns as :func:`_simple_page_cols` plus ``names`` and
@@ -374,7 +372,7 @@ def _general_page_cols(num, names, texts, unicodes, fonts, font_names,
         elif all(ch in ws for ch in text):
             continue
         row = num_list[i]
-        if char_fields > 9 and row[9] >= 0:
+        if row[9] >= 0:
             # clip-diverted char: belongs to a figure, not the page — it
             # grows the figure's bbox and never enters extraction
             # (PdfParsing.cpp:513-591)
@@ -463,6 +461,8 @@ def _read_header(payload: Optional[bytes]
     if bytes(r.take(4)) != MAGIC:
         raise PayloadError(ERR_MAGIC, "bad magic")
     version = r.u16()
+    if version not in (VERSION, VERSION_GLYPH_BBOX, VERSION_TYPE1):
+        raise PayloadError(ERR_MAGIC, "unsupported version %d" % version)
     fonts: List[FontInfo] = []
     for _ in range(r.u32()):
         name = bytes(r.take(r.u16())).decode("utf-8")
@@ -507,7 +507,7 @@ def _read_header(payload: Optional[bytes]
 def _decode(payload: Optional[bytes]) -> Doc:
     r, version, fonts = _read_header(payload)
     char_fields = (_CHAR_FIELDS_V3 if version >= VERSION_GLYPH_BBOX
-                   else _CHAR_FIELDS_V1 if version == 1 else _CHAR_FIELDS)
+                   else _CHAR_FIELDS)
     doc = Doc()
     font_names = [f.name for f in fonts]
     doc.font_infos.update(zip(font_names, fonts))
@@ -531,15 +531,13 @@ def _decode(payload: Optional[bytes]) -> Doc:
             uni_empty = r.blob_all_empty
             if names_empty and uni_empty and texts_ascii1 is not None:
                 page.char_cols = _simple_page_cols(
-                    num, texts_ascii1, font_names, char_fields, page_num,
-                    deferred)
+                    num, texts_ascii1, font_names, page_num, deferred)
             else:
                 if texts is None:
                     texts = list(texts_ascii1.decode("utf-8"))
                 page.char_cols = _general_page_cols(
                     num, names, texts, unicodes, fonts, font_names,
-                    char_fields, version >= VERSION_GLYPH_BBOX, page_num,
-                    deferred)
+                    version >= VERSION_GLYPH_BBOX, page_num, deferred)
 
         for kind, target in (("figure", page.figures),
                              ("shape", page.shapes),

@@ -2,19 +2,23 @@
 
 Scale notes (100 TB): every op here is shuffle-bounded by design —
 * exact dedup: one hash-aggregate on md5(text) (map-side partial agg);
-* MinHash-LSH: shingle explode -> per-(doc, band) min-agg -> bucket join;
-  the bucket join replaces the quadratic all-pairs comparison, which is the
-  whole point of LSH at 10^12 rows;
-* SimHash: narrow per-doc aggregation, then EXACT pigeonhole banding
-  (4 bands x 16 bits over a 64-bit simhash — a Hamming<=3 pair must match
-  on >= 1 band) rather than a cross join; 16-bit band keys give 65,536
-  buckets per band, which keeps the band-equi self-join bounded at
-  10^12 rows (8-bit keys = 256 buckets would be near-quadratic);
-* n-gram Jaccard: exact PPJoin-style prefix filtering — candidates join
-  only on each doc's rarest-first shingle prefix, so near-universal
-  stop-grams never become join keys and the key distribution stays flat;
 * embedding near-dup: tiled block self-join (applyInPandas per block
-  pair), bounded per-task memory, no driver materialization.
+  pair), bounded per-task memory, no driver materialization;
+* near-dup pairs: MinHash-LSH, SimHash, the image pHash of
+  ``multimodal``, n-gram Jaccard and containment keep only their
+  signature or gram table; each exact candidate method is written once:
+  - :func:`bucket_pairs`: the (band, key) bucket self-join, which
+    replaces the quadratic all-pairs comparison (the whole point of LSH
+    at 10^12 rows);
+  - :func:`hamming_pairs`: EXACT pigeonhole banding (4 bands x 16 bits
+    over a 64-bit signature — a Hamming<=3 pair must match on >= 1 band)
+    rather than a cross join; 16-bit band keys give 65,536 buckets per
+    band (8-bit keys = 256 buckets would be near-quadratic);
+  - :func:`_rarest_prefix`: PPJoin-style prefix filtering — candidates
+    join only on each doc's rarest-first gram prefix, so near-universal
+    stop-grams never become join keys and the key distribution stays
+    flat;
+  - :func:`_overlaps`: the exact intersection count, on candidates only.
 """
 
 from __future__ import annotations
@@ -66,6 +70,77 @@ TOKEN_SHINGLES_SQL_CTE = """
 
 
 # ---------------------------------------------------------------------------
+# exact candidate generators
+# ---------------------------------------------------------------------------
+
+def bucket_pairs(keyed: DataFrame, key: str, *carry: str) -> DataFrame:
+    """(id_a, id_b) once per pair of docs sharing a (band, ``key``)
+    bucket, id_a < id_b, with each ``carry`` column of both sides as
+    ``<col>_a`` and ``<col>_b``."""
+    a, b = keyed.alias("a"), keyed.alias("b")
+    return (a.join(b, (F.col("a.band") == F.col("b.band"))
+                   & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("id_a"),
+                    F.col("b.doc_id").alias("id_b"),
+                    *[F.col(f"{s}.{c}").alias(f"{c}_{s}")
+                      for c in carry for s in "ab"])
+            .distinct())
+
+
+def hamming_pairs(sig: DataFrame, col: str, n_bands: int,
+                  max_dist: int) -> DataFrame:
+    """EXACT (id_a, id_b, hamming) pairs within Hamming ``max_dist`` of
+    the 64-bit signature ``col`` of ``sig`` (doc_id, col): split into
+    ``n_bands`` > ``max_dist`` bands, a qualifying pair agrees exactly on
+    at least one band, so its buckets find every such pair; bit_count
+    runs on candidate rows only."""
+    band_bits = 64 // n_bands
+    bands = sig.sparkSession.range(n_bands).select(
+        F.col("id").cast("int").alias("band"))
+    keyed = (sig.crossJoin(F.broadcast(bands))
+             .withColumn("band_key", F.expr(
+                 f"({col} >> (band * {band_bits}))"
+                 f" & {(1 << band_bits) - 1}")))
+    return (bucket_pairs(keyed, "band_key", col)
+            .withColumn("hamming", F.bit_count(
+                F.col(f"{col}_a").bitwiseXOR(F.col(f"{col}_b"))))
+            .filter(F.col("hamming") <= max_dist)
+            .select("id_a", "id_b", "hamming"))
+
+
+def _rarest_prefix(sh: DataFrame, key: str, num: int, den: int):
+    """(sizes, prefix) of the (doc_id, ``key``) gram table ``sh`` for the
+    overlap threshold t = num/den: ``sizes`` is (doc_id, n_sh), and
+    ``prefix`` the first ``n - ceil(t*n) + 1`` grams of each doc, with
+    n_sh, in rarest-first order (document frequency, then gram).  A doc
+    sharing >= t of its n grams with another MUST share one of its
+    prefix grams with it (any common total order), so no qualifying pair
+    is missed.  The ceil is INTEGER-exact, ``div(num*n + den-1, den)``,
+    never a float ceil whose rounding at a future threshold could shrink
+    the prefix below the pigeonhole-safe size (ADVICE r7)."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    dfreq = sh.groupBy(key).agg(F.count("*").alias("df"))
+    w = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc(key))
+    ranked = (sh.join(dfreq, key)
+              .withColumn("pos", F.row_number().over(w))
+              .join(sizes, "doc_id"))
+    return sizes, ranked.filter(F.col("pos") <= F.expr(
+        f"n_sh - div({num} * n_sh + {den - 1}, {den}) + 1"))
+
+
+def _overlaps(cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
+              key: str) -> DataFrame:
+    """(id_a, id_b, n_common): the exact count of ``key`` grams each
+    candidate pair shares, from the (doc_id, key) tables of its A side
+    ``sh_a`` and its B side ``sh_b``."""
+    x = sh_a.select(F.col("doc_id").alias("id_a"), key)
+    y = sh_b.select(F.col("doc_id").alias("id_b"), key)
+    return (cand.join(x, "id_a").join(y, ["id_b", key])
+            .groupBy("id_a", "id_b").agg(F.count("*").alias("n_common")))
+
+
+# ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
 
@@ -96,32 +171,14 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Why not a plain shingle self-join: stop-grams ("th ", "e a") occur in
     nearly every document, so the equi-join key is massively skewed and the
     candidate set near-quadratic at scale.  Prefix filtering is the exact
-    fix: order each doc's shingles by global document frequency ascending
-    (rarest first) and join only on each doc's *prefix* — the first
-    ``n - ceil(t*n) + 1`` shingles.  Two sets with Jaccard >= t MUST share a
-    prefix shingle under any common total order, so no qualifying pair is
-    missed; hot shingles sit at the tail of every ordering and are never
-    join keys unless a document is tiny.  A size filter
-    (``t*n_a <= n_b <= n_a/t``, also exact for Jaccard >= t) prunes further.
-    Exact intersection counts are then computed on candidates only.
+    fix: join only on each doc's rarest-first prefix
+    (:func:`_rarest_prefix`; Jaccard >= t implies each side shares >= t of
+    its grams), where hot shingles are never join keys unless a document
+    is tiny.  A size filter (``t*n_a <= n_b <= n_a/t``, also exact for
+    Jaccard >= t) prunes further.
     """
-    docs = _documents(spark, sf_dir)
-    sh = _shingles(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-
-    # global document frequency per shingle; rarest-first total order
-    dfreq = sh.groupBy("sh").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("sh"))
-    ranked = (sh.join(dfreq, "sh")
-              .withColumn("pos", F.row_number().over(w))
-              .join(sizes, "doc_id"))
-    # prefix bound INTEGER-exact like the size prune and qualification:
-    # ceil(0.8 * n) computed as div(4*n + 4, 5), never a float ceil whose
-    # rounding at a future threshold could shrink the prefix below the
-    # pigeonhole-safe size and silently drop qualifying pairs (ADVICE r7)
-    prefix = ranked.filter(
-        F.col("pos") <= F.expr("n_sh - div(4 * n_sh + 4, 5) + 1"))
-
+    sh = _shingles(_documents(spark, sf_dir))
+    sizes, prefix = _rarest_prefix(sh, "sh", 4, 5)
     a = prefix.select(F.col("doc_id").alias("id_a"), "sh",
                       F.col("n_sh").alias("n_a"))
     b = prefix.select(F.col("doc_id").alias("id_b"), "sh",
@@ -133,12 +190,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     & (5 * F.col("n_b") >= 4 * F.col("n_a"))
                     & (5 * F.col("n_a") >= 4 * F.col("n_b")))
             .select("id_a", "id_b").distinct())
-
-    # exact intersection counts on candidates only (keyed by (doc_id, sh))
-    x = sh.select(F.col("doc_id").alias("id_a"), "sh")
-    y = sh.select(F.col("doc_id").alias("id_b"), "sh")
-    common = (cand.join(x, "id_a").join(y, ["id_b", "sh"])
-              .groupBy("id_a", "id_b").agg(F.count("*").alias("n_common")))
+    common = _overlaps(cand, sh, sh, "sh")
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
     # the QUALIFICATION is integer-exact (5*inter >= 4*union ⟺ J >= 4/5
@@ -210,29 +262,16 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Candidate generation is the PPJoin prefix idea adapted to the
     asymmetric case: for containment >= t, A must share at least one of
-    its first ``n_a - ceil(t*n_a) + 1`` RAREST grams with B (the same
-    exactness argument as ngram_jaccard_pairs, applied to A's set
+    its first ``n_a - ceil(t*n_a) + 1`` RAREST grams with B (the
+    exactness argument of :func:`_rarest_prefix`, applied to A's set
     only), so the join keys are A-prefix grams — rarest-first by
     construction, hot grams enter only through near-boilerplate-only
     documents.  The B side joins on its full distinct gram stream (it
     cannot be prefix-filtered: B may be arbitrarily larger than A),
     then exact intersections are computed on candidates only.
     """
-    docs = _documents(spark, sf_dir)
-    sh = _word_grams(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    dfreq = sh.groupBy("g").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("g"))
-    ranked = (sh.join(dfreq, "g")
-              .withColumn("pos", F.row_number().over(w))
-              .join(sizes, "doc_id"))
-    # integer-exact prefix bound: ceil(0.9 * n) = div(9*n + 9, 10) —
-    # the same integer discipline as the size prune and qualification
-    # below (a float ceil could overshoot an integer boundary under a
-    # future threshold change and silently shrink the prefix, ADVICE r7)
-    prefix = ranked.filter(
-        F.col("pos") <= F.expr("n_sh - div(9 * n_sh + 9, 10) + 1"))
-
+    sh = _word_grams(_documents(spark, sf_dir))
+    sizes, prefix = _rarest_prefix(sh, "g", 9, 10)
     a = prefix.select(F.col("doc_id").alias("id_a"), "g",
                       F.col("n_sh").alias("n_a"))
     # B cannot be prefix-filtered (it may be arbitrarily larger than A),
@@ -261,11 +300,8 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # B side is semi-pruned to docs that actually appear as candidate
     # B's — a jumbo B contributes rows only where its grams match an
     # A gram of one of its candidates, never its full gram set
-    x = sh.select(F.col("doc_id").alias("id_a"), "g")
-    y = sh.join(cand.select(F.col("id_b").alias("doc_id")).distinct(),
-                "doc_id").select(F.col("doc_id").alias("id_b"), "g")
-    common = (cand.join(x, "id_a").join(y, ["id_b", "g"])
-              .groupBy("id_a", "id_b").agg(F.count("*").alias("n_common")))
+    common = _overlaps(cand, sh, sh.join(
+        cand.select(F.col("id_b").alias("doc_id")).distinct(), "doc_id"), "g")
     sa = sizes.select(F.col("doc_id").alias("id_a"),
                       F.col("n_sh").alias("n_a"))
     # qualification is INTEGER-exact (10*common >= 9*n_a ⟺ C >= 9/10,
@@ -362,14 +398,7 @@ GROUP BY doc_id, b.band
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate near-dup pairs: docs sharing a (band, minhash) bucket."""
-    sig = minhash_signatures(spark, sf_dir)
-    a, b = sig.alias("a"), sig.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.minhash") == F.col("b.minhash"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("id_a"),
-                    F.col("b.doc_id").alias("id_b"))
-            .distinct())
+    return bucket_pairs(minhash_signatures(spark, sf_dir), "minhash")
 
 
 # the (sh, h, sig) CTE chain shared by every SQL that needs the minhash
@@ -461,36 +490,13 @@ SIMHASH_BANDS = 4  # 4 bands x 16 bits over the 64-bit simhash
 
 
 def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT near-dup pairs with Hamming distance <= 3 via pigeonhole
-    banding: the 64-bit simhash splits into 4 bands of 16 bits, and a pair
-    differing in <= 3 bits must agree EXACTLY on at least one band — so the
-    union of the 4 band-equi joins finds every qualifying pair without a
-    cross join.  16-bit band keys (65,536 buckets per band) keep each
-    (band, key) bucket ~N/65,536 docs, bounding the self-join at scale."""
-    band_bits = SIMHASH_BITS // SIMHASH_BANDS
+    """EXACT near-dup pairs with simhash Hamming distance <= 3: the
+    pigeonhole banding of :func:`hamming_pairs`, 4 bands of 16 bits."""
     # one narrow (doc_id, simhash) row per doc, materialized once so the
     # banded self-join does not re-run the tokenize + 64-column hash agg
     # on both sides (r9; same rationale as image_phash_near_pairs)
     sig = simhash(spark, sf_dir).localCheckpoint()
-    bands = spark.range(SIMHASH_BANDS).select(
-        F.col("id").cast("int").alias("band"))
-    keyed = (sig.crossJoin(F.broadcast(bands))
-             .withColumn("band_key", F.expr(
-                 f"(simhash >> (band * {band_bits}))"
-                 f" & {(1 << band_bits) - 1}")))
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_key") == F.col("b.band_key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("id_a"),
-                    F.col("b.doc_id").alias("id_b"),
-                    F.col("a.simhash").alias("sh_a"),
-                    F.col("b.simhash").alias("sh_b"))
-            .distinct()
-            .withColumn("hamming", F.bit_count(
-                F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-            .filter(F.col("hamming") <= 3)
-            .select("id_a", "id_b", "hamming"))
+    return hamming_pairs(sig, "simhash", SIMHASH_BANDS, 3)
 
 
 SIMHASH_NEAR_PAIRS_SQL = f"""

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..rowframes import map_rows
 from . import _documents, jpeg, pixels, spread
+from .dedup import hamming_pairs
 
 PNG_SIG = pixels.PNG_SIG
 
@@ -656,27 +657,20 @@ SELECT doc_id, phash, mean_gray FROM ph
 """
 
 
-# image near-dup pairs: the LAION-style pHash dedup product.  4 bands x
-# 16 bits over the 64-bit pHash; a pair within Hamming distance <= 3
-# must agree EXACTLY on at least one band (pigeonhole over 4 bands), so
-# the union of the band-equi joins is the complete qualifying pair set
-# with no cross join — the simhash_near_pairs machinery applied to
-# DECODED-pixel signatures.
+# image near-dup pairs: the LAION-style pHash dedup product, 4 bands x
+# 16 bits over the 64-bit pHash (dedup.hamming_pairs)
 PHASH_BANDS = 4
 PHASH_HAMMING_MAX = 3
 
 
 def image_phash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT near-duplicate IMAGE pairs (pHash Hamming <= 3) via
-    pigeonhole banding — the image-side analogue of simhash_near_pairs,
-    fed by the real PNG/JPEG decode.
+    """EXACT near-duplicate IMAGE pairs (pHash Hamming <= 3): the
+    pigeonhole banding of :func:`.dedup.hamming_pairs`, as
+    simhash_near_pairs, over signatures of the real PNG/JPEG decode.
 
     Plan shape at 100 TB: the decode is Arrow-batched mapInPandas
-    (embarrassingly parallel); the pair stage is PHASH_BANDS band-equi
-    self-joins on 16-bit keys (65,536 buckets per band, ~N/65,536 rows
-    per bucket), never an all-pairs join; the Hamming verify is a
-    bit_count projection on candidate rows only."""
-    band_bits = 64 // PHASH_BANDS
+    (embarrassingly parallel); the pair stage is the bounded band-equi
+    self-join on 16-bit keys, never an all-pairs join."""
     # materialize the signature table ONCE: the banded self-join below
     # otherwise re-runs the full blob synth + pixel decode + hash chain
     # on BOTH sides (measured 2x the decode cost at sf0.1 — the two
@@ -685,25 +679,7 @@ def image_phash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invocation (r9, guide §3.3 "materialising an intermediate")
     sig = (image_phash(spark, sf_dir).select("doc_id", "phash")
            .localCheckpoint())
-    bands = spark.range(PHASH_BANDS).select(
-        F.col("id").cast("int").alias("band"))
-    keyed = (sig.crossJoin(F.broadcast(bands))
-             .withColumn("band_key", F.expr(
-                 f"(phash >> (band * {band_bits}))"
-                 f" & {(1 << band_bits) - 1}")))
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_key") == F.col("b.band_key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("id_a"),
-                    F.col("b.doc_id").alias("id_b"),
-                    F.col("a.phash").alias("ph_a"),
-                    F.col("b.phash").alias("ph_b"))
-            .distinct()
-            .withColumn("hamming", F.bit_count(
-                F.col("ph_a").bitwiseXOR(F.col("ph_b"))))
-            .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
-            .select("id_a", "id_b", "hamming"))
+    return hamming_pairs(sig, "phash", PHASH_BANDS, PHASH_HAMMING_MAX)
 
 
 IMAGE_PHASH_NEAR_PAIRS_SQL = f"""

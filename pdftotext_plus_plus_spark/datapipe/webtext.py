@@ -641,10 +641,12 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     and TWO hash aggregates (one keyed on dst for the authority
     half-step, one on src for the hub half-step) — the PageRank shuffle
     pair run in both directions — plus two 1-row total aggregates that
-    broadcast back for the ppm rescale.  Iterations chain as a
-    fixed-depth DAG; hot pages are ordinary skewed agg keys
-    (AQE-splittable).  :func:`iterate` runs the half-steps as authority,
-    (hub, authority) x (HITS_ITERS - 1), then hub."""
+    broadcast back for the ppm rescale.  Hot pages are ordinary skewed
+    agg keys (AQE-splittable).  :func:`iterate` runs the half-steps as
+    authority, (hub, authority) x (HITS_ITERS - 1), then hub, and
+    checkpoints each authority vector a later round reads: every
+    half-step reads its input twice (the join and the total), so an
+    unmaterialized chain plans a tree that doubles per half-step."""
     docs = _documents(spark, sf_dir)
     edges = _edges(docs)
 
@@ -666,7 +668,7 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     auth, _ = iterate(half(hub0, "src", "dst", "a"),
                       lambda a: half(half(a, "dst", "src", "h"),
                                      "src", "dst", "a"),
-                      HITS_ITERS - 1)
+                      HITS_ITERS - 1, checkpoint=True)
     hub = half(auth, "dst", "src", "h")
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     indeg = edges.groupBy("dst").agg(F.count("*").alias("in_deg"))

@@ -440,8 +440,11 @@ def test_driver_components_match_fixpoint_loop(spark, build):
         assert len(set(got.values())) < len(got)
 
 
-FIXPOINT_FAMILY = ("dedup_clusters_fixpoint", "dedup_keep_list",
-                   "dedup_representatives")
+# each fixpoint-family query's Spark jobs at sf0.001 on the driver path,
+# the same in a fresh session and late in a long one
+FIXPOINT_JOBS = {"dedup_clusters_fixpoint": 6, "dedup_keep_list": 9,
+                 "dedup_representatives": 13}
+FIXPOINT_FAMILY = tuple(FIXPOINT_JOBS)
 
 
 def _cache_is_empty(spark) -> bool:
@@ -450,9 +453,9 @@ def _cache_is_empty(spark) -> bool:
 
 @pytest.mark.parametrize("name", FIXPOINT_FAMILY)
 def test_fixpoint_family_job_count_and_cache(spark, name):
-    """Each fixpoint-family query runs at most 20 Spark jobs at sf0.001,
-    where the driver path solves its components, and leaves nothing in
-    the session's cache."""
+    """Each fixpoint-family query runs at most its FIXPOINT_JOBS Spark
+    jobs at sf0.001, where the driver path solves its components, and
+    leaves nothing in the session's cache."""
     from pdftotext_plus_plus_spark.datapipe import chunking
 
     spark.catalog.clearCache()
@@ -464,7 +467,7 @@ def test_fixpoint_family_job_count_and_cache(spark, name):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 20, jobs
+    assert jobs <= FIXPOINT_JOBS[name], jobs
     assert _cache_is_empty(spark)
 
 

@@ -68,6 +68,22 @@ def test_decode_failure_rows(payload, code, cause):
         code, pipeline.STAGE_DECODE, cause)
 
 
+@pytest.mark.parametrize("version", [0, 1, 5, 65535])
+def test_unsupported_version_is_a_decode_failure_row(version):
+    """The decoder reads only the versions the encoder writes (2, 3, 4):
+    a v2 payload re-stamped with any other version fails at decode with
+    ERR_MAGIC and a cause naming the version, not as truncated or as
+    text."""
+    good = _payload()
+    assert good[4:6] == b"\x02\x00"
+    bad = good[:4] + version.to_bytes(2, "little") + good[6:]
+    res = pipeline.extract(bad)
+    assert (res.parse_failure_code, res.fail_stage, res.fail_cause) == (
+        codec.ERR_MAGIC, pipeline.STAGE_DECODE,
+        "unsupported version %d" % version)
+    assert res.extracted_text == "\n"
+
+
 def test_sink_exception_is_a_serialize_failure_row(monkeypatch):
     def boom(doc, roles):
         raise RuntimeError("x" * 1000)
